@@ -42,14 +42,23 @@ object CommitLog {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** ONE shared Hadoop conf for local parquet footer reads (r19):
-    * `new Configuration()` re-parses the XML resource files on every
-    * instantiation, and the staging paths construct one per staged
-    * file per commit — pure fixed overhead on the write path. The
-    * instance is never mutated after construction, so sharing is
-    * safe; footer reads are local-FS only and need no per-table
-    * settings. */
+  /** ONE shared Hadoop conf for local parquet reads (r19): every
+    * `Configuration` instance parses the XML resource files on its
+    * first lookup, so building one per staged file per commit is pure
+    * fixed overhead on the write path. The instance is never mutated
+    * after construction, so sharing is safe; footer reads are local-FS
+    * only and need no per-table settings. r19 passed it only to
+    * `HadoopInputFile` (the FileSystem lookup): the option-less
+    * `ParquetFileReader.open(InputFile)` still built its own
+    * `HadoopParquetConfiguration` per footer, re-parsing
+    * `core-default.xml` from the jar. [[footerReadOptions]] carries
+    * this conf into the reader too. */
   private[sources] val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
+  /** Read options over [[hadoopConf]], immutable and shared by every
+    * footer open. */
+  private[sources] val footerReadOptions =
+    org.apache.parquet.HadoopReadOptions.builder(hadoopConf).build()
 
   /** Parquet footer row count with a bounded cache (r19; key hardened
     * r20). Every staged file's footer was opened TWICE per commit —
@@ -76,11 +85,12 @@ object CommitLog {
       Some((p.getAbsolutePath, attrs.size(),
         attrs.lastModifiedTime().to(java.util.concurrent.TimeUnit.NANOSECONDS)))
     } catch { case _: Throwable => None }
-  private[sources] def footerRowCount(p: java.io.File): Long = {
+  private[graft] def footerRowCount(p: java.io.File): Long = {
     def read(): Long = {
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p.getAbsolutePath), hadoopConf))
+          new org.apache.hadoop.fs.Path(p.getAbsolutePath), hadoopConf),
+        footerReadOptions)
       try r.getRecordCount finally r.close()
     }
     footerCacheKey(p) match {

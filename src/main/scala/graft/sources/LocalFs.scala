@@ -9,23 +9,37 @@ import org.apache.hadoop.fs.permission.FsPermission
   * thread dumps).
   *
   * Without the libhadoop native library — absent from this Spark
-  * distribution, and from most — `RawLocalFileSystem.setPermission`
-  * falls back to `Shell.execCommand`: it FORKS a `chmod` process.
-  * Every local file create and every mkdir calls setPermission
-  * (`createOutputStreamWithMode` / `mkOneDirWithMode`), so a commit
-  * that writes a handful of tiny parquet files pays several
-  * fork+exec rounds (~5–30 ms each) per file, on executors and — for
-  * streaming offsets/commits logs — on the driver. Thread samples
-  * during the streaming-view keys caught write tasks inside
-  * `ProcessImpl.forkAndExec` under `RawLocalFileSystem.setPermission`
-  * in 6 of 14 dumps.
+  * distribution, and from most — `RawLocalFileSystem` shells out for
+  * two metadata calls:
   *
-  * This subclass sets permissions via java.nio (one syscall, no
-  * fork). Everything else — including the checksummed LocalFileSystem
-  * wrapper some consumers downcast to, and whose create/rename
-  * behavior streaming state stores expect — stays stock. Scale
-  * posture: this is a local-FS deployment fix; on HDFS/S3 the `file:`
-  * scheme serves only scratch I/O and the conf is harmless.
+  *   - `setPermission` falls back to `Shell.execCommand`: it FORKS a
+  *     `chmod` process. Every local file create and every mkdir calls
+  *     setPermission (`createOutputStreamWithMode` /
+  *     `mkOneDirWithMode`), so a commit that writes a handful of tiny
+  *     parquet files pays several fork+exec rounds (~5–30 ms each) per
+  *     file, on executors and — for streaming offsets/commits logs —
+  *     on the driver. Thread samples during the streaming-view keys
+  *     caught write tasks inside `ProcessImpl.forkAndExec` under
+  *     `RawLocalFileSystem.setPermission` in 6 of 14 dumps.
+  *   - `getFileLinkStatus` runs `FileUtil.readLink`, which FORKS a
+  *     `readlink` process. `FileContext.rename` (through
+  *     `ChecksumFs.renameInternal` and the default
+  *     `AbstractFileSystem.renameInternal`) asks twice for the link
+  *     status of source and destination, for the data file and again
+  *     for its `.crc`, so every streaming offsets/commits/source log
+  *     write forked `readlink` eight times on the driver — 24 forks
+  *     per micro-batch, about 3 ms apart. The r20 version of this
+  *     class covered only `chmod`, so renames kept forking until the
+  *     override below.
+  *
+  * This subclass answers both through java.nio (one syscall, no fork;
+  * only a path that really is a symlink still takes the stock
+  * `readlink` route). Everything else — including the checksummed
+  * LocalFileSystem wrapper some consumers downcast to, and whose
+  * create/rename behavior streaming state stores expect — stays
+  * stock. Scale posture: this is a local-FS deployment fix; on
+  * HDFS/S3 the `file:` scheme serves only scratch I/O and the conf is
+  * harmless.
   */
 class NioRawLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = {
@@ -33,6 +47,15 @@ class NioRawLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
     java.nio.file.Files.setPosixFilePermissions(
       pathToFile(p).toPath, NioLocalFileSystem.posixOf(permission.toShort))
   }
+
+  /** A path that is not a symlink gets `getFileStatus` — the branch
+    * stock Hadoop takes when `readlink` prints nothing — so a missing
+    * path still throws `FileNotFoundException`. A real symlink,
+    * dangling or not, goes to the stock implementation unchanged. */
+  override def getFileLinkStatus(f: Path): org.apache.hadoop.fs.FileStatus =
+    if (java.nio.file.Files.isSymbolicLink(pathToFile(f).toPath))
+      super.getFileLinkStatus(f)
+    else getFileStatus(f)
 }
 
 /** Drop-in for the stock `fs.file.impl` (LocalFileSystem): the same
@@ -68,8 +91,9 @@ object NioLocalFileSystem {
 /** The `AbstractFileSystem` twin (`fs.AbstractFileSystem.file.impl`):
   * streaming checkpoint managers go through `FileContext`, whose
   * default local binding builds its own `RawLocalFileSystem` — the
-  * driver forked a `chmod` per offsets/commits log write per trigger
-  * until this delegate routed it through the NIO implementation. */
+  * driver forked a `chmod` per offsets/commits log write per trigger,
+  * and eight `readlink`s per log rename, until this delegate routed
+  * both through the NIO implementation. */
 class NioRawLocalFs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
   extends org.apache.hadoop.fs.DelegateToFileSystem(
     uri, new NioRawLocalFileSystem, conf, "file", false)

@@ -602,14 +602,17 @@ class GroupParquetReader(path: String, schema: StructType)
     }, s"graft-table reader supports flat primitive columns; '${f.name}' is ${f.dataType}")
   }
 
-  private val conf = new org.apache.hadoop.conf.Configuration()
+  // a COPY of the shared conf: its resources are already parsed, and
+  // the read schema set below must not leak into other readers
+  private val conf = new org.apache.hadoop.conf.Configuration(CommitLog.hadoopConf)
   private val hPath = new org.apache.hadoop.fs.Path(path)
 
   // column pruning: request only the selected fields, typed exactly as
   // THIS file stores them (a requested schema with foreign physical
   // types would fail; by-name subset of the file's own always matches)
   private val fileSchema: MessageType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf))
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf),
+      CommitLog.footerReadOptions)
     try r.getFooter.getFileMetaData.getSchema finally r.close()
   }
   private val wanted = schema.fields.map(_.name).toSet

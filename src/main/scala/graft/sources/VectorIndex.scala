@@ -90,24 +90,17 @@ object VectorIndex {
         r.getAs[Number]("cell").longValue() -> r.getLong(1)).toMap
 
   /** cell → row count of freshly-STAGED posting files — from their
-    * parquet FOOTERS (one metadata open per file, no Spark job, no
+    * parquet FOOTERS (at most one metadata open per file through
+    * [[CommitLog.footerRowCount]] and its cache, no Spark job, no
     * extra evaluation of the staged frame) keyed by the cell value
     * the routed staging recorded per file. The hot-path (create/
     * refresh) counting lever: the staged rows ARE the insert-side
     * cell delta. */
   private def stagedCellCounts(root: String, staged: Seq[String],
-      aux: CommitLog.Aux): Map[Long, Long] = {
-    def footerRows(p: java.io.File): Long = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p.getAbsolutePath),
-          CommitLog.hadoopConf))
-      try r.getRecordCount finally r.close()
-    }
+      aux: CommitLog.Aux): Map[Long, Long] =
     staged.groupBy(f => aux.parts(f).toLong).map { case (cell, fs) =>
-      cell -> fs.map(f => footerRows(new java.io.File(root, f))).sum
+      cell -> fs.map(f => CommitLog.footerRowCount(new java.io.File(root, f))).sum
     }
-  }
 
   /** Cell balance (max/mean over live cells) straight from the
     * manifest counts — the rebuild gate's read path; None on a

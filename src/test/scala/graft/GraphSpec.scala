@@ -62,4 +62,14 @@ class GraphSpec extends SparkSpec {
       }
     }
   }
+
+  test("copurchaseEdges is symmetric: the bfsHops last-two-layers precondition") {
+    // bfsHops anti-joins only the last two layers, which is exact only
+    // while every edge has its mirror
+    val edges = graft.operators.Graph.copurchaseEdges(spark, sf)
+    val mirror = edges.select(col("dst").as("src"), col("src").as("dst"))
+    assert(!edges.isEmpty)
+    assert(edges.except(mirror).isEmpty, "an edge lacks its (dst, src) mirror")
+    assert(mirror.except(edges).isEmpty, "a mirror lacks its (src, dst) edge")
+  }
 }

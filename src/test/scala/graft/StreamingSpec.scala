@@ -3502,4 +3502,33 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() === want,
       "a case-drifted subscription column must still prune to the partition")
   }
+
+  test("footerRowCount equals a stock footer count, multi-row-group and empty") {
+    import graft.sources.CommitLog
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    def onePart(df: org.apache.spark.sql.DataFrame, blockSize: Int): java.io.File = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_footer").toString
+      df.coalesce(1).write.mode("overwrite")
+        .option("parquet.block.size", blockSize.toString).parquet(dir)
+      val parts = new java.io.File(dir).listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      assert(parts.length === 1)
+      parts.head
+    }
+    def stock(f: java.io.File) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getAbsolutePath),
+        new org.apache.hadoop.conf.Configuration()))
+      try (r.getRecordCount, r.getRowGroups.size) finally r.close()
+    }
+    val multi = onePart(spark.range(0, 50000).selectExpr("id", "id * 7 AS v"), 4096)
+    val (rows, groups) = stock(multi)
+    assert(rows === 50000L)
+    assert(groups > 1, "the fixture must span several row groups")
+    assert(CommitLog.footerRowCount(multi) === rows)
+    val empty = onePart(spark.range(0).selectExpr("id"), 4096)
+    assert(stock(empty)._1 === 0L)
+    assert(CommitLog.footerRowCount(empty) === 0L)
+  }
 }
