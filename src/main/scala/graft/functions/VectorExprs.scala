@@ -276,64 +276,72 @@ case class SrpSignature(child: Expression, tables: Int, bits: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "srp_sig"
 
+  /** The last dimension's sign table; every row of a vector column
+    * usually has the same dimension, so it is built once per task. */
+  @transient private var signCache: (Int, Array[Double]) = _
+
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
+    val n = v.numElements()
+    val cached = signCache
+    val signs =
+      if (cached != null && cached._1 == n) cached._2
+      else { val t = SrpSignature.signs(tables, bits, n); signCache = (n, t); t }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      SrpSignature.keys(v, signs, tables, bits))
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val signs = ctx.addMutableState("double[]", "srpSigns")
+    val signsDim = ctx.addMutableState("int", "srpSignsDim", v => s"$v = -1;")
+    val obj = classOf[SrpSignature].getName
+    nullSafeCodeGen(ctx, ev, a => s"""
+       |if ($a.numElements() != $signsDim) {
+       |  $signsDim = $a.numElements();
+       |  $signs = $obj.signs($tables, $bits, $signsDim);
+       |}
+       |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+       |  .fromPrimitiveArray($obj.keys($a, $signs, $tables, $bits));
+     """.stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): SrpSignature =
+    copy(child = newChild)
+}
+
+object SrpSignature {
+  /** The ±1 projection signs, indexed [(table · bits + bit) · dim + i]:
+    * bit 0 of a splitmix64 hash of (table, bit, i). */
+  def signs(tables: Int, bits: Int, dim: Int): Array[Double] =
+    Array.tabulate(tables * bits * dim) { k =>
+      var z = ((k / dim).toLong * 4099L + k % dim) * 0x9e3779b97f4a7c15L
+      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+      z = z ^ (z >>> 31)
+      if ((z & 1L) == 0L) 1.0 else -1.0
+    }
+
+  /** One key per table, bit h set when the h-th signed sum is > 0. The
+    * sums run in index order and a sign times a value is exactly
+    * ±value, so keys match adding or subtracting values directly. */
+  def keys(v: ArrayData, signs: Array[Double], tables: Int, bits: Int): Array[Long] = {
     val n = v.numElements()
     val out = new Array[Long](tables)
     var t = 0
     while (t < tables) {
-      var key = 0L
       var h = 0
       while (h < bits) {
+        val row = (t * bits + h) * n
         var acc = 0.0
         var i = 0
-        while (i < n) {
-          var z = ((t.toLong * bits + h) * 4099L + i) * 0x9e3779b97f4a7c15L
-          z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-          z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-          z = z ^ (z >>> 31)
-          acc += (if ((z & 1L) == 0L) v.getDouble(i) else -v.getDouble(i))
-          i += 1
-        }
-        if (acc > 0) key |= (1L << h)
+        while (i < n) { acc += signs(row + i) * v.getDouble(i); i += 1 }
+        if (acc > 0) out(t) |= 1L << h
         h += 1
       }
-      out(t) = key
       t += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val out = ctx.freshName("out"); val t = ctx.freshName("t")
-      val key = ctx.freshName("key"); val h = ctx.freshName("h")
-      val acc = ctx.freshName("acc"); val i = ctx.freshName("i")
-      val z = ctx.freshName("z"); val n = ctx.freshName("n")
-      s"""
-         |int $n = $a.numElements();
-         |long[] $out = new long[$tables];
-         |for (int $t = 0; $t < $tables; $t++) {
-         |  long $key = 0L;
-         |  for (int $h = 0; $h < $bits; $h++) {
-         |    double $acc = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      long $z = (((long) $t * $bits + $h) * 4099L + $i) * 0x9e3779b97f4a7c15L;
-         |      $z = ($z ^ ($z >>> 30)) * 0xbf58476d1ce4e5b9L;
-         |      $z = ($z ^ ($z >>> 27)) * 0x94d049bb133111ebL;
-         |      $z = $z ^ ($z >>> 31);
-         |      $acc += (($z & 1L) == 0L) ? $a.getDouble($i) : -$a.getDouble($i);
-         |    }
-         |    if ($acc > 0) $key |= (1L << $h);
-         |  }
-         |  $out[$t] = $key;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SrpSignature =
-    copy(child = newChild)
 }
 
 /** Distinct word n-gram shingles of a token array, computed in

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Det._
@@ -158,92 +160,90 @@ object Dedup {
     * rounds — each alternation halves the remaining path — vs 4095
     * for propagation; PropertyProps equates labels with brute-force
     * union-find on random graphs).
-    * Each round is two shuffled join + agg stages over the EDGE set,
-    * fully distributed; `localCheckpoint` truncates per-round
-    * lineage; a 20-round cap guards non-convergence (then O(log² n)
-    * would have to exceed 20 — require fails loudly, never splits a
-    * component silently). */
+    * Each round is one Spark job over the edge RDD (see
+    * [[connectedComponents]]); a 20-round cap guards non-convergence
+    * (then O(log² n) would have to exceed 20 — require fails loudly,
+    * never splits a component silently). */
   def dedupClusters(d: DataFrame): DataFrame =
     clusterLabels(d)
       .groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("n_docs"), max(col("doc_id")).as("max_doc_id"))
 
   /** Per-doc cluster labels (doc_id, label) — label = min doc_id of
-    * the connected component; singletons label themselves. Shared by
-    * q_dedup_cluster (aggregated report) and q_dedup_survivors
-    * (per-cluster survivor selection). */
+    * the connected component, so cluster_id doubles as the canonical
+    * survivor id. Docs absent from the star edges (component minima,
+    * edge-free docs, docs too short to shingle) label themselves.
+    * Shared by q_dedup_cluster (aggregated report) and
+    * q_dedup_survivors (per-cluster survivor selection). */
   private[graft] def clusterLabels(d: DataFrame): DataFrame = {
-    // MATERIALIZE the pair join first, at the session's batch fan-out:
-    // it is the expensive half (the full prefix-filtered similarity
-    // join), and its memoized eager checkpoint pins the result so the
-    // scoped fan-out below cannot capture it through lazy re-planning
-    // (and q_dedup_near_jaccard shares the same materialization).
-    val pairs = nearDupPairs(d).select(col("da"), col("db"))
-    // The propagation loop then iterates over the EDGE set, which is
-    // tiny by construction (near-dup pairs are the anomaly), so the
-    // rounds run with a fan-out sized to the graph instead of the
-    // session's batch tuning — per-round cost is real work, not
-    // empty-partition scheduling. (The scoping matters at cluster
-    // fan-outs — thousands of partitions × rounds — more than at 32.)
-    // At 100 TB the knob is sized to |edges|, just computed above.
-    graft.Confs.withConfs(d.sparkSession,
-        "spark.sql.shuffle.partitions" -> "4") {
-      dedupClustersLoop(d, pairs)
+    val (stars, _) = connectedComponents(nearDupPairs(d).select(col("da"), col("db")))
+    d.select(col("doc_id"))
+      .join(stars.select(col("u").as("doc_id"), col("v").as("parent")),
+        Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("parent"), col("doc_id")).as("label"))
+  }
+
+  /** Partitions a (node, neighbour) key by its node alone, so one
+    * node's whole neighbour list lands in one partition. */
+  private final case class ByNode(numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int =
+      Math.floorMod(java.lang.Long.hashCode(key.asInstanceOf[(Long, Long)]._1), numPartitions)
+  }
+
+  /** One star step over directed (child, parent) edges. Each node's
+    * neighbours arrive as one ascending sorted run, so the run's first
+    * element is its minimum and the step streams: no per-node buffer,
+    * even for a million-member boilerplate family.
+    *  - large-star (`large`): every node u rewires its STRICTLY LARGER
+    *    neighbours to m = min(u, N(u)); the edges are read both ways.
+    *  - small-star: every child u rewires itself and its other
+    *    (smaller) parents to its least parent m.
+    * Both emit child > parent; repeated neighbours are skipped. */
+  private def starStep(e: RDD[(Long, Long)], byNode: Partitioner,
+      large: Boolean): RDD[(Long, Long)] = {
+    val adj = if (large) e.flatMap { case (c, p) => Iterator((c, p), (p, c)) } else e
+    adj.map((_, ())).repartitionAndSortWithinPartitions(byNode).mapPartitions { it =>
+      var started = false
+      var u, m, last = 0L
+      it.flatMap { case ((x, v), _) =>
+        val head = !started || x != u
+        val repeat = !head && v == last
+        if (head) { started = true; u = x; m = math.min(x, v) }
+        last = v
+        if (repeat) Iterator.empty
+        else if (large) { if (v > u) Iterator.single((v, m)) else Iterator.empty }
+        else Iterator.single((if (head) u else v, m))
+      }
     }
   }
 
-  /** Large-star round: every node rewires its STRICTLY LARGER
-    * neighbors to the minimum of its closed neighborhood. Input/output
-    * edges are directed (child, parent) with child > parent. */
-  private def largeStar(e: DataFrame): DataFrame = {
-    val bi = e.union(e.select(col("v").as("u"), col("u").as("v")))
-    val m = bi.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      .select(col("u"), least(col("u"), col("mn")).as("m"))
-    bi.join(m, "u")
-      .filter(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-  }
-
-  /** Small-star round: every node rewires its smaller-or-equal
-    * neighbors (and itself) to their common minimum. */
-  private def smallStar(e: DataFrame): DataFrame = {
-    val or = e.select(greatest(col("u"), col("v")).as("u"),
-      least(col("u"), col("v")).as("v"))
-    val m = or.groupBy(col("u")).agg(min(col("v")).as("m"))
-    val nbrs = or.join(m, "u")
-      .select(col("v").as("u"), col("m").as("v"))
-    val self = m.select(col("u"), col("m").as("v"))
-    nbrs.union(self).filter(col("u") =!= col("v")).distinct()
-  }
-
   /** Alternating large-star/small-star to fixpoint over an undirected
-    * pair list (any orientation, self-loops tolerated). Returns the
-    * star-forest edges (node → component-min) — component minima have
-    * no row — plus the round count, exposed so the chain-graph spec
-    * can pin the O(log n) convergence claim with a measurement. */
+    * pair list of longs (any orientation, self-loops tolerated).
+    * Returns the star-forest edges (u = node, v = component min) —
+    * component minima have no row — plus the round count, exposed so
+    * the chain-graph spec can pin the O(log n) convergence claim.
+    *
+    * One job per round: the new edges (tag 1) and the old ones (tag 2)
+    * meet in one `reduceByKey(_ | _)`, which dedupes the new set and
+    * tests the fixpoint at once (a tag other than 3 means the round
+    * changed the graph). Counting those is the round's only action; it
+    * also fills the `localCheckpoint` the next round reads. */
   private[graft] def connectedComponents(pairs: DataFrame): (DataFrame, Int) = {
-    var e = pairs.toDF("u", "v")
-      .filter(col("u") =!= col("v"))
-      .select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      .distinct().localCheckpoint(true)
+    val s = pairs.sparkSession
+    val n = s.sparkContext.defaultParallelism
+    val (byNode, byEdge) = (ByNode(n), new HashPartitioner(n))
+    var e: RDD[(Long, Long)] = pairs.rdd.flatMap { r =>
+      val (a, b) = (r.getLong(0), r.getLong(1))
+      if (a == b) None else Some((math.max(a, b), math.min(a, b)))
+    }
     var rounds = 0
     var done = false
     while (!done && rounds < 20) {
-      // LAZY local checkpoint (r20, VERDICT r19 #5): the fixpoint test
-      // below is the FIRST action over `next`, so its ±1 union-agg job
-      // also materializes the round's edge set (cache-backed, lineage
-      // truncated once the action completes) — ONE job per round where
-      // the r19 shape paid two (eager checkpoint, then the test).
-      val next = smallStar(largeStar(e)).localCheckpoint(false)
-      // fixpoint test on the canonical edge set: both rounds emit
-      // child > parent and distinct rows, so multiset equality IS set
-      // equality — one ±1 union-aggregate job instead of the old
-      // two-sided except + union (three passes over both edge sets)
-      done = multisetEqual(next, e)
-      e = next
+      val next = starStep(starStep(e, byNode, large = true), byNode, large = false)
+      val tagged = next.map((_, 1)).union(e.map((_, 2)))
+        .reduceByKey(byEdge, _ | _).localCheckpoint()
+      done = tagged.filter(_._2 != 3).count() == 0
+      e = tagged.filter(_._2 != 2).keys
       rounds += 1
     }
     // the cap is a runaway guard, not an exit: silently stopping early
@@ -251,28 +251,7 @@ object Dedup {
     require(done,
       s"large-star/small-star not converged after $rounds rounds — " +
         "edge set still moving")
-    (e, rounds)
-  }
-
-  private def dedupClustersLoop(d: DataFrame, pairs: DataFrame): DataFrame = {
-    // only docs touching an edge participate in contraction (the
-    // iterated frames stay O(|edges|), not O(|docs|)); edge-free docs
-    // are singleton clusters, unioned in after convergence
-    val inGraph = pairs.select(col("da").as("doc_id"))
-      .union(pairs.select(col("db").as("doc_id"))).distinct()
-      .localCheckpoint(true)
-    val (stars, _) = connectedComponents(pairs)
-    // label = min doc_id of the component ⇒ cluster_id doubles as the
-    // canonical survivor id; component minima (absent from the star
-    // edges) and singletons (no edges) label themselves
-    val labels = inGraph
-      .join(stars.select(col("u").as("doc_id"), col("v").as("lab")),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("lab"), col("doc_id")).as("label"))
-    val singletons = d.select(col("doc_id"))
-      .join(inGraph, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("label"))
-    labels.union(singletons)
+    (s.createDataFrame(e).toDF("u", "v"), rounds)
   }
 
   /** URL canonicalization pipeline (q_dedup_url; r9 rework of the

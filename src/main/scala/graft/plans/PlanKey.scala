@@ -62,8 +62,9 @@ object PlanKey {
     * (bounded — past 8 entries the memo clears so the ContextCleaner
     * can release blocks); unkeyable inputs still CHECKPOINT, just
     * without memoizing — callers rely on the result being pinned
-    * (e.g. dedupClusters' scoped-conf loop must not lazily re-plan
-    * the pair join), so the no-memo path must not weaken that. */
+    * (e.g. the connected-components loop reads the pair table twice
+    * in its first round and must not re-run the pair join for each
+    * read), so the no-memo path must not weaken that. */
   def memoize(memo: java.util.concurrent.ConcurrentHashMap[
         (org.apache.spark.sql.SparkSession, String), DataFrame],
       df: DataFrame)(build: => DataFrame): DataFrame =

@@ -64,6 +64,71 @@ class DedupSpec extends SparkSpec {
     assert(labels.forall(_._2 === 0L), "all labels must be the component min (0)")
   }
 
+  test("connected components starts exactly one Spark job per round") {
+    val n = 4096L
+    val chain = spark.range(n - 1).toDF("da")
+      .select(col("da"), (col("da") + 1).as("db"))
+    val sc = spark.sparkContext
+    val probe = "graft.test.ccProbe"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(probe))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(probe, "cc")
+      val (_, rounds) = Dedup.connectedComponents(chain)
+      // the listener bus delivers events in order: once a later fence
+      // job is seen, every job the loop started has been counted
+      sc.setLocalProperty(probe, "fence")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains("fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains("fence"), "listener never saw the fence job")
+      val jobs = seen.toArray.count(_ == "cc")
+      assert(rounds === 13)
+      assert(jobs === rounds, s"$jobs jobs for $rounds rounds")
+    } finally {
+      sc.setLocalProperty(probe, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("clusterLabels: every doc once, labels = union-find over the pairs") {
+    import spark.implicits._
+    def words(p: String, r: Range) = r.map(i => s"$p$i")
+    val base = words("w", 0 until 30)
+    // B ≈ A (J = 26/30) and B ≈ C (J = 26/30), but A ≉ C (J = 24/32):
+    // only the chain through B joins A and C
+    val a = base.take(28) ++ Seq("a1", "a2")
+    val c = Seq("c1", "c2") ++ base.drop(2)
+    val docs = Seq(
+      7L -> a, 3L -> base, 12L -> c,
+      20L -> words("z", 0 until 12), 21L -> words("z", 0 until 12),
+      1L -> Seq("too", "short"), 9L -> Seq.empty[String],
+      5L -> words("q", 0 until 30))
+    val d = docs.map { case (id, ws) => (id, ws.mkString(" ")) }.toDF("doc_id", "text")
+    val pairs = Dedup.nearDupPairs(d).select("da", "db").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.toSet === Set((3L, 7L), (3L, 12L), (20L, 21L)))
+    val parent = scala.collection.mutable.Map(docs.map(x => x._1 -> x._1): _*)
+    def find(x: Long): Long =
+      if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+    pairs.foreach { case (x, y) =>
+      val (rx, ry) = (find(x), find(y))
+      if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry)
+    }
+    val labels = Dedup.clusterLabels(d).collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(labels.map(_._1).sorted.toSeq === docs.map(_._1).sorted, "each doc_id exactly once")
+    assert(labels.toMap === docs.map(x => x._1 -> find(x._1)).toMap)
+    assert(labels.toMap.filter(_._2 == 3L).keySet === Set(3L, 7L, 12L))
+    val clusters = Dedup.dedupClusters(d).collect()
+      .map(r => r.getAs[Long]("cluster_id") -> r.getAs[Long]("n_docs")).toMap
+    assert(clusters.values.sum === docs.size)
+    assert(clusters(3L) === 3L && clusters(20L) === 2L)
+  }
+
   test("q_dedup_url: canonical keys are noise-free and conserve the corpus (r8)") {
     val rows = SparkEntry.queries("q_dedup_url")(spark, sf).collect()
       .map(r => (r.getAs[String]("canon_url"), r.getAs[Long]("n_docs"),

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.VectorExprs
+import graft.functions.{SrpSignature, VectorExprs}
 import graft.operators.Similarity
 import graft.sources.Tables
 
@@ -12,6 +12,48 @@ class SimilaritySpec extends SparkSpec {
     VectorExprs.register(spark)
     Tables(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+  }
+
+  test("srp_sig: interpreted and codegen paths equal the per-element hash formula") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    // the signature as first written: one splitmix64 hash per
+    // (table, bit, dim) of every row, summed in index order
+    def reference(v: Array[Double], tables: Int, bits: Int): Seq[Long] =
+      (0 until tables).map { t =>
+        var key = 0L
+        for (h <- 0 until bits) {
+          var acc = 0.0
+          for (i <- v.indices) {
+            var z = ((t.toLong * bits + h) * 4099L + i) * 0x9e3779b97f4a7c15L
+            z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+            z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+            z = z ^ (z >>> 31)
+            acc += (if ((z & 1L) == 0L) v(i) else -v(i))
+          }
+          if (acc > 0) key |= (1L << h)
+        }
+        key
+      }
+    val rnd = new scala.util.Random(7)
+    // dims alternate so one expression instance rebuilds its sign table
+    val rows = Seq(1, 63, 64, 65, 64, 1, 65).flatMap(dim =>
+      Seq.fill(3)(Array.fill(dim)(rnd.nextGaussian())))
+    for ((tables, bits) <- Seq((32, 6), (32, 8))) {
+      val e = SrpSignature(BoundReference(0, ArrayType(DoubleType, false), false), tables, bits)
+      val proj = GenerateUnsafeProjection.generate(Seq(e))
+      rows.foreach { v =>
+        val row = InternalRow(new GenericArrayData(v.map(x => x: Any)))
+        val want = reference(v, tables, bits)
+        val interpreted = e.eval(row).asInstanceOf[GenericArrayData].toLongArray().toSeq
+        val generated = proj(row).getArray(0).toLongArray().toSeq
+        assert(interpreted === want, s"interpreted, dim ${v.length}, ($tables, $bits)")
+        assert(generated === want, s"codegen, dim ${v.length}, ($tables, $bits)")
+      }
+    }
   }
 
   test("q_embed_pca: unit-norm loading whose Rayleigh quotient beats the init vector (r8)") {

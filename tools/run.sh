@@ -12,9 +12,12 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADDOPENS="$ADDOPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# default heap: half of physical memory, clamped to 2-8g
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}"
 exec java $ADDOPENS \
-  -Xmx"${SPARK_DRIVER_MEM:-48g}" \
+  -Xmx"$MEM" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "target/scala-2.13/classes:${SPARK_HOME:-/opt/spark}/jars/*" \
   "$@"
