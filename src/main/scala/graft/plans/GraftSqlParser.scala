@@ -1090,21 +1090,24 @@ case class MergeIntoGraftCommand(parts: Seq[String], source: String,
     // meaning — silently routing it (upsert-wins / duplicate target
     // rows) can diverge from a sequential apply. Duplicate UNMATCHED
     // keys stay legal: each inserts, the documented MERGE contract.
-    // ONE distributed count — duplicate source keys semi-restricted
-    // to keys present in the target — and limit(1): metadata-sized.
+    // The source's duplicate keys are collected first (source-sized);
+    // only a non-empty set probes the target (broadcast semi-join,
+    // limit(1)). NULL keys never match.
     def requireNoDupMatches(effectiveSrc: org.apache.spark.sql.DataFrame): Unit = {
       val head = CommitLog.latestVersion(root)
         .getOrElse(sys.error(s"cannot merge into an empty table at $root"))
       val kc = keyCols.map(col)
-      val dup = effectiveSrc.select(kc: _*)
-        .groupBy(kc: _*).count().filter(col("count") > 1)
-        .join(CommitLog.read(s, root, head).select(kc: _*).distinct(),
-          keyCols, "left_semi")
+      val dupKeys = effectiveSrc.select(kc: _*)
+        .groupBy(kc: _*).count().filter(col("count") > 1).select(kc: _*)
+      val local = dupKeys.collect()
+      val dup = if (local.isEmpty) local else CommitLog.read(s, root, head).select(kc: _*)
+        .join(org.apache.spark.sql.functions.broadcast(s.createDataFrame(
+          java.util.Arrays.asList(local: _*), dupKeys.schema)), keyCols, "left_semi")
         .limit(1).collect()
       if (dup.nonEmpty) throw new IllegalArgumentException(
         s"MERGE INTO ${parts.mkString(".")}: multiple source rows match " +
           s"the target row with ${keyCols.mkString("(", ", ", ")")} = " +
-          dup(0).toSeq.dropRight(1).mkString("(", ", ", ")") +
+          dup(0).toSeq.mkString("(", ", ", ")") +
           " — a MERGE cannot apply two images to one target row; " +
           "de-duplicate the source (e.g. keep the last image per key) " +
           "before merging")

@@ -60,7 +60,42 @@ object CommitLog {
   private[sources] val footerReadOptions =
     org.apache.parquet.HadoopReadOptions.builder(hadoopConf).build()
 
-  /** Parquet footer row count with a bounded cache (r19; key hardened
+  /** One parquet footer: row count, top-level (physical) column
+    * `names`, and per top-level INT32/INT64 column annotated none,
+    * signed INT or DATE its stats over all row groups. No entry when a
+    * row group's stats are missing or partial, or the file has Spark's
+    * legacy (Julian-rebased) datetime key. */
+  private[sources] final case class FooterSummary(rows: Long,
+      names: Seq[String], longStats: Map[String, ColStat])
+
+  private def summarize(r: org.apache.parquet.hadoop.ParquetFileReader): FooterSummary = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.schema.{LogicalTypeAnnotation => L, PrimitiveType, Type}
+    val fm = r.getFooter.getFileMetaData
+    val blocks = r.getFooter.getBlocks.asScala.toSeq.map(b =>
+      b.getRowCount -> b.getColumns.asScala.map(c => c.getPath -> c.getStatistics).toMap)
+    def fold(name: String): Option[ColStat] = {
+      val path = org.apache.parquet.hadoop.metadata.ColumnPath.get(name)
+      val per = blocks.map { case (n, m) => n -> m.get(path).orNull }
+      def bounds(f: org.apache.parquet.column.statistics.Statistics[_] => Any) =
+        per.map(_._2).filter(_.hasNonNullValue).map(f(_).asInstanceOf[Number].longValue)
+      Option.when(per.forall { case (n, st) => st != null && st.isNumNullsSet &&
+          (st.hasNonNullValue || st.getNumNulls == n) })(ColStat(bounds(_.genericGetMin).minOption,
+        bounds(_.genericGetMax).maxOption, per.map(_._2.getNumNulls).sum))
+    }
+    val fields = fm.getSchema.getFields.asScala.toSeq
+    val integral = if (fm.getKeyValueMetaData.containsKey("org.apache.spark.legacyDateTime")) Nil
+      else fields.collect { case p: PrimitiveType if p.getRepetition != Type.Repetition.REPEATED &&
+          Set("INT32", "INT64")(p.getPrimitiveTypeName.name) && (p.getLogicalTypeAnnotation match {
+            case null | _: L.DateLogicalTypeAnnotation => true
+            case i: L.IntLogicalTypeAnnotation => i.isSigned
+            case _ => false
+          }) => p.getName }
+    FooterSummary(r.getRecordCount, fields.map(_.getName),
+      integral.flatMap(n => fold(n).map(n -> _)).toMap)
+  }
+
+  /** Parquet footer summary with a bounded cache (r19; key hardened
     * r20). Every staged file's footer was opened TWICE per commit —
     * once by the zero-row filter at staging, once by [[stagedSizes]]
     * after the atomic move. The r19 key was (fileKey, size, mtime-ms)
@@ -75,9 +110,10 @@ object CommitLog {
     * write-once) plus nanosecond mtime, and the one legitimate
     * identity carry — the stage→data rename — re-keys explicitly via
     * [[moveWithFooterCount]]. Eviction halves ([[evictHalf]]), never
-    * full-clears. */
-  private val footerRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Long]()
+    * full-clears. Values are [[FooterSummary]]s: a staged file's typed
+    * stats come from the zero-row filter's open. */
+  private val footerCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), FooterSummary]()
   private def footerCacheKey(p: java.io.File): Option[(String, Long, Long)] =
     try {
       val attrs = java.nio.file.Files.readAttributes(
@@ -85,29 +121,30 @@ object CommitLog {
       Some((p.getAbsolutePath, attrs.size(),
         attrs.lastModifiedTime().to(java.util.concurrent.TimeUnit.NANOSECONDS)))
     } catch { case _: Throwable => None }
-  private[graft] def footerRowCount(p: java.io.File): Long = {
-    def read(): Long = {
+  private[sources] def footerSummary(p: java.io.File): FooterSummary = {
+    def read(): FooterSummary = {
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(p.getAbsolutePath), hadoopConf),
         footerReadOptions)
-      try r.getRecordCount finally r.close()
+      try summarize(r) finally r.close()
     }
     footerCacheKey(p) match {
       case None => read()
       case Some(k) =>
-        if (footerRowsCache.size > 8192) evictHalf(footerRowsCache)
-        footerRowsCache.computeIfAbsent(k, _ => read())
+        if (footerCache.size > 8192) evictHalf(footerCache)
+        footerCache.computeIfAbsent(k, _ => read())
     }
   }
+  private[graft] def footerRowCount(p: java.io.File): Long = footerSummary(p).rows
   /** The stage→data atomic rename, carrying the staged file's cached
-    * footer count to the destination key so [[stagedSizes]] never
-    * re-opens a footer the zero-row filter just read. A POSIX rename
+    * footer summary to the destination key so no later reader re-opens
+    * a footer the zero-row filter just read. A POSIX rename
     * preserves size and mtime, so only the path component changes. */
   private def moveWithFooterCount(src: java.io.File, dst: java.io.File): Unit = {
-    val cached = footerCacheKey(src).flatMap(k => Option(footerRowsCache.get(k)))
+    val cached = footerCacheKey(src).flatMap(k => Option(footerCache.get(k)))
     java.nio.file.Files.move(src.toPath, dst.toPath)
-    for (c <- cached; k <- footerCacheKey(dst)) footerRowsCache.put(k, c)
+    for (c <- cached; k <- footerCacheKey(dst)) footerCache.put(k, c)
   }
   /** JSON-quote an arbitrary string (partition values and string
     * column bounds are DATA, not path-safe identifiers — a quote or
@@ -1165,21 +1202,20 @@ object CommitLog {
     * columns again. Columns absent from this write's frame (e.g. a
     * pre-widen writer) or of a type the stats encoding doesn't cover
     * simply skip — stat-less files are unprunable, the safe default.
-    * Cost: one groupBy(input_file_name) aggregate over the staged
-    * files per commit, the same staging-time shape appendWithStats
-    * has always paid. */
+    * Cost: integral and DATE columns read the staged files' footers;
+    * other types run one groupBy(input_file_name) aggregate over the
+    * staged files (see [[perFileColStats]]). */
   /** Per-file byte sizes AND row counts of the staged files (r15) —
     * one local stat call + one parquet footer read each at WRITE time
     * (the files were just written here, still page-cache-hot), so
     * size estimation and the metadata COUNT(*) answer never touch a
     * data file at plan time. */
   private def stagedSizes(root: String, staged: Seq[String]): Aux = {
-    def footerRows(p: java.io.File): Long = footerRowCount(p)
     Aux(
       sizes = staged.map(f =>
         f -> new java.io.File(root, f).length()).toMap,
       rows = staged.map(f =>
-        f -> footerRows(new java.io.File(root, f))).toMap)
+        f -> footerRowCount(new java.io.File(root, f))).toMap)
   }
 
   private def declaredColStats(s: SparkSession, root: String,
@@ -2411,11 +2447,30 @@ object CommitLog {
   }
 
   /** Per-file min/max/nullCount for every column in `cols`, over the
+    * staged files. A "long"-tagged head-schema column that every
+    * non-empty file's cached [[FooterSummary]] covers is read from
+    * the footers; the rest go to [[perFileColStatsJob]]. Same Aux. */
+  private[graft] def perFileColStats(s: SparkSession, root: String,
+      staged: Seq[String], cols: Seq[String]): Aux = {
+    val live = staged.map(f => f -> footerSummary(new java.io.File(root, f))).filter(_._2.rows > 0)
+    val fields = headSchema(root).toSeq.flatMap(_.fields).map(f => f.name -> f).toMap
+    val fromFooter = cols.filter(c => fields.get(c).exists(f =>
+      scala.util.Try(statTagOf(f.dataType)).toOption.contains("long") &&
+        live.forall(_._2.longStats.contains(physicalName(f)))))
+    val job = perFileColStatsJob(s, root, staged, cols.filterNot(fromFooter.contains))
+    if (fromFooter.isEmpty || staged.isEmpty) job
+    else job.copy(statsTags = job.statsTags ++ fromFooter.map(_ -> "long"),
+      stats2 = live.map { case (rel, fs) => rel -> (job.stats2.getOrElse(rel, Map.empty) ++
+        fromFooter.map(c => c -> fs.longStats(physicalName(fields(c))))) }.toMap)
+  }
+
+  /** Per-file min/max/nullCount for every column in `cols`, over the
     * staged files, in ONE Spark job (a groupBy(input_file_name)
     * aggregate — never a read+collect per file). Timestamps record as
     * epoch MICROS (exact integers), dates as epoch days, strings
-    * lexicographically. */
-  private def perFileColStats(s: SparkSession, root: String,
+    * lexicographically. Used for what footers cannot answer: doubles
+    * (NaN, -0.0), strings, timestamps, partial stats, legacy files. */
+  private[graft] def perFileColStatsJob(s: SparkSession, root: String,
       staged: Seq[String], cols: Seq[String]): Aux = {
     import org.apache.spark.sql.functions._
     if (staged.isEmpty || cols.isEmpty) return Aux()
@@ -4031,15 +4086,16 @@ object CommitLog {
     * files carry no entries and must always be read), and a
     * long-lived table's data-skipping decays to nothing. This is the
     * public formats' behavior: stats are computed on every write, not
-    * only on the first. Cost: one groupBy(input_file_name) aggregate
-    * over the STAGED files only — data the rewrite just produced;
-    * tables without typed stats pay nothing. Columns the staged
-    * frame no longer carries are skipped (mixed-schema safety). */
+    * only on the first. Cost: [[perFileColStats]] over the STAGED
+    * files only; tables without typed stats pay nothing. Columns the
+    * first staged footer no longer carries are skipped. */
   private def restageColStats(s: SparkSession, root: String,
       aux: Aux, staged: Seq[String]): Aux = {
     if (aux.statsTags.isEmpty || staged.isEmpty) aux
     else {
-      val have = readStagedLogical(s, root, staged).columns.toSet
+      val byPhys = headSchema(root).toSeq.flatMap(_.fields).map(f => physicalName(f) -> f.name).toMap
+      val have = footerSummary(new java.io.File(root, staged.head)).names
+        .map(n => byPhys.getOrElse(n, n)).toSet
       val cols = aux.statsTags.keys.toSeq.sorted.filter(have)
       if (cols.isEmpty) aux
       else aux.merged(perFileColStats(s, root, staged, cols))

@@ -3067,4 +3067,98 @@ class CatalogSpec extends SparkSpec {
     assert(meta.fullLayoutCols.isEmpty && meta.layoutCols.isEmpty,
       s"re-staged table must not inherit the old layout metadata: $meta")
   }
+
+  private def rel(root: String, p: String): String =
+    new java.io.File(root).toURI.relativize(new java.io.File(p).toURI).getPath
+
+  test("typed stats from parquet footers equal the Spark job's; other types fall back to it") {
+    val root = java.nio.file.Files.createTempDirectory("graft_footstats").toString
+    val df = spark.range(6000).selectExpr(
+      "id - 3000 AS b",
+      "CAST(id % 1000 - 500 AS INT) AS i",
+      "CAST(id % 300 - 150 AS SMALLINT) AS sh",
+      "CAST(id % 200 - 100 AS TINYINT) AS by",
+      "date_sub(DATE'1970-01-10', CAST(id % 40 AS INT)) AS d",
+      "CAST(NULL AS BIGINT) AS nul",
+      "IF(id % 3 = 0, NULL, id * 7 - 9000) AS mixed",
+      "CASE id % 4 WHEN 0 THEN CAST('NaN' AS DOUBLE) WHEN 1 THEN -0.0D " +
+        "WHEN 2 THEN 0.0D ELSE id / 3.0D END AS dbl",
+      "CAST(id AS STRING) AS s",
+      "TIMESTAMP'1969-12-31 23:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts")
+    CommitLog.append(spark, root, df, nFiles = 3)
+    // a second commit whose files hold only NULLs in `mixed` and only
+    // finite doubles
+    CommitLog.append(spark, root, df.filter("id % 3 = 0 AND id % 4 >= 2"), nFiles = 2)
+    val head = CommitLog.latestVersion(root).get
+    // plus two files of the same data with small row groups, written
+    // beside the table
+    df.coalesce(2).write.option("parquet.block.size", "1024")
+      .parquet(new java.io.File(root, "rg").toString)
+    val rgFiles = new java.io.File(root, "rg").listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).sorted.map("rg/" + _)
+    val files = CommitLog.snapshotFiles(root, head).map(rel(root, _)) ++ rgFiles
+    assert(files.size === 7, files.toString)
+    val groups = files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(new java.io.File(root, f).getAbsolutePath),
+          new org.apache.hadoop.conf.Configuration()))
+      try r.getRowGroups.size finally r.close()
+    }
+    assert(groups.takeRight(2).forall(_ > 1), s"row groups per file: $groups")
+    val integral = Seq("b", "i", "sh", "by", "d", "nul", "mixed")
+    val job = CommitLog.perFileColStatsJob(spark, root, files, integral)
+    assert(job.stats2.size === 7 && job.statsTags === integral.map(_ -> "long").toMap)
+    var footer = CommitLog.Aux()
+    assert(jobsOf { footer = CommitLog.perFileColStats(spark, root, files, integral) } === 0,
+      "integral and DATE stats must come from the footers, with no Spark job")
+    assert(footer === job)
+    val d = job.stats2.values.map(_("d")).toSeq
+    assert(d.forall(_.lo.exists(_.toString.toLong < 0)), s"dates before 1970: $d")
+    assert(job.stats2.values.forall(m => m("nul").lo.isEmpty && m("nul").nulls > 0))
+    // doubles with NaN and -0.0, strings and timestamps go through the
+    // job, alone and mixed with footer columns
+    val all = integral ++ Seq("dbl", "s", "ts")
+    assert(CommitLog.perFileColStats(spark, root, files, all) ===
+      CommitLog.perFileColStatsJob(spark, root, files, all))
+    assert(CommitLog.perFileColStats(spark, root, files, Seq("dbl", "s", "ts")) ===
+      CommitLog.perFileColStatsJob(spark, root, files, Seq("dbl", "s", "ts")))
+    // column mapping: the renamed columns' stats read their PHYSICAL
+    // names in the footers
+    CommitLog.renameColumn(spark, root, "b", "b2")
+    CommitLog.renameColumn(spark, root, "d", "d2")
+    val mapped = Seq("b2", "d2", "mixed")
+    val mappedJob = CommitLog.perFileColStatsJob(spark, root, files, mapped)
+    assert(mappedJob.stats2.values.forall(_.keySet === mapped.toSet))
+    assert(jobsOf { footer = CommitLog.perFileColStats(spark, root, files, mapped) } === 0)
+    assert(footer === mappedJob)
+  }
+
+  test("BIGINT statsColumns add no Spark job to DELETE, UPDATE, INSERT or OPTIMIZE ZORDER") {
+    val (cat, base) = freshCatalog()
+    val ev = Tables(spark, sf, "events").select(col("event_id"), col("value")).limit(2000)
+    ev.createOrReplaceTempView("stats_jobs_src")
+    Seq("plain" -> "", "st" -> " TBLPROPERTIES ('statsColumns' = 'event_id')").foreach {
+      case (t, props) =>
+        spark.sql(s"CREATE TABLE $cat.$t (event_id BIGINT, value DOUBLE)$props")
+        spark.sql(s"INSERT INTO $cat.$t SELECT * FROM stats_jobs_src")
+    }
+    Seq("DELETE FROM TBL WHERE event_id % 7 = 0",
+        "UPDATE TBL SET value = value + 1 WHERE event_id % 5 = 0",
+        "INSERT INTO TBL SELECT * FROM stats_jobs_src",
+        "OPTIMIZE TBL ZORDER BY (event_id)").foreach { q =>
+      val plain = jobsOf(spark.sql(q.replace("TBL", s"$cat.plain")))
+      val st = jobsOf(spark.sql(q.replace("TBL", s"$cat.st")))
+      assert(st === plain, s"$q: $st jobs with statsColumns, $plain without")
+    }
+    // and every live file still carries its typed stats
+    val root = new java.io.File(base, "st").toString
+    val head = CommitLog.latestVersion(root).get
+    val aux = CommitLog.auxOf(root, head)
+    assert(aux.statsTags === Map("event_id" -> "long"))
+    assert(CommitLog.snapshotFiles(root, head).forall(p =>
+      aux.stats2.get(rel(root, p)).exists(_.contains("event_id"))))
+    assert(spark.sql(s"SELECT * FROM $cat.st").count() ===
+      spark.sql(s"SELECT * FROM $cat.plain").count())
+  }
 }

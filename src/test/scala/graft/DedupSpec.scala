@@ -68,31 +68,10 @@ class DedupSpec extends SparkSpec {
     val n = 4096L
     val chain = spark.range(n - 1).toDF("da")
       .select(col("da"), (col("da") + 1).as("db"))
-    val sc = spark.sparkContext
-    val probe = "graft.test.ccProbe"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(probe))).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(probe, "cc")
-      val (_, rounds) = Dedup.connectedComponents(chain)
-      // the listener bus delivers events in order: once a later fence
-      // job is seen, every job the loop started has been counted
-      sc.setLocalProperty(probe, "fence")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains("fence") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains("fence"), "listener never saw the fence job")
-      val jobs = seen.toArray.count(_ == "cc")
-      assert(rounds === 13)
-      assert(jobs === rounds, s"$jobs jobs for $rounds rounds")
-    } finally {
-      sc.setLocalProperty(probe, null)
-      sc.removeSparkListener(listener)
-    }
+    var rounds = 0
+    val jobs = jobsOf { rounds = Dedup.connectedComponents(chain)._2 }
+    assert(rounds === 13)
+    assert(jobs === rounds, s"$jobs jobs for $rounds rounds")
   }
 
   test("clusterLabels: every doc once, labels = union-find over the pairs") {
