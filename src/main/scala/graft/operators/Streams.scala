@@ -618,8 +618,9 @@ object Streams {
       // level rides ON the log: version ≡ batchId, so a restarted
       // query re-delivering batch N (at-least-once upstream) finds
       // its version already published and skips
-      // (CommitLog.appendBatch; StreamingSpec pins replay-no-dupes,
-      // per-version atomicity, and a pinned reader racing ingest).
+      // (CommitLog.appendBatchPartitioned; StreamingSpec pins
+      // replay-no-dupes, per-version atomicity, and a pinned reader
+      // racing ingest).
       // Output is delivery-invariant (the final snapshot equals the
       // full events table) — oracle-checked like s_stream_enrich.
       // 100 TB posture: data flows as distributed parquet writes;

@@ -232,8 +232,8 @@ object CommitLog {
       * column fail loudly — bounds compared under the wrong type
       * would prune wrongly). Mixing partition COLUMNS still fails
       * here: spec evolution is explicit (the repartitionLayout
-      * property routes through [[appendPartitioned]]'s evolving
-      * branch, which re-bases the spec rather than merging). */
+      * property routes through [[rebaseSpec]], which re-bases the
+      * spec rather than merging). */
     def merged(newer: Aux): Aux = {
       statsTags.foreach { case (c, t) =>
         newer.statsTags.get(c).foreach(t2 => require(t2 == t,
@@ -400,8 +400,7 @@ object CommitLog {
   private[sources] def readManifest(root: String, version: Long): (String, Seq[String]) = {
     val f = manifest(root, version)
     require(f.exists(), s"commit log has no version $version under $root")
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(java.nio.file.Files.readString(f.toPath))
+    val node = mapper.readTree(java.nio.file.Files.readString(f.toPath))
     val files = node.get("files")
     require(files != null,
       s"version $version under $root is a SEGMENTED manifest — " +
@@ -1027,20 +1026,6 @@ object CommitLog {
       }
     }
 
-  /** Stage `df` as `nFiles` new data files and commit them APPENDED to
-    * the current snapshot (or as the first snapshot). Data files land
-    * under data/ with unique names but stay invisible to readers until
-    * the manifest rename publishes them. */
-  /** GENERATED columns (r12 — Delta's GENERATED ALWAYS AS): table
-    * property `generated.<col>` = a SQL expression over the row's
-    * other columns. On every plain append: a write that OMITS the
-    * column gets it COMPUTED (the common case — the writer doesn't
-    * know the derivation); a write that SUPPLIES it is VALIDATED
-    * against the expression (null-safe equality, a short-circuiting
-    * limit(1) probe like CHECK constraints) and fails the WRITE by
-    * name on divergence — never a silently wrong partition/stat.
-    * Applied BEFORE the schema check (a missing generated column
-    * must fill, not null-project). Returns the completed frame. */
   /** The table's generated-column definitions, name-sorted (the fold
     * order is deterministic across every write path). */
   private def generatedColsOf(root: String): Seq[(String, String)] =
@@ -1105,14 +1090,11 @@ object CommitLog {
     all.headOption
   }
 
-  private def fillIdentity(s: SparkSession, root: String,
-      df: DataFrame, opName: String): (DataFrame, Option[Long]) =
-    fillIdentityAt(s, root, df, opName, latestVersion(root))
-
-  /** [[fillIdentity]] against an EXPLICIT base version — the
-    * streaming sink allocates against batchId−1, so a replayed batch
-    * re-derives the SAME id block from the same mark and the
-    * version-≡-batchId skip keeps allocation exactly-once. */
+  /** Identity allocation against an EXPLICIT base version — the head
+    * the write lands on: the streaming sink allocates against
+    * batchId−1, so a replayed batch re-derives the SAME id block from
+    * the same mark and the version-≡-batchId skip keeps allocation
+    * exactly-once. */
   private def fillIdentityAt(s: SparkSession, root: String,
       df: DataFrame, opName: String,
       base: Option[Long]): (DataFrame, Option[Long]) =
@@ -1146,6 +1128,16 @@ object CommitLog {
         (out, Some(hwm0 + step * n))
     }
 
+  /** GENERATED columns (r12 — Delta's GENERATED ALWAYS AS): table
+    * property `generated.<col>` = a SQL expression over the row's
+    * other columns. On every plain append: a write that OMITS the
+    * column gets it COMPUTED (the common case — the writer doesn't
+    * know the derivation); a write that SUPPLIES it is VALIDATED
+    * against the expression (null-safe equality, a short-circuiting
+    * limit(1) probe like CHECK constraints) and fails the WRITE by
+    * name on divergence — never a silently wrong partition/stat.
+    * Applied BEFORE the schema check (a missing generated column
+    * must fill, not null-project). Returns the completed frame. */
   private def applyGeneratedColumns(s: SparkSession, root: String,
       df0: DataFrame, opName: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, not}
@@ -1164,47 +1156,177 @@ object CommitLog {
     }
   }
 
-  def append(s: SparkSession, root: String, df0: DataFrame, nFiles: Int): Long = {
-    // identity first (generated/default expressions may derive from
-    // the assigned id), then fill-or-validate
-    val (dfId, idHwm) = fillIdentity(s, root, df0, "append")
-    val df = applyGeneratedColumns(s, root, dfId, "append")
-    val prev = latestVersion(root)
-    requireSchemaCompatible(root, prev, df, "append")
-    enforceConstraints(s, root, df, "append")
-    val prevFiles = prev.map(v => snapshotFiles(root, v)
-      .map(p => relativize(root, p))).getOrElse(Nil)
-    // stats are per-FILE metadata: a commit that carries a file forward
-    // carries its stats entry too (the new stat-less files are simply
-    // unprunable), so one stats-unaware writer never strips the whole
-    // snapshot's skipping metadata
-    val (prevCol, prevStats) =
-      prev.map(v => snapshotStatsOf(root, v)).getOrElse((None, Map.empty[String, (Long, Long)]))
-    val staged = stageDataFiles(s, root, df, nFiles)
-    val v = commit(root, prevFiles ++ staged, prev,
-      statsCol = prevCol, stats = prevStats,
-      schemaJson = schemaOrRecord(root, prev, df),
-      extra = auxExtra(carriedAux(root, prev)
-        .merged(declaredColStats(s, root, staged, df))
-        .merged(stagedSizes(root, staged))),
-      newIdHwm = idHwm)
-    maybeAutoCompact(s, root, v)
-    v
+  /** Where an append lands ([[appendCore]]'s head mode). */
+  private sealed trait HeadMode
+  /** On the current head, once: a lost race throws the conflict. */
+  private case object LatestHead extends HeadMode
+  /** Exactly as version `batchId`, on `batchId − 1` — the streaming
+    * sink's version ≡ batchId contract: an already-published version
+    * and a lost race both skip (the loser's staged files are orphans
+    * for vacuum, as in the public formats). */
+  private final case class PinnedHead(batchId: Long) extends HeadMode
+  /** On whatever head wins: re-read and rebase up to `maxAttempts`
+    * times; `beforeCommit` runs between each head read and publish. */
+  private final case class RetryingHead(maxAttempts: Int,
+      beforeCommit: () => Unit) extends HeadMode
+
+  /** How an append stages: `nFiles` plain files, or one file group per
+    * partition-value tuple of `cols` plus the manifest fragments
+    * `extraFromStaged` derives from the staged files + their aux. */
+  private sealed trait Layout
+  private final case class PlainLayout(nFiles: Int) extends Layout
+  private final case class PartitionedLayout(cols: Seq[String],
+      filesPerPartition: Int,
+      extraFromStaged: (Seq[String], Aux) => Seq[String] = (_, _) => Nil)
+    extends Layout
+
+  /** Which stats an append records for its new files: the table's
+    * declared `statsColumns` ([[declaredColStats]]), one legacy integer
+    * `statsCol`, or explicit typed columns ([[perFileColStats]]). */
+  private sealed trait StatsMode
+  private case object DeclaredStats extends StatsMode
+  private final case class LegacyStats(statsCol: String) extends StatsMode
+  private final case class TypedStats(cols: Seq[String]) extends StatsMode
+
+  /** One staging of an append: the completed frame, its staged files,
+    * their aux (partition values, typed stats, sizes), their legacy
+    * stats, extra manifest fragments, the identity mark the ids were
+    * allocated from and the advanced mark to commit. */
+  private final case class Staged(df: DataFrame, files: Seq[String],
+      aux: Aux, legacy: Map[String, (Long, Long)], extra: Seq[String],
+      mark: Option[Long], idHwm: Option[Long])
+
+  /** THE append transaction every `append*` entry point but
+    * appendEvolved and the segment paths delegates to. Per attempt it
+    * reads the head `head` names, then:
+    *   1. carries the head's per-file aux (partition spec evolution
+    *      via [[rebaseSpec]]);
+    *   2. stages, if nothing is staged yet: identity allocates at that
+    *      head, generated and default columns fill or validate, the
+    *      schema and CHECK constraints are enforced — all BEFORE any
+    *      file is written, so a refused frame leaves no orphans — and
+    *      one staging call writes the files and derives their stats;
+    *   3. carries the head's files and legacy stats, commits, then
+    *      runs the autoCompact policy on unpinned, plain,
+    *      declared-stats appends (never on a pinned head: a policy
+    *      compaction would take the next batch's version).
+    * IDENTITY × optimistic concurrency (r14): the id block is reserved
+    * INSIDE the rebase loop — each attempt allocates against the head
+    * it actually tries to land on. Unlike tombstones or the schema, the
+    * ids live in the DATA, so a retry whose head mark MOVED (the winner
+    * allocated) deletes its stale staged files and restages; a
+    * non-allocating winner rebases at manifest-metadata cost and only
+    * the schema is re-checked against the moved head. Returns the
+    * published version; None when a pinned head skipped. */
+  private def appendCore(s: SparkSession, root: String, df0: DataFrame,
+      op: String, head: HeadMode, layout: Layout,
+      stats: StatsMode): Option[Long] = {
+    val pin = head match { case PinnedHead(b) => Some(b); case _ => None }
+    if (pin.exists(manifestExists(root, _))) return None
+    val (attempts, beforeCommit) = head match {
+      case RetryingHead(n, f) => (n, f)
+      case _ => (1, () => ())
+    }
+    val restageOnMark = attempts > 1 && identityOf(root).isDefined
+    val noStats = Map.empty[String, (Long, Long)]
+    def stage(prev: Option[Long], mark: Option[Long]): Staged = {
+      // identity first (generated/default expressions may derive from
+      // the assigned id), then fill-or-validate
+      val (dfId, idHwm) = fillIdentityAt(s, root, df0, op, prev)
+      val df = applyGeneratedColumns(s, root, dfId, op)
+      requireSchemaCompatible(root, prev, df, op)
+      enforceConstraints(s, root, df, op)
+      val (files, partAux, extra) = layout match {
+        case PlainLayout(n) => (stageDataFiles(s, root, df, n), Aux(), Nil)
+        case PartitionedLayout(cols, n, fromStaged) =>
+          val (fs, a) = stagePartitionedCols(s, root, df, cols, n)
+          (fs, a, fromStaged(fs, a))
+      }
+      val (statsAux, legacy) = stats match {
+        case DeclaredStats => (declaredColStats(s, root, files, df), noStats)
+        case TypedStats(cols) => (perFileColStats(s, root, files, cols), noStats)
+        case LegacyStats(c) => (Aux(), perFileStatsNulls(s, root, files, c)._1)
+      }
+      Staged(df, files, partAux.merged(statsAux).merged(stagedSizes(root, files)),
+        legacy, extra, mark, idHwm)
+    }
+    var st: Staged = null
+    var attempt = 0
+    while (attempt < attempts) {
+      attempt += 1
+      val prev = pin.fold(latestVersion(root))(b => Option.when(b > 0)(b - 1))
+      // before staging, so a refused partition spec leaves no orphans
+      val carried = rebaseSpec(root, carriedAux(root, prev), layout, op)
+      val mark =
+        if (restageOnMark) prev.flatMap(v => longMetaOf(root, v, IdHwmField)) else None
+      if (st == null || st.mark != mark) {
+        if (st != null) st.files.foreach(f => new java.io.File(root, f).delete())
+        st = stage(prev, mark)
+      } else
+        // a retry: the head moved, and the winner may have EVOLVED the
+        // schema — the rebase must respect the head it actually lands on
+        requireSchemaCompatible(root, prev, st.df, op)
+      val prevFiles = prev.map(v => snapshotFiles(root, v)
+        .map(p => relativize(root, p))).getOrElse(Nil)
+      // stats are per-FILE metadata: a commit that carries a file
+      // forward carries its stats entry too (the new stat-less files are
+      // simply unprunable), so one stats-unaware writer never strips the
+      // whole snapshot's skipping metadata — but carried legacy stats
+      // stay only under the SAME column: another column's bounds under
+      // this one's name would prune files that DO hold matching rows
+      val (prevCol, prevStats) =
+        prev.map(v => snapshotStatsOf(root, v)).getOrElse((None, noStats))
+      val statsCol = stats match { case LegacyStats(c) => Some(c); case _ => prevCol }
+      val extra = auxExtra(carried.merged(st.aux)) ++ st.extra
+      beforeCommit()
+      val committed =
+        try Some(commit(root, prevFiles ++ st.files, prev, statsCol = statsCol,
+          stats = (if (statsCol == prevCol) prevStats else noStats) ++ st.legacy,
+          schemaJson = schemaOrRecord(root, prev, st.df), extra = extra,
+          newIdHwm = st.idHwm))
+        catch {
+          case _: java.util.ConcurrentModificationException if head != LatestHead => None
+        }
+      if (committed.isDefined || pin.isDefined) {
+        if (pin.isEmpty && layout.isInstanceOf[PlainLayout] && stats == DeclaredStats)
+          committed.foreach(maybeAutoCompact(s, root, _))
+        return committed
+      }
+    }
+    throw new java.util.ConcurrentModificationException(
+      s"$op: gave up after $attempts attempts under $root")
   }
 
-  /** The table's DECLARED stats contract (r15, VERDICT item 2): the
-    * `statsColumns` table property (comma list) names the columns
-    * every plain/partitioned append records typed per-file min/max/
-    * nullCount for — Delta's indexed-columns design as an explicit
-    * opt-in, so a table created once with
-    * `TBLPROPERTIES('statsColumns'='event_id')` keeps its skipping
-    * metadata through every SQL INSERT without the writer naming the
-    * columns again. Columns absent from this write's frame (e.g. a
-    * pre-widen writer) or of a type the stats encoding doesn't cover
-    * simply skip — stat-less files are unprunable, the safe default.
-    * Cost: integral and DATE columns read the staged files' footers;
-    * other types run one groupBy(input_file_name) aggregate over the
-    * staged files (see [[perFileColStats]]). */
+  /** The carried aux of an append staging under `layout`: as-is for
+    * plain files, a table without a spec or one with the layout's spec.
+    * Otherwise PARTITION SPEC EVOLUTION (r13, VERDICT item 6; Iceberg's
+    * design), gated on the `repartitionLayout` property naming the new
+    * spec: the prior generations' entries move to (or stay in) per-file
+    * layouts — legacy single-column parts convert here so a
+    * pre-evolution manifest's files keep pruning — and the staged aux
+    * merged on top makes the new spec current. Every other per-file
+    * entry (stats, sizes, rows, vectors) carries unchanged. */
+  private def rebaseSpec(root: String, aux0: Aux, layout: Layout, op: String): Aux =
+    (layout, aux0.partCol) match {
+      case (PartitionedLayout(cols, _, _), Some(cur)) if cur != cols.mkString(",") =>
+        val spec = cols.mkString(",")
+        require(tableProperty(root, "repartitionLayout").contains(spec),
+          s"$op: table is partitioned by '$cur', not '$spec' — one active " +
+            "partition spec per table; to EVOLVE the layout for future " +
+            s"appends set TBLPROPERTIES ('repartitionLayout' = '$spec')")
+        aux0.copy(partCol = None, parts = Map.empty, layouts = aux0.layouts ++
+          aux0.parts.collect { case (f, v) if !cur.contains(',') &&
+            !aux0.layouts.contains(f) => f -> Seq((cur, v)) })
+      case _ => aux0
+    }
+
+  /** Stage `df` as `nFiles` new data files and commit them APPENDED to
+    * the current snapshot (or as the first snapshot). Data files land
+    * under data/ with unique names but stay invisible to readers until
+    * the manifest rename publishes them. */
+  def append(s: SparkSession, root: String, df0: DataFrame, nFiles: Int): Long =
+    appendCore(s, root, df0, "append", LatestHead, PlainLayout(nFiles), DeclaredStats).get
+
   /** Per-file byte sizes AND row counts of the staged files (r15) —
     * one local stat call + one parquet footer read each at WRITE time
     * (the files were just written here, still page-cache-hot), so
@@ -1218,6 +1340,20 @@ object CommitLog {
         f -> footerRowCount(new java.io.File(root, f))).toMap)
   }
 
+  /** The table's DECLARED stats contract (r15, VERDICT item 2): the
+    * `statsColumns` table property (comma list) names the columns
+    * every append through [[appendCore]] with declared stats records
+    * typed per-file min/max/nullCount for — plain, partitioned,
+    * streaming and retrying alike — Delta's indexed-columns design as
+    * an explicit opt-in, so a table created once with
+    * `TBLPROPERTIES('statsColumns'='event_id')` keeps its skipping
+    * metadata through every SQL INSERT without the writer naming the
+    * columns again. Columns absent from this write's frame (e.g. a
+    * pre-widen writer) or of a type the stats encoding doesn't cover
+    * simply skip — stat-less files are unprunable, the safe default.
+    * Cost: integral and DATE columns read the staged files' footers;
+    * other types run one groupBy(input_file_name) aggregate over the
+    * staged files (see [[perFileColStats]]). */
   private def declaredColStats(s: SparkSession, root: String,
       staged: Seq[String], df: DataFrame): Aux =
     tableProperty(root, "statsColumns") match {
@@ -1504,8 +1640,7 @@ object CommitLog {
     * writer was schema-aware (appendEvolved); None = pre-evolution
     * manifest, reader falls back to footer inference. */
   def snapshotSchemaOf(root: String, version: Long): Option[org.apache.spark.sql.types.StructType] = {
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(java.nio.file.Files.readString(manifest(root, version).toPath))
+    val node = mapper.readTree(java.nio.file.Files.readString(manifest(root, version).toPath))
     Option(node.get("schema")).map(j =>
       org.apache.spark.sql.types.DataType.fromJson(j.toString)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
@@ -1560,7 +1695,8 @@ object CommitLog {
     // appendEvolved/update/merge/overwrite bypassed the
     // fill-or-validate contract, so one write could silently land a
     // wrong partition, stat, or a NULL id)
-    val (dfId, idHwm) = fillIdentity(s, root, df0, "appendEvolved")
+    val (dfId, idHwm) = fillIdentityAt(s, root, df0, "appendEvolved",
+      latestVersion(root))
     val df = applyGeneratedColumns(s, root, dfId, "appendEvolved")
     val prev = latestVersion(root)
     enforceConstraints(s, root, df, "appendEvolved")
@@ -1842,7 +1978,8 @@ object CommitLog {
     // identity allocation CONTINUES across an overwrite (replaced
     // rows' ids are never reused — the public engines' contract),
     // then fill-or-validate generated columns (r13, ADVICE)
-    val (dfId, idHwm) = fillIdentity(s, root, df0, "overwrite")
+    val (dfId, idHwm) = fillIdentityAt(s, root, df0, "overwrite",
+      latestVersion(root))
     val df = applyGeneratedColumns(s, root, dfId, "overwrite")
     val prev = latestVersion(root)
       .getOrElse(sys.error(s"cannot overwrite an empty table at $root — append first"))
@@ -1881,8 +2018,7 @@ object CommitLog {
     * UNPRUNABLE — a reader must always scan them (mixed manifests
     * stay correct across writers that don't compute stats). */
   def snapshotStatsOf(root: String, version: Long): (Option[String], Map[String, (Long, Long)]) = {
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(java.nio.file.Files.readString(manifest(root, version).toPath))
+    val node = mapper.readTree(java.nio.file.Files.readString(manifest(root, version).toPath))
     val colName = Option(node.get("statsCol")).map(_.asText())
     val stats = Option(node.get("stats")).map { st =>
       val it = st.fields()
@@ -1896,50 +2032,20 @@ object CommitLog {
     (colName, stats)
   }
 
-  /** Append with per-file min/max statistics on integer column
-    * `statsCol` — the manifest-level file-skipping metadata of the
-    * public table formats (Delta's stats JSON / Iceberg's manifest
-    * column bounds): planning consults the LOG, not file footers, so
-    * a selective scan opens only overlapping files. Stats are computed
-    * from the staged files in one small aggregate per file (staging-
-    * time cost, amortized over every future pruned read). Prior
-    * versions' entries carry over, so the whole snapshot stays
-    * prunable after many appends. */
-  /** Per-file min/max of `statsCol` over `staged` (relative paths) in
-    * ONE Spark job — a groupBy(input_file_name) aggregate, not a
-    * read+agg+collect per file (N driver round-trips on the commit
-    * path). An all-NULL or empty file yields no entry: stat-less ⇒
-    * unprunable, the safe default. Paths compare canonicalized so a
+  /** Per-file min/max of `statsCol` over `staged` (relative paths)
+    * plus per-file NULL counts on it, in ONE Spark job — a
+    * groupBy(input_file_name) aggregate, not a read+agg+collect per
+    * file (N driver round-trips on the commit path). r18 added the
+    * null counts to the same job (the segmented COUNT(col)/TopN
+    * answers need them; a second pass over just-staged files would
+    * double the commit's stats cost). An all-NULL or empty file yields
+    * no min/max entry: stat-less ⇒ unprunable, the safe default; null
+    * counts cover EVERY staged file (count(*) − count(col) is defined
+    * even where min/max are not). Paths compare canonicalized so a
     * relative `root` still matches input_file_name's absolute URIs.
     * Column names are validated here because they interpolate into
     * hand-built manifest JSON — a quote or backslash would commit a
     * permanently unparseable manifest. */
-  private def perFileStats(s: SparkSession, root: String,
-      staged: Seq[String], statsCol: String): Map[String, (Long, Long)] = {
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    require(!statsCol.exists(c => c == '"' || c == '\\' || c < ' '),
-      s"statsCol '$statsCol' would corrupt the manifest JSON")
-    if (staged.isEmpty) return Map.empty
-    val byCanon = staged.map(rel =>
-      new java.io.File(root, rel).getCanonicalPath -> rel).toMap
-    readStagedLogical(s, root, staged)
-      .groupBy(input_file_name().as("_graft_file"))
-      .agg(min(col(statsCol)).as("mn"), max(col(statsCol)).as("mx"))
-      .collect().toSeq.flatMap { r =>
-        if (r.isNullAt(1) || r.isNullAt(2)) None
-        else byCanon
-          .get(new java.io.File(new java.net.URI(r.getString(0))).getCanonicalPath)
-          .map(_ -> (r.getLong(1), r.getLong(2)))
-      }.toMap
-  }
-
-  /** [[perFileStats]] plus per-file NULL counts on the stats column,
-    * in the SAME single Spark job (r18 — the segmented COUNT(col)/TopN
-    * answers need null counts, and a second pass over just-staged
-    * files would double the commit's stats cost): stats entries keep
-    * the all-NULL-file refusal (no entry ⇒ unprunable), null counts
-    * cover EVERY staged file (count(*) − count(col) is defined even
-    * where min/max are not). */
   private def perFileStatsNulls(s: SparkSession, root: String,
       staged: Seq[String], statsCol: String)
       : (Map[String, (Long, Long)], Map[String, Long]) = {
@@ -1968,29 +2074,19 @@ object CommitLog {
     (stats, nulls)
   }
 
+  /** Append with per-file min/max statistics on integer column
+    * `statsCol` — the manifest-level file-skipping metadata of the
+    * public table formats (Delta's stats JSON / Iceberg's manifest
+    * column bounds): planning consults the LOG, not file footers, so
+    * a selective scan opens only overlapping files. Stats are computed
+    * from the staged files in one small aggregate per file (staging-
+    * time cost, amortized over every future pruned read). Prior
+    * versions' entries carry over when they were recorded on the same
+    * column, so the whole snapshot stays prunable after many appends. */
   def appendWithStats(s: SparkSession, root: String, df: DataFrame,
-      nFiles: Int, statsCol: String): Long = {
-    val prev = latestVersion(root)
-    requireSchemaCompatible(root, prev, df, "appendWithStats")
-    enforceConstraints(s, root, df, "appendWithStats")
-    val prevFiles = prev.map(v => snapshotFiles(root, v)
-      .map(p => relativize(root, p))).getOrElse(Nil)
-    // carried stats stay only if the previous writer recorded the SAME
-    // column — carrying another column's bounds under this one's name
-    // would make pruned reads skip files that DO hold matching rows
-    val (prevCol, prevStats0) =
-      prev.map(v => snapshotStatsOf(root, v)).getOrElse((None, Map.empty[String, (Long, Long)]))
-    val prevStats =
-      if (prevCol.contains(statsCol)) prevStats0
-      else Map.empty[String, (Long, Long)]
-    val staged = stageDataFiles(s, root, df, nFiles)
-    commit(root, prevFiles ++ staged, prev,
-      statsCol = Some(statsCol),
-      stats = prevStats ++ perFileStats(s, root, staged, statsCol),
-      schemaJson = schemaOrRecord(root, prev, df),
-      extra = auxExtra(carriedAux(root, prev)
-        .merged(stagedSizes(root, staged))))
-  }
+      nFiles: Int, statsCol: String): Long =
+    appendCore(s, root, df, "appendWithStats", LatestHead,
+      PlainLayout(nFiles), LegacyStats(statsCol)).get
 
   /** Stats-pruned scan: the files of `version` whose [min, max] range
     * on the stats column OVERLAPS [lo, hi], plus every file without
@@ -2141,13 +2237,6 @@ object CommitLog {
     * values containing commas or slashes stay unambiguous. */
   private[sources] val specSep = "\u0001"
 
-  /** [[stagePartitioned]] under an ORDERED multi-column spec (r14,
-    * VERDICT item 2): one routing group per distinct value TUPLE
-    * (the Hive/Iceberg directory-tree granularity, flattened to the
-    * manifest), per-file layouts recording the ordered (col, value)
-    * pairs each file was written under. partCol comma-joins the spec
-    * and parts records the joined tuple — the legacy single-column
-    * encoding is the 1-column case, byte-identical to r13's. */
   /** A HASH-BUCKET partition-spec entry (r15 — Iceberg's bucket
     * transform, the high-cardinality co-partitioning workhorse):
     * `bucket(n;col)`. The semicolon keeps the encoding comma-free, so
@@ -2169,6 +2258,13 @@ object CommitLog {
     ((h % n) + n) % n
   }
 
+  /** [[stagePartitioned]] under an ORDERED multi-column spec (r14,
+    * VERDICT item 2): one routing group per distinct value TUPLE
+    * (the Hive/Iceberg directory-tree granularity, flattened to the
+    * manifest), per-file layouts recording the ordered (col, value)
+    * pairs each file was written under. partCol comma-joins the spec
+    * and parts records the joined tuple — the legacy single-column
+    * encoding is the 1-column case, byte-identical to r13's. */
   private def stagePartitionedCols(s: SparkSession, root: String,
       df: DataFrame, partCols: Seq[String],
       filesPerPartition: Int): (Seq[String], Aux) = {
@@ -2323,59 +2419,14 @@ object CommitLog {
       // counts from the staged footers, zero extra Spark passes) and
       // committed atomically with them
       extraFromStaged: (Seq[String], Aux) => Seq[String] =
-        (_, _) => Nil): Long = {
-    val specStr = partCols.mkString(",")
-    // identity, then generated columns, fill/validate FIRST —
-    // partitioning by a generated column (the derived-date layout)
-    // is the feature's headline use
-    val (dfId, idHwm) = fillIdentity(s, root, df0, "appendPartitioned")
-    val df = applyGeneratedColumns(s, root, dfId, "appendPartitioned")
-    val prev = latestVersion(root)
-    requireSchemaCompatible(root, prev, df, "appendPartitioned")
-    enforceConstraints(s, root, df, "appendPartitioned")
-    val prevFiles = prev.map(v => snapshotFiles(root, v)
-      .map(p => relativize(root, p))).getOrElse(Nil)
-    val (prevCol, prevStats) =
-      prev.map(v => snapshotStatsOf(root, v))
-        .getOrElse((None, Map.empty[String, (Long, Long)]))
-    val (staged, aux) = stagePartitionedCols(s, root, df, partCols,
-      filesPerPartition)
-    val aux0 = carriedAux(root, prev)
-    val fullAux =
-      if (aux0.partCol.forall(_ == specStr)) aux0.merged(aux)
-      else {
-        require(tableProperty(root, "repartitionLayout").contains(specStr),
-          s"appendPartitioned: table is partitioned by " +
-            s"'${aux0.partCol.get}', not '$specStr' — one active " +
-            "partition spec per table; to EVOLVE the layout for future " +
-            s"appends set TBLPROPERTIES ('repartitionLayout' = '$specStr')")
-        // spec evolution: prior generations' entries move to (or stay
-        // in) per-file layouts — legacy parts convert here so a
-        // pre-evolution manifest's files keep pruning — and the
-        // CURRENT spec becomes the new column list
-        val oldLayouts = aux0.layouts ++ (for {
-          c <- aux0.partCol.toSeq if !c.contains(',')
-          (f, v) <- aux0.parts
-          if !aux0.layouts.contains(f)
-        } yield f -> Seq((c, v)))
-        // sizes and rows carry like every other per-file entry (r15
-        // review find: the positional rebuild silently dropped them,
-        // so a post-evolution COUNT(*) could no longer answer from
-        // the manifest and size estimation fell back to stat calls)
-        Aux(aux.partCol, aux.parts,
-          aux0.statsTags ++ aux.statsTags, aux0.stats2 ++ aux.stats2,
-          aux0.dvs, oldLayouts ++ aux.layouts,
-          aux0.sizes ++ aux.sizes, aux0.rows ++ aux.rows,
-          aux0.dvRows ++ aux.dvRows)
-      }
-    commit(root, prevFiles ++ staged, prev,
-      statsCol = prevCol, stats = prevStats,
-      schemaJson = schemaOrRecord(root, prev, df),
-      extra = auxExtra(fullAux.merged(declaredColStats(s, root, staged, df))
-        .merged(stagedSizes(root, staged)))
-        ++ extraMeta ++ extraFromStaged(staged, aux),
-      newIdHwm = idHwm)
-  }
+        (_, _) => Nil): Long =
+    // partitioning by a generated column (the derived-date layout) is
+    // the generated-column feature's headline use: the core fills
+    // before it routes
+    appendCore(s, root, df0, "appendPartitioned", LatestHead,
+      PartitionedLayout(partCols, filesPerPartition,
+        (fs, a) => extraMeta ++ extraFromStaged(fs, a)),
+      DeclaredStats).get
 
   /** Partition-pruned scan: the files of `version` whose recorded
     * partition value is in `values`, plus every file WITHOUT a
@@ -2524,23 +2575,9 @@ object CommitLog {
     * integer column). Prior entries carry forward; a tag conflict on
     * a shared column name fails the commit. */
   def appendWithColumnStats(s: SparkSession, root: String, df: DataFrame,
-      nFiles: Int, cols: Seq[String]): Long = {
-    val prev = latestVersion(root)
-    requireSchemaCompatible(root, prev, df, "appendWithColumnStats")
-    enforceConstraints(s, root, df, "appendWithColumnStats")
-    val prevFiles = prev.map(v => snapshotFiles(root, v)
-      .map(p => relativize(root, p))).getOrElse(Nil)
-    val (prevCol, prevStats) =
-      prev.map(v => snapshotStatsOf(root, v))
-        .getOrElse((None, Map.empty[String, (Long, Long)]))
-    val staged = stageDataFiles(s, root, df, nFiles)
-    commit(root, prevFiles ++ staged, prev,
-      statsCol = prevCol, stats = prevStats,
-      schemaJson = schemaOrRecord(root, prev, df),
-      extra = auxExtra(carriedAux(root, prev)
-        .merged(perFileColStats(s, root, staged, cols))
-        .merged(stagedSizes(root, staged))))
-  }
+      nFiles: Int, cols: Seq[String]): Long =
+    appendCore(s, root, df, "appendWithColumnStats", LatestHead,
+      PlainLayout(nFiles), TypedStats(cols)).get
 
   /** One range probe against the typed stats: column, inclusive lo,
     * inclusive hi — Long for "long"/"ts" columns (timestamps as epoch
@@ -2955,37 +2992,12 @@ object CommitLog {
     * vacuum, as in the public formats). Returns true iff THIS call
     * published the version. */
   def appendBatch(s: SparkSession, root: String, df0: DataFrame,
-      nFiles: Int, batchId: Long): Boolean = {
-    if (manifest(root, batchId).exists()) return false
-    val prev = if (batchId == 0) None else Some(batchId - 1)
-    // identity + generated/default columns enforce on the STREAMING
-    // sink path too (r13 — the appendEvolved/overwrite lesson):
-    // identity allocates against batchId−1's mark, so a replayed
-    // batch re-derives the SAME id block and the version-≡-batchId
-    // skip keeps allocation exactly-once without a side channel
-    val (dfId, idHwm) = fillIdentityAt(s, root, df0, "appendBatch", prev)
-    val df = applyGeneratedColumns(s, root, dfId, "appendBatch")
-    requireSchemaCompatible(root, prev, df, "appendBatch")
-    enforceConstraints(s, root, df, "appendBatch")
-    val prevFiles =
-      if (batchId == 0) Nil
-      else snapshotFiles(root, batchId - 1).map(p => relativize(root, p))
-    val (prevCol, prevStats) =
-      if (batchId == 0) (None, Map.empty[String, (Long, Long)])
-      else snapshotStatsOf(root, batchId - 1)
-    val staged = stageDataFiles(s, root, df, nFiles)
-    try {
-      commit(root, prevFiles ++ staged, prev,
-        statsCol = prevCol, stats = prevStats,
-        schemaJson = schemaOrRecord(root, prev, df),
-        extra = auxExtra(carriedAux(root, prev)
-          .merged(stagedSizes(root, staged))),
-        newIdHwm = idHwm)
-      true
-    } catch {
-      case _: java.util.ConcurrentModificationException => false
-    }
-  }
+      nFiles: Int, batchId: Long): Boolean =
+    // identity allocates against batchId−1's mark, so a replayed batch
+    // re-derives the SAME id block and the version-≡-batchId skip keeps
+    // allocation exactly-once without a side channel
+    appendCore(s, root, df0, "appendBatch", PinnedHead(batchId),
+      PlainLayout(nFiles), DeclaredStats).isDefined
 
   /** PARTITIONED streaming append — appendBatch's partitioned twin for
     * the streaming table sink: micro-batch `batchId` publishes as
@@ -2995,33 +3007,10 @@ object CommitLog {
     * with table-level exactly-once AND log-metadata partition pruning
     * at once. Returns true iff THIS call published the version. */
   def appendBatchPartitioned(s: SparkSession, root: String, df0: DataFrame,
-      partCol: String, filesPerPartition: Int, batchId: Long): Boolean = {
-    if (manifest(root, batchId).exists()) return false
-    val prev = if (batchId == 0) None else Some(batchId - 1)
-    // identity/generated/default enforcement — see appendBatch (r13)
-    val (dfId, idHwm) =
-      fillIdentityAt(s, root, df0, "appendBatchPartitioned", prev)
-    val df = applyGeneratedColumns(s, root, dfId, "appendBatchPartitioned")
-    requireSchemaCompatible(root, prev, df, "appendBatchPartitioned")
-    enforceConstraints(s, root, df, "appendBatchPartitioned")
-    val prevFiles = prev.map(v => snapshotFiles(root, v)
-      .map(p => relativize(root, p))).getOrElse(Nil)
-    val (prevCol, prevStats) =
-      prev.map(v => snapshotStatsOf(root, v))
-        .getOrElse((None, Map.empty[String, (Long, Long)]))
-    val (staged, aux) = stagePartitioned(s, root, df, partCol, filesPerPartition)
-    try {
-      commit(root, prevFiles ++ staged, prev,
-        statsCol = prevCol, stats = prevStats,
-        schemaJson = schemaOrRecord(root, prev, df),
-        extra = auxExtra(carriedAux(root, prev).merged(aux)
-          .merged(stagedSizes(root, staged))),
-        newIdHwm = idHwm)
-      true
-    } catch {
-      case _: java.util.ConcurrentModificationException => false
-    }
-  }
+      partCol: String, filesPerPartition: Int, batchId: Long): Boolean =
+    appendCore(s, root, df0, "appendBatchPartitioned", PinnedHead(batchId),
+      PartitionedLayout(partCol.split(',').map(_.trim).toSeq, filesPerPartition),
+      DeclaredStats).isDefined
 
   /** Copy-on-write row-level DELETE (the public Delta/Iceberg CoW
     * write path): one pass finds the data files that HOLD matching
@@ -4356,7 +4345,8 @@ object CommitLog {
     * public formats (Delta's optimistic concurrency control): stage the
     * data files ONCE, then loop {read head, rebase, attempt commit};
     * a lost race costs one manifest re-read and one more create-if-
-    * absent attempt, never a data rewrite. The rebase is sound because
+    * absent attempt, never a data rewrite (unless the winner allocated
+    * identity ids — see [[appendCore]]). The rebase is sound because
     * an append's logical action is "ADD these files", which commutes
     * with every commit kind this log ships: the winning head's manifest
     * is a COMPLETE listing of its snapshot, so winner-listing + our
@@ -4382,87 +4372,10 @@ object CommitLog {
     * version. */
   def appendWithRetry(s: SparkSession, root: String, df0: DataFrame,
       nFiles: Int, maxAttempts: Int = 10,
-      beforeCommit: () => Unit = () => ()): Long = {
-    // IDENTITY × optimistic concurrency (r14, VERDICT item 1): the id
-    // block is reserved INSIDE the rebase loop — each attempt
-    // allocates against the head it actually tries to land on, so a
-    // lost race re-allocates from the WINNER's advanced mark exactly
-    // the way tombstones and the schema rebase. Unlike those, the ids
-    // live in the DATA, so a mark that moved invalidates the staged
-    // files: the retry restages the batch (deleting the stale
-    // orphans). Contention therefore costs a data re-write ONLY when
-    // the winner also allocated (mark moved); a non-allocating winner
-    // (compact, delete, a plain append on the same table) rebases at
-    // manifest-metadata cost like any other append. This composes the
-    // r13 identity column with multi-writer/streaming ingest — the
-    // single-writer refusal is gone.
-    val hasIdentity = identityOf(root).isDefined
-    val dfPlain =
-      if (hasIdentity) null
-      else applyGeneratedColumns(s, root, df0, "appendWithRetry")
-    var staged: Seq[String] = if (hasIdentity) null else
-      stageDataFiles(s, root, dfPlain, nFiles)
-    var stagedMark: Option[Long] = None // mark the staged ids came from
-    var stagedHwm: Option[Long] = None  // advanced mark to commit
-    var dfStaged: DataFrame = dfPlain
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val prev = latestVersion(root)
-      if (hasIdentity) {
-        val headMark = prev.flatMap(v => longMetaOf(root, v, IdHwmField))
-        if (staged == null || headMark != stagedMark) {
-          // the mark moved (or first attempt): the staged ids are
-          // stale — drop the orphaned files and restage against the
-          // head's mark. Identity fills FIRST (generated/default
-          // expressions may derive from the id), like append().
-          if (staged != null)
-            staged.foreach(f => new java.io.File(root, f).delete())
-          val (dfId, hwm) = fillIdentityAt(s, root, df0,
-            "appendWithRetry", prev)
-          dfStaged = applyGeneratedColumns(s, root, dfId, "appendWithRetry")
-          staged = stageDataFiles(s, root, dfStaged, nFiles)
-          stagedMark = headMark
-          stagedHwm = hwm
-        }
-      }
-      // validated per attempt: a competitor may have EVOLVED the
-      // schema since the last read — the rebase must respect the head
-      // it actually lands on
-      requireSchemaCompatible(root, prev, dfStaged, "appendWithRetry")
-      val prevFiles = prev.map(v => snapshotFiles(root, v)
-        .map(p => relativize(root, p))).getOrElse(Nil)
-      val (prevCol, prevStats) =
-        prev.map(v => snapshotStatsOf(root, v)).getOrElse((None, Map.empty[String, (Long, Long)]))
-      beforeCommit()
-      try {
-        // carry the head's per-file aux metadata (r15 FIX: this
-        // commit previously rendered NO aux extra, so a retry append
-        // racing a merge-on-read delete dropped the table's deletion
-        // vectors from the new manifest — masked rows resurrected;
-        // same silent loss for partition entries and typed stats).
-        // StreamingSpec pins the carry under a forced race.
-        val v = commit(root, prevFiles ++ staged, prev,
-          statsCol = prevCol, stats = prevStats,
-          schemaJson = schemaOrRecord(root, prev, dfStaged),
-          extra = auxExtra(carriedAux(root, prev)
-            .merged(stagedSizes(root, staged))),
-          newIdHwm = stagedHwm)
-        // the multi-writer/streaming-ingest path is exactly where the
-        // small files accumulate — the autoCompact policy must fire
-        // here too, after the append published (r13, ADVICE; the
-        // policy compaction itself rides the rebase loop, so racing
-        // writers are handled, and a policy failure never fails the
-        // healthy append)
-        maybeAutoCompact(s, root, v)
-        return v
-      } catch {
-        case _: java.util.ConcurrentModificationException => // rebase and retry
-      }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"appendWithRetry: gave up after $maxAttempts attempts under $root")
-  }
+      beforeCommit: () => Unit = () => ()): Long =
+    appendCore(s, root, df0, "appendWithRetry",
+      RetryingHead(maxAttempts, beforeCommit), PlainLayout(nFiles),
+      DeclaredStats).get
 
   /** Range-cluster OPTIMIZE — the data-layout maintenance command of
     * the public formats (Delta OPTIMIZE ZORDER BY / Iceberg rewrite
@@ -4521,7 +4434,7 @@ object CommitLog {
       snapshotFiles(root, prev).map(p => relativize(root, p)).toSet,
       "optimize", Nil, staged, Aux(), staged, Nil,
       maxAttempts, beforeCommit,
-      newStats = Some((statsCol, perFileStats(s, root, staged, statsCol))))
+      newStats = Some((statsCol, perFileStatsNulls(s, root, staged, statsCol)._1)))
     v
   }
 
@@ -4589,8 +4502,7 @@ object CommitLog {
 
   /** The segment references of a segmented version's manifest. */
   def segmentsOf(root: String, version: Long): Seq[SegmentRef] = {
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(java.nio.file.Files.readString(manifest(root, version).toPath))
+    val node = mapper.readTree(java.nio.file.Files.readString(manifest(root, version).toPath))
     val segs = node.get("segments")
     require(segs != null, s"version $version under $root is not a segmented manifest")
     (0 until segs.size()).map { i =>

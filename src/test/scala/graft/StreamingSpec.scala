@@ -3531,4 +3531,76 @@ class StreamingSpec extends SparkSpec {
     assert(stock(empty)._1 === 0L)
     assert(CommitLog.footerRowCount(empty) === 0L)
   }
+
+  test("commit log: every append entry point enforces CHECK, identity, generated columns and records stats for its new files") {
+    import graft.sources.CommitLog
+    import org.apache.spark.sql.DataFrame
+    // One row per entry point: (name, write frame as version batchId).
+    // The streaming sinks publish exactly batchId; the others land on
+    // the head, which is batchId - 1 here.
+    val entryPoints: Seq[(String, (String, DataFrame, Long) => Unit)] = Seq(
+      "append" -> { (r, df, _) => CommitLog.append(spark, r, df, 1); () },
+      "appendWithStats" -> { (r, df, _) =>
+        CommitLog.appendWithStats(spark, r, df, 1, "event_id"); () },
+      "appendWithColumnStats" -> { (r, df, _) =>
+        CommitLog.appendWithColumnStats(spark, r, df, 1, Seq("event_id")); () },
+      "appendPartitioned" -> { (r, df, _) =>
+        CommitLog.appendPartitioned(spark, r, df, "event_type", 1); () },
+      "appendPartitionedCols" -> { (r, df, _) =>
+        CommitLog.appendPartitionedCols(spark, r, df, Seq("event_type"), 1); () },
+      "appendBatch" -> { (r, df, b) =>
+        assert(CommitLog.appendBatch(spark, r, df, 1, b)); () },
+      "appendBatchPartitioned" -> { (r, df, b) =>
+        assert(CommitLog.appendBatchPartitioned(spark, r, df, "event_type", 1, b)); () },
+      "appendWithRetry" -> { (r, df, _) => CommitLog.appendWithRetry(spark, r, df, 1); () })
+    val ev = Tables(spark, sf, "events")
+      .select(col("event_id"), col("event_type"), col("value")).limit(120)
+    val batches = Seq(ev.filter(col("event_id") % 2 === 0), ev.filter(col("event_id") % 2 =!= 0))
+    val sizes = batches.map(_.count())
+    assert(sizes.forall(_ > 0) && ev.filter(col("event_id") < 0).count() === 0L)
+    entryPoints.foreach { case (name, write) =>
+      val root = java.nio.file.Files.createTempDirectory("graft_core_" + name).toString
+      CommitLog.setTableProperty(root, "constraint.pos", "event_id >= 0")
+      CommitLog.setTableProperty(root, "identity.row_id", "1,1")
+      CommitLog.setTableProperty(root, "generated.day", "event_id % 7")
+      CommitLog.setTableProperty(root, "statsColumns", "event_id")
+      batches.zipWithIndex.foreach { case (df, b) => write(root, df, b.toLong) }
+      val head = CommitLog.latestVersion(root)
+      assert(head === Some(1L), s"$name: two writes must publish versions 0 and 1")
+      // identity: non-null, unique, contiguous after each head's mark
+      Seq(0L, 1L).foreach { v =>
+        val ids = CommitLog.read(spark, root, v).select(col("row_id"))
+          .collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
+        assert(ids.forall(_.isDefined), s"$name: NULL identity at v$v")
+        assert(ids.flatten.sorted.toSeq === (1L to sizes.take(v.toInt + 1).sum).toSeq,
+          s"$name: v$v ids must be exactly 1..${sizes.take(v.toInt + 1).sum}")
+      }
+      // generated column computed on every write path
+      assert(CommitLog.read(spark, root, 1L)
+        .filter(not(col("day") <=> col("event_id") % 7)).count() === 0L, name)
+      // stats for the new files: the declared typed stats, except the
+      // legacy single-column entry point, which records its own column
+      val newFiles = CommitLog.snapshotFiles(root, 1L).toSet --
+        CommitLog.snapshotFiles(root, 0L)
+      val rel = newFiles.map(f => "data/" + new java.io.File(f).getName)
+      assert(rel.nonEmpty, name)
+      val withStats =
+        if (name == "appendWithStats") CommitLog.snapshotStatsOf(root, 1L)._2.keySet
+        else CommitLog.auxOf(root, 1L).stats2.collect {
+          case (f, cs) if cs.contains("event_id") => f }.toSet
+      assert(rel.subsetOf(withStats), s"$name: new files without event_id stats")
+      // refusals leave the head unchanged and stage nothing
+      def refused(df: DataFrame, why: String): Unit = {
+        val ex = intercept[IllegalArgumentException](write(root, df, 2L))
+        assert(ex.getMessage.contains(why), s"$name: ${ex.getMessage}")
+        assert(CommitLog.latestVersion(root) === head, s"$name: refused write moved the head")
+        val onDisk = new java.io.File(root, "data").listFiles()
+          .count(_.getName.endsWith(".parquet"))
+        assert(onDisk === CommitLog.snapshotFiles(root, 1L).size,
+          s"$name: refused write left staged files behind")
+      }
+      refused(batches(0).withColumn("event_id", -col("event_id") - 1), "CHECK constraint 'pos'")
+      refused(batches(0).withColumn("day", col("event_id") % 7 + 1), "generated column 'day'")
+    }
+  }
 }
