@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Minimal snapshot/commit-log table layer (r9, VERDICT r8 item 2) —
   * the public Delta/Iceberg design reduced to its load-bearing core:
@@ -376,42 +377,146 @@ object CommitLog {
         .map(n => n.stripPrefix("v").stripSuffix(".json").toLong))
       .filter(_.nonEmpty).map(_.max)
 
-  /** Does `version`'s manifest still exist? False once vacuum dropped
-    * it — the probe incremental readers use to seed a startingVersion
-    * diff without tripping over the retention floor. */
   /** A cheap, strong identity of `version`'s manifest FILE (r17,
-    * ADVICE): POSIX fileKey (device + inode) + mtime + length. A table
-    * root deleted and re-staged at the same path restarts its version
-    * numbers, so a (root, version) cache key alone would serve the OLD
-    * table's metadata for the new one — the re-staged manifest is a
-    * different inode, so this identity can never alias across a
-    * delete/re-create. */
+    * ADVICE): POSIX fileKey (device + inode), length and mtime in
+    * nanoseconds. A table root deleted and re-staged at the same path
+    * restarts its version numbers, so a (root, version) cache key alone
+    * would serve the OLD table's metadata for the new one — the
+    * re-staged manifest is a different inode, so this identity can
+    * never alias across a delete/re-create. The one key of every
+    * per-version cache ([[read]]'s plan memo, the pushdown's PruneMeta). */
   def manifestIdentity(root: String, version: Long): String = {
     val attrs = java.nio.file.Files.readAttributes(
       manifest(root, version).toPath,
       classOf[java.nio.file.attribute.BasicFileAttributes])
     val key = Option(attrs.fileKey).map(_.toString).getOrElse("")
-    s"$key:${attrs.lastModifiedTime.toMillis}:${attrs.size}"
+    s"$key:${attrs.size}:${attrs.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS)}"
   }
 
+  /** Does `version`'s manifest still exist? False once vacuum dropped
+    * it — the probe incremental readers use to seed a startingVersion
+    * diff without tripping over the retention floor. */
   private[graft] def manifestExists(root: String, version: Long): Boolean =
     manifest(root, version).exists()
 
-  private[sources] def readManifest(root: String, version: Long): (String, Seq[String]) = {
+  /** Test-only instruments: how many version manifests [[snapshot]]
+    * parsed and how many times [[tableProperties]] read
+    * `_properties.json`, process-wide. */
+  private[graft] val manifestParses = new java.util.concurrent.atomic.AtomicLong()
+  private[graft] val propertyReads = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A JSON object's fields, each value decoded by `f`. */
+  private def fieldsOf[V](n: com.fasterxml.jackson.databind.JsonNode)(
+      f: com.fasterxml.jackson.databind.JsonNode => V): Map[String, V] = {
+    val it = n.fields(); val b = Map.newBuilder[String, V]
+    while (it.hasNext) { val e = it.next(); b += e.getKey -> f(e.getValue) }
+    b.result()
+  }
+  private def textsOf(arr: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
+    (0 until arr.size()).map(i => arr.get(i).asText())
+  /** A layout entry: the flat [c1,v1,c2,v2,...] pair array (the r13
+    * single-column [c,v] encoding is its 1-pair case). */
+  private def pairsOf(arr: com.fasterxml.jackson.databind.JsonNode): Seq[(String, String)] =
+    (0 until arr.size() by 2).map(i => (arr.get(i).asText(), arr.get(i + 1).asText()))
+
+  /** One version manifest, read and parsed ONCE by [[snapshot]]: what
+    * every reader and every committing writer takes from a version.
+    * A flat manifest lists `files` (relative paths), a segmented one
+    * `segments` — the two shapes never mix, and the accessor of the
+    * other shape refuses by name. `longs` holds every top-level
+    * integral field (version, ts, the identity mark and writer-defined
+    * fields such as a view's watermark); `maps` every top-level object
+    * of string → long (sizes, rows, writer-defined ones such as the
+    * vector index's cell counts). The schema decodes on first use. */
+  private[sources] final case class Snapshot(root: String, version: Long,
+      op: String, flatFiles: Option[Seq[String]],
+      segmentRefs: Option[Seq[SegmentRef]], aux: Aux,
+      schemaJson: Option[String], statsCol: Option[String],
+      stats: Map[String, (Long, Long)], tombstones: Seq[String],
+      cdf: Option[Seq[String]], longs: Map[String, Long],
+      maps: Map[String, Map[String, Long]]) {
+    def ts: Option[Long] = longs.get("ts")
+    def idHwm: Option[Long] = longs.get(IdHwmField)
+    lazy val schema: Option[StructType] = schemaJson.map(j =>
+      org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType])
+    def files: Seq[String] = {
+      require(flatFiles.isDefined,
+        s"version $version under $root is a SEGMENTED manifest — " +
+          "read it through segmentsOf/segmentedPrunedRead, not the flat-manifest API")
+      flatFiles.get
+    }
+    def absFiles: Seq[String] = files.map(f => new java.io.File(root, f).toString)
+    def segments: Seq[SegmentRef] = {
+      require(segmentRefs.isDefined, s"version $version under $root is not a segmented manifest")
+      segmentRefs.get
+    }
+  }
+
+  /** The manifest's own object fields whose values are not longs. */
+  private val nonLongObjects =
+    Set("schema", "parts", "statsTags", "stats2", "stats", "dv", "layouts")
+
+  /** THE manifest parser: one read, one Jackson parse of `version`. */
+  private[sources] def snapshot(root: String, version: Long): Snapshot = {
+    import scala.jdk.CollectionConverters._
     val f = manifest(root, version)
     require(f.exists(), s"commit log has no version $version under $root")
-    val node = mapper.readTree(java.nio.file.Files.readString(f.toPath))
-    val files = node.get("files")
-    require(files != null,
-      s"version $version under $root is a SEGMENTED manifest — " +
-        "read it through segmentsOf/segmentedPrunedRead, not the flat-manifest API")
-    (Option(node.get("op")).map(_.asText()).getOrElse("append"),
-      (0 until files.size()).map(i => files.get(i).asText()))
+    val top = fieldsOf(mapper.readTree(java.nio.file.Files.readString(f.toPath)))(identity)
+    manifestParses.incrementAndGet()
+    def obj[V](k: String)(g: com.fasterxml.jackson.databind.JsonNode => V) =
+      top.get(k).map(fieldsOf(_)(g)).getOrElse(Map.empty[String, V])
+    val maps = top.collect { case (k, v) if v.isObject && !nonLongObjects(k) =>
+      k -> fieldsOf(v)(_.asLong()) }
+    val tags = obj("statsTags")(_.asText())
+    def colStat(tag: String, cn: com.fasterxml.jackson.databind.JsonNode): ColStat = {
+      def v(field: String): Option[Any] = Option(cn.get(field)).filterNot(_.isNull).map { n =>
+        tag match {
+          case "str" => n.asText()
+          case "double" => n.asDouble()
+          case _ => n.asLong()
+        }
+      }
+      ColStat(v("lo"), v("hi"), cn.get("nulls").asLong())
+    }
+    val aux = Aux(top.get("partCol").map(_.asText()), obj("parts")(_.asText()), tags,
+      obj("stats2")(fieldsOf(_)(identity).map { case (c, cn) =>
+        c -> colStat(tags.getOrElse(c, "long"), cn) }),
+      obj("dv")(textsOf),
+      obj("layouts")(pairsOf),
+      maps.getOrElse("sizes", Map.empty), maps.getOrElse("rows", Map.empty),
+      maps.getOrElse("dvRows", Map.empty))
+    val segments = top.get("segments").map(_.elements().asScala.toSeq.map { sn =>
+      def long(k: String) = Option(sn.get(k)).map(_.asLong())
+      SegmentRef(sn.get("path").asText(), sn.get("nFiles").asInt(),
+        for (lo <- long("lo"); hi <- long("hi")) yield (lo, hi),
+        long("nRows"), long("nBytes"),
+        Option(sn.get("lv")).map(fieldsOf(_)(textsOf(_).toSet)).getOrElse(Map.empty),
+        long("nNulls"))
+    })
+    Snapshot(root, version, top.get("op").map(_.asText()).getOrElse("append"),
+      top.get("files").map(textsOf), segments, aux,
+      top.get("schema").map(_.toString), top.get("statsCol").map(_.asText()),
+      obj("stats")(a => (a.get(0).asLong(), a.get(1).asLong())),
+      top.get("tombstones").map(textsOf).getOrElse(Nil), top.get("cdf").map(textsOf),
+      top.collect { case (k, v) if v.isIntegralNumber => k -> v.asLong() }, maps)
+  }
+
+  /** The head version's snapshot; None for a table with no commit. */
+  private def headSnapshot(root: String): Option[Snapshot] =
+    latestVersion(root).map(snapshot(root, _))
+
+  /** The head snapshot of a table a write needs non-empty. */
+  private def headOf(root: String, what: String): Snapshot =
+    headSnapshot(root).getOrElse(sys.error(s"cannot $what an empty table at $root"))
+
+  private[sources] def readManifest(root: String, version: Long): (String, Seq[String]) = {
+    val sn = snapshot(root, version)
+    (sn.op, sn.files)
   }
 
   /** The complete file listing of snapshot `version` (absolute paths). */
   def snapshotFiles(root: String, version: Long): Seq[String] =
-    readManifest(root, version)._2.map(f => new java.io.File(root, f).toString)
+    snapshot(root, version).absFiles
 
   /** The commit kind of `version`: "append" (adds data), "compact" /
     * "optimize" (rewrites, data-neutral), "widen" (metadata-only
@@ -434,15 +539,24 @@ object CommitLog {
       schemaJson: Option[String] = None,
       extra: Seq[String] = Nil,
       newTombstones: Seq[String] = Nil,
-      newIdHwm: Option[Long] = None): Long = {
-    val next = expected.map(_ + 1).getOrElse(0L)
+      newIdHwm: Option[Long] = None): Long =
+    commitOn(root, files, expected.map(snapshot(root, _)), tableProperties(root),
+      op, statsCol, stats, schemaJson, extra, newTombstones, newIdHwm)
+
+  /** [[commit]] on an already-read `head` snapshot and properties. */
+  private def commitOn(root: String, files: Seq[String], head: Option[Snapshot],
+      props: Map[String, String], op: String = "append",
+      statsCol: Option[String] = None,
+      stats: Map[String, (Long, Long)] = Map.empty,
+      schemaJson: Option[String] = None, extra: Seq[String] = Nil,
+      newTombstones: Seq[String] = Nil, newIdHwm: Option[Long] = None): Long = {
+    val next = head.map(_.version + 1).getOrElse(0L)
     // dropped-physical-name tombstones ride IN the manifest and carry
     // forward on every commit, like the schema — atomic with the
     // optimistic-concurrency check, where the old properties-file
     // read-modify-write could lose a racing writer's entry and
     // resurrect a dropped column (r11, ADVICE)
-    val ts = (expected.toSeq.flatMap(v => tombstonesOf(root, v)) ++
-      newTombstones).distinct
+    val ts = (head.toSeq.flatMap(_.tombstones) ++ newTombstones).distinct
     val tsJson =
       if (ts.isEmpty) Nil
       else Seq(s""","tombstones":[${ts.map(jstr).mkString(",")}]""")
@@ -450,13 +564,12 @@ object CommitLog {
     // forward like tombstones (r13): a compaction that dropped it
     // would let the next allocation REUSE ids. Allocating writers
     // pass the advanced mark; everyone else carries verbatim.
-    val hwm = newIdHwm.orElse(
-      expected.flatMap(v => longMetaOf(root, v, IdHwmField)))
+    val hwm = newIdHwm.orElse(head.flatMap(_.idHwm))
     val hwmJson = hwm.map(h => s""","$IdHwmField":$h""").toSeq
     publish(root, next,
       renderManifest(next, files, op, statsCol, stats, schemaJson,
         extra ++ tsJson ++ hwmJson))
-    maybeCheckpoint(root, next)
+    maybeCheckpoint(root, next, props)
     next
   }
 
@@ -471,8 +584,8 @@ object CommitLog {
     * manifest is already on disk — the old .toLong outside the guard
     * made every commit on such a table fail post-publish, inviting
     * callers to retry an already-published commit (r12, ADVICE). */
-  private def maybeCheckpoint(root: String, next: Long): Unit =
-    tableProperty(root, "checkpointInterval")
+  private def maybeCheckpoint(root: String, next: Long, props: Map[String, String]): Unit =
+    props.get("checkpointInterval")
       .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
       .filter(k => k > 0 && next > 0 && next % k == 0)
       .foreach { _ =>
@@ -480,130 +593,41 @@ object CommitLog {
         catch { case scala.util.control.NonFatal(_) => () }
       }
 
+  // The per-field accessors below each read ONE snapshot; a version
+  // that was never written (or was vacuumed) fails with the
+  // "commit log has no version" message.
+
   /** Dropped columns' reserved physical parquet names as recorded in
     * `version`'s manifest (carried forward by every [[commit]]). */
-  def tombstonesOf(root: String, version: Long): Seq[String] = {
-    val node = mapper.readTree(
-      java.nio.file.Files.readString(manifest(root, version).toPath))
-    Option(node.get("tombstones")).map(arr =>
-      (0 until arr.size()).map(i => arr.get(i).asText())).getOrElse(Nil)
-  }
+  def tombstonesOf(root: String, version: Long): Seq[String] =
+    snapshot(root, version).tombstones
 
   /** The auxiliary per-file metadata (partition values + typed column
     * stats) of `version`'s manifest — empty maps when the committing
     * writers never recorded any. */
-  def auxOf(root: String, version: Long): Aux = {
-    val node = mapper.readTree(
-      java.nio.file.Files.readString(manifest(root, version).toPath))
-    val partCol = Option(node.get("partCol")).map(_.asText())
-    val parts = Option(node.get("parts")).map { p =>
-      val it = p.fields(); val b = Map.newBuilder[String, String]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText() }
-      b.result()
-    }.getOrElse(Map.empty[String, String])
-    val tags = Option(node.get("statsTags")).map { p =>
-      val it = p.fields(); val b = Map.newBuilder[String, String]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText() }
-      b.result()
-    }.getOrElse(Map.empty[String, String])
-    val stats2 = Option(node.get("stats2")).map { p =>
-      val it = p.fields()
-      val b = Map.newBuilder[String, Map[String, ColStat]]
-      while (it.hasNext) {
-        val e = it.next()
-        val cit = e.getValue.fields()
-        val cb = Map.newBuilder[String, ColStat]
-        while (cit.hasNext) {
-          val ce = cit.next()
-          val cn = ce.getValue
-          def v(field: String): Option[Any] = Option(cn.get(field))
-            .filterNot(_.isNull).map { n =>
-              tags.getOrElse(ce.getKey, "long") match {
-                case "str" => n.asText()
-                case "double" => n.asDouble()
-                case _ => n.asLong()
-              }
-            }
-          cb += ce.getKey -> ColStat(v("lo"), v("hi"), cn.get("nulls").asLong())
-        }
-        b += e.getKey -> cb.result()
-      }
-      b.result()
-    }.getOrElse(Map.empty[String, Map[String, ColStat]])
-    val dvs = Option(node.get("dv")).map { p =>
-      val it = p.fields()
-      val b = Map.newBuilder[String, Seq[String]]
-      while (it.hasNext) {
-        val e = it.next(); val arr = e.getValue
-        b += e.getKey -> (0 until arr.size()).map(i => arr.get(i).asText())
-      }
-      b.result()
-    }.getOrElse(Map.empty[String, Seq[String]])
-    val layouts = Option(node.get("layouts")).map { p =>
-      val it = p.fields()
-      val b = Map.newBuilder[String, Seq[(String, String)]]
-      while (it.hasNext) {
-        val e = it.next(); val arr = e.getValue
-        // flat [c1,v1,c2,v2,...] pair array; the r13 single-column
-        // [c,v] encoding is its 1-pair case
-        b += e.getKey -> (0 until arr.size() by 2).map(i =>
-          (arr.get(i).asText(), arr.get(i + 1).asText()))
-      }
-      b.result()
-    }.getOrElse(Map.empty[String, Seq[(String, String)]])
-    val sizes = Option(node.get("sizes")).map { p =>
-      val it = p.fields(); val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asLong() }
-      b.result()
-    }.getOrElse(Map.empty[String, Long])
-    val rows = Option(node.get("rows")).map { p =>
-      val it = p.fields(); val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asLong() }
-      b.result()
-    }.getOrElse(Map.empty[String, Long])
-    val dvRows = Option(node.get("dvRows")).map { p =>
-      val it = p.fields(); val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asLong() }
-      b.result()
-    }.getOrElse(Map.empty[String, Long])
-    Aux(partCol, parts, tags, stats2, dvs, layouts, sizes, rows, dvRows)
-  }
+  def auxOf(root: String, version: Long): Aux = snapshot(root, version).aux
 
-  /** A writer-defined numeric manifest field (threaded through
+  /** A writer-defined integral manifest field (threaded through
     * commit's `extra` fragments — e.g. the incremental view's
     * folded-source watermark, which must land ATOMICALLY with the
     * fold's own commit). None when the version's writer never
     * recorded it. */
-  def longMetaOf(root: String, version: Long, field: String): Option[Long] = {
-    val node = mapper.readTree(
-      java.nio.file.Files.readString(manifest(root, version).toPath))
-    Option(node.get(field)).map(_.asLong())
-  }
+  def longMetaOf(root: String, version: Long, field: String): Option[Long] =
+    snapshot(root, version).longs.get(field)
 
   /** A writer-defined JSON-object manifest field of string → long
     * (r14 — e.g. the vector index's per-cell live-posting counts,
     * which ride the index's commits so health checks read the
     * manifest instead of scanning postings). None when the version's
     * writer never recorded it. */
-  def mapMetaOf(root: String, version: Long, field: String): Option[Map[String, Long]] = {
-    val node = mapper.readTree(
-      java.nio.file.Files.readString(manifest(root, version).toPath))
-    Option(node.get(field)).map { p =>
-      val it = p.fields(); val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asLong() }
-      b.result()
-    }
-  }
+  def mapMetaOf(root: String, version: Long, field: String): Option[Map[String, Long]] =
+    snapshot(root, version).maps.get(field)
 
   /** The CDF (change-data-feed) file list `version`'s manifest records
     * — relative paths under cdf/, present only on delete/merge
     * commits made by CDF-aware writers. */
-  private[sources] def cdfFilesOf(root: String, version: Long): Option[Seq[String]] = {
-    val node = mapper.readTree(
-      java.nio.file.Files.readString(manifest(root, version).toPath))
-    Option(node.get("cdf")).map(arr =>
-      (0 until arr.size()).map(i => arr.get(i).asText()))
-  }
+  private[sources] def cdfFilesOf(root: String, version: Long): Option[Seq[String]] =
+    snapshot(root, version).cdf
 
   private def renderCdf(files: Seq[String]): String =
     s""","cdf":[${files.map(jstr).mkString(",")}]"""
@@ -624,26 +648,26 @@ object CommitLog {
   private def propsFile(root: String) =
     new java.io.File(logDir(root), "_properties.json")
 
-  def tableProperty(root: String, key: String): Option[String] = {
+  /** All table properties (empty map when none were ever set) — THE
+    * reader of `_properties.json`. */
+  def tableProperties(root: String): Map[String, String] = {
     val f = propsFile(root)
-    if (!f.exists()) None
-    else Option(mapper.readTree(
-      java.nio.file.Files.readString(f.toPath)).get(key)).map(_.asText())
+    propertyReads.incrementAndGet()
+    if (!f.exists()) Map.empty
+    else fieldsOf(mapper.readTree(java.nio.file.Files.readString(f.toPath)))(_.asText())
   }
 
-  def setTableProperty(root: String, key: String, value: String): Unit = {
+  def tableProperty(root: String, key: String): Option[String] =
+    tableProperties(root).get(key)
+
+  def setTableProperty(root: String, key: String, value: String): Unit =
+    writeProperties(root, tableProperties(root) + (key -> value))
+
+  def removeTableProperty(root: String, key: String): Unit =
+    writeProperties(root, tableProperties(root) - key)
+
+  private def writeProperties(root: String, next: Map[String, String]): Unit = {
     logDir(root).mkdirs()
-    val cur: Map[String, String] = {
-      val f = propsFile(root)
-      if (!f.exists()) Map.empty
-      else {
-        val it = mapper.readTree(java.nio.file.Files.readString(f.toPath)).fields()
-        val b = Map.newBuilder[String, String]
-        while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText() }
-        b.result()
-      }
-    }
-    val next = cur + (key -> value)
     val tmp = java.nio.file.Files.createTempFile(logDir(root).toPath, ".props-", ".tmp")
     java.nio.file.Files.writeString(tmp, next.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}"))
@@ -653,8 +677,9 @@ object CommitLog {
   }
 
   /** Is row-level CDF staging on for this table? Default OFF. */
-  def cdfEnabled(root: String): Boolean =
-    tableProperty(root, "enableChangeDataFeed").contains("true")
+  def cdfEnabled(root: String): Boolean = cdfOn(tableProperties(root))
+  private def cdfOn(props: Map[String, String]): Boolean =
+    props.get("enableChangeDataFeed").contains("true")
 
   /** CHECK constraints — the Delta TBLPROPERTIES surface
     * (`constraint.<name>` = a boolean SQL expression): every
@@ -664,10 +689,10 @@ object CommitLog {
     * check passes, only FALSE violates. Zero cost for tables without
     * constraints; with them, one short-circuiting limit(1) probe per
     * constraint over the incoming frame. */
-  private[sources] def enforceConstraints(s: SparkSession, root: String,
+  private[sources] def enforceConstraints(s: SparkSession, props: Map[String, String],
       df: DataFrame, opName: String): Unit = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
-    val cs = tableProperties(root).collect {
+    val cs = props.collect {
       case (k, v) if k.startsWith("constraint.") => k.stripPrefix("constraint.") -> v
     }
     cs.toSeq.sortBy(_._1).foreach { case (name, sql) =>
@@ -681,11 +706,8 @@ object CommitLog {
 
   /** The commit wall-clock (epoch millis) `version`'s manifest
     * records; None for manifests from pre-timestamp writers. */
-  def commitTimestampOf(root: String, version: Long): Option[Long] = {
-    val node = mapper.readTree(
-      java.nio.file.Files.readString(manifest(root, version).toPath))
-    Option(node.get("ts")).map(_.asLong())
-  }
+  def commitTimestampOf(root: String, version: Long): Option[Long] =
+    snapshot(root, version).ts
 
   // ------------------------------------------------------------------
   // Log CHECKPOINT (r11, VERDICT item 4) — the million-COMMIT axis.
@@ -737,29 +759,12 @@ object CommitLog {
   /** One summary row from one manifest parse. Works on flat AND
     * segmented manifests (file count from the segment refs). Writer
     * long fields = every top-level integral field except version/ts. */
-  private def summarize(root: String, v: Long): Option[HistRow] = {
-    if (!manifestExists(root, v)) return None
-    val node = mapper.readTree(
-      java.nio.file.Files.readString(manifest(root, v).toPath))
-    val op = Option(node.get("op")).map(_.asText()).getOrElse("append")
-    val ts = Option(node.get("ts")).map(_.asLong())
-    val nFiles = Option(node.get("files")).map(_.size().toLong)
-      .orElse(Option(node.get("segments")).map { segs =>
-        (0 until segs.size()).map(i =>
-          segs.get(i).get("nFiles").asLong()).sum
-      }).getOrElse(0L)
-    val meta = {
-      val it = node.fields(); val b = Map.newBuilder[String, Long]
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getValue.isIntegralNumber &&
-          e.getKey != "version" && e.getKey != "ts")
-          b += e.getKey -> e.getValue.asLong()
-      }
-      b.result()
+  private def summarize(root: String, v: Long): Option[HistRow] =
+    Option.when(manifestExists(root, v))(snapshot(root, v)).map { sn =>
+      HistRow(v, sn.op, sn.ts, sn.flatFiles.map(_.size.toLong)
+        .orElse(sn.segmentRefs.map(_.map(_.nFiles.toLong).sum)).getOrElse(0L),
+        sn.longs - "version" - "ts")
     }
-    Some(HistRow(v, op, ts, nFiles, meta))
-  }
 
   private def readCheckpointRows(root: String, n: Long): Seq[HistRow] = {
     val node = mapper.readTree(
@@ -767,11 +772,8 @@ object CommitLog {
     val rows = node.get("rows")
     (0 until rows.size()).map { i =>
       val r = rows.get(i)
-      val meta = Option(r.get("meta")).map { m =>
-        val it = m.fields(); val b = Map.newBuilder[String, Long]
-        while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asLong() }
-        b.result()
-      }.getOrElse(Map.empty[String, Long])
+      val meta = Option(r.get("meta")).map(fieldsOf(_)(_.asLong()))
+        .getOrElse(Map.empty[String, Long])
       HistRow(r.get("v").asLong(),
         r.get("op").asText(),
         Option(r.get("ts")).filterNot(_.isNull).map(_.asLong()),
@@ -921,29 +923,6 @@ object CommitLog {
   def history(root: String): Seq[(Long, String, Long)] =
     historySummaries(root)._1.map(r => (r.version, r.op, r.nFiles))
 
-  /** All table properties (empty map when none were ever set). */
-  def tableProperties(root: String): Map[String, String] = {
-    val f = propsFile(root)
-    if (!f.exists()) Map.empty
-    else {
-      val it = mapper.readTree(java.nio.file.Files.readString(f.toPath)).fields()
-      val b = Map.newBuilder[String, String]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText() }
-      b.result()
-    }
-  }
-
-  def removeTableProperty(root: String, key: String): Unit = {
-    val next = tableProperties(root) - key
-    logDir(root).mkdirs()
-    val tmp = java.nio.file.Files.createTempFile(logDir(root).toPath, ".props-", ".tmp")
-    java.nio.file.Files.writeString(tmp, next.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}"))
-    java.nio.file.Files.move(tmp, propsFile(root).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** Atomic create-if-absent publication of version `next`'s manifest
     * content (the link(2) put-if-absent primitive — see commit()). */
   private def publish(root: String, next: Long, content: String): Unit = {
@@ -968,8 +947,8 @@ object CommitLog {
     * field of their own since r17 (appendSegment records the first
     * write's schema so catalog loads never footer-infer); the two
     * manifest formats never mix within one table. */
-  private def carriedSchemaJson(root: String, prev: Option[Long]): Option[String] =
-    prev.flatMap(v => snapshotSchemaOf(root, v)).map(_.json)
+  private def carriedSchemaJson(prev: Option[Snapshot]): Option[String] =
+    prev.flatMap(_.schema).map(_.json)
 
   /** The carried log schema, RECORDED from this write's frame when the
     * table has none yet (r15): Delta's contract — the log is the
@@ -982,15 +961,13 @@ object CommitLog {
     * Legacy schema-less tables backfill on their next append; the
     * subset-and-narrower write contract (requireSchemaCompatible) is
     * unchanged. */
-  private def schemaOrRecord(root: String, prev: Option[Long],
-      df: DataFrame): Option[String] =
-    carriedSchemaJson(root, prev).orElse(Some(df.schema.json))
+  private def schemaOrRecord(prev: Option[Snapshot], df: DataFrame): Option[String] =
+    carriedSchemaJson(prev).orElse(Some(df.schema.json))
 
   /** Aux metadata carry (the stats-carry rule generalized): partition
     * values and typed column stats are per-FILE facts, so any commit
     * that lists a file forward lists its entries forward too. */
-  private def carriedAux(root: String, prev: Option[Long]): Aux =
-    prev.map(v => auxOf(root, v)).getOrElse(Aux())
+  private def carriedAux(prev: Option[Snapshot]): Aux = prev.fold(Aux())(_.aux)
   private def auxExtra(aux: Aux): Seq[String] =
     if (aux.isEmpty) Nil else Seq(renderAux(aux))
 
@@ -1002,9 +979,9 @@ object CommitLog {
     * schema makes invisible to every reader (silent loss). Subsets
     * are fine — missing columns project as nulls under the log
     * schema. No-op on never-evolved tables (no recorded schema). */
-  private def requireSchemaCompatible(root: String, prev: Option[Long],
+  private def requireSchemaCompatible(prev: Option[Snapshot],
       df: DataFrame, opName: String): Unit =
-    prev.flatMap(v => snapshotSchemaOf(root, v)).foreach { st =>
+    prev.flatMap(_.schema).foreach { st =>
       val byName = st.fields.map(f => f.name -> f.dataType).toMap
       df.schema.fields.foreach { f =>
         byName.get(f.name) match {
@@ -1028,8 +1005,8 @@ object CommitLog {
 
   /** The table's generated-column definitions, name-sorted (the fold
     * order is deterministic across every write path). */
-  private def generatedColsOf(root: String): Seq[(String, String)] =
-    tableProperties(root).collect {
+  private def generatedColsOf(props: Map[String, String]): Seq[(String, String)] =
+    props.collect {
       case (k, v) if k.startsWith("generated.") => k.stripPrefix("generated.") -> v
     }.toSeq.sortBy(_._1)
 
@@ -1043,10 +1020,10 @@ object CommitLog {
     * wrong property, refused by name. Applied before generated
     * columns, so a generated expression may derive from a defaulted
     * column. */
-  private def applyColumnDefaults(s: SparkSession, root: String,
+  private def applyColumnDefaults(s: SparkSession, props: Map[String, String],
       df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.expr
-    val defs = tableProperties(root).collect {
+    val defs = props.collect {
       case (k, v) if k.startsWith("default.") => k.stripPrefix("default.") -> v
     }.toSeq.sortBy(_._1)
     defs.foldLeft(df) { case (d, (name, sql)) =>
@@ -1074,8 +1051,8 @@ object CommitLog {
     * and monotone across the hwm chain. Returns (completed frame,
     * the advanced mark to commit) — (df, None) on tables without the
     * property. */
-  private def identityOf(root: String): Option[(String, Long, Long)] = {
-    val all = tableProperties(root).collect {
+  private def identityOf(props: Map[String, String]): Option[(String, Long, Long)] = {
+    val all = props.collect {
       case (k, v) if k.startsWith("identity.") =>
         val parts = v.split(',').map(_.trim)
         require(parts.length == 2 &&
@@ -1095,18 +1072,16 @@ object CommitLog {
     * batchId−1, so a replayed batch re-derives the SAME id block from
     * the same mark and the version-≡-batchId skip keeps allocation
     * exactly-once. */
-  private def fillIdentityAt(s: SparkSession, root: String,
+  private def fillIdentityAt(s: SparkSession, props: Map[String, String],
       df: DataFrame, opName: String,
-      base: Option[Long]): (DataFrame, Option[Long]) =
-    identityOf(root) match {
+      base: Option[Snapshot]): (DataFrame, Option[Long]) =
+    identityOf(props) match {
       case None => (df, None)
       case Some((name, start, step)) =>
         require(!df.columns.contains(name),
           s"$opName: column '$name' is IDENTITY (always system-" +
             "assigned) — omit it; supplied values are never accepted")
-        val hwm0 = base
-          .flatMap(v => longMetaOf(root, v, IdHwmField))
-          .getOrElse(start - step)
+        val hwm0 = base.flatMap(_.idHwm).getOrElse(start - step)
         // pin ONE materialization before anything counts: the count
         // action, zipWithIndex's internal count pass and the staging
         // write must all see the SAME rows — a non-deterministic
@@ -1138,11 +1113,11 @@ object CommitLog {
     * name on divergence — never a silently wrong partition/stat.
     * Applied BEFORE the schema check (a missing generated column
     * must fill, not null-project). Returns the completed frame. */
-  private def applyGeneratedColumns(s: SparkSession, root: String,
+  private def applyGeneratedColumns(s: SparkSession, props: Map[String, String],
       df0: DataFrame, opName: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, not}
-    val df = applyColumnDefaults(s, root, df0)
-    val gens = generatedColsOf(root)
+    val df = applyColumnDefaults(s, props, df0)
+    val gens = generatedColsOf(props)
     gens.foldLeft(df) { case (d, (name, sql)) =>
       if (!d.columns.contains(name)) d.withColumn(name, expr(sql))
       else {
@@ -1227,25 +1202,26 @@ object CommitLog {
       case RetryingHead(n, f) => (n, f)
       case _ => (1, () => ())
     }
-    val restageOnMark = attempts > 1 && identityOf(root).isDefined
     val noStats = Map.empty[String, (Long, Long)]
-    def stage(prev: Option[Long], mark: Option[Long]): Staged = {
+    def stage(prev: Option[Snapshot], props: Map[String, String],
+        mark: Option[Long]): Staged = {
       // identity first (generated/default expressions may derive from
       // the assigned id), then fill-or-validate
-      val (dfId, idHwm) = fillIdentityAt(s, root, df0, op, prev)
-      val df = applyGeneratedColumns(s, root, dfId, op)
-      requireSchemaCompatible(root, prev, df, op)
-      enforceConstraints(s, root, df, op)
+      val (dfId, idHwm) = fillIdentityAt(s, props, df0, op, prev)
+      val df = applyGeneratedColumns(s, props, dfId, op)
+      requireSchemaCompatible(prev, df, op)
+      enforceConstraints(s, props, df, op)
+      val schema = prev.flatMap(_.schema)
       val (files, partAux, extra) = layout match {
-        case PlainLayout(n) => (stageDataFiles(s, root, df, n), Aux(), Nil)
+        case PlainLayout(n) => (stageDataFiles(s, root, df, n, schema), Aux(), Nil)
         case PartitionedLayout(cols, n, fromStaged) =>
-          val (fs, a) = stagePartitionedCols(s, root, df, cols, n)
+          val (fs, a) = stagePartitionedCols(s, root, df, cols, n, prev)
           (fs, a, fromStaged(fs, a))
       }
       val (statsAux, legacy) = stats match {
-        case DeclaredStats => (declaredColStats(s, root, files, df), noStats)
-        case TypedStats(cols) => (perFileColStats(s, root, files, cols), noStats)
-        case LegacyStats(c) => (Aux(), perFileStatsNulls(s, root, files, c)._1)
+        case DeclaredStats => (declaredColStats(s, root, files, df, props, schema), noStats)
+        case TypedStats(cols) => (perFileColStats(s, root, files, cols, schema), noStats)
+        case LegacyStats(c) => (Aux(), perFileStatsNulls(s, root, files, c, schema)._1)
       }
       Staged(df, files, partAux.merged(statsAux).merged(stagedSizes(root, files)),
         legacy, extra, mark, idHwm)
@@ -1254,42 +1230,45 @@ object CommitLog {
     var attempt = 0
     while (attempt < attempts) {
       attempt += 1
+      // ONE head snapshot and ONE properties read per attempt, threaded
+      // through every check, the staging and the commit
       val prev = pin.fold(latestVersion(root))(b => Option.when(b > 0)(b - 1))
+        .map(snapshot(root, _))
+      val props = tableProperties(root)
+      val prevFiles = prev.fold(Seq.empty[String])(_.files)
       // before staging, so a refused partition spec leaves no orphans
-      val carried = rebaseSpec(root, carriedAux(root, prev), layout, op)
+      val carried = rebaseSpec(props, carriedAux(prev), layout, op)
       val mark =
-        if (restageOnMark) prev.flatMap(v => longMetaOf(root, v, IdHwmField)) else None
+        if (attempts > 1 && identityOf(props).isDefined) prev.flatMap(_.idHwm) else None
       if (st == null || st.mark != mark) {
         if (st != null) st.files.foreach(f => new java.io.File(root, f).delete())
-        st = stage(prev, mark)
+        st = stage(prev, props, mark)
       } else
         // a retry: the head moved, and the winner may have EVOLVED the
         // schema — the rebase must respect the head it actually lands on
-        requireSchemaCompatible(root, prev, st.df, op)
-      val prevFiles = prev.map(v => snapshotFiles(root, v)
-        .map(p => relativize(root, p))).getOrElse(Nil)
+        requireSchemaCompatible(prev, st.df, op)
       // stats are per-FILE metadata: a commit that carries a file
       // forward carries its stats entry too (the new stat-less files are
       // simply unprunable), so one stats-unaware writer never strips the
       // whole snapshot's skipping metadata — but carried legacy stats
       // stay only under the SAME column: another column's bounds under
       // this one's name would prune files that DO hold matching rows
-      val (prevCol, prevStats) =
-        prev.map(v => snapshotStatsOf(root, v)).getOrElse((None, noStats))
+      val prevCol = prev.flatMap(_.statsCol)
       val statsCol = stats match { case LegacyStats(c) => Some(c); case _ => prevCol }
       val extra = auxExtra(carried.merged(st.aux)) ++ st.extra
       beforeCommit()
       val committed =
-        try Some(commit(root, prevFiles ++ st.files, prev, statsCol = statsCol,
-          stats = (if (statsCol == prevCol) prevStats else noStats) ++ st.legacy,
-          schemaJson = schemaOrRecord(root, prev, st.df), extra = extra,
+        try Some(commitOn(root, prevFiles ++ st.files, prev, props, statsCol = statsCol,
+          stats = (if (statsCol == prevCol) prev.fold(noStats)(_.stats) else noStats) ++
+            st.legacy,
+          schemaJson = schemaOrRecord(prev, st.df), extra = extra,
           newIdHwm = st.idHwm))
         catch {
           case _: java.util.ConcurrentModificationException if head != LatestHead => None
         }
       if (committed.isDefined || pin.isDefined) {
         if (pin.isEmpty && layout.isInstanceOf[PlainLayout] && stats == DeclaredStats)
-          committed.foreach(maybeAutoCompact(s, root, _))
+          committed.foreach(maybeAutoCompact(s, root, _, prevFiles.size + st.files.size, props))
         return committed
       }
     }
@@ -1306,11 +1285,12 @@ object CommitLog {
     * pre-evolution manifest's files keep pruning — and the staged aux
     * merged on top makes the new spec current. Every other per-file
     * entry (stats, sizes, rows, vectors) carries unchanged. */
-  private def rebaseSpec(root: String, aux0: Aux, layout: Layout, op: String): Aux =
+  private def rebaseSpec(props: Map[String, String], aux0: Aux, layout: Layout,
+      op: String): Aux =
     (layout, aux0.partCol) match {
       case (PartitionedLayout(cols, _, _), Some(cur)) if cur != cols.mkString(",") =>
         val spec = cols.mkString(",")
-        require(tableProperty(root, "repartitionLayout").contains(spec),
+        require(props.get("repartitionLayout").contains(spec),
           s"$op: table is partitioned by '$cur', not '$spec' — one active " +
             "partition spec per table; to EVOLVE the layout for future " +
             s"appends set TBLPROPERTIES ('repartitionLayout' = '$spec')")
@@ -1355,14 +1335,15 @@ object CommitLog {
     * other types run one groupBy(input_file_name) aggregate over the
     * staged files (see [[perFileColStats]]). */
   private def declaredColStats(s: SparkSession, root: String,
-      staged: Seq[String], df: DataFrame): Aux =
-    tableProperty(root, "statsColumns") match {
+      staged: Seq[String], df: DataFrame, props: Map[String, String],
+      schema: Option[StructType]): Aux =
+    props.get("statsColumns") match {
       case None => Aux()
       case Some(spec) =>
         val cols = spec.split(',').map(_.trim).filter(c => c.nonEmpty &&
           df.columns.contains(c) &&
           scala.util.Try(statTagOf(df.schema(c).dataType)).isSuccess).toSeq
-        if (cols.isEmpty) Aux() else perFileColStats(s, root, staged, cols)
+        if (cols.isEmpty) Aux() else perFileColStats(s, root, staged, cols, schema)
     }
 
   /** Opt-in AUTO-COMPACT (r12) — the public engines' answer to the
@@ -1379,12 +1360,13 @@ object CommitLog {
     * the plain-append path triggers; partitioned/segmented tables
     * compact through their own scoped paths (compactPartitions)
     * where a total rewrite would destroy the layout. */
-  private def maybeAutoCompact(s: SparkSession, root: String, v: Long): Unit =
-    tableProperty(root, "autoCompact")
+  private def maybeAutoCompact(s: SparkSession, root: String, v: Long,
+      nFiles: Int, props: Map[String, String]): Unit =
+    props.get("autoCompact")
       .flatMap(n => scala.util.Try(n.trim.toLong).toOption)
-      .filter(n => n > 0 && snapshotFiles(root, v).size >= n)
+      .filter(n => n > 0 && nFiles >= n)
       .foreach { _ =>
-        val target = tableProperty(root, "autoCompact.target")
+        val target = props.get("autoCompact.target")
           .flatMap(t => scala.util.Try(t.trim.toInt).toOption)
           .filter(_ > 0).getOrElse(2)
         try { compact(s, root, target); () }
@@ -1398,11 +1380,8 @@ object CommitLog {
   def compact(s: SparkSession, root: String, nFiles: Int,
       maxAttempts: Int = 10,
       beforeCommit: () => Unit = () => ()): Long = {
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot compact an empty table at $root"))
-    val files = snapshotFiles(root, prev)
-    val cur = read(s, root, prev)
-    val staged = stageDataFiles(s, root, cur, nFiles)
+    val prev = headOf(root, "compact")
+    val staged = stageDataFiles(s, root, read(s, root, prev.version), nFiles, prev.schema)
     // typed stats survive the rewrite (restageColStats); partition
     // entries cannot — a plain compaction mixes partitions per file.
     // r12: the total rewrite rides the semantic rebase loop too — a
@@ -1410,19 +1389,11 @@ object CommitLog {
     // commit (the winners' files carry verbatim, uncompacted until
     // the next run); any concurrent rewrite removed a file this
     // compaction read, so overlap refuses inside the loop as before.
-    val (v, _) = commitRewriteRebasing(s, root, prev,
-      files.map(p => relativize(root, p)).toSet, "compact",
+    val (v, _) = commitRewriteRebasing(s, root, prev, "compact",
       Nil, staged, Aux(), staged, Nil, maxAttempts, beforeCommit)
     v
   }
 
-  /** Read the table AS OF `version` — the time-travel scan: explicit
-    * file list from the manifest, no directory listing anywhere. If
-    * the manifest records a schema (a schema-evolved table), the scan
-    * uses IT — files predating an added column project nulls for it,
-    * and planning never opens a parquet footer (the Delta
-    * schema-in-the-log design; `mergeSchema` footer reads are the
-    * cost this avoids at 10^5 files). */
   /** Memo of the LAZY full-snapshot frame per (session, root, version)
     * (r20, VERDICT r19 #4; the Tables() precedent). The lifecycle keys
     * re-read the same (table, version) once per witness and once per
@@ -1431,32 +1402,36 @@ object CommitLog {
     * Profile census showed as the dominant driver-gap share
     * (RuleExecutor/DeduplicateRelations). A version's manifest is
     * write-once and its data files are UUID-named and immutable, so
-    * the identity key is (root, version, manifest size, manifest
-    * mtime-ns): a DIFFERENT table recreated at the same path gets a
-    * different manifest identity and can never hit a stale entry.
+    * the key is (root, version, [[manifestIdentity]]): a DIFFERENT
+    * table recreated at the same path gets a different manifest
+    * identity and can never hit a stale entry.
     * Plans only — every action over the memoized frame still scans
     * parquet; no result or intermediate is reused. Per-session via
     * weak keys; bounded by half-eviction (never a full clear). */
   private val readMemo = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, Long, Long, Long), DataFrame]]())
+      scala.collection.concurrent.TrieMap[(String, Long, String), DataFrame]]())
 
+  /** Read the table AS OF `version` — the time-travel scan: explicit
+    * file list from the manifest, no directory listing anywhere. If
+    * the manifest records a schema (a schema-evolved table), the scan
+    * uses IT — files predating an added column project nulls for it,
+    * and planning never opens a parquet footer (the Delta
+    * schema-in-the-log design; `mergeSchema` footer reads are the
+    * cost this avoids at 10^5 files). */
   def read(s: SparkSession, root: String, version: Long): DataFrame = {
-    val ident =
-      try {
-        val attrs = java.nio.file.Files.readAttributes(
-          manifest(root, version).toPath,
-          classOf[java.nio.file.attribute.BasicFileAttributes])
-        Some((attrs.size(),
-          attrs.lastModifiedTime().to(java.util.concurrent.TimeUnit.NANOSECONDS)))
-      } catch { case _: Throwable => None } // checkpoint-pruned manifest: no memo
-    ident match {
-      case None => readSubset(s, root, version, snapshotFiles(root, version))
-      case Some((sz, mt)) =>
+    def scan(): DataFrame = {
+      val sn = snapshot(root, version)
+      readSubset(s, sn, sn.absFiles)
+    }
+    // checkpoint-pruned manifest: no identity, no memo
+    scala.util.Try(manifestIdentity(root, version)).toOption match {
+      case None => scan()
+      case Some(ident) =>
         val m = readMemo.synchronized {
           var t = readMemo.get(s)
           if (t == null) {
-            t = new scala.collection.concurrent.TrieMap[(String, Long, Long, Long), DataFrame]()
+            t = new scala.collection.concurrent.TrieMap[(String, Long, String), DataFrame]()
             readMemo.put(s, t)
           }
           t
@@ -1465,41 +1440,40 @@ object CommitLog {
           var drop = true
           m.keysIterator.foreach { k => if (drop) m.remove(k); drop = !drop }
         }
-        m.getOrElseUpdate(
-          (new java.io.File(root).getAbsolutePath, version, sz, mt),
-          readSubset(s, root, version, snapshotFiles(root, version)))
+        m.getOrElseUpdate((new java.io.File(root).getAbsolutePath, version, ident), scan())
     }
   }
 
-  /** Read an explicit subset of `version`'s files under the manifest
+  /** Read an explicit subset of snapshot `sn`'s files under the manifest
     * schema when one is recorded — every partial-snapshot reader
     * (pruned scan, CDF delta, CoW dirty-file pass) must use this, not
     * a raw parquet read: on a schema-evolved table a raw read
     * footer-infers from a sampled file and an added column silently
     * appears or vanishes with the sample. */
-  private def readSubset(s: SparkSession, root: String, version: Long,
+  private def readSubset(s: SparkSession, sn: Snapshot,
       files: Seq[String]): DataFrame =
-    readSubsetCore(s, root, version, files, withFile = false)
+    readSubsetCore(s, sn, files, withFile = false)
 
   /** readSubset plus a `_graft_file` column (the absolute source file
     * URI, captured BEFORE any join — the CoW dirty-discovery paths
     * need it, and input_file_name() cannot be captured after the
     * deletion-vector mask join). */
-  private def readSubsetWithFile(s: SparkSession, root: String,
-      version: Long, files: Seq[String]): DataFrame =
-    readSubsetCore(s, root, version, files, withFile = true)
+  private def readSubsetWithFile(s: SparkSession, sn: Snapshot,
+      files: Seq[String]): DataFrame =
+    readSubsetCore(s, sn, files, withFile = true)
 
   /** readSubsetWithFile plus `_graft_pos` — each row's PHYSICAL
     * row index within its file (_metadata.row_index, captured at the
     * scan), the coordinate a deletion vector records. */
-  private def readSubsetWithFilePos(s: SparkSession, root: String,
-      version: Long, files: Seq[String]): DataFrame =
-    readSubsetCore(s, root, version, files, withFile = true, withPos = true)
+  private def readSubsetWithFilePos(s: SparkSession, sn: Snapshot,
+      files: Seq[String]): DataFrame =
+    readSubsetCore(s, sn, files, withFile = true, withPos = true)
 
-  private def readSubsetCore(s: SparkSession, root: String, version: Long,
+  private def readSubsetCore(s: SparkSession, sn: Snapshot,
       files: Seq[String], withFile: Boolean, withPos: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{col, input_file_name, lit, substring_index}
-    val stOpt = snapshotSchemaOf(root, version)
+    val root = sn.root
+    val stOpt = sn.schema
     // a ROW-LESS snapshot (a mass delete can legally empty the table)
     // reads as an empty relation under the recorded schema — a raw
     // zero-path parquet read would fail schema inference (r11)
@@ -1514,7 +1488,7 @@ object CommitLog {
       if (withPos) df = df.withColumn("_graft_pos", lit(null).cast("long"))
       return df
     }
-    val dvMap = auxOf(root, version).dvs
+    val dvMap = sn.aux.dvs
     val dvOf: String => Seq[String] =
       if (dvMap.isEmpty) _ => Nil
       else f => dvMap.getOrElse(relativize(root, f), Nil)
@@ -1602,15 +1576,13 @@ object CommitLog {
     org.apache.spark.sql.types.StructType(st.fields.map(f =>
       org.apache.spark.sql.types.StructField(physicalName(f), f.dataType, f.nullable)))
 
-  private def headSchema(root: String): Option[org.apache.spark.sql.types.StructType] =
-    latestVersion(root).flatMap(v => snapshotSchemaOf(root, v))
-
   /** Rename a LOGICAL frame's columns to their physical names before
     * staging (no-op for unmapped tables and for columns outside the
     * table schema, e.g. _change_type). Every staging path calls this,
-    * so writers uniformly produce physical files. */
-  private def toPhysicalDf(root: String, df: DataFrame): DataFrame =
-    headSchema(root) match {
+    * so writers uniformly produce physical files, mapped under the
+    * schema of the head the write lands on. */
+  private def toPhysicalDf(df: DataFrame, schema: Option[StructType]): DataFrame =
+    schema match {
       case Some(st) if hasMapping(st) =>
         val m = st.fields.map(f => f.name -> physicalName(f)).toMap
         // ONE select, not a rename fold: sequential renames collide
@@ -1624,9 +1596,9 @@ object CommitLog {
     * stats-recompute paths read what they just wrote, which is
     * physical on a mapped table. */
   private def readStagedLogical(s: SparkSession, root: String,
-      files: Seq[String]): DataFrame = {
+      files: Seq[String], schema: Option[StructType]): DataFrame = {
     val raw = s.read.parquet(files.map(f => new java.io.File(root, f).toString): _*)
-    headSchema(root) match {
+    schema match {
       case Some(st) if hasMapping(st) =>
         val byPhys = st.fields.map(f => physicalName(f) -> f.name).toMap
         raw.select(raw.columns.map(c =>
@@ -1639,12 +1611,8 @@ object CommitLog {
   /** The schema the manifest of `version` records, if its committing
     * writer was schema-aware (appendEvolved); None = pre-evolution
     * manifest, reader falls back to footer inference. */
-  def snapshotSchemaOf(root: String, version: Long): Option[org.apache.spark.sql.types.StructType] = {
-    val node = mapper.readTree(java.nio.file.Files.readString(manifest(root, version).toPath))
-    Option(node.get("schema")).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j.toString)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-  }
+  def snapshotSchemaOf(root: String, version: Long): Option[StructType] =
+    snapshot(root, version).schema
 
   /** TYPE WIDENING lattice (r12 — Delta's type-widening table
     * feature): `from` may be stored in parquet files that a scan
@@ -1695,19 +1663,13 @@ object CommitLog {
     // appendEvolved/update/merge/overwrite bypassed the
     // fill-or-validate contract, so one write could silently land a
     // wrong partition, stat, or a NULL id)
-    val (dfId, idHwm) = fillIdentityAt(s, root, df0, "appendEvolved",
-      latestVersion(root))
-    val df = applyGeneratedColumns(s, root, dfId, "appendEvolved")
-    val prev = latestVersion(root)
-    enforceConstraints(s, root, df, "appendEvolved")
-    val prevFiles = prev.map(v => snapshotFiles(root, v)
-      .map(p => relativize(root, p))).getOrElse(Nil)
+    val prev = headSnapshot(root)
+    val props = tableProperties(root)
+    val (dfId, idHwm) = fillIdentityAt(s, props, df0, "appendEvolved", prev)
+    val df = applyGeneratedColumns(s, props, dfId, "appendEvolved")
+    enforceConstraints(s, props, df, "appendEvolved")
     val prevSchema: Seq[org.apache.spark.sql.types.StructField] =
-      prev.map { v =>
-        snapshotSchemaOf(root, v)
-          .getOrElse(s.read.parquet(snapshotFiles(root, v): _*).schema)
-          .fields.toSeq
-      }.getOrElse(Nil)
+      prev.map(p => schemaOrInfer(s, p).fields.toSeq).getOrElse(Nil)
     val byName = prevSchema.map(f => f.name -> f).toMap
     df.schema.fields.foreach { f =>
       byName.get(f.name).foreach { p =>
@@ -1728,12 +1690,9 @@ object CommitLog {
         case _ => p
       }
     }
-    val merged = org.apache.spark.sql.types.StructType(
+    val merged = StructType(
       widenedPrev ++ df.schema.fields.filterNot(f => byName.contains(f.name))
-        .map(avoidPhysicalClash(root,
-          org.apache.spark.sql.types.StructType(prevSchema), _)))
-    val (prevCol, prevStats) =
-      prev.map(v => snapshotStatsOf(root, v)).getOrElse((None, Map.empty[String, (Long, Long)]))
+        .map(avoidPhysicalClash(prev, props, StructType(prevSchema), _)))
     // a clash-renamed NEW column is unknown to the prior head's
     // mapping (which is what stageDataFiles applies), so its physical
     // name must be applied here, before staging
@@ -1742,11 +1701,26 @@ object CommitLog {
         if (physicalName(f) == f.name) d
         else d.withColumnRenamed(f.name, physicalName(f))
       }
-    commit(root, prevFiles ++ stageDataFiles(s, root, physDf, nFiles), prev,
-      statsCol = prevCol, stats = prevStats, schemaJson = Some(merged.json),
-      extra = auxExtra(carriedAux(root, prev)),
+    commitOn(root, prev.fold(Seq.empty[String])(_.files) ++
+      stageDataFiles(s, root, physDf, nFiles, prev.flatMap(_.schema)), prev, props,
+      statsCol = prev.flatMap(_.statsCol), stats = prev.map(_.stats).getOrElse(Map.empty),
+      schemaJson = Some(merged.json), extra = auxExtra(carriedAux(prev)),
       newIdHwm = idHwm)
   }
+
+  /** The log schema `p` records, else one footer-inferred from its files
+    * (a pre-evolution table). */
+  private def schemaOrInfer(s: SparkSession, p: Snapshot): StructType =
+    p.schema.getOrElse(s.read.parquet(p.absFiles: _*).schema)
+
+  /** A metadata-only commit on head `p`: its files, tombstones and
+    * legacy stats (recorded under `statsCol`; None drops them) carried
+    * verbatim under a new schema and aux. */
+  private def recommit(root: String, p: Snapshot, op: String, schema: StructType,
+      aux: Aux, statsCol: Option[String], newTombstones: Seq[String] = Nil): Long =
+    commitOn(root, p.files, Some(p), tableProperties(root), op = op,
+      statsCol = statsCol, stats = p.stats, schemaJson = Some(schema.json),
+      extra = auxExtra(aux), newTombstones = newTombstones)
 
   /** Metadata-only schema evolution — ALTER TABLE ADD COLUMNS: a new
     * version re-listing the head's files verbatim under a WIDENED
@@ -1757,21 +1731,15 @@ object CommitLog {
     * duplicates). */
   def evolveSchema(s: SparkSession, root: String,
       newFields: Seq[org.apache.spark.sql.types.StructField]): Long = {
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot evolve an empty table at $root"))
-    val prevSchema = snapshotSchemaOf(root, prev)
-      .getOrElse(s.read.parquet(snapshotFiles(root, prev): _*).schema)
+    val prev = headOf(root, "evolve")
+    val prevSchema = schemaOrInfer(s, prev)
     val existing = prevSchema.fieldNames.toSet
     newFields.foreach(f => require(!existing.contains(f.name),
       s"evolveSchema: column '${f.name}' already exists — evolution " +
         "adds columns, it never retypes them"))
-    val merged = org.apache.spark.sql.types.StructType(
-      prevSchema.fields.toSeq ++ newFields.map(avoidPhysicalClash(root, prevSchema, _)))
-    val prevFiles = snapshotFiles(root, prev).map(p => relativize(root, p))
-    val (prevCol, prevStats) = snapshotStatsOf(root, prev)
-    commit(root, prevFiles, Some(prev),
-      statsCol = prevCol, stats = prevStats, schemaJson = Some(merged.json),
-      extra = auxExtra(carriedAux(root, Some(prev))))
+    val merged = StructType(prevSchema.fields.toSeq ++ newFields.map(
+      avoidPhysicalClash(Some(prev), tableProperties(root), prevSchema, _)))
+    recommit(root, prev, "append", merged, prev.aux, prev.statsCol)
   }
 
   /** Metadata-only TYPE WIDEN (r12) — ALTER TABLE ALTER COLUMN TYPE
@@ -1782,10 +1750,8 @@ object CommitLog {
     * on); anything off the lattice refuses by name. */
   def widenColumnType(s: SparkSession, root: String, name: String,
       newType: org.apache.spark.sql.types.DataType): Long = {
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot alter an empty table at $root"))
-    val prevSchema = snapshotSchemaOf(root, prev)
-      .getOrElse(s.read.parquet(snapshotFiles(root, prev): _*).schema)
+    val prev = headOf(root, "alter")
+    val prevSchema = schemaOrInfer(s, prev)
     val f = prevSchema.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
         s"ALTER COLUMN: no column '$name' in the table schema"))
@@ -1794,19 +1760,15 @@ object CommitLog {
         s"${newType.simpleString} is not a widening " +
         "(byte→short→int→long, float→double, decimal growth) — " +
         "the log never retypes")
-    val widened = org.apache.spark.sql.types.StructType(prevSchema.fields
+    val widened = StructType(prevSchema.fields
       .map(x => if (x.name == name) x.copy(dataType = newType) else x))
-    val prevFiles = snapshotFiles(root, prev).map(p => relativize(root, p))
-    val (prevCol, prevStats) = snapshotStatsOf(root, prev)
     // op="widen", not the default "append" (r13, ADVICE): DESCRIBE
     // HISTORY records the schema change honestly, and the rebase
     // loop's acceptance of a widen winner is an EXPLICIT entry in
     // rebaseableWinnerOps (metadata-only: removes nothing, vectors
     // nothing; a rebased rewrite re-records the widened HEAD schema,
     // and its narrow staged files read natively under it)
-    commit(root, prevFiles, Some(prev), op = "widen",
-      statsCol = prevCol, stats = prevStats, schemaJson = Some(widened.json),
-      extra = auxExtra(carriedAux(root, Some(prev))))
+    recommit(root, prev, "widen", widened, prev.aux, prev.statsCol)
   }
 
   /** Dropped columns' PHYSICAL parquet names, comma-joined — their
@@ -1821,16 +1783,15 @@ object CommitLog {
     * would resurrect under the new column) — gets a fresh physical
     * name: two fields must never stage to, or read from, the same
     * parquet column. */
-  private def avoidPhysicalClash(root: String,
-      prev: org.apache.spark.sql.types.StructType,
+  private def avoidPhysicalClash(head: Option[Snapshot], props: Map[String, String],
+      prev: StructType,
       f: org.apache.spark.sql.types.StructField): org.apache.spark.sql.types.StructField = {
     // tombstones live in the head manifest since r11 (atomic with the
     // drop commit); the property read stays as the legacy fallback for
     // tables whose drops predate the move
     val taken = prev.fields.map(physicalName).toSet ++
-      latestVersion(root).toSeq.flatMap(v => tombstonesOf(root, v)) ++
-      tableProperty(root, PhysTombstonesProp)
-        .map(_.split(',').toSet).getOrElse(Set.empty)
+      head.toSeq.flatMap(_.tombstones) ++
+      props.get(PhysTombstonesProp).map(_.split(',').toSet).getOrElse(Set.empty)
     if (!taken.contains(physicalName(f))) f
     else f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
       .withMetadata(f.metadata)
@@ -1870,10 +1831,8 @@ object CommitLog {
     * physical layout never changed. */
   def renameColumn(s: SparkSession, root: String, from: String,
       to: String): Long = {
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot rename a column of an empty table at $root"))
-    val st = snapshotSchemaOf(root, prev)
-      .getOrElse(s.read.parquet(snapshotFiles(root, prev): _*).schema)
+    val prev = headOf(root, "rename a column of")
+    val st = schemaOrInfer(s, prev)
     require(st.fieldNames.contains(from), s"renameColumn: no column '$from'")
     require(!st.fieldNames.contains(to),
       s"renameColumn: column '$to' already exists")
@@ -1885,7 +1844,7 @@ object CommitLog {
           .withMetadata(f.metadata)
           .putString(PhysicalKey, physicalName(f)).build())
     }
-    val aux = carriedAux(root, Some(prev))
+    val aux = prev.aux
     val ren = (k: String) => if (k == from) to else k
     // copy-based rebuild (r16 review find — the positional Aux() here
     // silently dropped the r15 sizes/rows entries, so a RENAME COLUMN
@@ -1901,12 +1860,8 @@ object CommitLog {
       // per-generation layouts follow the rename like the active spec
       layouts = aux.layouts.map { case (f2, pairs) =>
         f2 -> pairs.map { case (c, v) => (ren(c), v) } })
-    val (prevCol, prevStats) = snapshotStatsOf(root, prev)
-    commit(root, snapshotFiles(root, prev).map(p => relativize(root, p)),
-      Some(prev), op = "rename_column",
-      statsCol = prevCol.map(ren), stats = prevStats,
-      schemaJson = Some(org.apache.spark.sql.types.StructType(fields).json),
-      extra = auxExtra(newAux))
+    recommit(root, prev, "rename_column", StructType(fields), newAux,
+      prev.statsCol.map(ren))
   }
 
   /** ALTER TABLE ... DROP COLUMN — a METADATA-ONLY commit: the new
@@ -1920,14 +1875,12 @@ object CommitLog {
     * constrained columns, and for the last column. Pinned readers at
     * older versions still see it. */
   def dropColumn(s: SparkSession, root: String, name: String): Long = {
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot drop a column of an empty table at $root"))
-    val st = snapshotSchemaOf(root, prev)
-      .getOrElse(s.read.parquet(snapshotFiles(root, prev): _*).schema)
+    val prev = headOf(root, "drop a column of")
+    val st = schemaOrInfer(s, prev)
     require(st.fieldNames.contains(name), s"dropColumn: no column '$name'")
     require(st.fields.length > 1, "dropColumn: cannot drop the last column")
     requireUnconstrained(root, name, "dropColumn")
-    val aux = carriedAux(root, Some(prev))
+    val aux = prev.aux
     require(!aux.partCol.exists(_.split(',').contains(name)),
       s"dropColumn: '$name' is a partition column — repartition " +
         "(overwrite with a new partCol) before dropping it")
@@ -1949,15 +1902,8 @@ object CommitLog {
     // every later commit) — atomic with the drop itself, never a racy
     // properties-file read-modify-write (r11, ADVICE)
     val dropped = st.fields.find(_.name == name).map(physicalName).get
-    val (prevCol, prevStats) = snapshotStatsOf(root, prev)
-    val keepLegacy = !prevCol.contains(name)
-    commit(root, snapshotFiles(root, prev).map(p => relativize(root, p)),
-      Some(prev), op = "drop_column",
-      statsCol = if (keepLegacy) prevCol else None,
-      stats = if (keepLegacy) prevStats else Map.empty,
-      schemaJson = Some(org.apache.spark.sql.types.StructType(fields).json),
-      extra = auxExtra(newAux),
-      newTombstones = Seq(dropped))
+    recommit(root, prev, "drop_column", StructType(fields), newAux,
+      prev.statsCol.filterNot(_ == name), newTombstones = Seq(dropped))
   }
 
   /** Full-snapshot OVERWRITE (INSERT OVERWRITE / Delta replace): the
@@ -1978,36 +1924,34 @@ object CommitLog {
     // identity allocation CONTINUES across an overwrite (replaced
     // rows' ids are never reused — the public engines' contract),
     // then fill-or-validate generated columns (r13, ADVICE)
-    val (dfId, idHwm) = fillIdentityAt(s, root, df0, "overwrite",
-      latestVersion(root))
-    val df = applyGeneratedColumns(s, root, dfId, "overwrite")
-    val prev = latestVersion(root)
+    val prev = headSnapshot(root)
       .getOrElse(sys.error(s"cannot overwrite an empty table at $root — append first"))
-    requireSchemaCompatible(root, Some(prev), df, "overwrite")
-    enforceConstraints(s, root, df, "overwrite")
+    val props = tableProperties(root)
+    val (dfId, idHwm) = fillIdentityAt(s, props, df0, "overwrite", Some(prev))
+    val df = applyGeneratedColumns(s, props, dfId, "overwrite")
+    requireSchemaCompatible(Some(prev), df, "overwrite")
+    enforceConstraints(s, props, df, "overwrite")
     // CDF staging overlaps the data staging below (r20, guide §2.6):
     // the changelog reads prev + df, the data write stages df — no
     // shared output, so both jobs run concurrently
     val cdfF: Option[() => Seq[String]] =
-      if (!cdfEnabled(root)) None
+      if (!cdfOn(props)) None
       else Some(stageCdfAsync(s, root,
-        read(s, root, prev).withColumn("_change_type", lit("delete"))
+        read(s, root, prev.version).withColumn("_change_type", lit("delete"))
           .unionByName(df.withColumn("_change_type", lit("insert")),
-            allowMissingColumns = true)))
+            allowMissingColumns = true), prev.schema))
     val (staged, stagedAux) = partCol match {
       // a comma-joined value is a COMPOSITE spec (r14) — route
       // through the multi-column staging like appendPartitioned
-      case Some(c) => stagePartitionedCols(s, root, df,
-        c.split(',').map(_.trim).toSeq, nFiles)
-      case None => (stageDataFiles(s, root, df, nFiles), Aux())
+      case Some(c) => stagePartitioned(s, root, df, c, nFiles, prev)
+      case None => (stageDataFiles(s, root, df, nFiles, prev.schema), Aux())
     }
     // the prior snapshot's statsTags seed a recompute over the
     // incoming files — an overwrite must not strip data-skipping
     val fullAux = restageColStats(s, root,
-      carriedAux(root, Some(prev)).filterFiles(Set.empty).merged(stagedAux),
-      staged)
-    commit(root, staged, Some(prev), op = "overwrite",
-      schemaJson = carriedSchemaJson(root, Some(prev)),
+      prev.aux.filterFiles(Set.empty).merged(stagedAux), staged, prev.schema)
+    commitOn(root, staged, Some(prev), props, op = "overwrite",
+      schemaJson = carriedSchemaJson(Some(prev)),
       extra = auxExtra(fullAux) ++ cdfF.map(f => renderCdf(f())).toSeq ++ extraMeta,
       newIdHwm = idHwm)
   }
@@ -2018,18 +1962,8 @@ object CommitLog {
     * UNPRUNABLE — a reader must always scan them (mixed manifests
     * stay correct across writers that don't compute stats). */
   def snapshotStatsOf(root: String, version: Long): (Option[String], Map[String, (Long, Long)]) = {
-    val node = mapper.readTree(java.nio.file.Files.readString(manifest(root, version).toPath))
-    val colName = Option(node.get("statsCol")).map(_.asText())
-    val stats = Option(node.get("stats")).map { st =>
-      val it = st.fields()
-      val b = Map.newBuilder[String, (Long, Long)]
-      while (it.hasNext) {
-        val e = it.next()
-        b += e.getKey -> (e.getValue.get(0).asLong(), e.getValue.get(1).asLong())
-      }
-      b.result()
-    }.getOrElse(Map.empty)
-    (colName, stats)
+    val sn = snapshot(root, version)
+    (sn.statsCol, sn.stats)
   }
 
   /** Per-file min/max of `statsCol` over `staged` (relative paths)
@@ -2047,7 +1981,7 @@ object CommitLog {
     * hand-built manifest JSON — a quote or backslash would commit a
     * permanently unparseable manifest. */
   private def perFileStatsNulls(s: SparkSession, root: String,
-      staged: Seq[String], statsCol: String)
+      staged: Seq[String], statsCol: String, schema: Option[StructType])
       : (Map[String, (Long, Long)], Map[String, Long]) = {
     import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
     require(!statsCol.exists(c => c == '"' || c == '\\' || c < ' '),
@@ -2055,7 +1989,7 @@ object CommitLog {
     if (staged.isEmpty) return (Map.empty, Map.empty)
     val byCanon = staged.map(rel =>
       new java.io.File(root, rel).getCanonicalPath -> rel).toMap
-    val rows = readStagedLogical(s, root, staged)
+    val rows = readStagedLogical(s, root, staged, schema)
       .groupBy(input_file_name().as("_graft_file"))
       .agg(min(col(statsCol)).as("mn"), max(col(statsCol)).as("mx"),
         count(lit(1)).as("n"), count(col(statsCol)).as("nn"))
@@ -2096,20 +2030,22 @@ object CommitLog {
     * predicate, so correctness never depends on the stats. */
   def prunedRead(s: SparkSession, root: String, version: Long,
       lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val files = readManifest(root, version)._2
-    val (_, stats) = snapshotStatsOf(root, version)
+    val sn = snapshot(root, version)
+    val files = sn.files
     val keep = files.filter { f =>
-      stats.get(f) match {
+      sn.stats.get(f) match {
         case Some((mn, mx)) => mx >= lo && mn <= hi
         case None => true
       }
     }
-    val df =
-      if (keep.isEmpty) read(s, root, version).limit(0)
-      else readSubset(s, root, version,
-        keep.map(f => new java.io.File(root, f).toString))
-    (df, files.size, keep.size)
+    (keptScan(s, sn, keep), files.size, keep.size)
   }
+
+  /** A pruned scan over the `keep` (relative) files of `sn`; an empty
+    * selection reads as the snapshot's empty frame. */
+  private def keptScan(s: SparkSession, sn: Snapshot, keep: Seq[String]): DataFrame =
+    if (keep.isEmpty) read(s, sn.root, sn.version).limit(0)
+    else readSubset(s, sn, keep.map(f => new java.io.File(sn.root, f).toString))
 
   // ------------------------------------------------------------------
   // Partitioned tables through the log (r10, VERDICT r9 item 2):
@@ -2160,12 +2096,12 @@ object CommitLog {
     * decoded back exactly (a literal '%' in a value always arrives
     * as %25, so the blind decode is the precise inverse). */
   private def stageRouted(s: SparkSession, root: String, rawDf: DataFrame,
-      filesPerGroup: Int): Seq[(String, Seq[String])] = {
+      filesPerGroup: Int, schema: Option[StructType]): Seq[(String, Seq[String])] = {
     import org.apache.spark.sql.functions.{col, hash, lit, pmod}
     new java.io.File(root).mkdirs()
     val stage = java.nio.file.Files.createTempDirectory(
       new java.io.File(root).toPath, ".pstage-")
-    val df = toPhysicalDf(root, rawDf)
+    val df = toPhysicalDf(rawDf, schema)
     val dataCols = df.columns.filterNot(c => c == "_gp" || c == "_gs")
     val (routed, partDepth) =
       if (filesPerGroup <= 1)
@@ -2226,11 +2162,11 @@ object CommitLog {
   }
 
   private def stagePartitioned(s: SparkSession, root: String, df: DataFrame,
-      partCol: String, filesPerPartition: Int): (Seq[String], Aux) =
+      partCol: String, filesPerPartition: Int, head: Snapshot): (Seq[String], Aux) =
     // a comma-joined name is a composite spec (r14) — every staging
     // entry point splits it the same way
     stagePartitionedCols(s, root, df,
-      partCol.split(',').map(_.trim).toSeq, filesPerPartition)
+      partCol.split(',').map(_.trim).toSeq, filesPerPartition, Some(head))
 
   /** Separator inside a composite spec's joined routing/parts value —
     * a control character Jackson escapes losslessly, so partition
@@ -2264,10 +2200,12 @@ object CommitLog {
     * manifest), per-file layouts recording the ordered (col, value)
     * pairs each file was written under. partCol comma-joins the spec
     * and parts records the joined tuple — the legacy single-column
-    * encoding is the 1-column case, byte-identical to r13's. */
+    * encoding is the 1-column case, byte-identical to r13's. `head` is
+    * the snapshot the write lands on (its schema maps physical names,
+    * its layouts decide the guard stamp below). */
   private def stagePartitionedCols(s: SparkSession, root: String,
       df: DataFrame, partCols: Seq[String],
-      filesPerPartition: Int): (Seq[String], Aux) = {
+      filesPerPartition: Int, head: Option[Snapshot]): (Seq[String], Aux) = {
     import org.apache.spark.sql.functions.{coalesce, col, concat_ws, hash, lit, pmod}
     require(partCols.nonEmpty, "partitioned staging needs a column")
     // TIMESTAMP-typed identity partition columns (r16, VERDICT item
@@ -2286,9 +2224,11 @@ object CommitLog {
       case c => df.schema.fields.exists(f => f.name == c &&
         f.dataType == org.apache.spark.sql.types.TimestampType)
     }
+    // the chokepoint's own properties read: it stamps what it checks
+    val props = tableProperties(root)
     if (ltzPartCols.nonEmpty) {
       val tz = s.sessionState.conf.sessionLocalTimeZone
-      tableProperty(root, "layout.timeZone") match {
+      props.get("layout.timeZone") match {
         case None => setTableProperty(root, "layout.timeZone", tz)
         case Some(t0) => require(t0 == tz,
           s"partitioned staging: table layout on timestamp column(s) " +
@@ -2325,7 +2265,7 @@ object CommitLog {
     }
     val tagged = df.withColumn("_gp",
       concat_ws(specSep, partCols.map(routing): _*))
-    val groups = stageRouted(s, root, tagged, filesPerPartition)
+    val groups = stageRouted(s, root, tagged, filesPerPartition, head.flatMap(_.schema))
     // LAYOUT-TEXT POISONING GUARD (r16 review find): a partition VALUE
     // containing the reserved spec separator would make the routed
     // tuple split into the wrong arity — the recorded layout would
@@ -2365,15 +2305,11 @@ object CommitLog {
     // table whose pre-guard layout text at v1 was truncated away at v2
     // would stamp at a v3 guarded append, and a `VERSION AS OF 1` read
     // would then consume/exclude on text the guard never saw.
-    if (tableProperty(root, "layout.valueGuard").isEmpty) {
-      val priorLayouts = latestVersion(root).exists { v =>
-        !isSegmented(root, v) && {
-          val a = auxOf(root, v)
-          a.partCol.isDefined || a.layouts.nonEmpty
-        }
-      }
+    if (!props.contains("layout.valueGuard")) {
+      val priorLayouts = head.exists(h => h.segmentRefs.isEmpty &&
+        (h.aux.partCol.isDefined || h.aux.layouts.nonEmpty))
       if (!priorLayouts) setTableProperty(root, "layout.valueGuard",
-        latestVersion(root).map(_ + 1).getOrElse(0L).toString)
+        head.map(_.version + 1).getOrElse(0L).toString)
     }
     val parts = groups.flatMap { case (v, fs) => fs.map(_ -> v) }.toMap
     (groups.flatMap(_._2),
@@ -2453,8 +2389,8 @@ object CommitLog {
     * reads; the caller still applies its precise predicate. */
   def partitionPrunedReadMulti(s: SparkSession, root: String, version: Long,
       probes: Seq[(String, Seq[String])]): (DataFrame, Int, Int) = {
-    val files = readManifest(root, version)._2
-    val aux = auxOf(root, version)
+    val sn = snapshot(root, version)
+    val (files, aux) = (sn.files, sn.aux)
     val specCols = aux.partCol.toSeq.flatMap(_.split(',')).toSet
     probes.foreach { case (c, _) =>
       require(specCols.contains(c) ||
@@ -2469,11 +2405,7 @@ object CommitLog {
       }
       case None => true // no entry: must read
     })
-    val df =
-      if (keep.isEmpty) read(s, root, version).limit(0)
-      else readSubset(s, root, version,
-        keep.map(f => new java.io.File(root, f).toString))
-    (df, files.size, keep.size)
+    (keptScan(s, sn, keep), files.size, keep.size)
   }
 
   // ------------------------------------------------------------------
@@ -2502,13 +2434,18 @@ object CommitLog {
     * non-empty file's cached [[FooterSummary]] covers is read from
     * the footers; the rest go to [[perFileColStatsJob]]. Same Aux. */
   private[graft] def perFileColStats(s: SparkSession, root: String,
-      staged: Seq[String], cols: Seq[String]): Aux = {
+      staged: Seq[String], cols: Seq[String]): Aux =
+    perFileColStats(s, root, staged, cols, headSnapshot(root).flatMap(_.schema))
+
+  /** [[perFileColStats]] for files staged under log schema `schema`. */
+  private def perFileColStats(s: SparkSession, root: String, staged: Seq[String],
+      cols: Seq[String], schema: Option[StructType]): Aux = {
     val live = staged.map(f => f -> footerSummary(new java.io.File(root, f))).filter(_._2.rows > 0)
-    val fields = headSchema(root).toSeq.flatMap(_.fields).map(f => f.name -> f).toMap
+    val fields = schema.toSeq.flatMap(_.fields).map(f => f.name -> f).toMap
     val fromFooter = cols.filter(c => fields.get(c).exists(f =>
       scala.util.Try(statTagOf(f.dataType)).toOption.contains("long") &&
         live.forall(_._2.longStats.contains(physicalName(f)))))
-    val job = perFileColStatsJob(s, root, staged, cols.filterNot(fromFooter.contains))
+    val job = perFileColStatsJob(s, root, staged, cols.filterNot(fromFooter.contains), schema)
     if (fromFooter.isEmpty || staged.isEmpty) job
     else job.copy(statsTags = job.statsTags ++ fromFooter.map(_ -> "long"),
       stats2 = live.map { case (rel, fs) => rel -> (job.stats2.getOrElse(rel, Map.empty) ++
@@ -2522,12 +2459,16 @@ object CommitLog {
     * lexicographically. Used for what footers cannot answer: doubles
     * (NaN, -0.0), strings, timestamps, partial stats, legacy files. */
   private[graft] def perFileColStatsJob(s: SparkSession, root: String,
-      staged: Seq[String], cols: Seq[String]): Aux = {
+      staged: Seq[String], cols: Seq[String]): Aux =
+    perFileColStatsJob(s, root, staged, cols, headSnapshot(root).flatMap(_.schema))
+
+  private def perFileColStatsJob(s: SparkSession, root: String, staged: Seq[String],
+      cols: Seq[String], schema: Option[StructType]): Aux = {
     import org.apache.spark.sql.functions._
     if (staged.isEmpty || cols.isEmpty) return Aux()
     val byCanon = staged.map(rel =>
       new java.io.File(root, rel).getCanonicalPath -> rel).toMap
-    val df = readStagedLogical(s, root, staged)
+    val df = readStagedLogical(s, root, staged, schema)
     val tags = cols.map(c => c -> statTagOf(df.schema(c).dataType)).toMap
     def probe(c: String) = df.schema(c).dataType match {
       // DATE → epoch days: Spark refuses a direct date→long cast, and
@@ -2602,8 +2543,8 @@ object CommitLog {
     * filesTotal, filesRead). */
   def prunedReadTyped(s: SparkSession, root: String, version: Long,
       probes: Seq[StatProbe]): (DataFrame, Int, Int) = {
-    val files = readManifest(root, version)._2
-    val aux = auxOf(root, version)
+    val sn = snapshot(root, version)
+    val (files, aux) = (sn.files, sn.aux)
     val keep = files.filter { f =>
       aux.stats2.get(f) match {
         case None => true
@@ -2615,11 +2556,7 @@ object CommitLog {
         }
       }
     }
-    val df =
-      if (keep.isEmpty) read(s, root, version).limit(0)
-      else readSubset(s, root, version,
-        keep.map(f => new java.io.File(root, f).toString))
-    (df, files.size, keep.size)
+    (keptScan(s, sn, keep), files.size, keep.size)
   }
 
   // ------------------------------------------------------------------
@@ -2699,9 +2636,13 @@ object CommitLog {
     * carries, with OR-of-probe-sets support. Pure log metadata. */
   def prunedFilesTree(root: String, version: Long,
       tree: ProbeTree): (Seq[String], Int) = {
-    val files = readManifest(root, version)._2
-    val aux = auxOf(root, version)
-    val (legacyCol, legacyStats) = snapshotStatsOf(root, version)
+    val sn = snapshot(root, version)
+    (prunedFilesOf(sn, tree), sn.files.size)
+  }
+
+  private def prunedFilesOf(sn: Snapshot, tree: ProbeTree): Seq[String] = {
+    val aux = sn.aux
+    val (legacyCol, legacyStats) = (sn.statsCol, sn.stats)
     // normalize each node ONCE — the per-file loop must not rebuild
     // file-independent maps per file per OR branch (r16 review find).
     // NOTE: the segmented prune (SegNode/admits/admitsFile) mirrors
@@ -2745,8 +2686,7 @@ object CommitLog {
       layoutOk && statsOk && t.ors.forall(_.exists(admits(f, _)))
     }
     val normed = norm(tree)
-    val keep = files.filter(admits(_, normed))
-    (keep, files.size)
+    sn.files.filter(admits(_, normed))
   }
 
   /** [[prunedFilesCombined]] as a scan: (df over the survivors,
@@ -2756,12 +2696,9 @@ object CommitLog {
   def prunedReadCombined(s: SparkSession, root: String, version: Long,
       partProbes: Seq[(String, Set[String])],
       rangeProbes: Seq[RangeProbe]): (DataFrame, Int, Int) = {
-    val (keep, total) = prunedFilesCombined(root, version, partProbes, rangeProbes)
-    val df =
-      if (keep.isEmpty) read(s, root, version).limit(0)
-      else readSubset(s, root, version,
-        keep.map(f => new java.io.File(root, f).toString))
-    (df, total, keep.size)
+    val sn = snapshot(root, version)
+    val keep = prunedFilesOf(sn, ProbeTree(partProbes, rangeProbes))
+    (keptScan(s, sn, keep), sn.files.size, keep.size)
   }
 
   /** Multi-dimensional cluster OPTIMIZE (r10, VERDICT r9 item 4) —
@@ -2788,13 +2725,12 @@ object CommitLog {
   def optimizeClustered(s: SparkSession, root: String,
       dims: Seq[(String, Seq[Long])], filesPerCell: Int): Long = {
     import org.apache.spark.sql.functions.{col, lit}
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot optimize an empty table at $root"))
+    val prev = headOf(root, "optimize")
     dims.foreach { case (c, cuts) =>
       require(cuts == cuts.sorted && cuts.distinct.size == cuts.size,
         s"optimizeClustered cutoffs for $c must be strictly increasing, got $cuts")
     }
-    val cur = read(s, root, prev) // pinned: immune to concurrent commits
+    val cur = read(s, root, prev.version) // pinned: immune to concurrent commits
     def bucketBounds(cuts: Seq[Long]) =
       (None +: cuts.map(Some(_))).zip(cuts.map(Some(_)) :+ None)
     // cross product of per-dim buckets = the cell grid, enumerated in
@@ -2838,7 +2774,7 @@ object CommitLog {
     }.reduce(_ + _)
     val tagged = cur.withColumn("_gp",
       org.apache.spark.sql.functions.format_string("%06d", cellIdCol))
-    val groups = stageRouted(s, root, tagged, filesPerCell)
+    val groups = stageRouted(s, root, tagged, filesPerCell, prev.schema)
     def decode(key: String): List[Int] = {
       var rem = key.toInt
       widths.indices.map { d =>
@@ -2848,9 +2784,9 @@ object CommitLog {
     }
     val staged = groups.sortBy { case (key, _) => interleave(decode(key)) }
       .flatMap(_._2)
-    commit(root, staged, Some(prev), op = "optimize",
-      schemaJson = carriedSchemaJson(root, Some(prev)),
-      extra = auxExtra(perFileColStats(s, root, staged, dims.map(_._1))))
+    commitOn(root, staged, Some(prev), tableProperties(root), op = "optimize",
+      schemaJson = carriedSchemaJson(Some(prev)),
+      extra = auxExtra(perFileColStats(s, root, staged, dims.map(_._1), prev.schema)))
   }
 
   /** Incremental (change-data-feed-style) read: the rows ADDED between
@@ -2875,9 +2811,10 @@ object CommitLog {
           "a rewrite would re-emit unchanged rows; read full snapshots instead")
     }
     val before = snapshotFiles(root, fromVersion).toSet
-    val added = snapshotFiles(root, toVersion).filterNot(before)
+    val to = snapshot(root, toVersion)
+    val added = to.absFiles.filterNot(before)
     if (added.isEmpty) read(s, root, toVersion).limit(0)
-    else readSubset(s, root, toVersion, added)
+    else readSubset(s, to, added)
   }
 
   /** Row-level change-data-feed (r10, VERDICT r9 item 3) — `changes()`
@@ -2916,8 +2853,8 @@ object CommitLog {
     def tagged(df: DataFrame, v: Long): DataFrame =
       df.withColumn("_commit_version", lit(v))
     val parts = ((fromVersion + 1) to toVersion).flatMap { v =>
-      val (op, _) = readManifest(root, v)
-      op match {
+      val sn = snapshot(root, v)
+      sn.op match {
         // a clone's v0 is an insert of every referenced row into THIS
         // table — the diff-vs-empty emits the full listing, like the
         // first append
@@ -2925,9 +2862,9 @@ object CommitLog {
           val before =
             if (v == 0) Set.empty[String]
             else snapshotFiles(root, v - 1).toSet
-          val added = snapshotFiles(root, v).filterNot(before)
+          val added = sn.absFiles.filterNot(before)
           if (added.isEmpty) None
-          else Some(tagged(readSubset(s, root, v, added)
+          else Some(tagged(readSubset(s, sn, added)
             .withColumn("_change_type", lit("insert")), v))
         case "compact" | "optimize" => None
         // widen: metadata-only, zero row changes (later rows arrive
@@ -2946,18 +2883,18 @@ object CommitLog {
           // unionByName coherently — the Delta contract refuses CDF
           // ranges across column-mapping changes; read full snapshots
           throw new IllegalArgumentException(
-            s"changesRows: version $v is a '${readManifest(root, v)._1}' " +
+            s"changesRows: version $v is a '${sn.op}' " +
               "commit — column names changed mid-range; read ranges " +
               "that do not cross it, or full snapshots")
         case changing =>
-          cdfFilesOf(root, v) match {
+          sn.cdf match {
             case Some(Nil) => None // a no-op delete/merge: nothing changed
             case Some(fs) =>
               // cdf files store PHYSICAL names (+_change_type); alias
               // to the version's logical names before tagging
               val raw = s.read.parquet(
                 fs.map(f => new java.io.File(root, f).toString): _*)
-              val mapped = snapshotSchemaOf(root, v) match {
+              val mapped = sn.schema match {
                 case Some(st) if hasMapping(st) =>
                   val byPhys = st.fields.map(f => physicalName(f) -> f.name).toMap
                   raw.select(raw.columns.map(c =>
@@ -3035,17 +2972,16 @@ object CommitLog {
       maxAttempts: Int = 10,
       beforeCommit: () => Unit = () => ()): (Long, Long, Long) = {
     import org.apache.spark.sql.functions.{col, lit}
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot delete from an empty table at $root"))
-    val files = snapshotFiles(root, prev)
+    val prev = headOf(root, "delete from")
+    val files = prev.absFiles
     // a row-less snapshot has nothing to delete — and nothing to scan
     // (a schemaless empty scan cannot even infer its own shape)
-    if (files.isEmpty) return (prev, 0L, 0L)
+    if (files.isEmpty) return (prev.version, 0L, 0L)
     // canonical paths on both sides: _graft_file yields absolute
     // URIs while snapshotFiles reflects the caller's (possibly
     // relative) root — a raw string compare would mark nothing dirty
     // and silently no-op the delete
-    val dirtyCanon = readSubsetWithFile(s, root, prev, files).filter(cond)
+    val dirtyCanon = readSubsetWithFile(s, prev, files).filter(cond)
       .select(col("_graft_file")).distinct()
       .collect().map(r =>
         new java.io.File(new java.net.URI(r.getString(0))).getCanonicalPath)
@@ -3053,7 +2989,6 @@ object CommitLog {
     val (dirty, clean) =
       files.partition(f => dirtyCanon.contains(new java.io.File(f).getCanonicalPath))
     val carried = clean.map(p => relativize(root, p))
-    val aux0 = carriedAux(root, Some(prev))
     // row-level CDF (r10): the deleted rows are exactly the dirty-file
     // rows matching cond — already computed by the CoW pass; persist
     // them under cdf/ so changesRows() replays this version without
@@ -3066,14 +3001,14 @@ object CommitLog {
       if (!cdfEnabled(root)) None
       else if (dirty.isEmpty) Some(() => Nil)
       else Some(stageCdfAsync(s, root,
-        readSubset(s, root, prev, dirty).filter(cond)
-          .withColumn("_change_type", lit("delete"))))
+        readSubset(s, prev, dirty).filter(cond)
+          .withColumn("_change_type", lit("delete")), prev.schema))
     val (rewritten, rewriteAux) =
       if (dirty.isEmpty) (Nil, Aux())
       // keep = NOT(cond) under three-valued logic would DROP rows where
       // cond is NULL (a NULL-keyed row is not a match — it must survive)
-      else stageRewrite(s, root, aux0,
-        readSubset(s, root, prev, dirty)
+      else stageRewrite(s, root, prev,
+        readSubset(s, prev, dirty)
           .filter(!org.apache.spark.sql.functions.coalesce(
             cond, org.apache.spark.sql.functions.lit(false))),
         math.max(1, dirty.size))
@@ -3097,8 +3032,7 @@ object CommitLog {
     // rewrite-vs-rewrite needs row-level reasoning the public formats
     // also refuse at this isolation level. The staged data files are
     // written ONCE; retries cost manifest metadata only.
-    val baseFiles = files.map(p => relativize(root, p)).toSet
-    val (v, addedN) = commitRewriteRebasing(s, root, prev, baseFiles,
+    val (v, addedN) = commitRewriteRebasing(s, root, prev,
       "delete", carried, rewritten, rewriteAux, rewritten,
       cdf.map(renderCdf).toSeq ++ extraMeta, maxAttempts, beforeCommit,
       // value×value narrow rebase (r14): a delete is safe past an
@@ -3106,7 +3040,7 @@ object CommitLog {
       // the delete predicate (a serial winner-then-delete would have
       // dropped them)
       loserTouches = Some((hv, fs) =>
-        readSubset(s, root, hv, fs).filter(cond).limit(1).count()))
+        readSubset(s, hv, fs).filter(cond).limit(1).count()))
     (v, clean.size.toLong + addedN, rewritten.size.toLong)
   }
 
@@ -3146,7 +3080,7 @@ object CommitLog {
     * data files are written ONCE; retries cost manifest metadata
     * only. Returns (version, carriedDeltaVsBase). */
   private def commitRewriteRebasing(s: SparkSession, root: String,
-      prev: Long, baseFiles: Set[String], op: String,
+      base: Snapshot, op: String,
       carried: Seq[String], staged: Seq[String],
       newAux: Aux, restageFiles: Seq[String],
       extraFragments: Seq[String],
@@ -3169,7 +3103,8 @@ object CommitLog {
       // ABSOLUTE file paths (read under the given head version's
       // schema — a widen winner may sit between) — the winner's
       // newly-added files. None keeps the r13 refusal for this op.
-      loserTouches: Option[(Long, Seq[String]) => Long] = None): (Long, Long) = {
+      loserTouches: Option[(Snapshot, Seq[String]) => Long] = None): (Long, Long) = {
+    val baseFiles = base.files.toSet
     val myRemoved = baseFiles -- carried.toSet
     // every rewrite records its staged files' byte sizes and footer
     // row counts (r15 review find: compact and the legacy stats
@@ -3178,7 +3113,7 @@ object CommitLog {
     // for callers whose aux already carries them — merged() is
     // newer-wins over identical values.
     val newAuxSized = newAux.merged(stagedSizes(root, staged))
-    val dvPrev = carriedAux(root, Some(prev)).dvs
+    val props = tableProperties(root)
     // NARROW value-changing-winner case (r13, VERDICT item 7): when
     // THIS rewrite is a pure data-NEUTRAL re-layout (compact/optimize
     // — no value changes on my side), an UPDATE/MERGE winner is also
@@ -3214,29 +3149,24 @@ object CommitLog {
     var attempt = 0
     while (true) {
       attempt += 1
-      val head = latestVersion(root).get
-      if (head != prev) {
-        val ops = ((prev + 1) to head).map(v => readManifest(root, v)._1)
-        val blocked = ops.filterNot(winnerOps)
-        if (blocked.nonEmpty) throw new java.util.ConcurrentModificationException(
-          s"$op under $root lost to a concurrent '${blocked.head}' " +
-            "commit — a value-changing rewrite-vs-rewrite race cannot be " +
-            s"rebased (its rewritten rows may match this $op); retry " +
-            s"the $op against the new head")
-      }
-      val headFiles =
-        if (head == prev) baseFiles
-        else snapshotFiles(root, head).map(p => relativize(root, p)).toSet
+      // ONE snapshot per version the head moved by (the last is the
+      // head); none at all when nothing raced
+      val winners = ((base.version + 1) to latestVersion(root).get).map(snapshot(root, _))
+      val head = winners.lastOption.getOrElse(base)
+      val blocked = winners.map(_.op).filterNot(winnerOps)
+      if (blocked.nonEmpty) throw new java.util.ConcurrentModificationException(
+        s"$op under $root lost to a concurrent '${blocked.head}' " +
+          "commit — a value-changing rewrite-vs-rewrite race cannot be " +
+          s"rebased (its rewritten rows may match this $op); retry " +
+          s"the $op against the new head")
+      val headFiles = if (winners.isEmpty) baseFiles else head.files.toSet
       if (!myRemoved.subsetOf(headFiles))
         throw new java.util.ConcurrentModificationException(
           s"$op under $root read-and-rewrote files a concurrent commit " +
             "removed — overlapping rewrites cannot be rebased; retry " +
             "against the new head")
-      val auxHead =
-        if (head == prev) carriedAux(root, Some(prev))
-        else carriedAux(root, Some(head))
-      if (head != prev && myRemoved.exists(f =>
-        dvPrev.getOrElse(f, Nil) != auxHead.dvs.getOrElse(f, Nil)))
+      if (myRemoved.exists(f =>
+        base.aux.dvs.getOrElse(f, Nil) != head.aux.dvs.getOrElse(f, Nil)))
         throw new java.util.ConcurrentModificationException(
           s"$op under $root rewrote a file whose deletion vectors a " +
             "concurrent commit changed — the staged rewrite would " +
@@ -3245,15 +3175,13 @@ object CommitLog {
       // introduced must be invisible to MY op — walk the winner
       // versions' manifest diffs (metadata only) and probe their
       // added files with the loser's own touch predicate
-      if (head != prev && loserTouches.isDefined) {
+      if (winners.nonEmpty && loserTouches.isDefined) {
         var before = baseFiles
-        val valueWinnerAdded = ((prev + 1) to head).flatMap { v =>
-          val (vOp, listing) = readManifest(root, v)
+        val valueWinnerAdded = winners.flatMap { w =>
           val added =
-            if (vOp == "update" || vOp == "merge")
-              listing.filterNot(before)
+            if (w.op == "update" || w.op == "merge") w.files.filterNot(before)
             else Nil
-          before = listing.toSet
+          before = w.files.toSet
           added
         }.distinct
         if (valueWinnerAdded.nonEmpty && loserTouches.get(head,
@@ -3264,28 +3192,26 @@ object CommitLog {
               "serial orders diverge and the staged result is stale; " +
               s"retry the $op against the new head")
       }
-      if (newIdHwm.isDefined && head != prev &&
-        longMetaOf(root, head, IdHwmField) != idHwmBase)
+      if (newIdHwm.isDefined && winners.nonEmpty && head.idHwm != idHwmBase)
         throw new java.util.ConcurrentModificationException(
           s"$op under $root allocated identity ids from a mark a " +
             "concurrent commit advanced — the staged block may " +
             "overlap; retry against the new head")
       val finalCarried = (headFiles -- myRemoved).toSeq.sorted
       val keep = finalCarried.toSet
-      val (prevCol, prevStats) = snapshotStatsOf(root, head)
       val (statsCol, stats) = newStats match {
         case Some((c, m)) => (Some(c), m)
-        case None => (prevCol, prevStats.filter(kv => keep(kv._1)))
+        case None => (head.statsCol, head.stats.filter(kv => keep(kv._1)))
       }
       beforeCommit()
       try {
-        val v = commit(root, finalCarried ++ staged, Some(head),
+        val v = commitOn(root, finalCarried ++ staged, Some(head), props,
           op = op,
           statsCol = statsCol,
           stats = stats,
-          schemaJson = carriedSchemaJson(root, Some(head)),
+          schemaJson = carriedSchemaJson(Some(head)),
           extra = auxExtra(restageColStats(s, root,
-            auxHead.filterFiles(keep).merged(newAuxSized), restageFiles)) ++
+            head.aux.filterFiles(keep).merged(newAuxSized), restageFiles, head.schema)) ++
             extraFragments,
           newIdHwm = newIdHwm)
         return (v, (finalCarried.size - carried.size).toLong)
@@ -3326,13 +3252,12 @@ object CommitLog {
       maxAttempts: Int = 10,
       beforeCommit: () => Unit = () => ()): (Long, Long, Long) = {
     import org.apache.spark.sql.functions.{col, lit, substring_index}
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot delete from an empty table at $root"))
-    val files = snapshotFiles(root, prev)
-    if (files.isEmpty) return (prev, 0L, 0L) // row-less snapshot: no-op
+    val prev = headOf(root, "delete from")
+    val files = prev.absFiles
+    if (files.isEmpty) return (prev.version, 0L, 0L) // row-less snapshot: no-op
     // positions are PHYSICAL row indexes; the scan respects existing
     // vectors, so an already-dead row can never re-delete
-    val doomed = readSubsetWithFilePos(s, root, prev, files).filter(cond)
+    val doomed = readSubsetWithFilePos(s, prev, files).filter(cond)
       .select(substring_index(col("_graft_file"), "/", -1).as("f"),
         col("_graft_pos").as("i"))
     // CDF staging overlaps the vector staging (r20, guide §2.6): both
@@ -3342,8 +3267,8 @@ object CommitLog {
     val cdfF: Option[() => Seq[String]] =
       if (!cdfEnabled(root)) None
       else Some(stageCdfAsync(s, root,
-        readSubset(s, root, prev, files).filter(cond)
-          .withColumn("_change_type", lit("delete"))))
+        readSubset(s, prev, files).filter(cond)
+          .withColumn("_change_type", lit("delete")), prev.schema))
     val staged = stageDvFiles(s, root, doomed)
     // per-file masked counts + affected files from the sidecar just
     // written (one tiny grouped read — never a second table scan);
@@ -3390,32 +3315,28 @@ object CommitLog {
     * The sidecars and any inserted data files are staged ONCE;
     * retries cost manifest metadata only. */
   private def commitDvRebasing(s: SparkSession, root: String,
-      prev: Long, op: String, newAux: Aux, extraFragments: Seq[String],
+      base: Snapshot, op: String, newAux: Aux, extraFragments: Seq[String],
       inserted: Seq[String], maxAttempts: Int,
       beforeCommit: () => Unit): Long = {
+    val props = tableProperties(root)
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
-      val head = latestVersion(root).get
-      if (head != prev) {
-        val ops = ((prev + 1) to head).map(v => readManifest(root, v)._1)
-        val blocked = ops.filterNot(dvRebaseableWinnerOps)
-        if (blocked.nonEmpty) throw new java.util.ConcurrentModificationException(
-          s"merge-on-read $op under $root lost to a concurrent " +
-            s"'${blocked.head}' commit — positional vectors cannot " +
-            "survive a rewrite of the files they mask; retry the " +
-            s"$op against the new head")
-      }
-      val headFiles = readManifest(root, head)._2
-      val auxHead = carriedAux(root, Some(head))
-      val (statsCol, stats) = snapshotStatsOf(root, head)
+      val winners = ((base.version + 1) to latestVersion(root).get).map(snapshot(root, _))
+      val head = winners.lastOption.getOrElse(base)
+      val blocked = winners.map(_.op).filterNot(dvRebaseableWinnerOps)
+      if (blocked.nonEmpty) throw new java.util.ConcurrentModificationException(
+        s"merge-on-read $op under $root lost to a concurrent " +
+          s"'${blocked.head}' commit — positional vectors cannot " +
+          "survive a rewrite of the files they mask; retry the " +
+          s"$op against the new head")
       beforeCommit()
       try {
-        return commit(root, headFiles ++ inserted, Some(head), op = op,
-          statsCol = statsCol, stats = stats,
-          schemaJson = carriedSchemaJson(root, Some(head)),
+        return commitOn(root, head.files ++ inserted, Some(head), props, op = op,
+          statsCol = head.statsCol, stats = head.stats,
+          schemaJson = carriedSchemaJson(Some(head)),
           extra = auxExtra(restageColStats(s, root,
-            auxHead.merged(newAux), inserted)) ++ extraFragments)
+            head.aux.merged(newAux), inserted, head.schema)) ++ extraFragments)
       } catch {
         case _: java.util.ConcurrentModificationException
           if attempt < maxAttempts => // rebase and retry
@@ -3430,22 +3351,9 @@ object CommitLog {
     * data files; an empty vector stages nothing. */
   private def stageDvFiles(s: SparkSession, root: String,
       df: DataFrame): Seq[String] = {
-    val stage = java.nio.file.Files.createTempDirectory(
-      new java.io.File(root).toPath, ".dvstage-")
+    val stage = newStage(root, ".dvstage-")
     df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val dvDir = new java.io.File(root, "dv"); dvDir.mkdirs()
-    val parts = Option(stage.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet"))
-      .filter(p => footerRowCount(p) > 0)
-    val moved = parts.map { p =>
-      val dst = new java.io.File(dvDir,
-        java.util.UUID.randomUUID().toString + ".parquet")
-      moveWithFooterCount(p, dst)
-      "dv/" + dst.getName
-    }.toSeq
-    Option(stage.toFile.listFiles()).foreach(_.foreach(_.delete()))
-    stage.toFile.delete()
-    moved
+    moveStaged(root, stage, "dv")
   }
 
   /** REORG ... APPLY (PURGE) — the selective physical purge (Delta's
@@ -3459,13 +3367,11 @@ object CommitLog {
   def reorgPurge(s: SparkSession, root: String,
       maxAttempts: Int = 10,
       beforeCommit: () => Unit = () => ()): (Long, Long, Long) = {
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot reorg an empty table at $root"))
-    val files = snapshotFiles(root, prev)
-    val aux = carriedAux(root, Some(prev))
+    val prev = headOf(root, "reorg")
+    val files = prev.absFiles
     val vectored = files.filter(f =>
-      aux.dvs.getOrElse(relativize(root, f), Nil).nonEmpty)
-    if (vectored.isEmpty) return (prev, files.size.toLong, 0L)
+      prev.aux.dvs.getOrElse(relativize(root, f), Nil).nonEmpty)
+    if (vectored.isEmpty) return (prev.version, files.size.toLong, 0L)
     val vs = vectored.toSet
     val clean = files.filterNot(vs)
     val carried = clean.map(p => relativize(root, p))
@@ -3475,10 +3381,9 @@ object CommitLog {
     // file-disjoint winners through the shared loop — REORG racing a
     // blind append (or a delete on un-vectored files) both commit;
     // a winner that touched a vectored file refuses inside the loop.
-    val (staged, stagedAux) = stageRewrite(s, root, aux,
-      readSubset(s, root, prev, vectored), math.max(1, vectored.size))
-    val (v, addedN) = commitRewriteRebasing(s, root, prev,
-      files.map(p => relativize(root, p)).toSet, "optimize",
+    val (staged, stagedAux) = stageRewrite(s, root, prev,
+      readSubset(s, prev, vectored), math.max(1, vectored.size))
+    val (v, addedN) = commitRewriteRebasing(s, root, prev, "optimize",
       carried, staged, stagedAux, staged, Nil,
       maxAttempts, beforeCommit)
     (v, clean.size.toLong + addedN, staged.size.toLong)
@@ -3534,8 +3439,8 @@ object CommitLog {
       beforeCommit: () => Unit = () => ()): (Long, Long, Long) = {
     import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot merge into an empty table at $root"))
+    val prev = headOf(root, "merge into")
+    val props = tableProperties(root)
     val kc = keyCols.map(col)
     // IDENTITY × MERGE (r13): the column stays system-owned — omitted
     // in the source, MATCHED rows RECOVER their existing ids from the
@@ -3543,7 +3448,7 @@ object CommitLog {
     // merge keys), UNMATCHED rows allocate fresh ids from the mark.
     // The allocation races like any allocation: the rebase loop
     // refuses if a winner advanced the mark (idHwmBase check).
-    val (updatesId, idHwm, idBase) = identityOf(root) match {
+    val (updatesId, idHwm, idBase) = identityOf(props) match {
       case None => (updates0, None, None)
       case Some((name, start, step)) =>
         require(!updates0.columns.contains(name),
@@ -3554,7 +3459,7 @@ object CommitLog {
         // merge collapses them to one replacement row — joining raw
         // target rows would MULTIPLY the update images): keep the
         // smallest, deterministically
-        val tgtIds = read(s, root, prev)
+        val tgtIds = read(s, root, prev.version)
           .select((kc :+ col(name)): _*)
           .groupBy(kc: _*)
           .agg(org.apache.spark.sql.functions.min(col(name)).as(name))
@@ -3582,7 +3487,7 @@ object CommitLog {
         // must see the same rows (r14, ADVICE — see fillIdentityAt)
         val unmatched = updates0.join(tgtIds.select(kc: _*), keyCols, "left_anti")
           .localCheckpoint(true)
-        val base = longMetaOf(root, prev, IdHwmField)
+        val base = prev.idHwm
         val hwm0 = base.getOrElse(start - step)
         val n = unmatched.count()
         val alloc = s.createDataFrame(
@@ -3599,21 +3504,20 @@ object CommitLog {
     // the update/insert rows are full row images — fill-or-validate
     // generated columns exactly like an append (r13, ADVICE); the
     // rewritten survivors are untouched rows and carry their values
-    val updates = applyGeneratedColumns(s, root, updatesId, "merge")
-    enforceConstraints(s, root, updates, "merge")
+    val updates = applyGeneratedColumns(s, props, updatesId, "merge")
+    enforceConstraints(s, props, updates, "merge")
     // schema-recording tables enforce the append contract here too: an
     // unknown or retyped update column fails the COMMIT, never a later
     // read (use mergeEvolved to add columns) (r11)
-    requireSchemaCompatible(root, Some(prev), updates, "merge")
-    val files = snapshotFiles(root, prev)
-    val mAux0 = carriedAux(root, Some(prev))
+    requireSchemaCompatible(Some(prev), updates, "merge")
+    val files = prev.absFiles
     // the insert staging depends on nothing below (not the dirty-file
     // split, not the CDF) — launch it FIRST so it overlaps the
     // dirty-file collect AND the survivor rewrite (r20, guide §2.6);
     // every staging writes to its own temp dir, so the three
     // concurrent writes never share state
     val insertF = graft.functions.Par.async(
-      stageRewrite(s, root, mAux0, updates, nInsertFiles))
+      stageRewrite(s, root, prev, updates, nInsertFiles))
     val updKeys = updates.select(kc: _*).distinct()
     val delKeys = deleteKeys.map(_.select(kc: _*).distinct())
     val keys = delKeys.map(updKeys.unionByName(_).distinct()).getOrElse(updKeys)
@@ -3624,7 +3528,7 @@ object CommitLog {
     // merge into insert-only)
     val dirtyCanon =
       if (files.isEmpty) Set.empty[String] // row-less target: all inserts
-      else readSubsetWithFile(s, root, prev, files)
+      else readSubsetWithFile(s, prev, files)
         .select((kc :+ col("_graft_file")): _*)
         .join(keys, keyCols, "left_semi")
         .select(col("_graft_file")).distinct()
@@ -3644,12 +3548,12 @@ object CommitLog {
     // two rewrite stagings so all three independent writes run
     // concurrently (r20, guide §2.6).
     val cdfF: Option[() => Seq[String]] =
-      if (!cdfEnabled(root)) None
+      if (!cdfOn(props)) None
       else Some {
         import org.apache.spark.sql.functions.lit
         val dirtyRows =
           if (dirty.isEmpty) updates.limit(0)
-          else readSubset(s, root, prev, dirty)
+          else readSubset(s, prev, dirty)
         val pre = dirtyRows.join(updKeys, keyCols, "left_semi")
           .withColumn("_change_type", lit("update_preimage"))
         val matchedKeys = pre.select(kc: _*).distinct()
@@ -3664,12 +3568,13 @@ object CommitLog {
             .join(updKeys, keyCols, "left_anti")
             .withColumn("_change_type", lit("delete")))
         stageCdfAsync(s, root,
-          del.foldLeft(pre.unionByName(post).unionByName(ins))(_.unionByName(_)))
+          del.foldLeft(pre.unionByName(post).unionByName(ins))(_.unionByName(_)),
+          prev.schema)
       }
     val (rewritten, rewriteAux) =
       if (dirty.isEmpty) (Nil, Aux())
-      else stageRewrite(s, root, mAux0,
-        readSubset(s, root, prev, dirty).join(keys, keyCols, "left_anti"),
+      else stageRewrite(s, root, prev,
+        readSubset(s, prev, dirty).join(keys, keyCols, "left_anti"),
         math.max(1, dirty.size))
     // update rows keep the table's layout too: a partitioned table's
     // merge stages its replacements + inserts partition-aligned
@@ -3681,8 +3586,7 @@ object CommitLog {
     // merge (WriteSerializable: a late row sharing a merge key is NOT
     // matched; it is a new row the merge never saw, Delta's
     // blind-append allowance). Rewrite-vs-rewrite still refuses.
-    val baseFiles = files.map(p => relativize(root, p)).toSet
-    val (v, addedN) = commitRewriteRebasing(s, root, prev, baseFiles,
+    val (v, addedN) = commitRewriteRebasing(s, root, prev,
       "merge", carried, rewritten ++ inserted,
       rewriteAux.merged(insertAux), rewritten ++ inserted,
       cdf.map(renderCdf).toSeq ++ extraMeta, maxAttempts, beforeCommit,
@@ -3692,7 +3596,7 @@ object CommitLog {
       // MY merge keys (a serial winner-then-merge would have matched
       // and rewritten them)
       loserTouches = Some((hv, fs) =>
-        readSubset(s, root, hv, fs).select(kc: _*)
+        readSubset(s, hv, fs).select(kc: _*)
           .join(keys, keyCols, "left_semi").limit(1).count()))
     (v, clean.size.toLong + addedN, rewritten.size.toLong)
   }
@@ -3729,11 +3633,8 @@ object CommitLog {
     * null-filled reads, never lost or phantom rows. */
   def evolveToInclude(s: SparkSession, root: String,
       incoming: org.apache.spark.sql.types.StructType, opName: String): Unit = {
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot merge into an empty table at $root"))
-    val prevSchema = snapshotSchemaOf(root, prev)
-      .getOrElse(s.read.parquet(snapshotFiles(root, prev): _*).schema)
-    val byName = prevSchema.fields.map(f => f.name -> f).toMap
+    val byName = schemaOrInfer(s, headOf(root, "merge into")).fields
+      .map(f => f.name -> f).toMap
     incoming.fields.foreach { f =>
       byName.get(f.name).foreach { p =>
         require(p.dataType == f.dataType,
@@ -3785,11 +3686,11 @@ object CommitLog {
       beforeCommit: () => Unit = () => ()): (Long, Long, Long) = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(assignments.nonEmpty, "update: no SET assignments")
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot update an empty table at $root"))
-    val files = snapshotFiles(root, prev)
-    if (files.isEmpty) return (prev, 0L, 0L) // row-less snapshot: no-op
-    val full = readSubsetWithFile(s, root, prev, files)
+    val prev = headOf(root, "update")
+    val props = tableProperties(root)
+    val files = prev.absFiles
+    if (files.isEmpty) return (prev.version, 0L, 0L) // row-less snapshot: no-op
+    val full = readSubsetWithFile(s, prev, files)
     val types = full.schema.fields.filterNot(_.name == "_graft_file")
       .map(f => f.name -> f.dataType).toMap
     assignments.foreach { case (c, _) =>
@@ -3797,8 +3698,7 @@ object CommitLog {
         s"update: column '$c' does not exist — UPDATE never adds " +
           "columns (evolve the schema first)")
     }
-    val aux0 = carriedAux(root, Some(prev))
-    aux0.partCol.toSeq.flatMap(_.split(',')).foreach { pc =>
+    prev.aux.partCol.toSeq.flatMap(_.split(',')).foreach { pc =>
       require(!assignments.exists(_._1 == pc),
         s"update: assigning partition column '$pc' would move rows " +
           "across partitions — use merge or overwrite instead")
@@ -3810,12 +3710,12 @@ object CommitLog {
     // RECOMPUTED from the post-image — an assignment to a source
     // column must not leave a stale derived value behind (the Delta
     // generated-column contract for UPDATE/MERGE)
-    val gens = generatedColsOf(root)
+    val gens = generatedColsOf(props)
     assignments.foreach { case (c, _) =>
       require(!gens.exists(_._1 == c),
         s"update: column '$c' is GENERATED — omit it from SET; it " +
           "recomputes from its expression")
-      require(!identityOf(root).exists(_._1 == c),
+      require(!identityOf(props).exists(_._1 == c),
         s"update: column '$c' is IDENTITY — ids are immutable")
     }
     // ONE select: the predicate AND every RHS evaluate against the
@@ -3850,37 +3750,36 @@ object CommitLog {
     if (dirty.nonEmpty) {
       // the post-images are the only NEW row states this commit
       // introduces — they must satisfy the table's CHECK constraints
-      enforceConstraints(s, root,
-        applied(readSubset(s, root, prev, dirty)).filter(hit), "update")
+      enforceConstraints(s, props,
+        applied(readSubset(s, prev, dirty)).filter(hit), "update")
     }
     // CDF staging overlaps the post-image rewrite (r20, guide §2.6):
     // independent writes over the same dirty-file scan
     val cdfF: Option[() => Seq[String]] =
-      if (!cdfEnabled(root)) None
+      if (!cdfOn(props)) None
       else if (dirty.isEmpty) Some(() => Nil)
       else Some(stageCdfAsync(s, root,
-        readSubset(s, root, prev, dirty).filter(cond)
+        readSubset(s, prev, dirty).filter(cond)
           .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(applied(readSubset(s, root, prev, dirty)).filter(hit)
-            .withColumn("_change_type", lit("update_postimage")))))
+          .unionByName(applied(readSubset(s, prev, dirty)).filter(hit)
+            .withColumn("_change_type", lit("update_postimage"))), prev.schema))
     val (rewritten, rewriteAux) =
       if (dirty.isEmpty) (Nil, Aux())
-      else stageRewrite(s, root, aux0,
-        applied(readSubset(s, root, prev, dirty)), math.max(1, dirty.size))
+      else stageRewrite(s, root, prev,
+        applied(readSubset(s, prev, dirty)), math.max(1, dirty.size))
     val cdf: Option[Seq[String]] = cdfF.map(_())
     // semantic conflict rebase (r11, shared loop): concurrent pure
     // appends carry forward (their rows land after the update — late
     // cond-matching rows stay untouched, the blind-append allowance);
     // rewrite-vs-rewrite still refuses.
-    val baseFiles = files.map(p => relativize(root, p)).toSet
-    val (v, addedN) = commitRewriteRebasing(s, root, prev, baseFiles,
+    val (v, addedN) = commitRewriteRebasing(s, root, prev,
       "update", carried, rewritten, rewriteAux, rewritten,
       cdf.map(renderCdf).toSeq, maxAttempts, beforeCommit,
       // value×value narrow rebase (r14): an update/merge winner is
       // safe iff none of ITS new rows match MY predicate — one
       // limit(1)-bounded probe over the winner's added files
       loserTouches = Some((hv, fs) =>
-        readSubset(s, root, hv, fs).filter(cond).limit(1).count()))
+        readSubset(s, hv, fs).filter(cond).limit(1).count()))
     (v, clean.size.toLong + addedN, rewritten.size.toLong)
   }
 
@@ -3904,11 +3803,11 @@ object CommitLog {
       beforeCommit: () => Unit = () => ()): (Long, Long, Long) = {
     import org.apache.spark.sql.functions.{col, lit, substring_index}
     require(assignments.nonEmpty, "updateMergeOnRead: no SET assignments")
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot update an empty table at $root"))
-    val files = snapshotFiles(root, prev)
-    if (files.isEmpty) return (prev, 0L, 0L) // row-less snapshot: no-op
-    val full = readSubsetWithFilePos(s, root, prev, files)
+    val prev = headOf(root, "update")
+    val props = tableProperties(root)
+    val files = prev.absFiles
+    if (files.isEmpty) return (prev.version, 0L, 0L) // row-less snapshot: no-op
+    val full = readSubsetWithFilePos(s, prev, files)
     val types = full.schema.fields
       .filterNot(f => f.name == "_graft_file" || f.name == "_graft_pos")
       .map(f => f.name -> f.dataType).toMap
@@ -3917,8 +3816,7 @@ object CommitLog {
         s"updateMergeOnRead: column '$c' does not exist — UPDATE never " +
           "adds columns (evolve the schema first)")
     }
-    val aux0 = carriedAux(root, Some(prev))
-    aux0.partCol.foreach { pc =>
+    prev.aux.partCol.foreach { pc =>
       require(!assignments.exists(_._1 == pc),
         s"updateMergeOnRead: assigning partition column '$pc' would " +
           "move rows across partitions — use merge or overwrite instead")
@@ -3943,12 +3841,12 @@ object CommitLog {
     // evaluates against the PRE-image row (see update()'s applied).
     // Generated columns: unassignable + recomputed from the
     // post-image, exactly update()'s contract (r13, ADVICE)
-    val gens = generatedColsOf(root)
+    val gens = generatedColsOf(props)
     assignments.foreach { case (c, _) =>
       require(!gens.exists(_._1 == c),
         s"updateMergeOnRead: column '$c' is GENERATED — omit it from " +
           "SET; it recomputes from its expression")
-      require(!identityOf(root).exists(_._1 == c),
+      require(!identityOf(props).exists(_._1 == c),
         s"updateMergeOnRead: column '$c' is IDENTITY — ids are immutable")
     }
     val postBase = matched.drop("_graft_file", "_graft_pos")
@@ -3960,18 +3858,19 @@ object CommitLog {
       d.withColumn(name,
         org.apache.spark.sql.functions.expr(sql).cast(types(name)))
     }
-    if (nRows > 0) enforceConstraints(s, root, post, "updateMergeOnRead")
+    if (nRows > 0) enforceConstraints(s, props, post, "updateMergeOnRead")
     // CDF staging overlaps the post-image insert staging (r20, §2.6)
     val cdfF: Option[() => Seq[String]] =
-      if (!cdfEnabled(root)) None
+      if (!cdfOn(props)) None
       else if (nRows == 0) Some(() => Nil)
       else Some(stageCdfAsync(s, root,
         matched.drop("_graft_file", "_graft_pos")
           .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(post.withColumn("_change_type", lit("update_postimage")))))
+          .unionByName(post.withColumn("_change_type", lit("update_postimage"))),
+        prev.schema))
     val (inserted, insertAux) =
       if (nRows == 0) (Nil, Aux())
-      else stageRewrite(s, root, aux0, post, math.max(1, nFiles))
+      else stageRewrite(s, root, prev, post, math.max(1, nFiles))
     val cdf: Option[Seq[String]] = cdfF.map(_())
     val byName = files.map(f =>
       new java.io.File(f).getName -> relativize(root, f)).toMap
@@ -4001,23 +3900,22 @@ object CommitLog {
     * pre-retention versions limits how far back restore reaches,
     * exactly the public trade). Returns the new head version. */
   def restore(root: String, toVersion: Long): Long = {
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot restore an empty table at $root"))
-    require(toVersion <= prev, s"restore: version $toVersion > head $prev")
-    val (_, files) = readManifest(root, toVersion)
+    val prev = headOf(root, "restore")
+    require(toVersion <= prev.version, s"restore: version $toVersion > head ${prev.version}")
+    val target = snapshot(root, toVersion)
+    val files = target.files
     // enforce, not just document, the retention trade: a vacuum that
     // dropped toVersion's data files (or deletion vectors — without
     // them the restored head would resurrect deleted rows) must fail
     // HERE with a clear error, not publish a head with dangling
     // entries that only breaks at read time
-    val missing = (files ++ auxOf(root, toVersion).dvs.values.flatten)
+    val missing = (files ++ target.aux.dvs.values.flatten)
       .filterNot(f => new java.io.File(root, f).exists())
     require(missing.isEmpty,
       s"restore: vacuumed past restore target $toVersion — " +
         s"${missing.size} of its data file(s) no longer exist " +
         s"(e.g. ${missing.headOption.getOrElse("")}); restore only " +
         "reaches versions inside the vacuum retention floor")
-    val (statsCol, stats) = snapshotStatsOf(root, toVersion)
     // A restore RE-COMMITS the target's aux — including its layout
     // text — at a NEW (at-or-above-stamp) version, which would defeat
     // the version-scoped `layout.valueGuard` (r18 review find): text
@@ -4029,15 +3927,16 @@ object CommitLog {
     // table become advisory forever, the pre-guard-table rule. The
     // stamp never re-applies: the chokepoint refuses to stamp while
     // prior layout text exists.
-    val restoredAux = auxOf(root, toVersion)
+    val restoredAux = target.aux
+    val props = tableProperties(root)
     if (restoredAux.partCol.isDefined || restoredAux.layouts.nonEmpty) {
-      val preStamp = tableProperty(root, "layout.valueGuard").exists(s =>
+      val preStamp = props.get("layout.valueGuard").exists(s =>
         s == "true" || s.toLongOption.exists(toVersion < _))
       if (preStamp) removeTableProperty(root, "layout.valueGuard")
     }
-    commit(root, files, Some(prev), op = "restore",
-      statsCol = statsCol, stats = stats,
-      schemaJson = snapshotSchemaOf(root, toVersion).map(_.json),
+    commitOn(root, files, Some(prev), props, op = "restore",
+      statsCol = target.statsCol, stats = target.stats,
+      schemaJson = carriedSchemaJson(Some(target)),
       extra = auxExtra(restoredAux))
   }
 
@@ -4049,19 +3948,18 @@ object CommitLog {
     * partition-unprunable tail and a long-lived partitioned table's
     * pruning decayed exactly like its stats used to. Unpartitioned
     * tables (or frames that dropped the partition column) stage
-    * plain, as before. */
-  private def stageRewrite(s: SparkSession, root: String, aux: Aux,
+    * plain, as before. `head` is the snapshot the rewrite read. */
+  private def stageRewrite(s: SparkSession, root: String, head: Snapshot,
       df: DataFrame, nFiles: Int): (Seq[String], Aux) = {
-    val (staged, a) = aux.partCol match {
+    val (staged, a) = head.aux.partCol match {
       // a comma-joined partCol is a COMPOSITE spec (r14): a rewrite
       // keeps the tuple layout when the frame carries EVERY spec
       // column (else it stages plain, as before — pruning only ever
       // widens for layout-less files)
       case Some(pc) if pc.split(',').map(_.trim)
           .forall(df.columns.contains) =>
-        stagePartitionedCols(s, root, df,
-          pc.split(',').map(_.trim).toSeq, filesPerPartition = 1)
-      case _ => (stageDataFiles(s, root, df, nFiles), Aux())
+        stagePartitioned(s, root, df, pc, filesPerPartition = 1, head)
+      case _ => (stageDataFiles(s, root, df, nFiles, head.schema), Aux())
     }
     // freshly rewritten files record their sizes like any append
     // (r15) — size estimation stays pure metadata across CoW
@@ -4079,15 +3977,15 @@ object CommitLog {
     * files only; tables without typed stats pay nothing. Columns the
     * first staged footer no longer carries are skipped. */
   private def restageColStats(s: SparkSession, root: String,
-      aux: Aux, staged: Seq[String]): Aux = {
+      aux: Aux, staged: Seq[String], schema: Option[StructType]): Aux = {
     if (aux.statsTags.isEmpty || staged.isEmpty) aux
     else {
-      val byPhys = headSchema(root).toSeq.flatMap(_.fields).map(f => physicalName(f) -> f.name).toMap
+      val byPhys = schema.toSeq.flatMap(_.fields).map(f => physicalName(f) -> f.name).toMap
       val have = footerSummary(new java.io.File(root, staged.head)).names
         .map(n => byPhys.getOrElse(n, n)).toSet
       val cols = aux.statsTags.keys.toSeq.sorted.filter(have)
       if (cols.isEmpty) aux
-      else aux.merged(perFileColStats(s, root, staged, cols))
+      else aux.merged(perFileColStats(s, root, staged, cols, schema))
     }
   }
 
@@ -4130,25 +4028,22 @@ object CommitLog {
       values: Seq[String], filesPerPartition: Int = 1,
       maxAttempts: Int = 10,
       beforeCommit: () => Unit = () => ()): (Long, Long, Long) = {
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot optimize an empty table at $root"))
-    val files = readManifest(root, prev)._2
-    val aux = auxOf(root, prev)
+    val prev = headOf(root, "optimize")
+    val (files, aux) = (prev.files, prev.aux)
     require(aux.partCol.contains(partCol),
       s"table records partition column ${aux.partCol.getOrElse("<none>")}, " +
         s"not '$partCol'")
     val want = values.toSet
     val (selected, carried) = files.partition(f => aux.parts.get(f).exists(want))
-    if (selected.isEmpty) return (prev, 0L, 0L)
-    val sub = readSubset(s, root, prev,
-      selected.map(f => new java.io.File(root, f).toString))
-    val (staged, newAux) = stagePartitioned(s, root, sub, partCol, filesPerPartition)
+    if (selected.isEmpty) return (prev.version, 0L, 0L)
+    val sub = readSubset(s, prev, selected.map(f => new java.io.File(root, f).toString))
+    val (staged, newAux) = stagePartitioned(s, root, sub, partCol, filesPerPartition, prev)
     // r12 (VERDICT item 4): the partition-scoped optimize rides the
     // SAME semantic rebase loop as delete/merge/update — a compaction
     // daemon racing a GDPR delete on DIFFERENT partitions must not
     // lose its commit (the compaction is row-preserving, so any
     // file-disjoint rebaseable winner is safe to carry past)
-    val (v, _) = commitRewriteRebasing(s, root, prev, files.toSet,
+    val (v, _) = commitRewriteRebasing(s, root, prev,
       "optimize", carried, staged, newAux, staged, Nil,
       maxAttempts, beforeCommit)
     (v, selected.size.toLong, staged.size.toLong)
@@ -4169,10 +4064,8 @@ object CommitLog {
       maxAttempts: Int = 10,
       beforeCommit: () => Unit = () => ()): (Long, Long, Long) = {
     require(maxFiles > 0, "migrateLayout: maxFiles must be positive")
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot migrate an empty table at $root"))
-    val files = readManifest(root, prev)._2
-    val aux = auxOf(root, prev)
+    val prev = headOf(root, "migrate")
+    val (files, aux) = (prev.files, prev.aux)
     val current = aux.partCol.getOrElse(sys.error(
       s"migrateLayout: table at $root records no partition spec"))
     // the current spec may be composite (r14) — a file is foreign
@@ -4182,14 +4075,13 @@ object CommitLog {
       case Some(pairs) => pairs.map(_._1) != curCols
       case None => true
     }).sorted
-    if (foreign.isEmpty) return (prev, 0L, 0L)
+    if (foreign.isEmpty) return (prev.version, 0L, 0L)
     val pick = foreign.take(maxFiles)
     val carried = files.filterNot(pick.toSet)
-    val sub = readSubset(s, root, prev,
-      pick.map(f => new java.io.File(root, f).toString))
+    val sub = readSubset(s, prev, pick.map(f => new java.io.File(root, f).toString))
     val (staged, newAux) = stagePartitionedCols(s, root, sub, curCols,
-      filesPerPartition = 1)
-    val (v, _) = commitRewriteRebasing(s, root, prev, files.toSet,
+      filesPerPartition = 1, Some(prev))
+    val (v, _) = commitRewriteRebasing(s, root, prev,
       "optimize", carried, staged, newAux, staged, Nil,
       maxAttempts, beforeCommit)
     (v, pick.size.toLong, (foreign.size - pick.size).toLong)
@@ -4228,9 +4120,10 @@ object CommitLog {
     val v = version.getOrElse(srcHead)
     require(manifestExists(srcRoot, v),
       s"clone source version $v was vacuumed from $srcRoot")
-    val srcRel = readManifest(srcRoot, v)._2
-    val abs = srcRel.map(f => new java.io.File(srcRoot, f).toString)
-    val missing = (abs ++ auxOf(srcRoot, v).dvs.values.flatten
+    val src = snapshot(srcRoot, v)
+    val srcRel = src.files
+    val abs = src.absFiles
+    val missing = (abs ++ src.aux.dvs.values.flatten
       .map(r => new java.io.File(srcRoot, r).toString))
       .filterNot(f => new java.io.File(f).exists())
     require(missing.isEmpty,
@@ -4240,7 +4133,7 @@ object CommitLog {
     // source-relative entry -> dst-relative (../-path) entry; aux and
     // stats keys are per-file facts and remap with their file
     val relMap = srcRel.zip(abs.map(a => relativize(dstRoot, a))).toMap
-    val a0 = auxOf(srcRoot, v)
+    val a0 = src.aux
     val aux = Aux(a0.partCol,
       a0.parts.map { case (f, pv) => relMap.getOrElse(f, f) -> pv },
       a0.statsTags,
@@ -4253,19 +4146,33 @@ object CommitLog {
       // per-generation layouts remap with their files (r13): a clone
       // of an evolved table keeps every generation's pruning
       a0.layouts.map { case (f, cv) => relMap.getOrElse(f, f) -> cv })
-    val (statsCol, stats) = snapshotStatsOf(srcRoot, v)
     val v0 = commit(dstRoot, srcRel.map(relMap), expected = None, op = "clone",
-      statsCol = statsCol,
-      stats = stats.map { case (f, b) => relMap.getOrElse(f, f) -> b },
-      schemaJson = snapshotSchemaOf(srcRoot, v).map(_.json),
+      statsCol = src.statsCol,
+      stats = src.stats.map { case (f, b) => relMap.getOrElse(f, f) -> b },
+      schemaJson = carriedSchemaJson(Some(src)),
       extra = auxExtra(aux),
       // the identity mark carries into the clone's v0 (r13): the
       // clone's first allocation must continue PAST the cloned rows'
       // ids, never restart from `start` and collide with them
-      newIdHwm = longMetaOf(srcRoot, v, IdHwmField))
+      newIdHwm = src.idHwm)
     tableProperties(srcRoot).foreach { case (k, value) =>
       setTableProperty(dstRoot, k, value) }
     v0
+  }
+
+  /** [[vacuum]]'s pre-flight twin (r12 — Delta's VACUUM DRY RUN): the
+    * same (wouldRemove, wouldKeep) data-file accounting with ZERO
+    * deletions — manifests, CDF and deletion-vector sidecars all stay.
+    * The operator's check before an irreversible reclaim. */
+  def vacuumDryRun(root: String, retainFrom: Long): (Long, Long) = {
+    val latest = latestVersion(root)
+      .getOrElse(sys.error(s"cannot vacuum an empty table at $root"))
+    require(retainFrom <= latest, s"retainFrom $retainFrom > latest $latest")
+    val keep = (retainFrom to latest).flatMap(snapshot(root, _).files).toSet
+    val all = Option(new java.io.File(root, "data").listFiles())
+      .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
+    val (kept, dropped) = all.partition(f => keep.contains("data/" + f.getName))
+    (dropped.length.toLong, kept.length.toLong)
   }
 
   /** Retention-gated file removal — the other half of "compaction
@@ -4285,28 +4192,12 @@ object CommitLog {
     * the fixture keys run single-writer and use the 0 default so the
     * crash-orphan reclamation stays deterministic.
     * Returns (filesRemoved, filesKept). */
-  /** [[vacuum]]'s pre-flight twin (r12 — Delta's VACUUM DRY RUN): the
-    * same (wouldRemove, wouldKeep) data-file accounting with ZERO
-    * deletions — manifests, CDF and deletion-vector sidecars all stay.
-    * The operator's check before an irreversible reclaim. */
-  def vacuumDryRun(root: String, retainFrom: Long): (Long, Long) = {
-    val latest = latestVersion(root)
-      .getOrElse(sys.error(s"cannot vacuum an empty table at $root"))
-    require(retainFrom <= latest, s"retainFrom $retainFrom > latest $latest")
-    val keep = (retainFrom to latest)
-      .flatMap(v => readManifest(root, v)._2).toSet
-    val all = Option(new java.io.File(root, "data").listFiles())
-      .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
-    val (kept, dropped) = all.partition(f => keep.contains("data/" + f.getName))
-    (dropped.length.toLong, kept.length.toLong)
-  }
-
   def vacuum(root: String, retainFrom: Long, graceMs: Long = 0L): (Long, Long) = {
     val latest = latestVersion(root)
       .getOrElse(sys.error(s"cannot vacuum an empty table at $root"))
     require(retainFrom <= latest, s"retainFrom $retainFrom > latest $latest")
-    val keep = (retainFrom to latest)
-      .flatMap(v => readManifest(root, v)._2).toSet
+    val retained = (retainFrom to latest).map(snapshot(root, _))
+    val keep = retained.flatMap(_.files).toSet
     val dataDir = new java.io.File(root, "data")
     val all = Option(dataDir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet"))
@@ -4317,8 +4208,7 @@ object CommitLog {
     dropped.foreach(_.delete())
     // CDF files are version-specific (never carried): keep exactly the
     // retained versions' recorded lists, reclaim the rest
-    val cdfKeep = (retainFrom to latest)
-      .flatMap(v => cdfFilesOf(root, v).getOrElse(Nil)).toSet
+    val cdfKeep = retained.flatMap(_.cdf.getOrElse(Nil)).toSet
     val cdfDir = new java.io.File(root, "cdf")
     Option(cdfDir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.endsWith(".parquet") &&
@@ -4328,8 +4218,7 @@ object CommitLog {
     // deletion vectors live exactly as long as a retained manifest
     // references them (they die with rewrites; old versions' vectors
     // reclaim with those versions)
-    val dvKeep = (retainFrom to latest)
-      .flatMap(v => auxOf(root, v).dvs.values.flatten).toSet
+    val dvKeep = retained.flatMap(_.aux.dvs.values.flatten).toSet
     val dvDir = new java.io.File(root, "dv")
     Option(dvDir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.endsWith(".parquet") &&
@@ -4404,13 +4293,12 @@ object CommitLog {
       maxAttempts: Int = 10,
       beforeCommit: () => Unit = () => ()): Long = {
     import org.apache.spark.sql.functions.{col, lit}
-    val prev = latestVersion(root)
-      .getOrElse(sys.error(s"cannot optimize an empty table at $root"))
+    val prev = headOf(root, "optimize")
     // overlapping buckets would stage the same rows twice and publish a
     // row-duplicating commit under a data-neutral op
     require(cutoffs == cutoffs.sorted && cutoffs.distinct.size == cutoffs.size,
       s"optimize cutoffs must be strictly increasing, got $cutoffs")
-    val cur = read(s, root, prev) // pinned: immune to concurrent commits
+    val cur = read(s, root, prev.version) // pinned: immune to concurrent commits
     val bounds = (None +: cutoffs.map(Some(_))).zip(cutoffs.map(Some(_)) :+ None)
     val staged = bounds.flatMap { case (lo, hi) =>
       // NULL keys route to the FIRST bucket (a range predicate is
@@ -4423,7 +4311,7 @@ object CommitLog {
           hi.map(col(statsCol) <= lit(_)).getOrElse(lit(true))
       val part = cur.filter(
         if (lo.isEmpty) col(statsCol).isNull || rangePred else rangePred)
-      stageDataFiles(s, root, part, filesPerBucket)
+      stageDataFiles(s, root, part, filesPerBucket, prev.schema)
     }
     // r12: the clustering rewrite rebases past blind appends like
     // compact; the stats override records ONLY the staged buckets'
@@ -4431,10 +4319,9 @@ object CommitLog {
     // carried files read as unprunable, exactly the pre-r12 contract
     // for files the optimize did not stage
     val (v, _) = commitRewriteRebasing(s, root, prev,
-      snapshotFiles(root, prev).map(p => relativize(root, p)).toSet,
       "optimize", Nil, staged, Aux(), staged, Nil,
       maxAttempts, beforeCommit,
-      newStats = Some((statsCol, perFileStatsNulls(s, root, staged, statsCol)._1)))
+      newStats = Some((statsCol, perFileStatsNulls(s, root, staged, statsCol, prev.schema)._1)))
     v
   }
 
@@ -4501,29 +4388,8 @@ object CommitLog {
       }.mkString(",") + "]}"
 
   /** The segment references of a segmented version's manifest. */
-  def segmentsOf(root: String, version: Long): Seq[SegmentRef] = {
-    val node = mapper.readTree(java.nio.file.Files.readString(manifest(root, version).toPath))
-    val segs = node.get("segments")
-    require(segs != null, s"version $version under $root is not a segmented manifest")
-    (0 until segs.size()).map { i =>
-      val sn = segs.get(i)
-      val lv = Option(sn.get("lv")).map { p =>
-        val it = p.fields()
-        val b = Map.newBuilder[String, Set[String]]
-        while (it.hasNext) {
-          val e = it.next(); val arr = e.getValue
-          b += e.getKey -> (0 until arr.size()).map(j => arr.get(j).asText()).toSet
-        }
-        b.result()
-      }.getOrElse(Map.empty[String, Set[String]])
-      SegmentRef(sn.get("path").asText(), sn.get("nFiles").asInt(),
-        if (sn.has("lo")) Some((sn.get("lo").asLong(), sn.get("hi").asLong())) else None,
-        if (sn.has("nRows")) Some(sn.get("nRows").asLong()) else None,
-        if (sn.has("nBytes")) Some(sn.get("nBytes").asLong()) else None,
-        lv,
-        if (sn.has("nNulls")) Some(sn.get("nNulls").asLong()) else None)
-    }
-  }
+  def segmentsOf(root: String, version: Long): Seq[SegmentRef] =
+    snapshot(root, version).segments
 
   /** Parsed segment-file cache (r18 review find): a segment file is
     * IMMUTABLE — written once under a fresh UUID name, never reopened
@@ -4570,34 +4436,16 @@ object CommitLog {
     * per-file stats). */
   def segmentEntries(root: String, segPath: String): (Seq[String], Map[String, (Long, Long)]) = {
     val node = segmentNode(root, segPath)
-    val files = node.get("files")
-    val fs = (0 until files.size()).map(i => files.get(i).asText())
-    val stats = Option(node.get("stats")).map { st =>
-      val it = st.fields()
-      val b = Map.newBuilder[String, (Long, Long)]
-      while (it.hasNext) {
-        val e = it.next()
-        b += e.getKey -> (e.getValue.get(0).asLong(), e.getValue.get(1).asLong())
-      }
-      b.result()
-    }.getOrElse(Map.empty)
-    (fs, stats)
+    (textsOf(node.get("files")), Option(node.get("stats"))
+      .map(fieldsOf(_)(a => (a.get(0).asLong(), a.get(1).asLong()))).getOrElse(Map.empty))
   }
 
   /** Per-file footer row counts of one segment file (r17 — written by
     * appendSegment alongside the stats); empty for pre-r17 segments,
     * and every consumer treats a missing count as a refusal. */
   def segmentEntryRows(root: String, segPath: String): Map[String, Long] = {
-    val node = segmentNode(root, segPath)
-    Option(node.get("rows")).map { st =>
-      val it = st.fields()
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) {
-        val e = it.next()
-        b += e.getKey -> e.getValue.asLong()
-      }
-      b.result()
-    }.getOrElse(Map.empty)
+    Option(segmentNode(root, segPath).get("rows")).map(fieldsOf(_)(_.asLong()))
+      .getOrElse(Map.empty)
   }
 
   /** Per-file LAYOUT entries of one segment file (r18 — written by
@@ -4606,17 +4454,8 @@ object CommitLog {
     * manifests' `layouts` field uses); empty for pre-r18 or
     * unpartitioned segments — their files are layout-unprunable. */
   def segmentLayouts(root: String, segPath: String): Map[String, Seq[(String, String)]] = {
-    val node = segmentNode(root, segPath)
-    Option(node.get("layouts")).map { p =>
-      val it = p.fields()
-      val b = Map.newBuilder[String, Seq[(String, String)]]
-      while (it.hasNext) {
-        val e = it.next(); val arr = e.getValue
-        b += e.getKey -> (0 until arr.size() by 2).map(i =>
-          (arr.get(i).asText(), arr.get(i + 1).asText()))
-      }
-      b.result()
-    }.getOrElse(Map.empty)
+    Option(segmentNode(root, segPath).get("layouts")).map(fieldsOf(_)(pairsOf))
+      .getOrElse(Map.empty)
   }
 
   /** The partition spec one segment file was staged under (r18);
@@ -4852,9 +4691,10 @@ object CommitLog {
     * verbatim after), so catalog loads never footer-infer. */
   def appendSegment(s: SparkSession, root: String, df: DataFrame,
       nFiles: Int, statsCol: String): Long = {
-    val prev = latestVersion(root)
-    requireSchemaCompatible(root, prev, df, "appendSegment")
-    enforceConstraints(s, root, df, "appendSegment")
+    val prev = headSnapshot(root)
+    val props = tableProperties(root)
+    requireSchemaCompatible(prev, df, "appendSegment")
+    enforceConstraints(s, props, df, "appendSegment")
     // ONE stats column per table (r17 review find — the flat path's
     // stats-carry rule, applied to segments): every consumer
     // (segmentStatsCol, the bounds prune, the segmented MIN/MAX
@@ -4863,7 +4703,8 @@ object CommitLog {
     // folded under the first's name would mis-prune files that DO
     // hold matching rows and answer MIN/MAX with the wrong column's
     // extrema. Refuse at commit, loudly.
-    prev.flatMap(v => segmentStatsCol(root, v)).foreach { c0 =>
+    val prevSegs = prev.fold(Seq.empty[SegmentRef])(_.segments)
+    prevSegs.headOption.flatMap(sr => segmentStatsColOf(root, sr.path)).foreach { c0 =>
       require(c0 == statsCol,
         s"appendSegment: this table's segments record stats on '$c0' " +
           s"but this append stats '$statsCol' — one stats column per " +
@@ -4873,18 +4714,14 @@ object CommitLog {
     // PARTITIONED segments direct plain appends to the partitioned
     // writer — a layout-less segment would silently degrade every
     // partition probe to "some segments unprunable"
-    prev.foreach { v =>
-      segmentsOf(root, v).headOption
-        .flatMap(sr => segmentPartCols(root, sr.path)).foreach { spec =>
-          throw new IllegalArgumentException(
-            s"appendSegment: this table's segments are partitioned by " +
-              s"'$spec' — append through appendSegmentPartitioned so the " +
-              "new segment stays layout-prunable")
-        }
+    prevSegs.headOption.flatMap(sr => segmentPartCols(root, sr.path)).foreach { spec =>
+      throw new IllegalArgumentException(
+        s"appendSegment: this table's segments are partitioned by " +
+          s"'$spec' — append through appendSegmentPartitioned so the " +
+          "new segment stays layout-prunable")
     }
-    val prevSegs = prev.map(v => segmentsOf(root, v)).getOrElse(Nil)
-    val staged = stageDataFiles(s, root, df, nFiles)
-    commitSegment(s, root, df, prev, prevSegs, staged, statsCol)
+    val staged = stageDataFiles(s, root, df, nFiles, prev.flatMap(_.schema))
+    commitSegment(s, root, df, prev, props, prevSegs, staged, statsCol)
   }
 
   /** Shared segment-file write + manifest publish for both segment
@@ -4893,11 +4730,11 @@ object CommitLog {
     * partition spec, the segment ref with aggregated bounds / row /
     * byte / null totals and the layout-value universe. */
   private def commitSegment(s: SparkSession, root: String, df: DataFrame,
-      prev: Option[Long], prevSegs: Seq[SegmentRef], staged: Seq[String],
-      statsCol: String,
+      prev: Option[Snapshot], props: Map[String, String],
+      prevSegs: Seq[SegmentRef], staged: Seq[String], statsCol: String,
       layouts: Map[String, Seq[(String, String)]] = Map.empty,
       partCols: Option[String] = None): Long = {
-    val (stats, nulls) = perFileStatsNulls(s, root, staged, statsCol)
+    val (stats, nulls) = perFileStatsNulls(s, root, staged, statsCol, prev.flatMap(_.schema))
     val sized = stagedSizes(root, staged) // footer rows + byte sizes
     logDir(root).mkdirs()
     val segName = "seg-" + java.util.UUID.randomUUID().toString + ".json"
@@ -4935,13 +4772,13 @@ object CommitLog {
     val universe: Map[String, Set[String]] =
       layouts.values.flatten.groupBy(_._1)
         .map { case (c, es) => c -> es.map(_._2).toSet }
-    val next = prev.map(_ + 1).getOrElse(0L)
+    val next = prev.map(_.version + 1).getOrElse(0L)
     publish(root, next, renderSegmentManifest(next, "append",
       prevSegs :+ SegmentRef(segName, staged.size, bounds,
         Some(staged.map(sized.rows).sum), Some(staged.map(sized.sizes).sum),
         universe, nNulls),
-      schemaJson = schemaOrRecord(root, prev, df)))
-    maybeCheckpoint(root, next) // summarize() reads segment manifests too
+      schemaJson = schemaOrRecord(prev, df)))
+    maybeCheckpoint(root, next, props) // summarize() reads segment manifests too
     next
   }
 
@@ -4961,34 +4798,33 @@ object CommitLog {
   def appendSegmentPartitioned(s: SparkSession, root: String, df: DataFrame,
       partCols: Seq[String], filesPerPartition: Int, statsCol: String): Long = {
     val specStr = partCols.mkString(",")
-    val prev = latestVersion(root)
-    requireSchemaCompatible(root, prev, df, "appendSegmentPartitioned")
-    enforceConstraints(s, root, df, "appendSegmentPartitioned")
-    prev.flatMap(v => segmentStatsCol(root, v)).foreach { c0 =>
+    val prev = headSnapshot(root)
+    val props = tableProperties(root)
+    requireSchemaCompatible(prev, df, "appendSegmentPartitioned")
+    enforceConstraints(s, props, df, "appendSegmentPartitioned")
+    val prevSegs = prev.fold(Seq.empty[SegmentRef])(_.segments)
+    prevSegs.headOption.flatMap(sr => segmentStatsColOf(root, sr.path)).foreach { c0 =>
       require(c0 == statsCol,
         s"appendSegmentPartitioned: this table's segments record stats " +
           s"on '$c0' but this append stats '$statsCol' — one stats " +
           "column per segmented table")
     }
-    prev.foreach { v =>
-      segmentsOf(root, v).headOption.foreach { sr =>
-        segmentPartCols(root, sr.path) match {
-          case Some(spec) => require(spec == specStr,
-            s"appendSegmentPartitioned: this table's segments are " +
-              s"partitioned by '$spec', not '$specStr' — one partition " +
-              "spec per segmented table")
-          case None => throw new IllegalArgumentException(
-            "appendSegmentPartitioned: this table's segments are " +
-              "UNPARTITIONED — a segmented table is all-plain or " +
-              "all-one-spec (mixed segments would degrade every " +
-              "partition probe)")
-        }
+    prevSegs.headOption.foreach { sr =>
+      segmentPartCols(root, sr.path) match {
+        case Some(spec) => require(spec == specStr,
+          s"appendSegmentPartitioned: this table's segments are " +
+            s"partitioned by '$spec', not '$specStr' — one partition " +
+            "spec per segmented table")
+        case None => throw new IllegalArgumentException(
+          "appendSegmentPartitioned: this table's segments are " +
+            "UNPARTITIONED — a segmented table is all-plain or " +
+            "all-one-spec (mixed segments would degrade every " +
+            "partition probe)")
       }
     }
-    val prevSegs = prev.map(v => segmentsOf(root, v)).getOrElse(Nil)
     val (staged, aux) = stagePartitionedCols(s, root, df, partCols,
-      filesPerPartition)
-    commitSegment(s, root, df, prev, prevSegs, staged, statsCol,
+      filesPerPartition, prev)
+    commitSegment(s, root, df, prev, props, prevSegs, staged, statsCol,
       layouts = aux.layouts, partCols = Some(specStr))
   }
 
@@ -4996,11 +4832,8 @@ object CommitLog {
     * flat file array? (The two manifest shapes are mutually
     * exclusive; flat-manifest APIs refuse segmented versions and vice
     * versa.) */
-  def isSegmented(root: String, version: Long): Boolean = {
-    val node = mapper.readTree(
-      java.nio.file.Files.readString(manifest(root, version).toPath))
-    node.get("segments") != null
-  }
+  def isSegmented(root: String, version: Long): Boolean =
+    snapshot(root, version).segmentRefs.isDefined
 
   /** The stats column a segmented version's segment files record —
     * read from the FIRST segment (appendSegment stamps every segment
@@ -5292,40 +5125,42 @@ object CommitLog {
   }
 
   private def stageDataFiles(s: SparkSession, root: String,
-      df: DataFrame, nFiles: Int): Seq[String] = {
-    new java.io.File(root).mkdirs() // first commit may create the table root
-    val stage = java.nio.file.Files.createTempDirectory(
-      new java.io.File(root).toPath, ".stage-")
-    writeStaged(s, toPhysicalDf(root, df), nFiles, stage.toString)
-    val dataDir = new java.io.File(root, "data"); dataDir.mkdirs()
-    // drop zero-row part files (a fully-empty write leaves one): an
-    // empty file in the manifest defeats file-count accounting and
-    // adds an unprunable stat-less entry every future scan must open.
-    // The check is a footer-only metadata read of files just written —
-    // nothing data-sized.
-    val parts = Option(stage.toFile.listFiles()).getOrElse(Array.empty)
+      df: DataFrame, nFiles: Int, schema: Option[StructType]): Seq[String] = {
+    val stage = newStage(root, ".stage-")
+    writeStaged(s, toPhysicalDf(df, schema), nFiles, stage.toString)
+    moveStaged(root, stage, "data")
+  }
+
+  /** A fresh staging dir under `root` (a first commit may create the
+    * table root itself). */
+  private def newStage(root: String, prefix: String): java.nio.file.Path = {
+    new java.io.File(root).mkdirs()
+    java.nio.file.Files.createTempDirectory(new java.io.File(root).toPath, prefix)
+  }
+
+  /** The shared staging tail: move the `.parquet` files a write left in
+    * `stage` to UUID names under `root/dir` in name order, then scrub
+    * the staging residue (an _SUCCESS marker and the empty dir). Zero-row
+    * part files are dropped (a fully-empty write leaves one): an empty
+    * file in the manifest defeats file-count accounting and adds an
+    * unprunable stat-less entry every future scan must open. The check
+    * is a footer-only metadata read of files just written — nothing
+    * data-sized. Returns the moved files' root-relative paths. */
+  private def moveStaged(root: String, stage: java.nio.file.Path, dir: String): Seq[String] = {
+    val dest = new java.io.File(root, dir); dest.mkdirs()
+    val moved = Option(stage.toFile.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
       .filter(p => footerRowCount(p) > 0)
-    val moved = parts.map { p =>
-      val dst = new java.io.File(dataDir,
-        java.util.UUID.randomUUID().toString + ".parquet")
-      moveWithFooterCount(p, dst)
-      "data/" + dst.getName
-    }.toSeq
-    // scrub the staging residue (an _SUCCESS marker and the empty dir)
+      .map { p =>
+        val dst = new java.io.File(dest, java.util.UUID.randomUUID().toString + ".parquet")
+        moveWithFooterCount(p, dst)
+        s"$dir/${dst.getName}"
+      }.toSeq
     Option(stage.toFile.listFiles()).foreach(_.foreach(_.delete()))
     stage.toFile.delete()
     moved
   }
 
-  /** Stage a change-data-feed row set under cdf/. CDF volumes are
-    * usually the CHANGED rows — orders below the data files they
-    * describe — but a MASS delete's changelog is table-sized, so the
-    * write keeps bounded parallelism (coalesce(8), zero-row parts
-    * dropped) instead of the r10 single-file funnel that serialized
-    * 2M rows through one task at the ×20 soak. Same
-    * stage-then-atomic-move discipline as data files: cdf files are
-    * invisible until a manifest lists them. */
   /** Stage a CDF row set CONCURRENTLY with the commit's data-file
     * staging (r20, guide §2.6): the changelog write and the data
     * rewrite are independent jobs over separate temp dirs, so call
@@ -5335,27 +5170,22 @@ object CommitLog {
     * planning/commit rounds overlap, which on tiny commits is most of
     * the wall. The thunk rethrows the staging exception if any. */
   private def stageCdfAsync(s: SparkSession, root: String,
-      df: => DataFrame): () => Seq[String] =
-    graft.functions.Par.async(stageCdfFiles(s, root, df))
+      df: => DataFrame, schema: Option[StructType]): () => Seq[String] =
+    graft.functions.Par.async(stageCdfFiles(s, root, df, schema))
 
+  /** Stage a change-data-feed row set under cdf/. CDF volumes are
+    * usually the CHANGED rows — orders below the data files they
+    * describe — but a MASS delete's changelog is table-sized, so the
+    * write keeps bounded parallelism (coalesce(8), zero-row parts
+    * dropped) instead of the r10 single-file funnel that serialized
+    * 2M rows through one task at the ×20 soak. Same
+    * stage-then-atomic-move discipline as data files: cdf files are
+    * invisible until a manifest lists them. */
   private def stageCdfFiles(s: SparkSession, root: String,
-      df: DataFrame): Seq[String] = {
-    val stage = java.nio.file.Files.createTempDirectory(
-      new java.io.File(root).toPath, ".cdfstage-")
-    toPhysicalDf(root, df).coalesce(8)
+      df: DataFrame, schema: Option[StructType]): Seq[String] = {
+    val stage = newStage(root, ".cdfstage-")
+    toPhysicalDf(df, schema).coalesce(8)
       .write.mode("overwrite").parquet(stage.toString)
-    val cdfDir = new java.io.File(root, "cdf"); cdfDir.mkdirs()
-    val parts = Option(stage.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .filter(p => footerRowCount(p) > 0)
-    val moved = parts.map { p =>
-      val dst = new java.io.File(cdfDir,
-        java.util.UUID.randomUUID().toString + ".parquet")
-      moveWithFooterCount(p, dst)
-      "cdf/" + dst.getName
-    }.toSeq
-    Option(stage.toFile.listFiles()).foreach(_.foreach(_.delete()))
-    stage.toFile.delete()
-    moved
+    moveStaged(root, stage, "cdf")
   }
 }

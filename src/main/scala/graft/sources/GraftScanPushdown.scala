@@ -99,7 +99,7 @@ object GraftFilterPushdown {
     * (pushFilters, the scan's meta, every aggregate-pushdown probe) —
     * without this the O(files × layout columns) fullLayoutCols walk
     * repeats per call (r16 review find). The identity component (r17,
-    * ADVICE — inode + mtime + length) is what keeps a table root
+    * ADVICE — inode + length + mtime-ns) is what keeps a table root
     * deleted and RE-STAGED at the same path from being served the old
     * table's metadata: version numbers restart, but the new manifest
     * is a different inode, so the stale entry simply never hits (one

@@ -3564,7 +3564,20 @@ class StreamingSpec extends SparkSpec {
       CommitLog.setTableProperty(root, "identity.row_id", "1,1")
       CommitLog.setTableProperty(root, "generated.day", "event_id % 7")
       CommitLog.setTableProperty(root, "statsColumns", "event_id")
-      batches.zipWithIndex.foreach { case (df, b) => write(root, df, b.toLong) }
+      batches.zipWithIndex.foreach { case (df, b) =>
+        val (parses0, reads0) = (CommitLog.manifestParses.get, CommitLog.propertyReads.get)
+        write(root, df, b.toLong)
+        // the write landing on a head (one attempt): ONE head-manifest
+        // parse and ONE _properties.json read, plus the partitioned
+        // staging chokepoint's own guard read
+        if (b > 0) {
+          val guardReads = if (name.contains("Partitioned")) 1 else 0
+          assert(CommitLog.manifestParses.get - parses0 <= 1,
+            s"$name: ${CommitLog.manifestParses.get - parses0} manifest parses per append")
+          assert(CommitLog.propertyReads.get - reads0 <= 1 + guardReads,
+            s"$name: ${CommitLog.propertyReads.get - reads0} properties reads per append")
+        }
+      }
       val head = CommitLog.latestVersion(root)
       assert(head === Some(1L), s"$name: two writes must publish versions 0 and 1")
       // identity: non-null, unique, contiguous after each head's mark
@@ -3602,5 +3615,72 @@ class StreamingSpec extends SparkSpec {
       refused(batches(0).withColumn("event_id", -col("event_id") - 1), "CHECK constraint 'pos'")
       refused(batches(0).withColumn("day", col("event_id") % 7 + 1), "generated column 'day'")
     }
+  }
+
+  test("commit log: the one manifest parser keeps every accessor's answers and errors") {
+    import graft.sources.CommitLog
+    val ev = Tables(spark, sf, "events")
+      .select(col("event_id"), col("event_type"), col("value")).limit(60)
+    val root = java.nio.file.Files.createTempDirectory("graft_snapshot").toString
+    CommitLog.appendPartitioned(spark, root, ev.filter(col("event_id") % 2 === 0), "event_type", 1)
+    CommitLog.appendPartitioned(spark, root, ev.filter(col("event_id") % 2 =!= 0), "event_type", 1,
+      extraMeta = Seq(""","viewSrc":42,"cells":{"a":3,"b":4}"""))
+    val vDrop = CommitLog.dropColumn(spark, root, "value")
+    // every accessor agrees with a direct Jackson read of the same file
+    def node(v: Long) = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(root, f"_graft_log/v$v%09d.json"))
+    val n1 = node(1L)
+    assert(CommitLog.longMetaOf(root, 1L, "viewSrc") === Some(n1.get("viewSrc").asLong()))
+    assert(CommitLog.longMetaOf(root, 1L, "viewSrc") === Some(42L))
+    assert(CommitLog.longMetaOf(root, 1L, "noSuchField") === None)
+    assert(CommitLog.mapMetaOf(root, 1L, "cells") === Some(Map(
+      "a" -> n1.get("cells").get("a").asLong(), "b" -> n1.get("cells").get("b").asLong())))
+    assert(CommitLog.mapMetaOf(root, 1L, "cells") === Some(Map("a" -> 3L, "b" -> 4L)))
+    assert(CommitLog.commitTimestampOf(root, 1L) === Some(n1.get("ts").asLong()))
+    assert(CommitLog.snapshotFiles(root, 1L).map(f => new java.io.File(f).getName) ===
+      (0 until n1.get("files").size()).map(i => new java.io.File(n1.get("files").get(i).asText()).getName))
+    assert(CommitLog.auxOf(root, 1L).parts.keySet === {
+      val it = n1.get("parts").fieldNames(); var ks = Set.empty[String]
+      while (it.hasNext) ks += it.next(); ks })
+    val nd = node(vDrop)
+    assert(CommitLog.tombstonesOf(root, vDrop) ===
+      (0 until nd.get("tombstones").size()).map(i => nd.get("tombstones").get(i).asText()))
+    assert(CommitLog.tombstonesOf(root, vDrop) === Seq("value"))
+    assert(CommitLog.snapshotOp(root, vDrop) === nd.get("op").asText())
+    assert(!CommitLog.isSegmented(root, vDrop))
+    // a vacuumed and a never-written version fail by name on every accessor
+    CommitLog.vacuum(root, 1L)
+    val accessors: Seq[(String, Long => Any)] = Seq(
+      "snapshotFiles" -> (v => CommitLog.snapshotFiles(root, v)),
+      "snapshotOp" -> (v => CommitLog.snapshotOp(root, v)),
+      "tombstonesOf" -> (v => CommitLog.tombstonesOf(root, v)),
+      "auxOf" -> (v => CommitLog.auxOf(root, v)),
+      "longMetaOf" -> (v => CommitLog.longMetaOf(root, v, "viewSrc")),
+      "mapMetaOf" -> (v => CommitLog.mapMetaOf(root, v, "cells")),
+      "commitTimestampOf" -> (v => CommitLog.commitTimestampOf(root, v)),
+      "snapshotSchemaOf" -> (v => CommitLog.snapshotSchemaOf(root, v)),
+      "snapshotStatsOf" -> (v => CommitLog.snapshotStatsOf(root, v)),
+      "segmentsOf" -> (v => CommitLog.segmentsOf(root, v)),
+      "isSegmented" -> (v => CommitLog.isSegmented(root, v)))
+    for ((name, get) <- accessors; v <- Seq(0L, 99L)) {
+      val ex = intercept[IllegalArgumentException](get(v))
+      assert(ex.getMessage.contains(s"commit log has no version $v"), s"$name(v$v): ${ex.getMessage}")
+    }
+    // a segmented table: flat accessors still refuse by name, the
+    // segment accessors and history answer from the segment refs
+    val seg = java.nio.file.Files.createTempDirectory("graft_snapshot_seg").toString
+    CommitLog.appendSegment(spark, seg, ev.filter(col("event_id") % 2 === 0), 1, "event_id")
+    CommitLog.appendSegment(spark, seg, ev.filter(col("event_id") % 2 =!= 0), 2, "event_id")
+    val flatEx = intercept[IllegalArgumentException](CommitLog.snapshotFiles(seg, 1L))
+    assert(flatEx.getMessage.contains("SEGMENTED"), flatEx.getMessage)
+    assert(intercept[IllegalArgumentException](CommitLog.segmentsOf(root, vDrop))
+      .getMessage.contains("not a segmented manifest"))
+    assert(CommitLog.isSegmented(seg, 1L))
+    val segs = CommitLog.segmentsOf(seg, 1L)
+    assert(segs.size === 2)
+    assert(segs.map(_.nRows.get).sum === ev.count())
+    assert(CommitLog.segmentsOf(seg, 0L) === segs.take(1))
+    assert(CommitLog.history(seg) ===
+      Seq((0L, "append", segs.head.nFiles.toLong), (1L, "append", segs.map(_.nFiles.toLong).sum)))
   }
 }
