@@ -814,13 +814,9 @@ case class DeleteFromGraftCommand(parts: Seq[String], condSql: String)
     // the Delta property split: tables that opted into deletion
     // vectors get the merge-on-read write (zero rewrites — every file
     // carries, the vectors mask); everyone else the copy-on-write
-    if (CommitLog.tableProperty(root, "enableDeletionVectors").contains("true")) {
-      val (v, _, _) = CommitLog.deleteMergeOnRead(s, root, cond)
-      Seq(Row(v, CommitLog.snapshotFiles(root, v).size.toLong, 0L))
-    } else {
-      val (v, carried, rewritten) = CommitLog.delete(s, root, cond)
-      Seq(Row(v, carried, rewritten))
-    }
+    val r = CommitLog.deleteOrUpdate(s, root, cond, Nil,
+      vectors = CommitLog.tableProperty(root, "enableDeletionVectors").contains("true"))
+    Seq(Row(r.version, r.filesCarried, r.filesRewritten))
   }
 }
 
@@ -869,16 +865,12 @@ case class UpdateGraftCommand(parts: Seq[String], setSql: String,
     val root = GraftSqlCommands.rootOf(s, parts)
     val cond = org.apache.spark.sql.functions.expr(condSql)
     // same property split as DELETE: vectored tables mask old rows
-    // and append new ones (zero rewrites), the rest copy-on-write
-    if (CommitLog.tableProperty(root, "enableDeletionVectors").contains("true")) {
-      val (v, _, _) = CommitLog.updateMergeOnRead(s, root, cond, assignments)
-      // carried = the PRIOR snapshot (every file rides through); the
-      // head additionally holds the appended post-image files
-      Seq(Row(v, CommitLog.snapshotFiles(root, v - 1).size.toLong, 0L))
-    } else {
-      val (v, carried, rewritten) = CommitLog.update(s, root, cond, assignments)
-      Seq(Row(v, carried, rewritten))
-    }
+    // and append new ones (zero rewrites; every prior file is carried),
+    // the rest copy-on-write
+    require(assignments.nonEmpty, "update: no SET assignments")
+    val r = CommitLog.deleteOrUpdate(s, root, cond, assignments,
+      vectors = CommitLog.tableProperty(root, "enableDeletionVectors").contains("true"))
+    Seq(Row(r.version, r.filesCarried, r.filesRewritten))
   }
 }
 

@@ -1454,21 +1454,13 @@ object CommitLog {
       files: Seq[String]): DataFrame =
     readSubsetCore(s, sn, files, withFile = false)
 
-  /** readSubset plus a `_graft_file` column (the absolute source file
-    * URI, captured BEFORE any join — the CoW dirty-discovery paths
-    * need it, and input_file_name() cannot be captured after the
-    * deletion-vector mask join). */
-  private def readSubsetWithFile(s: SparkSession, sn: Snapshot,
-      files: Seq[String]): DataFrame =
-    readSubsetCore(s, sn, files, withFile = true)
-
-  /** readSubsetWithFile plus `_graft_pos` — each row's PHYSICAL
-    * row index within its file (_metadata.row_index, captured at the
-    * scan), the coordinate a deletion vector records. */
-  private def readSubsetWithFilePos(s: SparkSession, sn: Snapshot,
-      files: Seq[String]): DataFrame =
-    readSubsetCore(s, sn, files, withFile = true, withPos = true)
-
+  /** [[readSubset]], plus with `withFile` a `_graft_file` column (the
+    * absolute source file URI, captured BEFORE any join — the CoW
+    * dirty-file discovery needs it, and input_file_name() cannot be
+    * captured after the deletion-vector mask join), and with `withPos`
+    * `_graft_pos` — each row's PHYSICAL row index within its file
+    * (_metadata.row_index, captured at the scan), the coordinate a
+    * deletion vector records. */
   private def readSubsetCore(s: SparkSession, sn: Snapshot,
       files: Seq[String], withFile: Boolean, withPos: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{col, input_file_name, lit, substring_index}
@@ -1931,29 +1923,31 @@ object CommitLog {
     val df = applyGeneratedColumns(s, props, dfId, "overwrite")
     requireSchemaCompatible(Some(prev), df, "overwrite")
     enforceConstraints(s, props, df, "overwrite")
-    // CDF staging overlaps the data staging below (r20, guide §2.6):
-    // the changelog reads prev + df, the data write stages df — no
-    // shared output, so both jobs run concurrently
-    val cdfF: Option[() => Seq[String]] =
-      if (!cdfOn(props)) None
-      else Some(stageCdfAsync(s, root,
-        read(s, root, prev.version).withColumn("_change_type", lit("delete"))
-          .unionByName(df.withColumn("_change_type", lit("insert")),
-            allowMissingColumns = true), prev.schema))
-    val (staged, stagedAux) = partCol match {
-      // a comma-joined value is a COMPOSITE spec (r14) — route
-      // through the multi-column staging like appendPartitioned
-      case Some(c) => stagePartitioned(s, root, df, c, nFiles, prev)
-      case None => (stageDataFiles(s, root, df, nFiles, prev.schema), Aux())
+    staging(s, root) { st =>
+      // CDF staging overlaps the data staging below (r20, guide §2.6):
+      // the changelog reads prev + df, the data write stages df — no
+      // shared output, so both jobs run concurrently
+      val cdfF: Option[() => Seq[String]] =
+        if (!cdfOn(props)) None
+        else Some(st.stageCdfAsync(
+          read(s, root, prev.version).withColumn("_change_type", lit("delete"))
+            .unionByName(df.withColumn("_change_type", lit("insert")),
+              allowMissingColumns = true), prev.schema))
+      val (staged, stagedAux) = st.sync(partCol match {
+        // a comma-joined value is a COMPOSITE spec (r14) — route
+        // through the multi-column staging like appendPartitioned
+        case Some(c) => stagePartitioned(s, root, df, c, nFiles, prev)
+        case None => (stageDataFiles(s, root, df, nFiles, prev.schema), Aux())
+      })(_._1)
+      // the prior snapshot's statsTags seed a recompute over the
+      // incoming files — an overwrite must not strip data-skipping
+      val fullAux = restageColStats(s, root,
+        prev.aux.filterFiles(Set.empty).merged(stagedAux), staged, prev.schema)
+      st.published(commitOn(root, staged, Some(prev), props, op = "overwrite",
+        schemaJson = carriedSchemaJson(Some(prev)),
+        extra = auxExtra(fullAux) ++ cdfF.map(f => renderCdf(f())).toSeq ++ extraMeta,
+        newIdHwm = idHwm))
     }
-    // the prior snapshot's statsTags seed a recompute over the
-    // incoming files — an overwrite must not strip data-skipping
-    val fullAux = restageColStats(s, root,
-      prev.aux.filterFiles(Set.empty).merged(stagedAux), staged, prev.schema)
-    commitOn(root, staged, Some(prev), props, op = "overwrite",
-      schemaJson = carriedSchemaJson(Some(prev)),
-      extra = auxExtra(fullAux) ++ cdfF.map(f => renderCdf(f())).toSeq ++ extraMeta,
-      newIdHwm = idHwm)
   }
 
   /** Per-file column statistics of `version`'s manifest: the stats
@@ -2098,9 +2092,7 @@ object CommitLog {
   private def stageRouted(s: SparkSession, root: String, rawDf: DataFrame,
       filesPerGroup: Int, schema: Option[StructType]): Seq[(String, Seq[String])] = {
     import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    new java.io.File(root).mkdirs()
-    val stage = java.nio.file.Files.createTempDirectory(
-      new java.io.File(root).toPath, ".pstage-")
+    val stage = newStage(root, ".pstage-")
     val df = toPhysicalDf(rawDf, schema)
     val dataCols = df.columns.filterNot(c => c == "_gp" || c == "_gs")
     val (routed, partDepth) =
@@ -2119,8 +2111,8 @@ object CommitLog {
       if (joinFree(routed))
         org.apache.spark.sql.graftbridge.SessionBridge.rebind(routed, aqeOffSession(s))
       else routed
-    routedW.write.mode("overwrite").partitionBy(partDepth: _*)
-      .parquet(stage.toString)
+    try routedW.write.mode("overwrite").partitionBy(partDepth: _*).parquet(stage.toString)
+    catch { case t: Throwable => scrubDir(stage.toFile); throw t }
     def unescape(n: String): String = {
       val sb = new StringBuilder(n.length)
       var i = 0
@@ -2151,13 +2143,7 @@ object CommitLog {
         "data/" + dst.getName
       }
     }
-    def scrub(d: java.io.File): Unit = {
-      Option(d.listFiles()).foreach(_.foreach { f =>
-        if (f.isDirectory) scrub(f) else f.delete()
-      })
-      d.delete()
-    }
-    scrub(stage.toFile)
+    scrubDir(stage.toFile)
     groups
   }
 
@@ -2949,99 +2935,340 @@ object CommitLog {
       PartitionedLayout(partCol.split(',').map(_.trim).toSeq, filesPerPartition),
       DeclaredStats).isDefined
 
-  /** Copy-on-write row-level DELETE (the public Delta/Iceberg CoW
-    * write path): one pass finds the data files that HOLD matching
-    * rows (`input_file_name` + distinct — the collect is file PATHS,
-    * metadata-sized, never rows), untouched files carry over into the
-    * new manifest byte-identical (their paths are reused, no rewrite,
-    * no read), and only the dirty files are rewritten without their
-    * matching rows. Commits op="delete" — a data-CHANGING rewrite, so
-    * `changes()` refuses ranges across it just as it refuses
-    * compactions (a file-level diff would mis-state the delta).
+  /** How [[rowLevel]] retires the rows it touches. */
+  private sealed trait DmlMode
+  /** Rewrite each dirty file without (or with the new images of) its
+    * touched rows. */
+  private case object CopyOnWrite extends DmlMode
+  /** Mask the touched rows with a positional deletion vector and append
+    * their new images as `nFiles` files; nothing is rewritten. */
+  private final case class DeletionVectors(nFiles: Int) extends DmlMode
+
+  /** The rows a row-level write touches (`rows`) and leaves (`rest`). */
+  private sealed trait Touch {
+    def rows(df: DataFrame): DataFrame
+    def rest(df: DataFrame): DataFrame
+  }
+  /** Rows matching `cond`, under three-valued logic: a NULL cond is no
+    * match, so the row stays in `rest` (NOT(cond) would drop it). */
+  private final case class CondTouch(cond: org.apache.spark.sql.Column) extends Touch {
+    val hit: org.apache.spark.sql.Column =
+      org.apache.spark.sql.functions.coalesce(cond, org.apache.spark.sql.functions.lit(false))
+    def rows(df: DataFrame): DataFrame = df.filter(cond)
+    def rest(df: DataFrame): DataFrame = df.filter(!hit)
+  }
+  /** MERGE: rows whose `keyCols` tuple is among the update or the
+    * delete keys — relations, never collected lists, so a mass delete
+    * is a bigger shuffle, not a driver OOM. A NULL key never matches. */
+  private final case class KeyTouch(keyCols: Seq[String], updKeys: DataFrame,
+      delKeys: Option[DataFrame]) extends Touch {
+    val keys: DataFrame = delKeys.map(updKeys.unionByName(_).distinct()).getOrElse(updKeys)
+    def rows(df: DataFrame): DataFrame = df.join(keys, keyCols, "left_semi")
+    def rest(df: DataFrame): DataFrame = df.join(keys, keyCols, "left_anti")
+  }
+
+  /** What one [[rowLevel]] write did: the version it published (the
+    * head it read when there was nothing to do), the files it carried
+    * unchanged, rewrote, and gave new deletion vectors, and the rows it
+    * touched — counted off the vectors, so 0 under copy-on-write. */
+  private[graft] final case class RowLevelResult(version: Long,
+      filesCarried: Long, filesRewritten: Long, filesVectored: Long,
+      rowsTouched: Long)
+
+  /** The one owner of the files an operation stages: data, CDF and
+    * vector files, staged on the calling thread (`sync`) or on the
+    * [[graft.functions.Par]] pool (`async`). On every exit [[staging]]
+    * joins each staging launched here, so a background failure is
+    * never dropped: it propagates, or rides the first failure as a
+    * suppressed exception. Unless the operation `published` a
+    * manifest, which then lists them, it deletes every file they
+    * staged — a write that fails before its version publishes leaves
+    * nothing behind. Nothing is deleted once a version is published. */
+  private final class Stagings(s: SparkSession, root: String) {
+    private val staged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    private val launched = scala.collection.mutable.ArrayBuffer.empty[() => Any]
+    private var isPublished = false
+    /** Stage on this thread; `paths` names what the result staged. */
+    def sync[A](body: => A)(paths: A => Seq[String]): A = {
+      val a = body
+      paths(a).foreach(staged.add)
+      a
+    }
+    /** Stage on the pool; the returned thunk joins and rethrows. */
+    def async[A](body: => A)(paths: A => Seq[String]): () => A = {
+      val join = graft.functions.Par.async(sync(body)(paths))
+      launched += join
+      join
+    }
+    /** Stage a CDF row set CONCURRENTLY with the data staging (r20,
+      * guide §2.6): independent jobs over separate temp dirs, so their
+      * task tails backfill each other and their driver-side planning
+      * and commit rounds overlap, which on tiny commits is most of the
+      * wall. */
+    def stageCdfAsync(df: => DataFrame, schema: Option[StructType]): () => Seq[String] =
+      async(stageCdfFiles(s, root, df, schema))(identity)
+    /** Run the commit that publishes what this owner staged. */
+    def published[A](commit: => A): A = {
+      val a = commit
+      isPublished = true
+      a
+    }
+    def close(failure: Option[Throwable]): Unit = {
+      var first = failure.orNull
+      launched.foreach { join =>
+        try join() catch {
+          case t: Throwable =>
+            if (first == null) first = t else if (t ne first) first.addSuppressed(t)
+        }
+      }
+      if (!isPublished) staged.forEach(f => new java.io.File(root, f).delete())
+      if (failure.isEmpty && first != null) throw first
+    }
+  }
+
+  private def staging[A](s: SparkSession, root: String)(body: Stagings => A): A = {
+    val st = new Stagings(s, root)
+    val out = try body(st) catch { case t: Throwable => st.close(Some(t)); throw t }
+    st.close(None)
+    out
+  }
+
+  /** THE row-level DML writer — DELETE, UPDATE and MERGE, each in
+    * copy-on-write or deletion-vector mode. The two modes are one
+    * logical operation (the Delta deletion-vector design): snapshot
+    * isolation, CDF, changes() refusal and constraint semantics are
+    * identical, and they compose — vectors accumulate across
+    * merge-on-read writes and die with any rewrite. Commits `op`, a
+    * data-CHANGING rewrite: changes() refuses file-diff ranges across
+    * it, and pinned readers at older versions still see the old rows.
     *
-    * 100 TB posture: cost scales with the DIRTY file set, not the
-    * table — a predicate aligned with the layout (partition/z-order
-    * keys) touches few files; the dirty-file scan itself benefits from
-    * parquet pushdown of `cond`. Pinned readers at older versions
-    * still see the deleted rows (snapshot isolation), exactly the
-    * lakehouse contract. Returns (newVersion, filesCarried,
-    * filesRewritten). */
+    *   - `touch` picks the rows: a `cond` (three-valued — a NULL cond
+    *     is no match, the row survives unchanged) or MERGE's key
+    *     semi-join.
+    *   - `assignments` (UPDATE) transform the touched rows; none drops
+    *     them. Schema is INVARIANT under UPDATE: an assignment must
+    *     name an existing column and casts to its type. A partition
+    *     column (its rows would move across partitions — use merge or
+    *     overwrite), a GENERATED column (it recomputes from the
+    *     post-image) and an IDENTITY column (ids are immutable)
+    *     refuse. The predicate and every RHS evaluate against the
+    *     PRE-image row in ONE select: a withColumn chain would resolve
+    *     later assignments against earlier outputs (`SET a = b, b = a`
+    *     would not swap). The post-images are the only NEW row states,
+    *     so they alone re-validate CHECK constraints, before they stage.
+    *   - `inserts` (MERGE) are full row images — replacements of
+    *     matched keys and inserts alike — staged in the table's layout.
+    *
+    * COPY-ON-WRITE: one pushdown scan finds the files that hold
+    * touched rows (the collect is file PATHS, metadata-sized); clean
+    * files carry over byte-identical with their metadata, and dirty
+    * files rewrite with fresh typed stats and partition entries. Cost
+    * scales with the DIRTY file set, never the table — a predicate or
+    * key aligned with the layout touches few files. Right for rare,
+    * large changes: reads stay pristine.
+    * DELETION VECTORS: the same scan records the touched rows'
+    * (file name, row index) coordinates into a dv/ sidecar; every data
+    * file carries over byte-identical, readers drop the dead rows with
+    * one anti-join against the vectors, and any rewrite purges them.
+    * New row images append as `nFiles` files. Cost ∝ touched rows —
+    * right for frequent, fine-grained changes (GDPR erasure across
+    * thousands of files, which copy-on-write would rewrite weekly).
+    * Per-file stats stay valid but may be loose; per-file masked counts
+    * ride the manifest so LIMIT/COUNT(*) stay exact.
+    *
+    * With enableChangeDataFeed (default OFF: a table nobody consumes a
+    * changelog of should not fund one) the change rows stage under
+    * cdf/ from rows the pass reads anyway: deletes,
+    * update_preimage/update_postimage pairs and MERGE's inserts. The
+    * overlap order (r20, guide §2.6): MERGE's insert staging starts
+    * FIRST, before the dirty-file collect, and the changelog stages
+    * concurrently with the survivor rewrite (a DELETE's with the
+    * vector staging); every staging has its own temp dir under one
+    * [[Stagings]] owner.
+    *
+    * The commit rebases through [[commitRewriteRebasing]]: concurrent
+    * pure APPENDs carry forward, their late rows landing after this
+    * write even when they match the predicate or keys — the
+    * WriteSerializable blind-append allowance. A vector commit refuses
+    * every winner that moves or rewrites rows: its vectors are
+    * POSITIONAL, and a rewrite restages the masked rows into files they
+    * do not cover, silently losing the write. */
+  private def rowLevel(s: SparkSession, root: String, prev: Snapshot,
+      props: Map[String, String], op: String, touch: Touch,
+      assignments: Seq[(String, org.apache.spark.sql.Column)],
+      inserts: Option[(DataFrame, Int)], mode: DmlMode, extraMeta: Seq[String],
+      maxAttempts: Int, beforeCommit: () => Unit,
+      newIdHwm: Option[Long] = None, idHwmBase: Option[Long] = None): RowLevelResult =
+    // a row-less snapshot has nothing to change — and nothing to scan
+    // (a schemaless empty scan cannot even infer its own shape)
+    if (prev.files.isEmpty && inserts.isEmpty) RowLevelResult(prev.version, 0L, 0L, 0L, 0L)
+    else staging(s, root) { st =>
+      import org.apache.spark.sql.functions.{col, expr, lit, substring_index, when}
+      val files = prev.absFiles
+      val insertF = inserts.map { case (df, n) =>
+        st.async(stageRewrite(s, root, prev, df, n))(_._1) }
+      // file (and row index) captured AT THE SCAN: after a join
+      // input_file_name is ambiguous
+      lazy val full = readSubsetCore(s, prev, files, withFile = true,
+        withPos = mode != CopyOnWrite)
+      lazy val types = full.schema.fields.map(f => f.name -> f.dataType).toMap --
+        Seq("_graft_file", "_graft_pos")
+      val gens = generatedColsOf(props)
+      val partCols = prev.aux.partCol.toSeq.flatMap(_.split(',').map(_.trim))
+      assignments.foreach { case (c, _) =>
+        require(types.contains(c), s"$op: column '$c' does not exist — " +
+          "UPDATE never adds columns (evolve the schema first)")
+        require(!partCols.contains(c), s"$op: assigning partition column " +
+          s"'$c' would move rows across partitions — use merge or overwrite instead")
+        require(!gens.exists(_._1 == c), s"$op: column '$c' is GENERATED — " +
+          "omit it from SET; it recomputes from its expression")
+        require(!identityOf(props).exists(_._1 == c),
+          s"$op: column '$c' is IDENTITY — ids are immutable")
+      }
+      val asg = assignments.toMap
+      // the new images in ONE select over the pre-image; `hit` keeps a
+      // rewrite's untouched rows as they are, and generated columns
+      // recompute over the result (to the value an untouched row holds)
+      def assigned(df: DataFrame, hit: Option[org.apache.spark.sql.Column]): DataFrame = {
+        val post = df.select(df.columns.map { c =>
+          asg.get(c).map { e =>
+            val v = e.cast(types(c))
+            hit.fold(v)(when(_, v).otherwise(col(c))).as(c)
+          }.getOrElse(col(c))
+        }.toIndexedSeq: _*)
+        gens.foldLeft(post) { case (d, (name, sql)) =>
+          d.withColumn(name, expr(sql).cast(types(name)))
+        }
+      }
+      def postImages(d: DataFrame): DataFrame = assigned(touch.rows(d), None)
+      def survivors(d: DataFrame): DataFrame = touch match {
+        case t: CondTouch if assignments.nonEmpty => assigned(d, Some(t.hit))
+        case t => t.rest(d)
+      }
+      def tagged(df: DataFrame, kind: String): DataFrame =
+        df.withColumn("_change_type", lit(kind))
+      // the change rows among `d`, the rows of every file that may hold
+      // a touched row
+      def changes(d: DataFrame): DataFrame = touch match {
+        case KeyTouch(keyCols, updKeys, delKeys) =>
+          // matched keys live ONLY in dirty files (that is what made
+          // them dirty), so these semi/anti splits are exact
+          val ins = inserts.get._1
+          val pre = tagged(d.join(updKeys, keyCols, "left_semi"), "update_preimage")
+          val matchedKeys = pre.select(keyCols.map(col): _*).distinct()
+          val post = tagged(ins.join(matchedKeys, keyCols, "left_semi"), "update_postimage")
+          val fresh = tagged(ins.join(matchedKeys, keyCols, "left_anti"), "insert")
+          // delete-side rows record as deletes unless an update shares
+          // the key (the update wins)
+          val del = delKeys.map(dk => tagged(d.join(dk, keyCols, "left_semi")
+            .join(updKeys, keyCols, "left_anti"), "delete"))
+          del.foldLeft(pre.unionByName(post).unionByName(fresh))(_.unionByName(_))
+        case _ if assignments.isEmpty => tagged(touch.rows(d), "delete")
+        case _ => tagged(touch.rows(d), "update_preimage")
+          .unionByName(tagged(postImages(d), "update_postimage"))
+      }
+      val noChanges: () => Seq[String] = () => Nil
+      def stageChanges(d: => DataFrame): () => Seq[String] =
+        if (cdfOn(props)) st.stageCdfAsync(changes(d), prev.schema) else noChanges
+      def cdfMeta(cdfF: () => Seq[String]): Seq[String] =
+        if (cdfOn(props)) Seq(renderCdf(cdfF())) else Nil
+      mode match {
+        case CopyOnWrite =>
+          // canonical paths on both sides: _graft_file yields absolute
+          // URIs while the listing reflects the caller's (possibly
+          // relative) root — a raw compare would mark nothing dirty
+          val dirtyCanon =
+            if (files.isEmpty) Set.empty[String]
+            else touch.rows(full).select(col("_graft_file")).distinct()
+              .collect().map(r =>
+                new java.io.File(new java.net.URI(r.getString(0))).getCanonicalPath)
+              .toSet
+          val (dirty, clean) =
+            files.partition(f => dirtyCanon.contains(new java.io.File(f).getCanonicalPath))
+          def dirtyRows = readSubset(s, prev, dirty)
+          if (assignments.nonEmpty && dirty.nonEmpty)
+            enforceConstraints(s, props, postImages(dirtyRows), op)
+          val cdfF = if (dirty.isEmpty && inserts.isEmpty) noChanges
+            else stageChanges(if (dirty.isEmpty) inserts.get._1.limit(0) else dirtyRows)
+          val (rewritten, rewriteAux) =
+            if (dirty.isEmpty) (Nil, Aux())
+            else st.sync(stageRewrite(s, root, prev, survivors(dirtyRows),
+              math.max(1, dirty.size)))(_._1)
+          val (inserted, insertAux) = insertF.map(_()).getOrElse((Nil, Aux()))
+          val staged = rewritten ++ inserted
+          val (v, addedN) = st.published(commitRewriteRebasing(s, root, prev, op,
+            clean.map(p => relativize(root, p)), staged,
+            rewriteAux.merged(insertAux), staged, cdfMeta(cdfF) ++ extraMeta,
+            maxAttempts, beforeCommit, newIdHwm = newIdHwm, idHwmBase = idHwmBase,
+            // value×value narrow rebase (r14): safe past an update/merge
+            // winner iff none of ITS new rows are rows this op touches
+            loserTouches = Some((hv, fs) => touch.rows(readSubset(s, hv, fs)).limit(1).count())))
+          RowLevelResult(v, clean.size + addedN, rewritten.size.toLong, 0L, 0L)
+        case DeletionVectors(nFiles) =>
+          val all = readSubset(s, prev, files)
+          // a DELETE's changelog overlaps the vector staging; an
+          // UPDATE's waits for the vector count (no match, no staging).
+          // The scan respects existing vectors, so a dead row never
+          // re-deletes.
+          val deleteCdf = if (assignments.isEmpty) stageChanges(all) else noChanges
+          // the vector (f: file name, i: row index) stages under dv/
+          // like data files; an empty vector stages nothing
+          val dv = st.sync(stageInto(root, ".dvstage-", "dv")(touch.rows(full).select(
+            substring_index(col("_graft_file"), "/", -1).as("f"),
+            col("_graft_pos").as("i")).coalesce(1).write.mode("overwrite").parquet(_)))(identity)
+          // per-file masked counts off the sidecar just written (one
+          // tiny grouped read, never a second table scan) (r16)
+          val perFile =
+            if (dv.isEmpty) Map.empty[String, Long]
+            else s.read.parquet(dv.map(f => new java.io.File(root, f).toString): _*)
+              .groupBy(col("f")).count().collect()
+              .map(r => r.getString(0) -> r.getLong(1)).toMap
+          val nRows = perFile.values.sum
+          val byName = files.map(f =>
+            new java.io.File(f).getName -> relativize(root, f)).toMap
+          val newDvs = Aux(
+            dvs = perFile.keySet.flatMap(byName.get).map(_ -> dv).toMap,
+            dvRows = perFile.flatMap { case (n, c) => byName.get(n).map(_ -> c) })
+          val (cdfF, (inserted, insertAux)) =
+            if (assignments.isEmpty || nRows == 0) (deleteCdf, (Nil, Aux()))
+            else {
+              enforceConstraints(s, props, postImages(all), op)
+              val updateCdf = stageChanges(all)
+              (updateCdf, st.sync(stageRewrite(s, root, prev, postImages(all),
+                math.max(1, nFiles)))(_._1))
+            }
+          val (v, addedN) = st.published(commitRewriteRebasing(s, root, prev, op,
+            prev.files, inserted, newDvs.merged(insertAux), inserted, cdfMeta(cdfF),
+            maxAttempts, beforeCommit, vectors = true))
+          RowLevelResult(v, files.size + addedN, 0L, perFile.size.toLong, nRows)
+      }
+    }
+
+  /** DELETE (no `assignments`) or UPDATE through [[rowLevel]], with
+    * deletion vectors when `vectors` — the SQL statements' entry, which
+    * picks the mode by the table's `enableDeletionVectors` property. */
+  private[graft] def deleteOrUpdate(s: SparkSession, root: String,
+      cond: org.apache.spark.sql.Column,
+      assignments: Seq[(String, org.apache.spark.sql.Column)], vectors: Boolean,
+      nFiles: Int = 1, maxAttempts: Int = 10, beforeCommit: () => Unit = () => (),
+      extraMeta: Seq[String] = Nil): RowLevelResult = {
+    val op = if (assignments.isEmpty) "delete" else "update"
+    rowLevel(s, root, headOf(root, if (assignments.isEmpty) "delete from" else op),
+      tableProperties(root), op, CondTouch(cond), assignments, None,
+      if (vectors) DeletionVectors(nFiles) else CopyOnWrite, extraMeta,
+      maxAttempts, beforeCommit)
+  }
+
+  /** Copy-on-write row-level DELETE ([[rowLevel]]). Returns
+    * (newVersion, filesCarried, filesRewritten). */
   def delete(s: SparkSession, root: String,
       cond: org.apache.spark.sql.Column,
       extraMeta: Seq[String] = Nil,
       maxAttempts: Int = 10,
       beforeCommit: () => Unit = () => ()): (Long, Long, Long) = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val prev = headOf(root, "delete from")
-    val files = prev.absFiles
-    // a row-less snapshot has nothing to delete — and nothing to scan
-    // (a schemaless empty scan cannot even infer its own shape)
-    if (files.isEmpty) return (prev.version, 0L, 0L)
-    // canonical paths on both sides: _graft_file yields absolute
-    // URIs while snapshotFiles reflects the caller's (possibly
-    // relative) root — a raw string compare would mark nothing dirty
-    // and silently no-op the delete
-    val dirtyCanon = readSubsetWithFile(s, prev, files).filter(cond)
-      .select(col("_graft_file")).distinct()
-      .collect().map(r =>
-        new java.io.File(new java.net.URI(r.getString(0))).getCanonicalPath)
-      .toSet
-    val (dirty, clean) =
-      files.partition(f => dirtyCanon.contains(new java.io.File(f).getCanonicalPath))
-    val carried = clean.map(p => relativize(root, p))
-    // row-level CDF (r10): the deleted rows are exactly the dirty-file
-    // rows matching cond — already computed by the CoW pass; persist
-    // them under cdf/ so changesRows() replays this version without
-    // re-deriving anything. Cost ∝ deleted rows, paid ONLY by tables
-    // that opted in via enableChangeDataFeed (default OFF — the Delta
-    // contract; a non-consuming table should not fund a changelog).
-    // Launched BEFORE the survivor rewrite so both independent writes
-    // run concurrently (r20, guide §2.6).
-    val cdfF: Option[() => Seq[String]] =
-      if (!cdfEnabled(root)) None
-      else if (dirty.isEmpty) Some(() => Nil)
-      else Some(stageCdfAsync(s, root,
-        readSubset(s, prev, dirty).filter(cond)
-          .withColumn("_change_type", lit("delete")), prev.schema))
-    val (rewritten, rewriteAux) =
-      if (dirty.isEmpty) (Nil, Aux())
-      // keep = NOT(cond) under three-valued logic would DROP rows where
-      // cond is NULL (a NULL-keyed row is not a match — it must survive)
-      else stageRewrite(s, root, prev,
-        readSubset(s, prev, dirty)
-          .filter(!org.apache.spark.sql.functions.coalesce(
-            cond, org.apache.spark.sql.functions.lit(false))),
-        math.max(1, dirty.size))
-    val cdf: Option[Seq[String]] = cdfF.map(_())
-    // carried files keep their stats entries; rewritten files get
-    // TYPED stats recomputed (restageColStats) AND fresh partition
-    // entries on a partitioned table (stageRewrite) — data-skipping
-    // and partition pruning both survive deletes; the legacy
-    // single-column ints stay carry-only.
-    //
-    // SEMANTIC conflict re-validation (r11, VERDICT item 5): a lost
-    // commit race no longer always fails. Per attempt, re-read the new
-    // head and validate: if every intervening commit is a pure APPEND
-    // (op append/clone — never removes, rewrites, re-maps or vectors a
-    // file) and every file this delete READ is still listed, the
-    // rewrite REBASES — winner's new files carry forward verbatim
-    // (blind appends land after the delete, the WriteSerializable
-    // contract: a late row matching the predicate SURVIVES), and both
-    // writers commit. Anything else — a concurrent delete/update/
-    // compact/optimize/rename — still fails loudly: validating
-    // rewrite-vs-rewrite needs row-level reasoning the public formats
-    // also refuse at this isolation level. The staged data files are
-    // written ONCE; retries cost manifest metadata only.
-    val (v, addedN) = commitRewriteRebasing(s, root, prev,
-      "delete", carried, rewritten, rewriteAux, rewritten,
-      cdf.map(renderCdf).toSeq ++ extraMeta, maxAttempts, beforeCommit,
-      // value×value narrow rebase (r14): a delete is safe past an
-      // update/merge winner iff none of the winner's new rows match
-      // the delete predicate (a serial winner-then-delete would have
-      // dropped them)
-      loserTouches = Some((hv, fs) =>
-        readSubset(s, hv, fs).filter(cond).limit(1).count()))
-    (v, clean.size.toLong + addedN, rewritten.size.toLong)
+    val r = deleteOrUpdate(s, root, cond, Nil, vectors = false,
+      maxAttempts = maxAttempts, beforeCommit = beforeCommit, extraMeta = extraMeta)
+    (r.version, r.filesCarried, r.filesRewritten)
   }
 
   /** Winner ops a lost rewrite can REBASE past (r12 widened from
@@ -3063,8 +3290,8 @@ object CommitLog {
   private val rebaseableWinnerOps =
     Set("append", "clone", "compact", "optimize", "delete", "widen")
 
-  /** The rewrite commit's SEMANTIC conflict-rebase loop (r11, shared
-    * by delete / mergeKeyed / update; r12 also partition-scoped
+  /** THE commit's SEMANTIC conflict-rebase loop (r11, shared by
+    * [[rowLevel]]'s two modes, reorg, compact and partition-scoped
     * optimize): attempt the commit against the current head; on a
     * lost race, re-read and validate. REBASE is sound iff (1) every
     * intervening op is in [[rebaseableWinnerOps]], (2) every file
@@ -3078,7 +3305,11 @@ object CommitLog {
     * (head's files − my dirty files) + my staged files: winners' adds
     * carry, winners' removals stick, my rewrite applies. The staged
     * data files are written ONCE; retries cost manifest metadata
-    * only. Returns (version, carriedDeltaVsBase). */
+    * only. A `vectors` commit (r14) removes nothing (`carried` is the
+    * whole base) and relists the winning head verbatim plus its staged
+    * files; it rebases past [[dvRebaseableWinnerOps]] only, and with
+    * no attempts left it gives up without committing. Returns
+    * (version, carriedDeltaVsBase). */
   private def commitRewriteRebasing(s: SparkSession, root: String,
       base: Snapshot, op: String,
       carried: Seq[String], staged: Seq[String],
@@ -3103,7 +3334,8 @@ object CommitLog {
       // ABSOLUTE file paths (read under the given head version's
       // schema — a widen winner may sit between) — the winner's
       // newly-added files. None keeps the r13 refusal for this op.
-      loserTouches: Option[(Snapshot, Seq[String]) => Long] = None): (Long, Long) = {
+      loserTouches: Option[(Snapshot, Seq[String]) => Long] = None,
+      vectors: Boolean = false): (Long, Long) = {
     val baseFiles = base.files.toSet
     val myRemoved = baseFiles -- carried.toSet
     // every rewrite records its staged files' byte sizes and footer
@@ -3143,11 +3375,14 @@ object CommitLog {
     // before. The probe is limit(1)-bounded and scans only the
     // winners' added files, never the table.
     val winnerOps =
-      if (op == "compact" || op == "optimize" || loserTouches.isDefined)
+      if (vectors) dvRebaseableWinnerOps
+      else if (op == "compact" || op == "optimize" || loserTouches.isDefined)
         rebaseableWinnerOps ++ Set("update", "merge")
       else rebaseableWinnerOps
     var attempt = 0
     while (true) {
+      if (vectors && attempt >= maxAttempts) throw new java.util.ConcurrentModificationException(
+        s"merge-on-read $op: gave up after $maxAttempts attempts under $root")
       attempt += 1
       // ONE snapshot per version the head moved by (the last is the
       // head); none at all when nothing raced
@@ -3155,7 +3390,11 @@ object CommitLog {
       val head = winners.lastOption.getOrElse(base)
       val blocked = winners.map(_.op).filterNot(winnerOps)
       if (blocked.nonEmpty) throw new java.util.ConcurrentModificationException(
-        s"$op under $root lost to a concurrent '${blocked.head}' " +
+        if (vectors) s"merge-on-read $op under $root lost to a concurrent " +
+          s"'${blocked.head}' commit — positional vectors cannot " +
+          "survive a rewrite of the files they mask; retry the " +
+          s"$op against the new head"
+        else s"$op under $root lost to a concurrent '${blocked.head}' " +
           "commit — a value-changing rewrite-vs-rewrite race cannot be " +
           s"rebased (its rewritten rows may match this $op); retry " +
           s"the $op against the new head")
@@ -3197,11 +3436,16 @@ object CommitLog {
           s"$op under $root allocated identity ids from a mark a " +
             "concurrent commit advanced — the staged block may " +
             "overlap; retry against the new head")
-      val finalCarried = (headFiles -- myRemoved).toSeq.sorted
-      val keep = finalCarried.toSet
+      // a vector commit carries the head verbatim, listing order included
+      val (finalCarried, headAux, headStats) =
+        if (vectors) (head.files, head.aux, head.stats)
+        else {
+          val keep = headFiles -- myRemoved
+          (keep.toSeq.sorted, head.aux.filterFiles(keep), head.stats.filter(kv => keep(kv._1)))
+        }
       val (statsCol, stats) = newStats match {
         case Some((c, m)) => (Some(c), m)
-        case None => (head.statsCol, head.stats.filter(kv => keep(kv._1)))
+        case None => (head.statsCol, headStats)
       }
       beforeCommit()
       try {
@@ -3211,8 +3455,7 @@ object CommitLog {
           stats = stats,
           schemaJson = carriedSchemaJson(Some(head)),
           extra = auxExtra(restageColStats(s, root,
-            head.aux.filterFiles(keep).merged(newAuxSized), restageFiles, head.schema)) ++
-            extraFragments,
+            headAux.merged(newAuxSized), restageFiles, head.schema)) ++ extraFragments,
           newIdHwm = newIdHwm)
         return (v, (finalCarried.size - carried.size).toLong)
       } catch {
@@ -3223,138 +3466,25 @@ object CommitLog {
     sys.error("unreachable")
   }
 
-  /** MERGE-ON-READ delete — deletion vectors (the Delta DV / Iceberg
-    * positional-delete design), the copy-on-write trade inverted: the
-    * commit rewrites NOTHING. One pushdown scan records the doomed
-    * rows' (file, row index) coordinates into a small dv/ sidecar;
-    * the manifest maps each affected data file to its vectors, every
-    * data file carries over byte-identical, and readers drop the dead
-    * rows with one left-anti join against the (tiny) vector set —
-    * cost ∝ deleted rows at WRITE time, a broadcast-anti-join at READ
-    * time, until any rewrite (compact / optimize / a CoW pass over
-    * the file) physically purges them and retires the vectors.
-    *
-    * When to choose which: copy-on-write [[delete]] pays the rewrite
-    * once and reads stay pristine — right for rare, large deletes;
-    * merge-on-read pays ~nothing at write and a small mask at read —
-    * right for frequent, fine-grained deletes (GDPR row erasure
-    * landing daily across thousands of files, the case where CoW
-    * would rewrite the whole table week over week). Both are the SAME
-    * logical delete: snapshot isolation, CDF, changes() refusal, and
-    * constraint semantics are identical, and they compose — vectors
-    * accumulate across MoR deletes and die with any rewrite.
-    *
-    * Per-file stats are NOT narrowed by a vector (bounds stay valid,
-    * just possibly loose — the public formats keep the same slack).
-    * Returns (newVersion, filesWithNewVectors, rowsDeleted). */
+  /** MERGE-ON-READ delete — [[delete]] with deletion vectors
+    * ([[rowLevel]]): the commit rewrites nothing. Returns (newVersion,
+    * filesWithNewVectors, rowsDeleted). */
   def deleteMergeOnRead(s: SparkSession, root: String,
       cond: org.apache.spark.sql.Column,
       maxAttempts: Int = 10,
       beforeCommit: () => Unit = () => ()): (Long, Long, Long) = {
-    import org.apache.spark.sql.functions.{col, lit, substring_index}
-    val prev = headOf(root, "delete from")
-    val files = prev.absFiles
-    if (files.isEmpty) return (prev.version, 0L, 0L) // row-less snapshot: no-op
-    // positions are PHYSICAL row indexes; the scan respects existing
-    // vectors, so an already-dead row can never re-delete
-    val doomed = readSubsetWithFilePos(s, prev, files).filter(cond)
-      .select(substring_index(col("_graft_file"), "/", -1).as("f"),
-        col("_graft_pos").as("i"))
-    // CDF staging overlaps the vector staging (r20, guide §2.6): both
-    // scan the same snapshot but write to separate dirs. A cond that
-    // matches nothing stages zero rows → Nil, exactly the old
-    // nRows==0 short-circuit.
-    val cdfF: Option[() => Seq[String]] =
-      if (!cdfEnabled(root)) None
-      else Some(stageCdfAsync(s, root,
-        readSubset(s, prev, files).filter(cond)
-          .withColumn("_change_type", lit("delete")), prev.schema))
-    val staged = stageDvFiles(s, root, doomed)
-    // per-file masked counts + affected files from the sidecar just
-    // written (one tiny grouped read — never a second table scan);
-    // the counts ride the manifest (r16) so LIMIT/COUNT(*) stay exact
-    // on merge-on-read tables
-    val perFile =
-      if (staged.isEmpty) Map.empty[String, Long]
-      else s.read.parquet(
-          staged.map(f => new java.io.File(root, f).toString): _*)
-        .groupBy(col("f")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val (nRows, affected) = (perFile.values.sum, perFile.keySet)
-    val byName = files.map(f =>
-      new java.io.File(f).getName -> relativize(root, f)).toMap
-    val newDvs = Aux(
-      dvs = affected.flatMap(byName.get).map(_ -> staged).toMap,
-      dvRows = perFile.flatMap { case (n, c) => byName.get(n).map(_ -> c) })
-    val cdf: Option[Seq[String]] = cdfF.map(_())
-    // DV-commit rebase (r14): the merge-on-read paths were the last
-    // single-attempt writers — a lost race to a PURE APPEND failed a
-    // delete whose vectors attach to files the append never touched.
-    // Rebase past append/clone/widen/rename winners: the winning
-    // head's listing carries forward verbatim and my sidecars attach
-    // to my (still-listed, byte-identical) affected files. Any op
-    // that can MOVE or REWRITE rows still refuses — my vectors are
-    // POSITIONAL (file name + row index); a rewrite restages the
-    // doomed rows into files they don't cover, silently losing the
-    // delete (this includes another "delete", indistinguishable from
-    // a CoW rewrite by op name).
-    val v = commitDvRebasing(s, root, prev, "delete", newDvs,
-      cdf.map(renderCdf).toSeq, Nil, maxAttempts, beforeCommit)
-    (v, affected.size.toLong, nRows)
+    val r = deleteOrUpdate(s, root, cond, Nil, vectors = true,
+      maxAttempts = maxAttempts, beforeCommit = beforeCommit)
+    (r.version, r.filesVectored, r.rowsTouched)
   }
 
   /** Winner ops a merge-on-read (sidecar-only) commit can rebase
     * past: none of them removes, rewrites, or re-positions a listed
-    * file's rows, so positional vectors stay valid. */
+    * file's rows, so positional vectors stay valid. A "delete" winner
+    * refuses too: by op name it cannot be told from a copy-on-write
+    * rewrite. */
   private val dvRebaseableWinnerOps =
     Set("append", "clone", "widen", "rename_column")
-
-  /** The optimistic loop shared by the two DV writers: relist the
-    * winning head's files + my new sidecars (+ `inserted` files for
-    * the update path), carrying the HEAD's stats/schema/aux forward.
-    * The sidecars and any inserted data files are staged ONCE;
-    * retries cost manifest metadata only. */
-  private def commitDvRebasing(s: SparkSession, root: String,
-      base: Snapshot, op: String, newAux: Aux, extraFragments: Seq[String],
-      inserted: Seq[String], maxAttempts: Int,
-      beforeCommit: () => Unit): Long = {
-    val props = tableProperties(root)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val winners = ((base.version + 1) to latestVersion(root).get).map(snapshot(root, _))
-      val head = winners.lastOption.getOrElse(base)
-      val blocked = winners.map(_.op).filterNot(dvRebaseableWinnerOps)
-      if (blocked.nonEmpty) throw new java.util.ConcurrentModificationException(
-        s"merge-on-read $op under $root lost to a concurrent " +
-          s"'${blocked.head}' commit — positional vectors cannot " +
-          "survive a rewrite of the files they mask; retry the " +
-          s"$op against the new head")
-      beforeCommit()
-      try {
-        return commitOn(root, head.files ++ inserted, Some(head), props, op = op,
-          statsCol = head.statsCol, stats = head.stats,
-          schemaJson = carriedSchemaJson(Some(head)),
-          extra = auxExtra(restageColStats(s, root,
-            head.aux.merged(newAux), inserted, head.schema)) ++ extraFragments)
-      } catch {
-        case _: java.util.ConcurrentModificationException
-          if attempt < maxAttempts => // rebase and retry
-      }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"merge-on-read $op: gave up after $maxAttempts attempts under $root")
-  }
-
-  /** Stage a deletion-vector row set (columns f: file name, i: row
-    * index) under dv/ — same stage-then-atomic-move discipline as
-    * data files; an empty vector stages nothing. */
-  private def stageDvFiles(s: SparkSession, root: String,
-      df: DataFrame): Seq[String] = {
-    val stage = newStage(root, ".dvstage-")
-    df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    moveStaged(root, stage, "dv")
-  }
 
   /** REORG ... APPLY (PURGE) — the selective physical purge (Delta's
     * REORG TABLE): rewrite ONLY the files carrying deletion vectors
@@ -3381,41 +3511,23 @@ object CommitLog {
     // file-disjoint winners through the shared loop — REORG racing a
     // blind append (or a delete on un-vectored files) both commit;
     // a winner that touched a vectored file refuses inside the loop.
-    val (staged, stagedAux) = stageRewrite(s, root, prev,
-      readSubset(s, prev, vectored), math.max(1, vectored.size))
-    val (v, addedN) = commitRewriteRebasing(s, root, prev, "optimize",
-      carried, staged, stagedAux, staged, Nil,
-      maxAttempts, beforeCommit)
-    (v, clean.size.toLong + addedN, staged.size.toLong)
+    staging(s, root) { st =>
+      val (staged, stagedAux) = st.sync(stageRewrite(s, root, prev,
+        readSubset(s, prev, vectored), math.max(1, vectored.size)))(_._1)
+      val (v, addedN) = st.published(commitRewriteRebasing(s, root, prev, "optimize",
+        carried, staged, stagedAux, staged, Nil,
+        maxAttempts, beforeCommit))
+      (v, clean.size.toLong + addedN, staged.size.toLong)
+    }
   }
 
-  /** Copy-on-write MERGE (upsert) — the Delta MERGE INTO write path,
-    * completing the log's write trio (append / delete / merge):
-    * matched keys are REPLACED by their update rows, unmatched update
-    * rows INSERT. One pass finds the data files holding matched keys
-    * (a left-semi join against the update keys; the collect is file
-    * PATHS, metadata-sized), clean files carry over byte-identical,
-    * dirty files are rewritten WITHOUT their matched rows, and every
-    * update row (replacement + insert alike) stages into new files —
-    * all published as ONE atomic commit, op="merge" (a data-changing
-    * rewrite: changes() refuses file-diff ranges across it, pinned
-    * readers at older versions still see pre-merge rows).
-    *
-    * 100 TB posture: cost scales with the DIRTY file set plus the
-    * update volume, never the table — a key-aligned layout (partition
-    * or cluster by the merge key, q_table_optimize) keeps the dirty
-    * set small, and the dirty-file scan pushes the key predicate to
-    * parquet. Returns (newVersion, filesCarried, filesRewritten).
-    *
-    * `deleteKeys` (r11, VERDICT item 1): an optional key RELATION
-    * whose matching rows are removed in the SAME commit — WHEN MATCHED
-    * THEN DELETE alongside the upsert, the shape the incremental
-    * view's fold needs (survivors merge, zero-count keys drop). The
-    * delete side stays fully distributed: its keys join into the
-    * dirty-file discovery and the rewrite's anti-join as a DataFrame —
-    * never a collected driver-side list, so a mass delete (every key
-    * vanishing) is just a bigger shuffle, not a driver OOM. A key in
-    * both relations resolves as an update (delete-then-reinsert). */
+  /** Copy-on-write MERGE (upsert) — MERGE INTO ([[rowLevel]] keyed on
+    * `keyCol`): matched keys are REPLACED by their update rows,
+    * unmatched update rows INSERT, and `deleteKeys` (r11), an optional
+    * key relation, removes its matching rows in the SAME commit (WHEN
+    * MATCHED THEN DELETE, the shape an incremental view's fold needs).
+    * A key in both relations resolves as an update. Returns
+    * (newVersion, filesCarried, filesRewritten). */
   def merge(s: SparkSession, root: String, updates: DataFrame,
       keyCol: String, nInsertFiles: Int,
       extraMeta: Seq[String] = Nil,
@@ -3423,14 +3535,9 @@ object CommitLog {
     mergeKeyed(s, root, updates, Seq(keyCol), nInsertFiles, extraMeta,
       deleteKeys)
 
-  /** [[merge]] on a COMPOSITE key (r11): the match predicate is
-    * equality on EVERY column in `keyCols` — `MERGE ... ON t.a = s.a
-    * AND t.b = s.b`, the multi-column upsert real schemas need (and
-    * what the multi-group-key incremental views fold through). All
-    * semantics (CoW carry, CDF, constraints, snapshot isolation,
-    * deleteKeys) are the single-key merge's verbatim; a NULL in any
-    * key column never matches (SQL equality), exactly the single-key
-    * contract. */
+  /** [[merge]] on a COMPOSITE key (r11): equality on EVERY column in
+    * `keyCols` (`ON t.a = s.a AND t.b = s.b`); otherwise the
+    * single-key merge verbatim. */
   def mergeKeyed(s: SparkSession, root: String, updates0: DataFrame,
       keyCols: Seq[String], nInsertFiles: Int,
       extraMeta: Seq[String] = Nil,
@@ -3483,23 +3590,12 @@ object CommitLog {
             s"for '$name', breaking id uniqueness; de-duplicate the " +
             "source (e.g. keep the last image per key) before merging")
         val matched = updates0.join(tgtIds, keyCols, "inner")
-        // pin ONE materialization: count, id assignment and staging
-        // must see the same rows (r14, ADVICE — see fillIdentityAt)
-        val unmatched = updates0.join(tgtIds.select(kc: _*), keyCols, "left_anti")
-          .localCheckpoint(true)
-        val base = prev.idHwm
-        val hwm0 = base.getOrElse(start - step)
-        val n = unmatched.count()
-        val alloc = s.createDataFrame(
-          unmatched.rdd.zipWithIndex().map { case (r, i) =>
-            org.apache.spark.sql.Row.fromSeq(
-              r.toSeq :+ (hwm0 + step * (i + 1L))) },
-          unmatched.schema.add(name, org.apache.spark.sql.types.LongType,
-            nullable = false))
+        val (alloc, hwm) = fillIdentityAt(s, props,
+          updates0.join(tgtIds.select(kc: _*), keyCols, "left_anti"), "merge", Some(prev))
         // a no-insert merge allocates nothing: no mark to write, no
         // race to guard — the commit carries the head's mark as usual
-        if (n == 0L) (matched.unionByName(alloc), None, None)
-        else (matched.unionByName(alloc), Some(hwm0 + step * n), base)
+        if (hwm.contains(prev.idHwm.getOrElse(start - step))) (matched.unionByName(alloc), None, None)
+        else (matched.unionByName(alloc), hwm, prev.idHwm)
     }
     // the update/insert rows are full row images — fill-or-validate
     // generated columns exactly like an append (r13, ADVICE); the
@@ -3510,95 +3606,12 @@ object CommitLog {
     // unknown or retyped update column fails the COMMIT, never a later
     // read (use mergeEvolved to add columns) (r11)
     requireSchemaCompatible(Some(prev), updates, "merge")
-    val files = prev.absFiles
-    // the insert staging depends on nothing below (not the dirty-file
-    // split, not the CDF) — launch it FIRST so it overlaps the
-    // dirty-file collect AND the survivor rewrite (r20, guide §2.6);
-    // every staging writes to its own temp dir, so the three
-    // concurrent writes never share state
-    val insertF = graft.functions.Par.async(
-      stageRewrite(s, root, prev, updates, nInsertFiles))
-    val updKeys = updates.select(kc: _*).distinct()
-    val delKeys = deleteKeys.map(_.select(kc: _*).distinct())
-    val keys = delKeys.map(updKeys.unionByName(_).distinct()).getOrElse(updKeys)
-    // the file identity is captured BEFORE the join (after a join
-    // input_file_name is ambiguous across sources — readSubsetWithFile
-    // pins it at the scan); canonical paths on both sides (see
-    // delete() — a relative root would otherwise silently turn the
-    // merge into insert-only)
-    val dirtyCanon =
-      if (files.isEmpty) Set.empty[String] // row-less target: all inserts
-      else readSubsetWithFile(s, prev, files)
-        .select((kc :+ col("_graft_file")): _*)
-        .join(keys, keyCols, "left_semi")
-        .select(col("_graft_file")).distinct()
-        .collect().map(r =>
-          new java.io.File(new java.net.URI(r.getString(0))).getCanonicalPath)
-        .toSet
-    val (dirty, clean) =
-      files.partition(f => dirtyCanon.contains(new java.io.File(f).getCanonicalPath))
-    val carried = clean.map(p => relativize(root, p))
-    // row-level CDF (r10) from data the CoW pass already touches:
-    // matched rows in dirty files are the pre-images; updates on
-    // matched keys are the post-images; updates on unmatched keys are
-    // inserts. Matched keys live ONLY in dirty files (that is what
-    // made them dirty), so the semi/anti splits below are exact.
-    // Staged ONLY for tables that opted in via enableChangeDataFeed
-    // (default OFF — the Delta contract). Launched async BEFORE the
-    // two rewrite stagings so all three independent writes run
-    // concurrently (r20, guide §2.6).
-    val cdfF: Option[() => Seq[String]] =
-      if (!cdfOn(props)) None
-      else Some {
-        import org.apache.spark.sql.functions.lit
-        val dirtyRows =
-          if (dirty.isEmpty) updates.limit(0)
-          else readSubset(s, prev, dirty)
-        val pre = dirtyRows.join(updKeys, keyCols, "left_semi")
-          .withColumn("_change_type", lit("update_preimage"))
-        val matchedKeys = pre.select(kc: _*).distinct()
-        val post = updates.join(matchedKeys, keyCols, "left_semi")
-          .withColumn("_change_type", lit("update_postimage"))
-        val ins = updates.join(matchedKeys, keyCols, "left_anti")
-          .withColumn("_change_type", lit("insert"))
-        // delete-side matched rows (updates win on a shared key, so
-        // anti-join the update keys out) record as plain deletes
-        val del = delKeys.map(dk =>
-          dirtyRows.join(dk, keyCols, "left_semi")
-            .join(updKeys, keyCols, "left_anti")
-            .withColumn("_change_type", lit("delete")))
-        stageCdfAsync(s, root,
-          del.foldLeft(pre.unionByName(post).unionByName(ins))(_.unionByName(_)),
-          prev.schema)
-      }
-    val (rewritten, rewriteAux) =
-      if (dirty.isEmpty) (Nil, Aux())
-      else stageRewrite(s, root, prev,
-        readSubset(s, prev, dirty).join(keys, keyCols, "left_anti"),
-        math.max(1, dirty.size))
-    // update rows keep the table's layout too: a partitioned table's
-    // merge stages its replacements + inserts partition-aligned
-    // (launched before the dirty-file collect — resolve it here)
-    val (inserted, insertAux) = insertF()
-    val cdf: Option[Seq[String]] = cdfF.map(_())
-    // semantic conflict rebase (r11, shared loop): a concurrent pure
-    // APPEND and this merge both commit — the late rows land after the
-    // merge (WriteSerializable: a late row sharing a merge key is NOT
-    // matched; it is a new row the merge never saw, Delta's
-    // blind-append allowance). Rewrite-vs-rewrite still refuses.
-    val (v, addedN) = commitRewriteRebasing(s, root, prev,
-      "merge", carried, rewritten ++ inserted,
-      rewriteAux.merged(insertAux), rewritten ++ inserted,
-      cdf.map(renderCdf).toSeq ++ extraMeta, maxAttempts, beforeCommit,
-      newIdHwm = idHwm, idHwmBase = idBase,
-      // value×value narrow rebase (r14): a merge is safe past an
-      // update/merge winner iff none of the winner's new rows carry
-      // MY merge keys (a serial winner-then-merge would have matched
-      // and rewritten them)
-      loserTouches = Some((hv, fs) =>
-        readSubset(s, hv, fs).select(kc: _*)
-          .join(keys, keyCols, "left_semi").limit(1).count()))
-    (v, clean.size.toLong + addedN, rewritten.size.toLong)
+    val r = rowLevel(s, root, prev, props, "merge",
+      KeyTouch(keyCols, updates.select(kc: _*).distinct(),
+        deleteKeys.map(_.select(kc: _*).distinct())),
+      Nil, Some((updates, nInsertFiles)), CopyOnWrite, extraMeta,
+      maxAttempts, beforeCommit, newIdHwm = idHwm, idHwmBase = idBase)
+    (r.version, r.filesCarried, r.filesRewritten)
   }
 
   /** MERGE with automatic schema evolution (r11, VERDICT item 7) —
@@ -3649,242 +3662,35 @@ object CommitLog {
     if (fresh.nonEmpty) { evolveSchema(s, root, fresh); () }
   }
 
-  /** Copy-on-write UPDATE — `UPDATE ... SET ... WHERE` as a write
-    * path, completing the log's row-level DML trio (delete / merge /
-    * update). Same dirty-file discovery as [[delete]]: one pushdown
-    * scan finds the files holding cond-matching rows (the collect is
-    * file PATHS, metadata-sized), clean files carry over
-    * byte-identical with their stats, dirty files rewrite with the
-    * assignments applied ONLY to matching rows (three-valued logic: a
-    * NULL cond is not a match, the row survives unchanged), all
-    * published as ONE atomic commit, op="update" — a data-changing
-    * rewrite (changes() refuses file-diff ranges across it; pinned
-    * readers at older versions still see pre-update values).
-    *
-    * Schema is INVARIANT under UPDATE: every assignment must target
-    * an existing column and casts to that column's current type
-    * (widen the schema first via evolveSchema if needed). On a
-    * partitioned table, assigning the partition column is refused —
-    * that would MOVE rows across partitions (use merge/overwrite);
-    * other assignments are fine, the rewritten files just drop their
-    * partition entries (unprunable but correct — the delete
-    * convention). Post-image rows re-validate CHECK constraints
-    * BEFORE anything stages — an update cannot write rows an append
-    * would have refused. Typed column stats are recomputed for the
-    * rewritten files (restageColStats — data-skipping survives).
-    * With enableChangeDataFeed, the matched rows stage under cdf/ as
-    * update_preimage/update_postimage pairs (cost ∝ updated rows).
-    *
-    * 100 TB posture: cost scales with the DIRTY file set, never the
-    * table — a predicate aligned with the layout (partition/z-order
-    * keys) touches few files, and the dirty-file scan pushes `cond`
-    * to parquet. Returns (newVersion, filesCarried, filesRewritten). */
+  /** Copy-on-write UPDATE — `UPDATE ... SET ... WHERE` ([[rowLevel]]):
+    * dirty files rewrite with the assignments applied to the matching
+    * rows only. Returns (newVersion, filesCarried, filesRewritten). */
   def update(s: SparkSession, root: String,
       cond: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)],
       maxAttempts: Int = 10,
       beforeCommit: () => Unit = () => ()): (Long, Long, Long) = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(assignments.nonEmpty, "update: no SET assignments")
-    val prev = headOf(root, "update")
-    val props = tableProperties(root)
-    val files = prev.absFiles
-    if (files.isEmpty) return (prev.version, 0L, 0L) // row-less snapshot: no-op
-    val full = readSubsetWithFile(s, prev, files)
-    val types = full.schema.fields.filterNot(_.name == "_graft_file")
-      .map(f => f.name -> f.dataType).toMap
-    assignments.foreach { case (c, _) =>
-      require(types.contains(c),
-        s"update: column '$c' does not exist — UPDATE never adds " +
-          "columns (evolve the schema first)")
-    }
-    prev.aux.partCol.toSeq.flatMap(_.split(',')).foreach { pc =>
-      require(!assignments.exists(_._1 == pc),
-        s"update: assigning partition column '$pc' would move rows " +
-          "across partitions — use merge or overwrite instead")
-    }
-    val hit = coalesce(cond, lit(false))
-    val asg = assignments.toMap
-    // generated columns under UPDATE (r13, ADVICE): never assignable
-    // (their value is the expression's, not the writer's) and
-    // RECOMPUTED from the post-image — an assignment to a source
-    // column must not leave a stale derived value behind (the Delta
-    // generated-column contract for UPDATE/MERGE)
-    val gens = generatedColsOf(props)
-    assignments.foreach { case (c, _) =>
-      require(!gens.exists(_._1 == c),
-        s"update: column '$c' is GENERATED — omit it from SET; it " +
-          "recomputes from its expression")
-      require(!identityOf(props).exists(_._1 == c),
-        s"update: column '$c' is IDENTITY — ids are immutable")
-    }
-    // ONE select: the predicate AND every RHS evaluate against the
-    // PRE-image row — SQL UPDATE semantics. A withColumn chain would
-    // re-resolve them against earlier assignments' outputs (cond over
-    // an assigned column would flip mid-statement, and
-    // SET a = b, b = a would fail to swap). Generated columns then
-    // recompute over the post-image frame (all rows — a non-hit row
-    // recomputes to the value it already holds, every write path
-    // having validated it).
-    def applied(df: DataFrame): DataFrame = {
-      val post = df.select(df.columns.map { c =>
-        asg.get(c)
-          .map(e => when(hit, e.cast(types(c))).otherwise(col(c)).as(c))
-          .getOrElse(col(c))
-      }.toIndexedSeq: _*)
-      gens.foldLeft(post) { case (d, (name, sql)) =>
-        d.withColumn(name,
-          org.apache.spark.sql.functions.expr(sql).cast(types(name)))
-      }
-    }
-    // canonical paths on both sides (see delete — a relative root
-    // would otherwise silently no-op the update)
-    val dirtyCanon = full.filter(cond)
-      .select(col("_graft_file")).distinct()
-      .collect().map(r =>
-        new java.io.File(new java.net.URI(r.getString(0))).getCanonicalPath)
-      .toSet
-    val (dirty, clean) =
-      files.partition(f => dirtyCanon.contains(new java.io.File(f).getCanonicalPath))
-    val carried = clean.map(p => relativize(root, p))
-    if (dirty.nonEmpty) {
-      // the post-images are the only NEW row states this commit
-      // introduces — they must satisfy the table's CHECK constraints
-      enforceConstraints(s, props,
-        applied(readSubset(s, prev, dirty)).filter(hit), "update")
-    }
-    // CDF staging overlaps the post-image rewrite (r20, guide §2.6):
-    // independent writes over the same dirty-file scan
-    val cdfF: Option[() => Seq[String]] =
-      if (!cdfOn(props)) None
-      else if (dirty.isEmpty) Some(() => Nil)
-      else Some(stageCdfAsync(s, root,
-        readSubset(s, prev, dirty).filter(cond)
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(applied(readSubset(s, prev, dirty)).filter(hit)
-            .withColumn("_change_type", lit("update_postimage"))), prev.schema))
-    val (rewritten, rewriteAux) =
-      if (dirty.isEmpty) (Nil, Aux())
-      else stageRewrite(s, root, prev,
-        applied(readSubset(s, prev, dirty)), math.max(1, dirty.size))
-    val cdf: Option[Seq[String]] = cdfF.map(_())
-    // semantic conflict rebase (r11, shared loop): concurrent pure
-    // appends carry forward (their rows land after the update — late
-    // cond-matching rows stay untouched, the blind-append allowance);
-    // rewrite-vs-rewrite still refuses.
-    val (v, addedN) = commitRewriteRebasing(s, root, prev,
-      "update", carried, rewritten, rewriteAux, rewritten,
-      cdf.map(renderCdf).toSeq, maxAttempts, beforeCommit,
-      // value×value narrow rebase (r14): an update/merge winner is
-      // safe iff none of ITS new rows match MY predicate — one
-      // limit(1)-bounded probe over the winner's added files
-      loserTouches = Some((hv, fs) =>
-        readSubset(s, hv, fs).filter(cond).limit(1).count()))
-    (v, clean.size.toLong + addedN, rewritten.size.toLong)
+    val r = deleteOrUpdate(s, root, cond, assignments, vectors = false,
+      maxAttempts = maxAttempts, beforeCommit = beforeCommit)
+    (r.version, r.filesCarried, r.filesRewritten)
   }
 
-  /** MERGE-ON-READ update — [[update]]'s deletion-vector twin (the
-    * Delta DV-for-UPDATE design): instead of rewriting every dirty
-    * file, the matched rows' OLD versions are masked by a vector
-    * (cost ∝ matched rows) and their NEW versions append as fresh
-    * files — write cost ∝ updated rows, never the dirty-file volume.
-    * A point update of 100 rows scattered across 10k wide files
-    * writes one sidecar + one small file instead of 10k rewrites.
-    * Same semantics as [[update]] otherwise: three-valued cond,
-    * schema invariance, post-image CHECK validation, CDF pre/post
-    * pairs, snapshot isolation, changes() refusal — and typed stats
-    * are computed for the appended post-image files. Returns
-    * (newVersion, filesWithNewVectors, rowsUpdated). */
+  /** MERGE-ON-READ update — [[update]] with deletion vectors
+    * ([[rowLevel]]): the matched rows' old versions are masked and
+    * their new versions append as `nFiles` files, so a point update of
+    * 100 rows across 10k wide files writes one sidecar and one small
+    * file. Returns (newVersion, filesWithNewVectors, rowsUpdated). */
   def updateMergeOnRead(s: SparkSession, root: String,
       cond: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)],
       nFiles: Int = 1,
       maxAttempts: Int = 10,
       beforeCommit: () => Unit = () => ()): (Long, Long, Long) = {
-    import org.apache.spark.sql.functions.{col, lit, substring_index}
     require(assignments.nonEmpty, "updateMergeOnRead: no SET assignments")
-    val prev = headOf(root, "update")
-    val props = tableProperties(root)
-    val files = prev.absFiles
-    if (files.isEmpty) return (prev.version, 0L, 0L) // row-less snapshot: no-op
-    val full = readSubsetWithFilePos(s, prev, files)
-    val types = full.schema.fields
-      .filterNot(f => f.name == "_graft_file" || f.name == "_graft_pos")
-      .map(f => f.name -> f.dataType).toMap
-    assignments.foreach { case (c, _) =>
-      require(types.contains(c),
-        s"updateMergeOnRead: column '$c' does not exist — UPDATE never " +
-          "adds columns (evolve the schema first)")
-    }
-    prev.aux.partCol.foreach { pc =>
-      require(!assignments.exists(_._1 == pc),
-        s"updateMergeOnRead: assigning partition column '$pc' would " +
-          "move rows across partitions — use merge or overwrite instead")
-    }
-    // filter(cond) is the three-valued gate: NULL-cond rows are not
-    // matches, so they neither mask nor re-append
-    val matched = full.filter(cond)
-    // old versions die by vector ...
-    val staged = stageDvFiles(s, root, matched
-      .select(substring_index(col("_graft_file"), "/", -1).as("f"),
-        col("_graft_pos").as("i")))
-    // per-file masked counts, like deleteMergeOnRead (r16)
-    val perFile =
-      if (staged.isEmpty) Map.empty[String, Long]
-      else s.read.parquet(
-          staged.map(f => new java.io.File(root, f).toString): _*)
-        .groupBy(col("f")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val (nRows, affected) = (perFile.values.sum, perFile.keySet)
-    // ... new versions append; they are the only NEW row states, so
-    // they alone re-validate CHECK constraints. ONE select: every RHS
-    // evaluates against the PRE-image row (see update()'s applied).
-    // Generated columns: unassignable + recomputed from the
-    // post-image, exactly update()'s contract (r13, ADVICE)
-    val gens = generatedColsOf(props)
-    assignments.foreach { case (c, _) =>
-      require(!gens.exists(_._1 == c),
-        s"updateMergeOnRead: column '$c' is GENERATED — omit it from " +
-          "SET; it recomputes from its expression")
-      require(!identityOf(props).exists(_._1 == c),
-        s"updateMergeOnRead: column '$c' is IDENTITY — ids are immutable")
-    }
-    val postBase = matched.drop("_graft_file", "_graft_pos")
-    val asg = assignments.toMap
-    val post0 = postBase.select(postBase.columns.map { c =>
-      asg.get(c).map(e => e.cast(types(c)).as(c)).getOrElse(col(c))
-    }.toIndexedSeq: _*)
-    val post = gens.foldLeft(post0) { case (d, (name, sql)) =>
-      d.withColumn(name,
-        org.apache.spark.sql.functions.expr(sql).cast(types(name)))
-    }
-    if (nRows > 0) enforceConstraints(s, props, post, "updateMergeOnRead")
-    // CDF staging overlaps the post-image insert staging (r20, §2.6)
-    val cdfF: Option[() => Seq[String]] =
-      if (!cdfOn(props)) None
-      else if (nRows == 0) Some(() => Nil)
-      else Some(stageCdfAsync(s, root,
-        matched.drop("_graft_file", "_graft_pos")
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(post.withColumn("_change_type", lit("update_postimage"))),
-        prev.schema))
-    val (inserted, insertAux) =
-      if (nRows == 0) (Nil, Aux())
-      else stageRewrite(s, root, prev, post, math.max(1, nFiles))
-    val cdf: Option[Seq[String]] = cdfF.map(_())
-    val byName = files.map(f =>
-      new java.io.File(f).getName -> relativize(root, f)).toMap
-    val newDvs = Aux(
-      dvs = affected.flatMap(byName.get).map(_ -> staged).toMap,
-      dvRows = perFile.flatMap { case (n, c) => byName.get(n).map(_ -> c) })
-    // sidecar-only rebase past append-ish winners (r14 — the shared
-    // commitDvRebasing loop; see deleteMergeOnRead): the vectors and
-    // the inserted post-image files are staged once, retries cost
-    // manifest metadata only
-    val v = commitDvRebasing(s, root, prev, "update",
-      newDvs.merged(insertAux), cdf.map(renderCdf).toSeq,
-      inserted, maxAttempts, beforeCommit)
-    (v, affected.size.toLong, nRows)
+    val r = deleteOrUpdate(s, root, cond, assignments, vectors = true,
+      nFiles = nFiles, maxAttempts = maxAttempts, beforeCommit = beforeCommit)
+    (r.version, r.filesVectored, r.rowsTouched)
   }
 
   /** RESTORE — roll the table back to `toVersion` (the Delta RESTORE
@@ -4512,9 +4318,11 @@ object CommitLog {
       ranges: Seq[RangeProbe], ors: Seq[Seq[SegNode]])
   private def segPrune(root: String, version: Long, tree: ProbeTree)
       : (Seq[SegmentRef], Seq[SegmentRef], SegNode) = {
+    // one manifest parse: the stats column and the trust flag both
+    // derive from these refs
     val segs = segmentsOf(root, version)
-    val statsCol = segmentStatsCol(root, version)
-    lazy val trusted = segmentStatsTrusted(root, version)
+    val statsCol = statsColOfSegments(root, segs)
+    lazy val trusted = statsTrustedOfSegments(root, segs)
     def rangesOf(rs: Seq[RangeProbe]): Seq[RangeProbe] = {
       val ps = rs.filter(p => statsCol.contains(p.col) &&
         p.lo.forall(_.isInstanceOf[Long]) && p.hi.forall(_.isInstanceOf[Long]))
@@ -4839,8 +4647,9 @@ object CommitLog {
     * read from the FIRST segment (appendSegment stamps every segment
     * with its statsCol; one table uses one column). */
   def segmentStatsCol(root: String, version: Long): Option[String] =
-    segmentsOf(root, version).headOption.flatMap(sr =>
-      segmentStatsColOf(root, sr.path))
+    statsColOfSegments(root, segmentsOf(root, version))
+  private def statsColOfSegments(root: String, segs: Seq[SegmentRef]): Option[String] =
+    segs.headOption.flatMap(sr => segmentStatsColOf(root, sr.path))
 
   /** One segment file's own recorded stats column. */
   private def segmentStatsColOf(root: String, segPath: String): Option[String] =
@@ -4858,11 +4667,11 @@ object CommitLog {
     * refuse — folding a second column's bounds under the first's name
     * would mis-prune files that DO hold matching rows and answer
     * MIN/MAX with the wrong column's extrema. */
-  def segmentStatsTrusted(root: String, version: Long): Boolean = {
-    val segs = segmentsOf(root, version)
+  def segmentStatsTrusted(root: String, version: Long): Boolean =
+    statsTrustedOfSegments(root, segmentsOf(root, version))
+  private def statsTrustedOfSegments(root: String, segs: Seq[SegmentRef]): Boolean =
     segs.forall(_.nRows.isDefined) ||
       segs.map(sr => segmentStatsColOf(root, sr.path)).distinct.size <= 1
-  }
 
   /** Two-level pruned FILE LISTING of a segmented version under
     * Long range probes on the segment stats column (r16 — the SQL
@@ -5125,17 +4934,32 @@ object CommitLog {
   }
 
   private def stageDataFiles(s: SparkSession, root: String,
-      df: DataFrame, nFiles: Int, schema: Option[StructType]): Seq[String] = {
-    val stage = newStage(root, ".stage-")
-    writeStaged(s, toPhysicalDf(df, schema), nFiles, stage.toString)
-    moveStaged(root, stage, "data")
-  }
+      df: DataFrame, nFiles: Int, schema: Option[StructType]): Seq[String] =
+    stageInto(root, ".stage-", "data")(
+      writeStaged(s, toPhysicalDf(df, schema), nFiles, _))
 
   /** A fresh staging dir under `root` (a first commit may create the
     * table root itself). */
   private def newStage(root: String, prefix: String): java.nio.file.Path = {
     new java.io.File(root).mkdirs()
     java.nio.file.Files.createTempDirectory(new java.io.File(root).toPath, prefix)
+  }
+
+  /** Write into a fresh staging dir, then [[moveStaged]] its files
+    * under `root/dir`; a write that throws scrubs its staging dir. */
+  private def stageInto(root: String, prefix: String, dir: String)(
+      write: String => Unit): Seq[String] = {
+    val stage = newStage(root, prefix)
+    try write(stage.toString)
+    catch { case t: Throwable => scrubDir(stage.toFile); throw t }
+    moveStaged(root, stage, dir)
+  }
+
+  private def scrubDir(d: java.io.File): Unit = {
+    Option(d.listFiles()).foreach(_.foreach { f =>
+      if (f.isDirectory) scrubDir(f) else f.delete()
+    })
+    d.delete()
   }
 
   /** The shared staging tail: move the `.parquet` files a write left in
@@ -5156,22 +4980,9 @@ object CommitLog {
         moveWithFooterCount(p, dst)
         s"$dir/${dst.getName}"
       }.toSeq
-    Option(stage.toFile.listFiles()).foreach(_.foreach(_.delete()))
-    stage.toFile.delete()
+    scrubDir(stage.toFile)
     moved
   }
-
-  /** Stage a CDF row set CONCURRENTLY with the commit's data-file
-    * staging (r20, guide §2.6): the changelog write and the data
-    * rewrite are independent jobs over separate temp dirs, so call
-    * sites launch this BEFORE staging data files and resolve the
-    * returned thunk when assembling the commit metadata — the two
-    * writes' task tails backfill each other and their driver-side
-    * planning/commit rounds overlap, which on tiny commits is most of
-    * the wall. The thunk rethrows the staging exception if any. */
-  private def stageCdfAsync(s: SparkSession, root: String,
-      df: => DataFrame, schema: Option[StructType]): () => Seq[String] =
-    graft.functions.Par.async(stageCdfFiles(s, root, df, schema))
 
   /** Stage a change-data-feed row set under cdf/. CDF volumes are
     * usually the CHANGED rows — orders below the data files they
@@ -5182,10 +4993,7 @@ object CommitLog {
     * stage-then-atomic-move discipline as data files: cdf files are
     * invisible until a manifest lists them. */
   private def stageCdfFiles(s: SparkSession, root: String,
-      df: DataFrame, schema: Option[StructType]): Seq[String] = {
-    val stage = newStage(root, ".cdfstage-")
-    toPhysicalDf(df, schema).coalesce(8)
-      .write.mode("overwrite").parquet(stage.toString)
-    moveStaged(root, stage, "cdf")
-  }
+      df: DataFrame, schema: Option[StructType]): Seq[String] =
+    stageInto(root, ".cdfstage-", "cdf")(
+      toPhysicalDf(df, schema).coalesce(8).write.mode("overwrite").parquet(_))
 }

@@ -3161,4 +3161,43 @@ class CatalogSpec extends SparkSpec {
     assert(spark.sql(s"SELECT * FROM $cat.st").count() ===
       spark.sql(s"SELECT * FROM $cat.plain").count())
   }
+
+  test("row-level DML: copy-on-write and deletion-vector tables answer and refuse alike") {
+    val (cat, _) = freshCatalog()
+    val modes = Seq("cow" -> "", "dv" -> " TBLPROPERTIES ('enableDeletionVectors' = 'true')")
+    // an empty table: nothing to change, version 0 stays the head
+    modes.foreach { case (m, props) =>
+      spark.sql(s"CREATE TABLE $cat.empty_$m (id BIGINT, v INT)$props")
+      Seq(s"UPDATE $cat.empty_$m SET v = 1 WHERE id = 1",
+        s"DELETE FROM $cat.empty_$m WHERE id = 1").foreach { stmt =>
+        val r = spark.sql(stmt).collect()(0)
+        assert((r.getLong(0), r.getLong(1), r.getLong(2)) === ((0L, 0L, 0L)), s"$m: $stmt")
+      }
+    }
+    // a composite partition spec: SET on either spec column refuses in
+    // both modes, with one message
+    val refusals = modes.map { case (m, props) =>
+      spark.sql(s"CREATE TABLE $cat.part_$m (k BIGINT, a STRING, b STRING) PARTITIONED BY (a, b)$props")
+      spark.sql(s"INSERT INTO $cat.part_$m VALUES (1, 'x', 'y'), (2, 'x', 'z')")
+      Seq("a", "b").map { c =>
+        intercept[IllegalArgumentException](
+          spark.sql(s"UPDATE $cat.part_$m SET $c = 'q' WHERE k = 1").collect()).getMessage
+      }
+    }
+    assert(refusals.distinct.size === 1, refusals)
+    assert(refusals.head.head.contains("assigning partition column 'a'"), refusals.head.head)
+    assert(spark.sql(s"SELECT * FROM $cat.part_dv WHERE a = 'q' OR b = 'q'").count() === 0L)
+    // CHECK judges the post-image of each row the predicate matched
+    // BEFORE the assignment, also when the assignment moves the
+    // predicate's own column
+    modes.foreach { case (m, props) =>
+      spark.sql(s"CREATE TABLE $cat.chk_$m (k BIGINT, v INT)$props")
+      spark.sql(s"ALTER TABLE $cat.chk_$m SET TBLPROPERTIES ('constraint.v_small' = 'v < 3')")
+      spark.sql(s"INSERT INTO $cat.chk_$m VALUES (1, 1), (2, 2)")
+      val ex = intercept[IllegalArgumentException](
+        spark.sql(s"UPDATE $cat.chk_$m SET v = 5 WHERE v = 1").collect())
+      assert(ex.getMessage.contains("v_small"), s"$m: ${ex.getMessage}")
+      assert(spark.sql(s"SELECT * FROM $cat.chk_$m WHERE v = 5").count() === 0L, m)
+    }
+  }
 }

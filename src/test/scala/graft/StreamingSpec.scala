@@ -1200,6 +1200,42 @@ class StreamingSpec extends SparkSpec {
     // a second reorg is a no-op: same head, nothing rewritten
     val (v4, _, r4) = CommitLog.reorgPurge(spark, root)
     assert(v4 === v3 && r4 === 0L, s"no-op reorg published v$v4 ($r4 rewrites)")
+    // copy-on-write and deletion vectors are ONE logical operation: on
+    // a CDF table each mode of a delete and an update leaves the same
+    // head rows and records the same change rows by type. The update
+    // assigns its own predicate column, so a post-image must come from
+    // the row the predicate matched BEFORE the assignment.
+    val hit = col("user_id") % 4 === 1
+    val asg = Seq("user_id" -> (col("user_id") + 1L), "value" -> (col("value") + 1.0))
+    val cases: Seq[(String, (String, Boolean) => Unit)] = Seq(
+      "delete" -> { (r, dv) =>
+        if (dv) CommitLog.deleteMergeOnRead(spark, r, hit) else CommitLog.delete(spark, r, hit); () },
+      "update" -> { (r, dv) =>
+        if (dv) CommitLog.updateMergeOnRead(spark, r, hit, asg) else CommitLog.update(spark, r, hit, asg); () })
+    val small = ev.limit(300)
+    cases.foreach { case (name, op) =>
+      val Seq(cow, dv) = Seq(false, true).map { vectors =>
+        val r = java.nio.file.Files.createTempDirectory(s"graft_cl_one_$name").toString
+        CommitLog.setTableProperty(r, "enableChangeDataFeed", "true")
+        CommitLog.append(spark, r, small.filter(col("event_id") % 2 === 0), 2)
+        CommitLog.append(spark, r, small.filter(col("event_id") % 2 =!= 0), 2)
+        op(r, vectors)
+        val v = CommitLog.latestVersion(r).get
+        val cols = Seq("event_id", "user_id", "value")
+        (CommitLog.read(spark, r, v).select(cols.map(col): _*),
+          CommitLog.changesRows(spark, r, v - 1, v).select((cols :+ "_change_type").map(col): _*))
+      }
+      Seq("head rows" -> (cow._1, dv._1), "change rows" -> (cow._2, dv._2)).foreach {
+        case (what, (a, b)) =>
+          assert(a.count() === b.count() && a.exceptAll(b).count() === 0 &&
+            b.exceptAll(a).count() === 0, s"$name: CoW and DV $what diverge")
+      }
+      val kinds = cow._2.groupBy(col("_change_type")).count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val n = small.filter(hit).count()
+      assert(kinds === (if (name == "delete") Map("delete" -> n)
+        else Map("update_preimage" -> n, "update_postimage" -> n)), s"$name: $kinds")
+    }
   }
 
   test("commit log: column mapping — rename/drop are metadata-only, stats and CoW survive (r10)") {
@@ -3682,5 +3718,69 @@ class StreamingSpec extends SparkSpec {
     assert(CommitLog.segmentsOf(seg, 0L) === segs.take(1))
     assert(CommitLog.history(seg) ===
       Seq((0L, "append", segs.head.nFiles.toLong), (1L, "append", segs.map(_.nFiles.toLong).sum)))
+  }
+
+  test("row-level writers: a write that fails before it publishes leaves the head and the files as they were") {
+    import graft.sources.CommitLog
+    val ev = Tables(spark, sf, "events")
+      .select(col("event_id"), col("user_id"), col("value")).limit(200)
+    val hit = col("user_id") % 4 === 1
+    val asg = Seq("value" -> lit(0.0))
+    val boom = () => throw new IllegalStateException("injected before commit")
+    val ups = ev.filter(hit).withColumn("value", col("value") + 1.0)
+      .unionByName(ev.limit(5).withColumn("event_id", col("event_id") + 1000000000L))
+    // a delete-key relation that throws inside the dirty-file collect,
+    // while the merge's insert staging is in flight
+    val badKeys = ev.select(when(col("event_id") >= 0,
+      raise_error(lit("injected in the dirty-file collect"))).otherwise(col("event_id")).as("event_id"))
+    val none: String => Unit = _ => ()
+    val cases: Seq[(String, String => Unit, String => Any)] = Seq(
+      ("delete", none, r => CommitLog.delete(spark, r, hit, beforeCommit = boom)),
+      ("update", none, r => CommitLog.update(spark, r, hit, asg, beforeCommit = boom)),
+      ("deleteMergeOnRead", none, r => CommitLog.deleteMergeOnRead(spark, r, hit, beforeCommit = boom)),
+      ("updateMergeOnRead", none,
+        r => CommitLog.updateMergeOnRead(spark, r, hit, asg, beforeCommit = boom)),
+      ("mergeKeyed", none,
+        r => CommitLog.mergeKeyed(spark, r, ups, Seq("event_id"), 2, beforeCommit = boom)),
+      ("reorgPurge", r => { CommitLog.deleteMergeOnRead(spark, r, hit); () },
+        r => CommitLog.reorgPurge(spark, r, beforeCommit = boom)),
+      ("mergeKeyed, collect throws", none,
+        r => CommitLog.mergeKeyed(spark, r, ups, Seq("event_id"), 2, deleteKeys = Some(badKeys))))
+    cases.foreach { case (name, prepare, fail) =>
+      val r = java.nio.file.Files.createTempDirectory("graft_cl_scrub").toString
+      CommitLog.setTableProperty(r, "enableChangeDataFeed", "true")
+      CommitLog.append(spark, r, ev, 4)
+      prepare(r)
+      val head = CommitLog.latestVersion(r).get
+      val before = CommitLog.read(spark, r, head).collect().map(_.toString).sorted.toSeq
+      val ex = intercept[Exception](fail(r))
+      assert(ex.getMessage.contains("injected"), s"$name: ${ex.getMessage}")
+      assert(CommitLog.latestVersion(r).contains(head), s"$name: published past the failure")
+      assert(CommitLog.read(spark, r, head).collect().map(_.toString).sorted.toSeq === before, name)
+      val manifests = new java.io.File(r, "_graft_log").listFiles()
+        .filter(_.getName.endsWith(".json"))
+        .map(f => java.nio.file.Files.readString(f.toPath)).mkString
+      val orphans = Seq("data", "cdf", "dv")
+        .flatMap(d => Option(new java.io.File(r, d).listFiles()).toSeq.flatten)
+        .map(_.getName).filter(n => n.endsWith(".parquet") && !manifests.contains(n))
+      assert(orphans.isEmpty, s"$name left unreferenced files: $orphans")
+      val stages = new java.io.File(r).list().filter(n =>
+        Seq(".stage-", ".cdfstage-", ".dvstage-").exists(n.startsWith))
+      assert(stages.isEmpty, s"$name left staging dirs: ${stages.toSeq}")
+    }
+  }
+
+  test("segment pruning parses the version manifest once") {
+    import graft.sources.CommitLog
+    val ev = Tables(spark, sf, "events").select(col("event_id"), col("value"))
+    val m = ev.agg(max(col("event_id"))).collect()(0).getLong(0)
+    val seg = java.nio.file.Files.createTempDirectory("graft_segprune").toString
+    CommitLog.appendSegment(spark, seg, ev.filter(col("event_id") <= m / 2), 1, "event_id")
+    val v = CommitLog.appendSegment(spark, seg, ev.filter(col("event_id") > m / 2), 1, "event_id")
+    val parses0 = CommitLog.manifestParses.get
+    val kept = CommitLog.segmentsSurvivingTree(seg, v, CommitLog.ProbeTree(Nil,
+      Seq(CommitLog.RangeProbe("event_id", Some(m / 2 + 1), Some(m)))))
+    assert(CommitLog.manifestParses.get - parses0 === 1L)
+    assert(kept.size === 1, s"the range probe must keep one of two segments: $kept")
   }
 }
