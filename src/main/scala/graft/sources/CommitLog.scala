@@ -53,8 +53,9 @@ object CommitLog {
     * `ParquetFileReader.open(InputFile)` still built its own
     * `HadoopParquetConfiguration` per footer, re-parsing
     * `core-default.xml` from the jar. [[footerReadOptions]] carries
-    * this conf into the reader too. */
-  private[sources] val hadoopConf = new org.apache.hadoop.conf.Configuration()
+    * this conf into the reader too. It is also the base a staging task
+    * rebuilds its write conf on ([[writeParquet]]). */
+  private[graft] val hadoopConf = new org.apache.hadoop.conf.Configuration()
 
   /** Read options over [[hadoopConf]], immutable and shared by every
     * footer open. */
@@ -97,22 +98,16 @@ object CommitLog {
   }
 
   /** Parquet footer summary with a bounded cache (r19; key hardened
-    * r20). Every staged file's footer was opened TWICE per commit —
-    * once by the zero-row filter at staging, once by [[stagedSizes]]
-    * after the atomic move. The r19 key was (fileKey, size, mtime-ms)
-    * so the count would ride the same-FS rename implicitly — but a
-    * deleted stage file frees an inode the NEXT commit's staged
-    * parquet can recycle, and two empty files of one schema have
-    * identical length and can land in the same millisecond, so the
-    * collision was improbable rather than impossible (a stale 0 would
-    * silently drop a real data file). r20 makes it impossible: the
-    * ABSOLUTE PATH is part of the key (stage dirs are
-    * createTempDirectory-unique, data files UUID-named, both
-    * write-once) plus nanosecond mtime, and the one legitimate
-    * identity carry — the stage→data rename — re-keys explicitly via
-    * [[moveWithFooterCount]]. Eviction halves ([[evictHalf]]), never
-    * full-clears. Values are [[FooterSummary]]s: a staged file's typed
-    * stats come from the zero-row filter's open. */
+    * r20). The r19 key was (fileKey, size, mtime-ms) — but a deleted
+    * stage file frees an inode the NEXT commit's staged parquet can
+    * recycle, and two empty files of one schema have identical length
+    * and can land in the same millisecond, so a stale entry was
+    * improbable rather than impossible. r20 makes it impossible: the
+    * ABSOLUTE PATH is part of the key (data files are UUID-named and
+    * write-once) plus nanosecond mtime. Eviction halves
+    * ([[evictHalf]]), never full-clears. Values are
+    * [[FooterSummary]]s: a staged file's row count ([[stagedSizes]])
+    * and its typed stats come from one open. */
   private val footerCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), FooterSummary]()
   private def footerCacheKey(p: java.io.File): Option[(String, Long, Long)] =
@@ -138,15 +133,6 @@ object CommitLog {
     }
   }
   private[graft] def footerRowCount(p: java.io.File): Long = footerSummary(p).rows
-  /** The stage→data atomic rename, carrying the staged file's cached
-    * footer summary to the destination key so no later reader re-opens
-    * a footer the zero-row filter just read. A POSIX rename
-    * preserves size and mtime, so only the path component changes. */
-  private def moveWithFooterCount(src: java.io.File, dst: java.io.File): Unit = {
-    val cached = footerCacheKey(src).flatMap(k => Option(footerCache.get(k)))
-    java.nio.file.Files.move(src.toPath, dst.toPath)
-    for (c <- cached; k <- footerCacheKey(dst)) footerCache.put(k, c)
-  }
   /** JSON-quote an arbitrary string (partition values and string
     * column bounds are DATA, not path-safe identifiers — a quote or
     * backslash must escape, or the manifest is permanently
@@ -1381,7 +1367,6 @@ object CommitLog {
       maxAttempts: Int = 10,
       beforeCommit: () => Unit = () => ()): Long = {
     val prev = headOf(root, "compact")
-    val staged = stageDataFiles(s, root, read(s, root, prev.version), nFiles, prev.schema)
     // typed stats survive the rewrite (restageColStats); partition
     // entries cannot — a plain compaction mixes partitions per file.
     // r12: the total rewrite rides the semantic rebase loop too — a
@@ -1389,9 +1374,12 @@ object CommitLog {
     // commit (the winners' files carry verbatim, uncompacted until
     // the next run); any concurrent rewrite removed a file this
     // compaction read, so overlap refuses inside the loop as before.
-    val (v, _) = commitRewriteRebasing(s, root, prev, "compact",
-      Nil, staged, Aux(), staged, Nil, maxAttempts, beforeCommit)
-    v
+    staging(s, root) { st =>
+      val staged = st.sync(stageDataFiles(s, root, read(s, root, prev.version),
+        nFiles, prev.schema))(identity)
+      st.published(commitRewriteRebasing(s, root, prev, "compact",
+        Nil, staged, Aux(), staged, Nil, maxAttempts, beforeCommit))._1
+    }
   }
 
   /** Memo of the LAZY full-snapshot frame per (session, root, version)
@@ -2060,11 +2048,11 @@ object CommitLog {
     * into a write-only routing column `_gp` (plus a deterministic
     * row-hash salt `_gs` when filesPerPartition > 1), the frame is
     * repartitioned on the routing columns so each (value, salt) combo
-    * lands in exactly ONE task, and a single partitionBy write splits
-    * file-per-combo — the file→value accounting then falls out of the
-    * staging directory walk, no distinct+collect job needed. partCol
-    * itself stays physically IN the files (partitionBy strips only
-    * the duplicate), so every non-partition-aware reader — time
+    * lands in exactly ONE task, and a single write splits
+    * file-per-combo — the file→value accounting comes back from the
+    * write tasks, no distinct+collect job needed. partCol itself stays
+    * physically IN the files (the writer strips only the routing
+    * duplicate), so every non-partition-aware reader — time
     * travel, compaction, CoW, the streaming source — is unchanged.
     * NULL partition values route under an explicit sentinel before
     * the write (never Hive's default-partition encoding). */
@@ -2081,18 +2069,14 @@ object CommitLog {
 
   /** Shared single-job routed staging: `df` must carry a string
     * routing column `_gp`; rows are repartitioned so each (_gp, salt)
-    * combo lands in exactly ONE task, one partitionBy write splits
-    * file-per-combo, and the result is the (groupKey → staged paths)
-    * accounting read back off the staging directory walk (sorted by
-    * group key). Dynamic partition writers only open a file on its
-    * first row, so every staged file is non-empty by construction.
-    * Dir names carry Hive %XX escaping of special value characters —
-    * decoded back exactly (a literal '%' in a value always arrives
-    * as %25, so the blind decode is the precise inverse). */
+    * combo lands in exactly ONE task and sorted within the task, and
+    * [[writeParquet]] splits file-per-combo. The result is the
+    * (groupKey → staged paths) accounting the tasks return, sorted by
+    * group key, each group's files by salt. The writer only opens a
+    * file on its first row, so every staged file is non-empty. */
   private def stageRouted(s: SparkSession, root: String, rawDf: DataFrame,
       filesPerGroup: Int, schema: Option[StructType]): Seq[(String, Seq[String])] = {
     import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    val stage = newStage(root, ".pstage-")
     val df = toPhysicalDf(rawDf, schema)
     val dataCols = df.columns.filterNot(c => c == "_gp" || c == "_gs")
     val (routed, partDepth) =
@@ -2103,48 +2087,14 @@ object CommitLog {
           pmod(hash(dataCols.map(col).toSeq: _*), lit(filesPerGroup)))
         (salted.repartition(col("_gp"), col("_gs")), Seq("_gp", "_gs"))
       }
-    // same AQE-off rebind as writeStaged (r20): the routed write ends
-    // in an explicit keyed repartition AQE may not change, so for a
-    // join-free input AQE only adds one job per query stage — pure
+    // same AQE-off rebind as stageDataFiles (r20): the routed write
+    // ends in an explicit keyed repartition AQE may not change, so for
+    // a join-free input AQE only adds one job per query stage — pure
     // scheduling overhead on tiny partitioned commits
-    val routedW =
-      if (joinFree(routed))
-        org.apache.spark.sql.graftbridge.SessionBridge.rebind(routed, aqeOffSession(s))
-      else routed
-    try routedW.write.mode("overwrite").partitionBy(partDepth: _*).parquet(stage.toString)
-    catch { case t: Throwable => scrubDir(stage.toFile); throw t }
-    def unescape(n: String): String = {
-      val sb = new StringBuilder(n.length)
-      var i = 0
-      while (i < n.length) {
-        val c = n.charAt(i)
-        if (c == '%' && i + 2 < n.length) {
-          sb.append(Integer.parseInt(n.substring(i + 1, i + 3), 16).toChar)
-          i += 3
-        } else { sb.append(c); i += 1 }
-      }
-      sb.toString
-    }
-    val dataDir = new java.io.File(root, "data"); dataDir.mkdirs()
-    def parquetsUnder(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).getOrElse(Array.empty).toSeq.sortBy(_.getName)
-        .flatMap(f =>
-          if (f.isDirectory) parquetsUnder(f)
-          else if (f.getName.endsWith(".parquet")) Seq(f) else Nil)
-    val valueDirs = Option(stage.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("_gp="))
-      .sortBy(_.getName).toSeq
-    val groups = valueDirs.map { vd =>
-      val value = unescape(vd.getName.stripPrefix("_gp="))
-      value -> parquetsUnder(vd).map { p =>
-        val dst = new java.io.File(dataDir,
-          java.util.UUID.randomUUID().toString + ".parquet")
-        java.nio.file.Files.move(p.toPath, dst.toPath)
-        "data/" + dst.getName
-      }
-    }
-    scrubDir(stage.toFile)
-    groups
+    val files = stageFrame(s, root, ".pstage-", "data",
+      aqeOff(s, routed.sortWithinPartitions(partDepth.map(col): _*)), routed = true)
+    val byGroup = files.groupBy(_.group)
+    byGroup.keys.toSeq.sorted.map(g => g -> byGroup(g).sortBy(_.salt).map(_.path))
   }
 
   private def stagePartitioned(s: SparkSession, root: String, df: DataFrame,
@@ -2709,7 +2659,8 @@ object CommitLog {
     * pruning payoff is read-side and permanent. Cell count =
     * Π(cutoffs_i + 1) — caller-controlled metadata-sized grid. */
   def optimizeClustered(s: SparkSession, root: String,
-      dims: Seq[(String, Seq[Long])], filesPerCell: Int): Long = {
+      dims: Seq[(String, Seq[Long])], filesPerCell: Int,
+      beforeCommit: () => Unit = () => ()): Long = {
     import org.apache.spark.sql.functions.{col, lit}
     val prev = headOf(root, "optimize")
     dims.foreach { case (c, cuts) =>
@@ -2760,7 +2711,6 @@ object CommitLog {
     }.reduce(_ + _)
     val tagged = cur.withColumn("_gp",
       org.apache.spark.sql.functions.format_string("%06d", cellIdCol))
-    val groups = stageRouted(s, root, tagged, filesPerCell, prev.schema)
     def decode(key: String): List[Int] = {
       var rem = key.toInt
       widths.indices.map { d =>
@@ -2768,11 +2718,14 @@ object CommitLog {
         val ix = rem / stride; rem %= stride; ix
       }.toList
     }
-    val staged = groups.sortBy { case (key, _) => interleave(decode(key)) }
-      .flatMap(_._2)
-    commitOn(root, staged, Some(prev), tableProperties(root), op = "optimize",
-      schemaJson = carriedSchemaJson(Some(prev)),
-      extra = auxExtra(perFileColStats(s, root, staged, dims.map(_._1), prev.schema)))
+    staging(s, root) { st =>
+      val staged = st.sync(stageRouted(s, root, tagged, filesPerCell, prev.schema)
+        .sortBy { case (key, _) => interleave(decode(key)) }.flatMap(_._2))(identity)
+      val stats = perFileColStats(s, root, staged, dims.map(_._1), prev.schema)
+      beforeCommit()
+      st.published(commitOn(root, staged, Some(prev), tableProperties(root), op = "optimize",
+        schemaJson = carriedSchemaJson(Some(prev)), extra = auxExtra(stats)))
+    }
   }
 
   /** Incremental (change-data-feed-style) read: the rows ADDED between
@@ -3213,9 +3166,9 @@ object CommitLog {
           val deleteCdf = if (assignments.isEmpty) stageChanges(all) else noChanges
           // the vector (f: file name, i: row index) stages under dv/
           // like data files; an empty vector stages nothing
-          val dv = st.sync(stageInto(root, ".dvstage-", "dv")(touch.rows(full).select(
+          val dv = st.sync(stageFrame(s, root, ".dvstage-", "dv", touch.rows(full).select(
             substring_index(col("_graft_file"), "/", -1).as("f"),
-            col("_graft_pos").as("i")).coalesce(1).write.mode("overwrite").parquet(_)))(identity)
+            col("_graft_pos").as("i")).coalesce(1), routed = false).map(_.path))(identity)
           // per-file masked counts off the sidecar just written (one
           // tiny grouped read, never a second table scan) (r16)
           val perFile =
@@ -3843,16 +3796,19 @@ object CommitLog {
     val (selected, carried) = files.partition(f => aux.parts.get(f).exists(want))
     if (selected.isEmpty) return (prev.version, 0L, 0L)
     val sub = readSubset(s, prev, selected.map(f => new java.io.File(root, f).toString))
-    val (staged, newAux) = stagePartitioned(s, root, sub, partCol, filesPerPartition, prev)
     // r12 (VERDICT item 4): the partition-scoped optimize rides the
     // SAME semantic rebase loop as delete/merge/update — a compaction
     // daemon racing a GDPR delete on DIFFERENT partitions must not
     // lose its commit (the compaction is row-preserving, so any
     // file-disjoint rebaseable winner is safe to carry past)
-    val (v, _) = commitRewriteRebasing(s, root, prev,
-      "optimize", carried, staged, newAux, staged, Nil,
-      maxAttempts, beforeCommit)
-    (v, selected.size.toLong, staged.size.toLong)
+    staging(s, root) { st =>
+      val (staged, newAux) = st.sync(
+        stagePartitioned(s, root, sub, partCol, filesPerPartition, prev))(_._1)
+      val (v, _) = st.published(commitRewriteRebasing(s, root, prev,
+        "optimize", carried, staged, newAux, staged, Nil,
+        maxAttempts, beforeCommit))
+      (v, selected.size.toLong, staged.size.toLong)
+    }
   }
 
   /** Incremental LAYOUT MIGRATION (r13, completing partition spec
@@ -3885,12 +3841,14 @@ object CommitLog {
     val pick = foreign.take(maxFiles)
     val carried = files.filterNot(pick.toSet)
     val sub = readSubset(s, prev, pick.map(f => new java.io.File(root, f).toString))
-    val (staged, newAux) = stagePartitionedCols(s, root, sub, curCols,
-      filesPerPartition = 1, Some(prev))
-    val (v, _) = commitRewriteRebasing(s, root, prev,
-      "optimize", carried, staged, newAux, staged, Nil,
-      maxAttempts, beforeCommit)
-    (v, pick.size.toLong, (foreign.size - pick.size).toLong)
+    staging(s, root) { st =>
+      val (staged, newAux) = st.sync(stagePartitionedCols(s, root, sub, curCols,
+        filesPerPartition = 1, Some(prev)))(_._1)
+      val (v, _) = st.published(commitRewriteRebasing(s, root, prev,
+        "optimize", carried, staged, newAux, staged, Nil,
+        maxAttempts, beforeCommit))
+      (v, pick.size.toLong, (foreign.size - pick.size).toLong)
+    }
   }
 
   /** SHALLOW CLONE — the zero-copy table fork of the public formats
@@ -4106,29 +4064,30 @@ object CommitLog {
       s"optimize cutoffs must be strictly increasing, got $cutoffs")
     val cur = read(s, root, prev.version) // pinned: immune to concurrent commits
     val bounds = (None +: cutoffs.map(Some(_))).zip(cutoffs.map(Some(_)) :+ None)
-    val staged = bounds.flatMap { case (lo, hi) =>
-      // NULL keys route to the FIRST bucket (a range predicate is
-      // null-rejecting, so without this a row with a NULL cluster key
-      // would match no bucket and the "data-neutral rewrite" would
-      // silently drop it); the bucket's file stats ignore nulls, which
-      // stays safe — a range probe never matches NULL rows anyway
-      val rangePred =
-        lo.map(col(statsCol) > lit(_)).getOrElse(lit(true)) &&
-          hi.map(col(statsCol) <= lit(_)).getOrElse(lit(true))
-      val part = cur.filter(
-        if (lo.isEmpty) col(statsCol).isNull || rangePred else rangePred)
-      stageDataFiles(s, root, part, filesPerBucket, prev.schema)
+    staging(s, root) { st =>
+      val staged = bounds.flatMap { case (lo, hi) =>
+        // NULL keys route to the FIRST bucket (a range predicate is
+        // null-rejecting, so without this a row with a NULL cluster key
+        // would match no bucket and the "data-neutral rewrite" would
+        // silently drop it); the bucket's file stats ignore nulls, which
+        // stays safe — a range probe never matches NULL rows anyway
+        val rangePred =
+          lo.map(col(statsCol) > lit(_)).getOrElse(lit(true)) &&
+            hi.map(col(statsCol) <= lit(_)).getOrElse(lit(true))
+        val part = cur.filter(
+          if (lo.isEmpty) col(statsCol).isNull || rangePred else rangePred)
+        st.sync(stageDataFiles(s, root, part, filesPerBucket, prev.schema))(identity)
+      }
+      // r12: the clustering rewrite rebases past blind appends like
+      // compact; the stats override records ONLY the staged buckets'
+      // bounds under the (possibly new) stats column — a winner's
+      // carried files read as unprunable, exactly the pre-r12 contract
+      // for files the optimize did not stage
+      st.published(commitRewriteRebasing(s, root, prev,
+        "optimize", Nil, staged, Aux(), staged, Nil,
+        maxAttempts, beforeCommit,
+        newStats = Some((statsCol, perFileStatsNulls(s, root, staged, statsCol, prev.schema)._1))))._1
     }
-    // r12: the clustering rewrite rebases past blind appends like
-    // compact; the stats override records ONLY the staged buckets'
-    // bounds under the (possibly new) stats column — a winner's
-    // carried files read as unprunable, exactly the pre-r12 contract
-    // for files the optimize did not stage
-    val (v, _) = commitRewriteRebasing(s, root, prev,
-      "optimize", Nil, staged, Aux(), staged, Nil,
-      maxAttempts, beforeCommit,
-      newStats = Some((statsCol, perFileStatsNulls(s, root, staged, statsCol, prev.schema)._1)))
-    v
   }
 
   // ------------------------------------------------------------------
@@ -4924,19 +4883,16 @@ object CommitLog {
         "spark.sql.shuffle.partitions" -> sp))
   }
 
-  private def writeStaged(s: SparkSession, df: DataFrame, nFiles: Int,
-      dest: String): Unit = {
-    val frame =
-      if (joinFree(df))
-        org.apache.spark.sql.graftbridge.SessionBridge.rebind(df, aqeOffSession(s))
-      else df
-    frame.repartition(nFiles).write.mode("overwrite").parquet(dest)
-  }
+  /** `df` planned without AQE when it is join-free ([[joinFree]]). */
+  private def aqeOff(s: SparkSession, df: DataFrame): DataFrame =
+    if (joinFree(df))
+      org.apache.spark.sql.graftbridge.SessionBridge.rebind(df, aqeOffSession(s))
+    else df
 
   private def stageDataFiles(s: SparkSession, root: String,
       df: DataFrame, nFiles: Int, schema: Option[StructType]): Seq[String] =
-    stageInto(root, ".stage-", "data")(
-      writeStaged(s, toPhysicalDf(df, schema), nFiles, _))
+    stageFrame(s, root, ".stage-", "data",
+      aqeOff(s, toPhysicalDf(df, schema).repartition(nFiles)), routed = false).map(_.path)
 
   /** A fresh staging dir under `root` (a first commit may create the
     * table root itself). */
@@ -4945,14 +4901,25 @@ object CommitLog {
     java.nio.file.Files.createTempDirectory(new java.io.File(root).toPath, prefix)
   }
 
-  /** Write into a fresh staging dir, then [[moveStaged]] its files
-    * under `root/dir`; a write that throws scrubs its staging dir. */
-  private def stageInto(root: String, prefix: String, dir: String)(
-      write: String => Unit): Seq[String] = {
+  /** Write `frame` with [[writeParquet]] (`routed` as there) into a
+    * fresh private staging dir, move each file it wrote to a UUID name under `root/dir` (in
+    * write order), then scrub the dir (checksum residue). A write that
+    * throws scrubs the dir and leaves nothing. Returns the files with
+    * their root-relative paths. */
+  private def stageFrame(s: SparkSession, root: String, prefix: String, dir: String,
+      frame: DataFrame, routed: Boolean): Seq[StagedFile] = {
     val stage = newStage(root, prefix)
-    try write(stage.toString)
-    catch { case t: Throwable => scrubDir(stage.toFile); throw t }
-    moveStaged(root, stage, dir)
+    val written =
+      try writeParquet(s, frame, stage.toString, routed)
+      catch { case t: Throwable => scrubDir(stage.toFile); throw t }
+    val dest = new java.io.File(root, dir); dest.mkdirs()
+    val moved = written.map { f =>
+      val dst = new java.io.File(dest, java.util.UUID.randomUUID().toString + ".parquet")
+      java.nio.file.Files.move(java.nio.file.Paths.get(f.path), dst.toPath)
+      f.copy(path = s"$dir/${dst.getName}")
+    }
+    scrubDir(stage.toFile)
+    moved
   }
 
   private def scrubDir(d: java.io.File): Unit = {
@@ -4962,38 +4929,182 @@ object CommitLog {
     d.delete()
   }
 
-  /** The shared staging tail: move the `.parquet` files a write left in
-    * `stage` to UUID names under `root/dir` in name order, then scrub
-    * the staging residue (an _SUCCESS marker and the empty dir). Zero-row
-    * part files are dropped (a fully-empty write leaves one): an empty
-    * file in the manifest defeats file-count accounting and adds an
-    * unprunable stat-less entry every future scan must open. The check
-    * is a footer-only metadata read of files just written — nothing
-    * data-sized. Returns the moved files' root-relative paths. */
-  private def moveStaged(root: String, stage: java.nio.file.Path, dir: String): Seq[String] = {
-    val dest = new java.io.File(root, dir); dest.mkdirs()
-    val moved = Option(stage.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .filter(p => footerRowCount(p) > 0)
-      .map { p =>
-        val dst = new java.io.File(dest, java.util.UUID.randomUUID().toString + ".parquet")
-        moveWithFooterCount(p, dst)
-        s"$dir/${dst.getName}"
-      }.toSeq
-    scrubDir(stage.toFile)
-    moved
+  /** One file [[writeParquet]] wrote: its routing group (the `_gp`
+    * value, "" when the write is not routed), its salt (`_gs`, 0 when
+    * none) and its path. */
+  private[graft] final case class StagedFile(group: String, salt: Int, path: String)
+
+  /** The Hadoop entries a write task needs over a base conf: the keys
+    * the target sets to another value or the base lacks (`set`), and
+    * the base keys the target lacks (`unset`). Values are compared raw
+    * (unexpanded), as `Configuration` stores them. */
+  private[graft] final case class ConfOverlay(set: Seq[(String, String)], unset: Seq[String]) {
+    def over(base: org.apache.hadoop.conf.Configuration): org.apache.hadoop.conf.Configuration = {
+      val c = new org.apache.hadoop.conf.Configuration(base)
+      unset.foreach(c.unset)
+      set.foreach { case (k, v) => c.set(k, v) }
+      c
+    }
+  }
+  private[graft] object ConfOverlay {
+    private[graft] def entries(c: org.apache.hadoop.conf.Configuration): Map[String, String] = {
+      import scala.jdk.CollectionConverters._
+      c.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    }
+    /** The overlay that turns [[hadoopConf]] into `target`. The base is
+      * read per call: loading a class that adds a default resource
+      * (`JobConf`, say) reloads every `Configuration`. */
+    def over(target: org.apache.hadoop.conf.Configuration): ConfOverlay = {
+      val (b, t) = (entries(hadoopConf), entries(target))
+      ConfOverlay(t.toSeq.filter { case (k, v) => !b.get(k).contains(v) }.sortBy(_._1),
+        (b.keySet -- t.keySet).toSeq.sorted)
+    }
+  }
+
+  /** THE Parquet staging writer: every commit-log file (data, CDF,
+    * deletion-vector sidecar) is written here, as one Spark job over
+    * `frame`'s rows, into `dir`, a staging dir private to this write.
+    *
+    * Each task writes its rows through the `OutputWriterFactory` that
+    * `ParquetFileFormat.prepareWrite` returns, so the files carry the
+    * stock writer's schema, key-value metadata and encodings. A file
+    * opens at its first row (no zero-row files) and closes when the
+    * routing group changes or it reaches
+    * `spark.sql.files.maxRecordsPerFile`. Every column of `frame` is
+    * written unless `routed`: then `frame` carries a string routing
+    * column `_gp` (and, when salted, an int `_gs`) that only splits the
+    * files, is not written, and sorts each partition (the caller's
+    * duty). Only [[stageRouted]] routes; its callers refuse user
+    * columns of those names. Returns the files in (partition, write)
+    * order.
+    *
+    * What the task ships: no committer runs (no `_temporary`, task or
+    * job commit, or `_SUCCESS`; the caller owns the dir and moves the
+    * files), and the Hadoop conf is not serialized. The task carries
+    * only a [[ConfOverlay]] of `s`'s `newHadoopConf()` plus what
+    * `prepareWrite` set, computed against the DRIVER's [[hadoopConf]],
+    * and applies it over the EXECUTOR JVM's [[hadoopConf]] (about 25
+    * entries instead of 1,100). Write settings (Parquet options,
+    * `maxRecordsPerFile`) are read from `s`; `frame` may be bound to
+    * another session, which plans and runs it.
+    *
+    * A task that fails deletes what it wrote. A failed or interrupted
+    * job waits for its running tasks to end before it rethrows, so the
+    * caller's scrub runs after the last write. */
+  private[graft] def writeParquet(s: SparkSession, frame: DataFrame,
+      dir: String, routed: Boolean): Seq[StagedFile] = {
+    import scala.util.{Failure, Success}
+    val qe = frame.queryExecution
+    val attrs = qe.executedPlan.output
+    val (gp, gs) =
+      if (routed) (attrs.indexWhere(_.name == "_gp"), attrs.indexWhere(_.name == "_gs"))
+      else (-1, -1)
+    require(!routed || gp >= 0, "a routed staging frame must carry _gp")
+    val data = attrs.zipWithIndex.collect { case (a, i) if i != gp && i != gs => a }
+    val dataSchema = StructType(data.map(a =>
+      org.apache.spark.sql.types.StructField(a.name, a.dataType, a.nullable, a.metadata)))
+    // the write settings come from `s`, not from `frame`'s session: an
+    // AQE-off clone ([[aqeOffSession]]) holds the conf of its first use
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(s.sessionState.newHadoopConf())
+    val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(s, job, Map.empty, dataSchema)
+    val overlay = ConfOverlay.over(job.getConfiguration)
+    val maxRecords = s.sessionState.conf.maxRecordsPerFile
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("stage")) {
+      val rdd = qe.toRdd
+      val sc = s.sparkContext
+      val out = new Array[Seq[StagedFile]](rdd.partitions.length)
+      val action = sc.submitJob(rdd,
+        (rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
+          writeTask(rows, dir, overlay, factory, dataSchema, data, attrs, gp, gs, maxRecords),
+        rdd.partitions.indices, (i: Int, files: Seq[StagedFile]) => out(i) = files, ())
+      val result =
+        try {
+          scala.concurrent.Await.ready(action, scala.concurrent.duration.Duration.Inf)
+          action.value.get
+        } catch { case t: InterruptedException => action.cancel(); Failure(t) }
+      result match {
+        case Success(_) => out.toSeq.flatten
+        case Failure(t) => awaitTasksEnded(sc, action.jobIds); throw t
+      }
+    }
+  }
+
+  /** Block (at most 30 s) until the status store shows `jobIds` ended
+    * with no task still running. A job fails at its first task failure
+    * while sibling tasks may still be writing. */
+  private def awaitTasksEnded(sc: org.apache.spark.SparkContext, jobIds: Seq[Int]): Unit = {
+    val st = sc.statusTracker
+    def busy = jobIds.exists(id => st.getJobInfo(id).forall(j =>
+      j.status == org.apache.spark.JobExecutionStatus.RUNNING ||
+        j.stageIds.exists(sid => st.getStageInfo(sid).exists(_.numActiveTasks > 0))))
+    val deadline = System.nanoTime + 30000000000L
+    while (busy && System.nanoTime < deadline) Thread.sleep(5)
+  }
+
+  /** One [[writeParquet]] task: rebuild the write conf, then write
+    * `rows` file by file. */
+  private def writeTask(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+      dir: String, overlay: ConfOverlay,
+      factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+      dataSchema: StructType,
+      data: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+      attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+      gp: Int, gs: Int, maxRecords: Long): Seq[StagedFile] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    val ctx = org.apache.spark.TaskContext.get()
+    val conf = overlay.over(hadoopConf)
+    val hctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(conf,
+      new org.apache.hadoop.mapreduce.TaskAttemptID("graft", ctx.stageId(),
+        org.apache.hadoop.mapreduce.TaskType.MAP, ctx.partitionId(), ctx.attemptNumber()))
+    val project: InternalRow => InternalRow =
+      if (gp < 0 && gs < 0) identity
+      else org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(data, attrs)
+    val ext = factory.getFileExtension(hctx)
+    val files = scala.collection.mutable.ArrayBuffer.empty[StagedFile]
+    var w: org.apache.spark.sql.execution.datasources.OutputWriter = null
+    var group: org.apache.spark.unsafe.types.UTF8String = null
+    var salt = 0
+    var n = 0L
+    try {
+      rows.foreach { r =>
+        val g = if (gp < 0) null else r.getUTF8String(gp)
+        val sl = if (gs < 0) 0 else r.getInt(gs)
+        if (w == null || g != group || sl != salt || (maxRecords > 0 && n >= maxRecords)) {
+          if (w != null) w.close()
+          w = null
+          group = if (g == null) null else g.clone()
+          salt = sl
+          n = 0
+          val path = f"$dir/part-${ctx.partitionId()}%05d-${ctx.taskAttemptId()}-${files.size}%03d$ext"
+          files += StagedFile(if (g == null) "" else g.toString, sl, path)
+          w = factory.newInstance(path, dataSchema, hctx)
+        }
+        w.write(project(r))
+        n += 1
+      }
+      if (w != null) w.close()
+      files.toSeq
+    } catch {
+      case t: Throwable =>
+        scala.util.Try(if (w != null) w.close())
+        files.foreach { f =>
+          val p = new org.apache.hadoop.fs.Path(f.path)
+          scala.util.Try(p.getFileSystem(conf).delete(p, false))
+        }
+        throw t
+    }
   }
 
   /** Stage a change-data-feed row set under cdf/. CDF volumes are
     * usually the CHANGED rows — orders below the data files they
     * describe — but a MASS delete's changelog is table-sized, so the
-    * write keeps bounded parallelism (coalesce(8), zero-row parts
-    * dropped) instead of the r10 single-file funnel that serialized
-    * 2M rows through one task at the ×20 soak. Same
-    * stage-then-atomic-move discipline as data files: cdf files are
-    * invisible until a manifest lists them. */
-  private def stageCdfFiles(s: SparkSession, root: String,
-      df: DataFrame, schema: Option[StructType]): Seq[String] =
-    stageInto(root, ".cdfstage-", "cdf")(
-      toPhysicalDf(df, schema).coalesce(8).write.mode("overwrite").parquet(_))
+    * write keeps bounded parallelism (coalesce(8)) instead of the r10
+    * single-file funnel that serialized 2M rows through one task at
+    * the ×20 soak. Same stage-then-atomic-move discipline as data
+    * files: cdf files are invisible until a manifest lists them. */
+  private def stageCdfFiles(s: SparkSession, root: String, df: DataFrame,
+      schema: Option[StructType]): Seq[String] =
+    stageFrame(s, root, ".cdfstage-", "cdf", toPhysicalDf(df, schema).coalesce(8),
+      routed = false).map(_.path)
 }

@@ -890,6 +890,15 @@ class PlanSpec extends SparkSpec {
       }
       cur
     }
+    // the set-up's own actions may still be queued on the listener bus
+    // when the listener registers; the bus is FIFO, so once a fence
+    // query's event arrives every earlier one has been delivered
+    def fence(): Unit = {
+      spark.range(1).toDF("graft_fence").collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!actions.asScala.exists(_._2 == Seq("graft_fence")) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+    }
     def foldActions(vanish: org.apache.spark.sql.Column): Seq[(String, Seq[String])] = {
       val src = java.nio.file.Files.createTempDirectory("graft_ivplan_s").toString
       val vw = java.nio.file.Files.createTempDirectory("graft_ivplan_v").toString
@@ -897,9 +906,8 @@ class PlanSpec extends SparkSpec {
       CommitLog.append(spark, src, ev, nFiles = 2)
       IncrementalView.create(spark, vw, src, "event_id", "value")
       CommitLog.delete(spark, src, vanish)
-      actions.clear()
       spark.listenerManager.register(qel)
-      try { IncrementalView.refresh(spark, vw); settle() }
+      try { fence(); actions.clear(); IncrementalView.refresh(spark, vw); settle() }
       finally spark.listenerManager.unregister(qel)
       actions.asScala.toSeq
     }
@@ -945,6 +953,15 @@ class PlanSpec extends SparkSpec {
       }
       cur
     }
+    // the set-up's own actions may still be queued on the listener bus
+    // when the listener registers; the bus is FIFO, so once a fence
+    // query's event arrives every earlier one has been delivered
+    def fence(): Unit = {
+      spark.range(1).toDF("graft_fence").collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!actions.asScala.exists(_._2 == Seq("graft_fence")) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+    }
     def dimFoldActions(remap: org.apache.spark.sql.Column): Seq[(String, Seq[String])] = {
       val fact = java.nio.file.Files.createTempDirectory("graft_ddplan_f").toString
       val dimT = java.nio.file.Files.createTempDirectory("graft_ddplan_d").toString
@@ -958,9 +975,8 @@ class PlanSpec extends SparkSpec {
       IncrementalViewMulti.createJoined(spark, vw, fact, dimT, "user_id",
         Seq("segment"), Seq("value"))
       CommitLog.update(spark, dimT, remap, Seq("segment" -> lit("s_remap")))
-      actions.clear()
       spark.listenerManager.register(qel)
-      try { IncrementalViewMulti.refresh(spark, vw); settle() }
+      try { fence(); actions.clear(); IncrementalViewMulti.refresh(spark, vw); settle() }
       finally spark.listenerManager.unregister(qel)
       actions.asScala.toSeq
     }

@@ -3745,7 +3745,20 @@ class StreamingSpec extends SparkSpec {
       ("reorgPurge", r => { CommitLog.deleteMergeOnRead(spark, r, hit); () },
         r => CommitLog.reorgPurge(spark, r, beforeCommit = boom)),
       ("mergeKeyed, collect throws", none,
-        r => CommitLog.mergeKeyed(spark, r, ups, Seq("event_id"), 2, deleteKeys = Some(badKeys))))
+        r => CommitLog.mergeKeyed(spark, r, ups, Seq("event_id"), 2, deleteKeys = Some(badKeys))),
+      ("compact", none, r => CommitLog.compact(spark, r, 2, beforeCommit = boom)),
+      ("optimize", none, r => CommitLog.optimize(spark, r, "event_id",
+        Seq(100L, 1000L), 2, beforeCommit = boom)),
+      ("optimizeClustered", none, r => CommitLog.optimizeClustered(spark, r,
+        Seq("event_id" -> Seq(100L), "user_id" -> Seq(10L)), 2, beforeCommit = boom)),
+      ("compactPartitions", r => { CommitLog.appendPartitioned(spark, r, ev, "user_id", 1); () },
+        r => CommitLog.compactPartitions(spark, r, "user_id",
+          ev.select(col("user_id").cast("string")).distinct().collect().map(_.getString(0)).toSeq,
+          beforeCommit = boom)),
+      // the head's four plain files carry no layout under the spec the
+      // partitioned append sets, so the migration restages them
+      ("migrateLayout", r => { CommitLog.appendPartitioned(spark, r, ev, "user_id", 1); () },
+        r => CommitLog.migrateLayout(spark, r, beforeCommit = boom)))
     cases.foreach { case (name, prepare, fail) =>
       val r = java.nio.file.Files.createTempDirectory("graft_cl_scrub").toString
       CommitLog.setTableProperty(r, "enableChangeDataFeed", "true")
@@ -3782,5 +3795,210 @@ class StreamingSpec extends SparkSpec {
       Seq(CommitLog.RangeProbe("event_id", Some(m / 2 + 1), Some(m)))))
     assert(CommitLog.manifestParses.get - parses0 === 1L)
     assert(kept.size === 1, s"the range probe must keep one of two segments: $kept")
+  }
+
+  /** Rows, Parquet schema and key-value metadata of one Parquet file. */
+  private def parquetInfo(path: String): (Long, String, Map[String, String]) = {
+    import scala.jdk.CollectionConverters._
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), graft.sources.CommitLog.hadoopConf))
+    try {
+      val fm = r.getFooter.getFileMetaData
+      (r.getRecordCount, fm.getSchema.toString, fm.getKeyValueMetaData.asScala.toMap)
+    } finally r.close()
+  }
+
+  test("staging writer: staged files match the stock Parquet writer") {
+    import graft.sources.CommitLog
+    import org.apache.spark.sql.DataFrame
+    val ev = Tables(spark, sf, "events")
+      .select(col("event_id"), col("user_id"), col("value"), col("ts")).limit(600)
+    // per (group, salt): the files' (rows, schema, metadata) in write order
+    type Files = Map[(String, Int), Seq[(Long, String, Map[String, String])]]
+    def engine(frame: DataFrame, routed: Boolean): Files = {
+      val d = java.nio.file.Files.createTempDirectory("graft_stage_new").toString
+      CommitLog.writeParquet(spark, frame, d, routed).groupBy(f => (f.group, f.salt))
+        .map { case (k, fs) => k -> fs.map(f => parquetInfo(f.path)) }
+    }
+    // the stock writer's files, Hive-escaped partition dirs decoded and
+    // zero-row files dropped
+    def stock(frame: DataFrame, parts: Seq[String]): Files = {
+      val d = new java.io.File(
+        java.nio.file.Files.createTempDirectory("graft_stage_stock").toFile, "out")
+      frame.write.partitionBy(parts: _*).parquet(d.toString)
+      def walk(f: java.io.File, key: (String, Int)): Seq[((String, Int), java.io.File)] =
+        Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap { c =>
+          val n = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .unescapePathName(c.getName)
+          if (c.isDirectory && n.startsWith("_gp=")) walk(c, (n.stripPrefix("_gp="), key._2))
+          else if (c.isDirectory && n.startsWith("_gs=")) walk(c, (key._1, n.stripPrefix("_gs=").toInt))
+          else if (c.getName.endsWith(".parquet")) Seq(key -> c)
+          else Nil
+        }
+      walk(d, ("", 0)).map { case (k, f) => k -> parquetInfo(f.toString) }
+        .filter(_._2._1 > 0).groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    }
+    def same(what: String, frame: DataFrame, parts: Seq[String] = Nil): Unit = {
+      val (a, b) = (engine(frame, parts.nonEmpty), stock(frame, parts))
+      assert(a.values.flatten.forall(_._1 > 0), s"$what: a zero-row file was staged")
+      assert(a === b, s"$what: staging writer and stock writer differ")
+    }
+    // values the stock writer Hive-escapes in its directory names (it
+    // cannot name a non-ASCII dir where the JVM's path encoding is ASCII,
+    // so the non-ASCII value is checked through the commit log below)
+    val special = Seq("a/b", "50%", "k=v", "sp ace", "__GRAFT_NULL_PARTITION__")
+    val routed = ev.withColumn("_gp", element_at(typedLit(special),
+      (pmod(col("user_id"), lit(special.size)) + 1).cast("int")))
+    val salted = routed.withColumn("_gs", pmod(hash(col("event_id")), lit(3)))
+    same("plain", ev.repartition(3))
+    same("plain, user _gp and _gs columns", salted.withColumn("_gs", col("value")).repartition(3))
+    same("routed", routed.repartition(col("_gp")).sortWithinPartitions("_gp"), Seq("_gp"))
+    same("routed, salted", salted.repartition(col("_gp"), col("_gs"))
+      .sortWithinPartitions("_gp", "_gs"), Seq("_gp", "_gs"))
+    same("cdf", ev.withColumn("_change_type", lit("delete")).coalesce(8))
+    same("dv", ev.select(substring_index(input_file_name(), "/", -1).as("f"),
+      col("event_id").as("i")).coalesce(1))
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "70")
+    try {
+      same("plain, maxRecordsPerFile", ev.repartition(2))
+      same("routed, maxRecordsPerFile",
+        routed.repartition(col("_gp")).sortWithinPartitions("_gp"), Seq("_gp"))
+    } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+
+    // through the commit log: partition values that need Hive escaping
+    // and NULL record each file under its exact value; the bad-value
+    // refusal still fires
+    val tmp = () => java.nio.file.Files.createTempDirectory("graft_stage_api").toString
+    val values = special.init ++ Seq("ünï", null)
+    val byText = ev.withColumn("p", element_at(typedLit(values),
+      (pmod(col("user_id"), lit(values.size)) + 1).cast("int")))
+    // rows per recorded partition value, from the staged files' footers
+    def rowsByPart(r: String, v: Long) = CommitLog.auxOf(r, v).parts.toSeq.groupBy(_._2)
+      .map { case (p, fs) =>
+        p -> fs.map(f => CommitLog.footerRowCount(new java.io.File(r, f._1))).sum }
+    val r1 = tmp()
+    val v1 = CommitLog.appendPartitioned(spark, r1, byText, "p", 1)
+    val want = byText.groupBy(coalesce(col("p"), lit("__GRAFT_NULL_PARTITION__"))).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(rowsByPart(r1, v1) === want)
+    val bad = intercept[IllegalArgumentException](CommitLog.appendPartitioned(spark, tmp(),
+      ev.withColumn("p", concat(lit("x\u0001"), col("user_id").cast("string"))), "p", 1))
+    assert(bad.getMessage.contains("reserved separator"), bad.getMessage)
+    // a bucket spec with two files per bucket
+    val r2 = tmp()
+    val v2 = CommitLog.appendPartitioned(spark, r2, ev, "bucket(4;user_id)", 2)
+    val filesPerBucket = CommitLog.auxOf(r2, v2).parts.groupBy(_._2).values.map(_.size)
+    assert(filesPerBucket.forall(_ <= 2) && filesPerBucket.exists(_ == 2), filesPerBucket)
+    assert(rowsByPart(r2, v2) ===
+      ev.groupBy(pmod(hash(col("user_id")), lit(4)).cast("string")).count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap)
+    // CDF and deletion-vector files: one file per CDF task at most, no
+    // zero-row file, and the rows each records
+    val r3 = tmp()
+    CommitLog.setTableProperty(r3, "enableChangeDataFeed", "true")
+    CommitLog.append(spark, r3, ev, 2)
+    val hit = col("user_id") % 4 === 1
+    def rowsUnder(d: String) = Option(new java.io.File(r3, d).listFiles()).toSeq.flatten
+      .map(f => CommitLog.footerRowCount(f))
+    val v3 = CommitLog.delete(spark, r3, hit)._1
+    assert(rowsUnder("cdf").nonEmpty && rowsUnder("cdf").forall(_ > 0))
+    assert(rowsUnder("cdf").sum === ev.filter(hit).count())
+    assert(CommitLog.changesRows(spark, r3, v3 - 1, v3).count() === ev.filter(hit).count())
+    CommitLog.deleteMergeOnRead(spark, r3, col("user_id") % 4 === 2)
+    assert(rowsUnder("dv") === Seq(ev.filter(col("user_id") % 4 === 2).count()))
+  }
+
+  test("staging writer: user columns named _gp and _gs are written like any other") {
+    import graft.sources.CommitLog
+    val ev = Tables(spark, sf, "events").select(col("event_id"), col("user_id"),
+      col("event_id").cast("string").as("_gp"), col("value").as("_gs")).limit(400)
+    val r = java.nio.file.Files.createTempDirectory("graft_stage_names").toString
+    val v0 = CommitLog.append(spark, r, ev, 3)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("event_id", "user_id", "_gp", "_gs").collect().map(_.toString).sorted.toSeq
+    assert(rows(CommitLog.read(spark, r, v0)) === rows(ev))
+    // a copy-on-write rewrite and a compaction restage the same rows
+    val hit = col("user_id") % 4 === 1
+    val v1 = CommitLog.update(spark, r, hit, Seq("_gs" -> lit(-1.0)))._1
+    val want = ev.withColumn("_gs", when(hit, lit(-1.0)).otherwise(col("_gs")))
+    assert(rows(CommitLog.read(spark, r, v1)) === rows(want))
+    val v2 = CommitLog.compact(spark, r, 1)
+    assert(rows(CommitLog.read(spark, r, v2)) === rows(want))
+  }
+
+  test("staging writer: the executor rebuilds the session's Hadoop conf from the overlay") {
+    import graft.sources.CommitLog
+    import CommitLog.ConfOverlay
+    spark.conf.set("spark.hadoop.graft.test.overlay", "on")
+    spark.conf.set("spark.sql.parquet.compression.codec", "gzip")
+    try {
+      val target = spark.sessionState.newHadoopConf()
+      // a key the base sets and this session unsets
+      val gone = "hadoop.tmp.dir"
+      assert(CommitLog.hadoopConf.getRaw(gone) != null)
+      target.unset(gone)
+      val ov = ConfOverlay.over(target)
+      assert(ov.unset.contains(gone))
+      assert(ov.set.contains("spark.hadoop.graft.test.overlay" -> "on"))
+      assert(ov.set.contains("spark.sql.parquet.compression.codec" -> "gzip"))
+      // the session builder's spark.hadoop.fs.file.impl
+      assert(ov.set.exists(_._1 == "fs.file.impl"))
+      // a base entry the session leaves as it is does not ship
+      assert(!ov.set.exists(_._1 == "fs.trash.interval"))
+      assert(ov.set.size < ConfOverlay.entries(target).size / 2, s"${ov.set.size} entries")
+      val rebuilt = spark.sparkContext.parallelize(Seq(1), 1)
+        .map(_ => ConfOverlay.entries(ov.over(CommitLog.hadoopConf))).collect().head
+      assert(rebuilt === ConfOverlay.entries(target))
+    } finally {
+      spark.conf.unset("spark.hadoop.graft.test.overlay")
+      spark.conf.unset("spark.sql.parquet.compression.codec")
+    }
+    // a session-level Parquet setting reaches the staged file
+    val ev = spark.range(20000).select(col("id"), (col("id") % 997).cast("double").as("value"))
+    val r = java.nio.file.Files.createTempDirectory("graft_stage_conf").toString
+    spark.conf.set("parquet.block.size", "4096")
+    val v = try CommitLog.append(spark, r, ev, 1) finally spark.conf.unset("parquet.block.size")
+    val Seq(f) = CommitLog.snapshotFiles(r, v)
+    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f), CommitLog.hadoopConf))
+    val groups = try rd.getRowGroups.size finally rd.close()
+    assert(groups > 1, s"parquet.block.size=4096 left $groups row group(s)")
+  }
+
+  test("staging writer: a task that throws mid-write leaves no staged file and the head as it was") {
+    import graft.sources.CommitLog
+    val ev = Tables(spark, sf, "events").select(col("event_id"), col("user_id"),
+      col("value"), (col("user_id") % 3).as("p")).limit(300)
+    // a row every case's write reaches after others: mid-table, and
+    // touched by the update and the delete below
+    val hits = ev.filter(col("user_id") % 4 === 1).orderBy(col("event_id")).collect()
+    val pick = hits(hits.length / 2).getLong(0)
+    val boom = when(col("event_id") === pick, raise_error(lit("injected mid-write")))
+    val bad = ev.withColumn("value", boom.otherwise(col("value")))
+    val cases: Seq[(String, Boolean, String => Any)] = Seq(
+      ("plain", false, r => CommitLog.append(spark, r, bad, 2)),
+      ("partitioned", false, r => CommitLog.appendPartitioned(spark, r, bad, "p", 1)),
+      ("cdf", true, r => CommitLog.update(spark, r, col("user_id") % 4 === 1,
+        Seq("value" -> boom.otherwise(lit(0.0))))),
+      ("dv", false, r => CommitLog.deleteMergeOnRead(spark, r,
+        boom.otherwise(col("user_id") % 4 === 1))))
+    cases.foreach { case (name, cdf, fail) =>
+      val r = java.nio.file.Files.createTempDirectory("graft_stage_fail").toString
+      if (cdf) CommitLog.setTableProperty(r, "enableChangeDataFeed", "true")
+      CommitLog.append(spark, r, ev, 2)
+      val ex = intercept[Exception](fail(r))
+      assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("injected")), s"$name: $ex")
+      assert(CommitLog.latestVersion(r).contains(0L), s"$name: published past the failure")
+      val listed = CommitLog.snapshotFiles(r, 0L).map(f => new java.io.File(f).getName).toSet
+      val left = Seq("data", "cdf", "dv")
+        .flatMap(d => Option(new java.io.File(r, d).listFiles()).toSeq.flatten)
+        .map(_.getName).filterNot(listed)
+      assert(left.isEmpty, s"$name left files: $left")
+      val stages = new java.io.File(r).list().filter(_.contains("stage-"))
+      assert(stages.isEmpty, s"$name left staging dirs: ${stages.toSeq}")
+    }
   }
 }

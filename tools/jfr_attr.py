@@ -11,7 +11,7 @@ write statement (DML, INSERT, OPTIMIZE, a commit), a read statement
     JAVA_TOOL_OPTIONS="-XX:FlightRecorderOptions=repository=<dir>,maxchunksize=2M,stackdepth=512 \\
       -XX:StartFlightRecording=settings=$PWD/attr.jfc,disk=true" \\
       python3 perfbench/run.py --workload table_mix --seed 1 --seconds 15
-    python3 tools/jfr_attr.py <dir or .jfr files> [--top 25]
+    python3 tools/jfr_attr.py <dir or .jfr files> [--top 25] [--thread PREFIX]
 
 --make-jfc copies the JDK's profile.jfc with park/monitor thresholds of 1 ms
 and Java method sampling every 5 ms. stackdepth=512 matters: at the default
@@ -19,6 +19,10 @@ depth of 64 the innermost frames under Spark's SQL stack hide every graft
 frame. A recording repository holds one .jfr file per rotated chunk; pass the
 directory to read them all (a run that ends in Runtime.halt never writes a
 dump on exit, but the chunks stay).
+
+--thread (default "main") is a thread-name PREFIX: every thread whose name
+starts with it counts, so "stream execution thread for" attributes a streaming
+query's micro-batch thread and "Executor task launch worker" every task thread.
 """
 import argparse
 import collections
@@ -104,7 +108,7 @@ def attribute(paths, thread):
     truncated = 0
     for p in paths:
         for ev in events_of(p):
-            if thread_of(ev) != thread:
+            if not (thread_of(ev) or "").startswith(thread):
                 continue
             st = ev["values"].get("stackTrace") or {}
             truncated += bool(st.get("truncated"))
@@ -133,7 +137,8 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("inputs", nargs="*", help=".jfr files or directories of them")
     ap.add_argument("--make-jfc", metavar="PATH", help="write the recording settings and exit")
-    ap.add_argument("--thread", default="main")
+    ap.add_argument("--thread", default="main",
+                    help="thread-name prefix (default: main)")
     ap.add_argument("--top", type=int, default=20)
     a = ap.parse_args()
     if a.make_jfc:
@@ -149,8 +154,8 @@ def main():
     if not paths:
         ap.error("no .jfr input")
     waits, samples, truncated = attribute(paths, a.thread)
-    report(f"{a.thread}-thread park + monitor wait", waits, "ms", a.top)
-    report(f"{a.thread}-thread CPU samples", samples, "n", a.top)
+    report(f"'{a.thread}*' threads park + monitor wait", waits, "ms", a.top)
+    report(f"'{a.thread}*' threads CPU samples", samples, "n", a.top)
     if truncated:
         print(f"note: {truncated} stacks truncated; raise stackdepth", file=sys.stderr)
 
