@@ -120,19 +120,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("EXPLAIN.md")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // fork-free local FS (r20): without libhadoop every local file
-      // create/mkdir forks a chmod process — see graft.sources.LocalFs
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.sources.NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.sources.NioLocalFs].getName)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session("4")
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# EXPLAIN — normalized physical plans, all registry keys\n\n")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Regenerates PLANS.md: `explain("formatted")` output for the
@@ -254,19 +253,7 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // fork-free local FS (r20): without libhadoop every local file
-      // create/mkdir forks a chmod process — see graft.sources.LocalFs
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.sources.NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.sources.NioLocalFs].getName)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session("4")
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of representative keys\n\n")

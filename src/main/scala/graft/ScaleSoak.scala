@@ -356,18 +356,7 @@ object ScaleSoak {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = s"/tmp/graft_soak_v${GenVersion}_x$n"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // fork-free local FS (r20): without libhadoop every local file
-      // create/mkdir forks a chmod process — see graft.sources.LocalFs
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.sources.NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.sources.NioLocalFs].getName)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Mirror Stage.once: regenerate when the staged copy is absent OR
     // any source fixture is newer than the staged _SUCCESS marker, so

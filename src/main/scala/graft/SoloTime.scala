@@ -28,18 +28,7 @@ object SoloTime {
     val reps = args.lift(1).map(_.toInt).getOrElse(5)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // fork-free local FS (r20): without libhadoop every local file
-      // create/mkdir forks a chmod process — see graft.sources.LocalFs
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.sources.NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.sources.NioLocalFs].getName)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
     keys.foreach { k =>

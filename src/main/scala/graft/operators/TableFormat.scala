@@ -67,6 +67,43 @@ object TableFormat {
     scans.head
   }
 
+  /** THE streaming-view driver of the `s_table_view_stream*` keys: one
+    * `readChangeFeed` AvailableNow stream over table `src`, each
+    * micro-batch handed to `fold`. With a `witness`, the batch is
+    * checkpointed LAZILY (r20): the async version lookup and the
+    * fold(s) all run inside the callback and materialize the same
+    * blocks on first touch (block-level get-or-compute), so a
+    * dedicated eager-checkpoint job per trigger would be pure
+    * overhead. The batch's max `_commit_version` is looked up on the
+    * Par pool, overlapping the fold (r20, guide §2.6), and the witness
+    * runs at that version after the fold — not for a batch without
+    * rows. Returns when the stream has drained. */
+  private def viewStream(s: SparkSession, src: String, ckPrefix: String,
+      witness: Option[Long => Unit] = None)(fold: DataFrame => Unit): Unit = {
+    val ck = java.nio.file.Files.createTempDirectory(ckPrefix).toString
+    s.readStream.format("graft.sources.TableStreamProvider")
+      .option("path", src)
+      .option("readChangeFeed", "true")
+      .load()
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        witness match {
+          case None => fold(batch)
+          case Some(w) =>
+            val b = batch.localCheckpoint(false)
+            val verF = graft.functions.Par.async(
+              b.agg(max(col("_commit_version"))).collect()(0))
+            fold(b)
+            val verRow = verF()
+            if (!verRow.isNullAt(0)) w(verRow.getLong(0))
+        }
+        ()
+      }
+      .option("checkpointLocation", ck)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      .awaitTermination()
+  }
+
   private[graft] def buildEventsTable(s: SparkSession, dir: String): String = {
     if (tableMemo.size > 8) tableMemo.clear()
     tableMemo.computeIfAbsent((s, dir), _ => {
@@ -775,21 +812,11 @@ object TableFormat {
       IncrementalView.create(s, vw.toString, src.toString, "event_type", "value")
       CommitLog.append(s, src.toString, ev.filter(col("event_id") % 2 =!= 0), nFiles = 2)
       CommitLog.delete(s, src.toString, col("user_id") % 4 === 1)
-      val ck = java.nio.file.Files.createTempDirectory("graft_ivs_ck").toString
       val consumed = new java.util.concurrent.atomic.AtomicLong(0L)
-      val q = s.readStream.format("graft.sources.TableStreamProvider")
-        .option("path", src.toString)
-        .option("readChangeFeed", "true")
-        .load()
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          consumed.addAndGet(
-            IncrementalView.foldDeltas(s, vw.toString, batch)._2)
-          ()
-        }
-        .option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      viewStream(s, src.toString, "graft_ivs_ck") { batch =>
+        consumed.addAndGet(IncrementalView.foldDeltas(s, vw.toString, batch)._2)
+        ()
+      }
       val view = CommitLog.read(s, vw.toString,
         CommitLog.latestVersion(vw.toString).get)
       val full = CommitLog.read(s, src.toString,
@@ -837,7 +864,6 @@ object TableFormat {
         src.toString, dimT.toString, "user_id", Seq("segment"), Seq("value"))
       CommitLog.append(s, src.toString, ev.filter(col("event_id") % 2 =!= 0), nFiles = 2)
       CommitLog.delete(s, src.toString, col("user_id") % 4 === 1)
-      val ck = java.nio.file.Files.createTempDirectory("graft_ivsm_ck").toString
       val consumedM = new java.util.concurrent.atomic.AtomicLong(0L)
       val consumedJ = new java.util.concurrent.atomic.AtomicLong(0L)
       val allExact = new java.util.concurrent.atomic.AtomicBoolean(true)
@@ -847,53 +873,33 @@ object TableFormat {
             sum(col("value").cast("decimal(18,4)"))
               .cast("decimal(18,4)").as("total_value"),
             min(col("value")).as("mn_value"), max(col("value")).as("mx_value"))
-      val q = s.readStream.format("graft.sources.TableStreamProvider")
-        .option("path", src.toString)
-        .option("readChangeFeed", "true")
-        .load()
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // LAZY checkpoint (r20): the async version lookup and the
-          // fold(s) all run inside this callback and materialize the
-          // same blocks on first touch (block-level get-or-compute),
-          // so the dedicated eager-checkpoint job per trigger is pure
-          // overhead — its work rides the first consumer instead
-          val b = batch.localCheckpoint(false)
-          // the witness's version lookup needs only the checkpointed
-          // batch — overlap it with the folds too (r20, guide §2.6)
-          val verF = graft.functions.Par.async(
-            b.agg(max(col("_commit_version"))).collect()(0))
-          // the two views fold the SAME checkpointed batch into
-          // DIFFERENT tables — independent commits, run concurrently
-          // (r20, guide §2.6)
-          val (nM, nJ) = graft.functions.Par.par2(
-            graft.sources.IncrementalViewMulti
-              .foldDeltas(s, vm.toString, src.toString, b)._2,
-            graft.sources.IncrementalViewMulti
-              .foldDeltas(s, vj.toString, src.toString, b)._2)
-          consumedM.addAndGet(nM)
-          consumedJ.addAndGet(nJ)
-          // the per-batch exactness witness, at THIS batch's version
-          val verRow = verF()
-          if (!verRow.isNullAt(0)) {
-            val ver = verRow.getLong(0)
-            val at = CommitLog.read(s, src.toString, ver)
-            val wantM = multiState(at, "event_type")
-            val gotM = CommitLog.read(s, vm.toString,
-              CommitLog.latestVersion(vm.toString).get)
-            val wantJ = multiState(at.join(dim, Seq("user_id"))
-              .select(col("segment"), col("value")), "segment")
-            val gotJ = CommitLog.read(s, vj.toString,
-              CommitLog.latestVersion(vj.toString).get)
-            // both comparisons in ONE job (r20, multisetUnequal)
-            if (multisetUnequal(Seq(gotM -> wantM, gotJ -> wantJ))
-              .nonEmpty) allExact.set(false)
-          }
-          ()
-        }
-        .option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      // the per-batch exactness witness, at THIS batch's version
+      def witness(ver: Long): Unit = {
+        val at = CommitLog.read(s, src.toString, ver)
+        val wantM = multiState(at, "event_type")
+        val gotM = CommitLog.read(s, vm.toString,
+          CommitLog.latestVersion(vm.toString).get)
+        val wantJ = multiState(at.join(dim, Seq("user_id"))
+          .select(col("segment"), col("value")), "segment")
+        val gotJ = CommitLog.read(s, vj.toString,
+          CommitLog.latestVersion(vj.toString).get)
+        // both comparisons in ONE job (r20, multisetUnequal)
+        if (multisetUnequal(Seq(gotM -> wantM, gotJ -> wantJ))
+          .nonEmpty) allExact.set(false)
+      }
+      viewStream(s, src.toString, "graft_ivsm_ck", Some(witness)) { b =>
+        // the two views fold the SAME checkpointed batch into
+        // DIFFERENT tables — independent commits, run concurrently
+        // (r20, guide §2.6)
+        val (nM, nJ) = graft.functions.Par.par2(
+          graft.sources.IncrementalViewMulti
+            .foldDeltas(s, vm.toString, src.toString, b)._2,
+          graft.sources.IncrementalViewMulti
+            .foldDeltas(s, vj.toString, src.toString, b)._2)
+        consumedM.addAndGet(nM)
+        consumedJ.addAndGet(nJ)
+        ()
+      }
       val viewJ = CommitLog.read(s, vj.toString,
         CommitLog.latestVersion(vj.toString).get)
       ordered(viewJ
@@ -932,56 +938,38 @@ object TableFormat {
       IncrementalView.create(s, v2.toString, v1.toString, "nv_value", "total_value")
       CommitLog.append(s, src.toString, ev.filter(col("event_id") % 2 =!= 0), nFiles = 2)
       CommitLog.delete(s, src.toString, col("user_id") % 5 === 0)
-      val ck = java.nio.file.Files.createTempDirectory("graft_vcs_ck").toString
       val c1 = new java.util.concurrent.atomic.AtomicLong(0L)
       val c2 = new java.util.concurrent.atomic.AtomicLong(0L)
       val allExact = new java.util.concurrent.atomic.AtomicBoolean(true)
-      val q = s.readStream.format("graft.sources.TableStreamProvider")
-        .option("path", src.toString)
-        .option("readChangeFeed", "true")
-        .load()
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // LAZY checkpoint (r20): the async version lookup and the
-          // fold(s) all run inside this callback and materialize the
-          // same blocks on first touch (block-level get-or-compute),
-          // so the dedicated eager-checkpoint job per trigger is pure
-          // overhead — its work rides the first consumer instead
-          val b = batch.localCheckpoint(false)
-          // version lookup needs only the checkpointed batch — overlap
-          // it with the (sequentially dependent) two-level fold (r20)
-          val verF = graft.functions.Par.async(
-            b.agg(max(col("_commit_version"))).collect()(0))
-          c1.addAndGet(graft.sources.IncrementalViewMulti
-            .foldDeltas(s, v1.toString, src.toString, b)._2)
-          // level 2 folds level 1's own new changelog — per trigger
-          c2.addAndGet(IncrementalView.refresh(s, v2.toString)._2)
-          val verRow = verF()
-          if (!verRow.isNullAt(0)) {
-            val at = CommitLog.read(s, src.toString, verRow.getLong(0))
-            val want1 = at.filter(col("user_id").isNotNull)
-              .groupBy(col("user_id"))
-              .agg(count(lit(1)).as("n"), count(col("value")).as("nv_value"),
-                sum(col("value").cast("decimal(18,4)"))
-                  .cast("decimal(18,4)").as("total_value"),
-                min(col("value")).as("mn_value"), max(col("value")).as("mx_value"))
-            val got1 = CommitLog.read(s, v1.toString,
-              CommitLog.latestVersion(v1.toString).get)
-            val want2 = got1.groupBy(col("nv_value"))
-              .agg(count(lit(1)).as("n"),
-                sum(col("total_value").cast("decimal(18,4)"))
-                  .cast("decimal(18,4)").as("total"))
-            val got2 = CommitLog.read(s, v2.toString,
-              CommitLog.latestVersion(v2.toString).get)
-            // both levels' comparisons in ONE job (r20)
-            if (multisetUnequal(Seq(got1 -> want1, got2 -> want2))
-              .nonEmpty) allExact.set(false)
-          }
-          ()
-        }
-        .option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      def witness(ver: Long): Unit = {
+        val at = CommitLog.read(s, src.toString, ver)
+        val want1 = at.filter(col("user_id").isNotNull)
+          .groupBy(col("user_id"))
+          .agg(count(lit(1)).as("n"), count(col("value")).as("nv_value"),
+            sum(col("value").cast("decimal(18,4)"))
+              .cast("decimal(18,4)").as("total_value"),
+            min(col("value")).as("mn_value"), max(col("value")).as("mx_value"))
+        val got1 = CommitLog.read(s, v1.toString,
+          CommitLog.latestVersion(v1.toString).get)
+        val want2 = got1.groupBy(col("nv_value"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("total_value").cast("decimal(18,4)"))
+              .cast("decimal(18,4)").as("total"))
+        val got2 = CommitLog.read(s, v2.toString,
+          CommitLog.latestVersion(v2.toString).get)
+        // both levels' comparisons in ONE job (r20)
+        if (multisetUnequal(Seq(got1 -> want1, got2 -> want2))
+          .nonEmpty) allExact.set(false)
+      }
+      // the version lookup overlaps the (sequentially dependent)
+      // two-level fold
+      viewStream(s, src.toString, "graft_vcs_ck", Some(witness)) { b =>
+        c1.addAndGet(graft.sources.IncrementalViewMulti
+          .foldDeltas(s, v1.toString, src.toString, b)._2)
+        // level 2 folds level 1's own new changelog — per trigger
+        c2.addAndGet(IncrementalView.refresh(s, v2.toString)._2)
+        ()
+      }
       val view2 = CommitLog.read(s, v2.toString,
         CommitLog.latestVersion(v2.toString).get)
       ordered(view2
@@ -1022,59 +1010,39 @@ object TableFormat {
         src.toString, dimT.toString, "user_id", Seq("segment"), Seq("value"))
       CommitLog.append(s, src.toString, ev.filter(col("event_id") % 2 =!= 0), nFiles = 2)
       CommitLog.delete(s, src.toString, col("user_id") % 4 === 1)
-      val ck = java.nio.file.Files.createTempDirectory("graft_ivsd_ck").toString
       val consumed = new java.util.concurrent.atomic.AtomicLong(0L)
       val dimReagg = new java.util.concurrent.atomic.AtomicLong(0L)
       val allExact = new java.util.concurrent.atomic.AtomicBoolean(true)
       val dimBumped = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val q = s.readStream.format("graft.sources.TableStreamProvider")
-        .option("path", src.toString)
-        .option("readChangeFeed", "true")
-        .load()
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // LAZY checkpoint (r20): the async version lookup and the
-          // fold(s) all run inside this callback and materialize the
-          // same blocks on first touch (block-level get-or-compute),
-          // so the dedicated eager-checkpoint job per trigger is pure
-          // overhead — its work rides the first consumer instead
-          val b = batch.localCheckpoint(false)
-          // version lookup needs only the checkpointed batch (r20)
-          val verF = graft.functions.Par.async(
-            b.agg(max(col("_commit_version"))).collect()(0))
-          val (_, n, nRec) = graft.sources.IncrementalViewMulti
-            .foldDeltas(s, vj.toString, src.toString, b)
-          consumed.addAndGet(n); dimReagg.addAndGet(nRec)
-          // witness at THIS batch's fact version ⋈ the dim's head
-          // (the pin after any Δdim fold this batch ran)
-          val verRow = verF()
-          if (!verRow.isNullAt(0)) {
-            val ver = verRow.getLong(0)
-            val at = CommitLog.read(s, src.toString, ver)
-            val dimNow = CommitLog.read(s, dimT.toString,
-              CommitLog.latestVersion(dimT.toString).get)
-            val want = at.join(dimNow, Seq("user_id"))
-              .filter(col("segment").isNotNull).groupBy(col("segment"))
-              .agg(count(lit(1)).as("n"), count(col("value")).as("nv_value"),
-                sum(col("value").cast("decimal(18,4)"))
-                  .cast("decimal(18,4)").as("total_value"),
-                min(col("value")).as("mn_value"), max(col("value")).as("mx_value"))
-            val got = CommitLog.read(s, vj.toString,
-              CommitLog.latestVersion(vj.toString).get)
-            if (!multisetEqual(got, want)) allExact.set(false)
-            // the mid-stream dim advance: AFTER the first fact batch
-            // folded and verified — the NEXT trigger must propagate it
-            if (ver >= 1L && dimBumped.compareAndSet(false, true)) {
-              CommitLog.update(s, dimT.toString, col("user_id") % 4 === 2,
-                Seq("segment" -> lit("seg_moved")))
-              ()
-            }
-          }
+      // witness at THIS batch's fact version ⋈ the dim's head (the pin
+      // after any Δdim fold this batch ran)
+      def witness(ver: Long): Unit = {
+        val at = CommitLog.read(s, src.toString, ver)
+        val dimNow = CommitLog.read(s, dimT.toString,
+          CommitLog.latestVersion(dimT.toString).get)
+        val want = at.join(dimNow, Seq("user_id"))
+          .filter(col("segment").isNotNull).groupBy(col("segment"))
+          .agg(count(lit(1)).as("n"), count(col("value")).as("nv_value"),
+            sum(col("value").cast("decimal(18,4)"))
+              .cast("decimal(18,4)").as("total_value"),
+            min(col("value")).as("mn_value"), max(col("value")).as("mx_value"))
+        val got = CommitLog.read(s, vj.toString,
+          CommitLog.latestVersion(vj.toString).get)
+        if (!multisetEqual(got, want)) allExact.set(false)
+        // the mid-stream dim advance: AFTER the first fact batch
+        // folded and verified — the NEXT trigger must propagate it
+        if (ver >= 1L && dimBumped.compareAndSet(false, true)) {
+          CommitLog.update(s, dimT.toString, col("user_id") % 4 === 2,
+            Seq("segment" -> lit("seg_moved")))
           ()
         }
-        .option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      }
+      viewStream(s, src.toString, "graft_ivsd_ck", Some(witness)) { b =>
+        val (_, n, nRec) = graft.sources.IncrementalViewMulti
+          .foldDeltas(s, vj.toString, src.toString, b)
+        consumed.addAndGet(n); dimReagg.addAndGet(nRec)
+        ()
+      }
       val viewJ = CommitLog.read(s, vj.toString,
         CommitLog.latestVersion(vj.toString).get)
       ordered(viewJ

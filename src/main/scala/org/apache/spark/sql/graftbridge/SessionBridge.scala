@@ -1,9 +1,13 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.InsertAdaptiveSparkPlan
 
-/** Thread-safe per-query conf isolation (r20).
+/** Per-query planning without adaptive execution (r20, reworked).
   *
   * `Confs.withConfs` (save → set → run → restore on the SHARED session
   * conf) is correct single-threaded, but commits run on arbitrary
@@ -11,34 +15,33 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => 
   * and two overlapping toggles can restore in the wrong order and leak
   * the override into the session permanently, while a toggle
   * concurrent with ANOTHER thread's planning silently applies to that
-  * unrelated query (the r19 driver run caught exactly this:
+  * unrelated query (r19 saw exactly this:
   * `spark.sql.adaptive.enabled=false` from a commit bled into two
-  * PlanSpec canaries planned at the same time).
+  * PlanSpec canaries planned at the same time). A cloned session per
+  * override set avoids the race but freezes the parent's conf at
+  * clone time, so settings made on the session later never reach the
+  * planning of what runs on the clone.
   *
-  * The fix is the mechanism Spark itself provides for exactly this:
-  * `cloneSession()` gives a child session sharing the SparkContext and
-  * a COPY of the session state, whose conf can diverge without ever
-  * touching the parent's. A frame built against the parent is re-bound
-  * to the clone via `Dataset.ofRows` on its ANALYZED plan (already
-  * resolved — no catalog/temp-view lookups re-run), so planning and
-  * execution read the clone's conf while every other thread keeps the
-  * parent's.
+  * Here nothing is toggled or copied: a frame's (already analyzed)
+  * plan gets a fresh `QueryExecution` on its own session whose
+  * physical preparation rules are Spark's own list without
+  * `InsertAdaptiveSparkPlan` — the non-adaptive list. (That rule reads
+  * its switch from the session conf itself, so a thread-local conf
+  * override cannot turn it off.) Planning and execution read the
+  * session's conf as it is when the frame plans.
   *
-  * Both `cloneSession` and `Dataset.ofRows` are `private[sql]`, hence
-  * this one bridge object living under `org.apache.spark.sql`. */
+  * `QueryExecution.preparations` is protected and the `Dataset`
+  * constructor `private[sql]`, hence this object under
+  * `org.apache.spark.sql`. */
 object SessionBridge {
-  /** A cloned session with `kvs` applied on top of the parent's conf
-    * at clone time. The clone is immutable after construction here, so
-    * sharing one per (parent, override-set) across threads is safe. */
-  def cloneWithConfs(s: SparkSession, kvs: (String, String)*): SparkSession = {
-    val c = s.asInstanceOf[ClassicSession].cloneSession()
-    kvs.foreach { case (k, v) => c.conf.set(k, v) }
-    c
+  /** `df`, planned without adaptive execution under its session's
+    * current conf. */
+  def withoutAqe(df: DataFrame): DataFrame = {
+    val s = df.sparkSession.asInstanceOf[ClassicSession]
+    val qe = new QueryExecution(s, df.queryExecution.analyzed) {
+      override protected def preparations: Seq[Rule[SparkPlan]] =
+        super.preparations.filterNot(_.isInstanceOf[InsertAdaptiveSparkPlan])
+    }
+    new ClassicDataset[Row](qe, () => RowEncoder.encoderFor(qe.analyzed.schema))
   }
-
-  /** Re-bind `df`'s (analyzed) plan to session `to`: the returned
-    * frame plans and executes under `to`'s conf. */
-  def rebind(df: DataFrame, to: SparkSession): DataFrame =
-    ClassicDataset.ofRows(to.asInstanceOf[ClassicSession],
-      df.queryExecution.analyzed)
 }

@@ -3588,7 +3588,23 @@ class StreamingSpec extends SparkSpec {
         assert(CommitLog.appendBatch(spark, r, df, 1, b)); () },
       "appendBatchPartitioned" -> { (r, df, b) =>
         assert(CommitLog.appendBatchPartitioned(spark, r, df, "event_type", 1, b)); () },
-      "appendWithRetry" -> { (r, df, _) => CommitLog.appendWithRetry(spark, r, df, 1); () })
+      "appendWithRetry" -> { (r, df, _) => CommitLog.appendWithRetry(spark, r, df, 1); () },
+      "appendEvolved" -> { (r, df, _) => CommitLog.appendEvolved(spark, r, df, 1); () },
+      "appendSegment" -> { (r, df, _) =>
+        CommitLog.appendSegment(spark, r, df, 1, "event_id"); () },
+      "appendSegmentPartitioned" -> { (r, df, _) =>
+        CommitLog.appendSegmentPartitioned(spark, r, df, Seq("event_type"), 1, "event_id"); () })
+    // a segmented version lists its files in segment files, and reads
+    // through the segment scan
+    def segmented(root: String, v: Long) = CommitLog.isSegmented(root, v)
+    def filesAt(root: String, v: Long): Set[String] =
+      if (segmented(root, v))
+        CommitLog.segmentsOf(root, v).flatMap(sr => CommitLog.segmentEntries(root, sr.path)._1).toSet
+      else CommitLog.snapshotFiles(root, v).map(f => "data/" + new java.io.File(f).getName).toSet
+    def readAt(root: String, v: Long): DataFrame =
+      if (segmented(root, v))
+        CommitLog.segmentedPrunedRead(spark, root, v, Long.MinValue, Long.MaxValue)._1
+      else CommitLog.read(spark, root, v)
     val ev = Tables(spark, sf, "events")
       .select(col("event_id"), col("event_type"), col("value")).limit(120)
     val batches = Seq(ev.filter(col("event_id") % 2 === 0), ev.filter(col("event_id") % 2 =!= 0))
@@ -3618,26 +3634,40 @@ class StreamingSpec extends SparkSpec {
       assert(head === Some(1L), s"$name: two writes must publish versions 0 and 1")
       // identity: non-null, unique, contiguous after each head's mark
       Seq(0L, 1L).foreach { v =>
-        val ids = CommitLog.read(spark, root, v).select(col("row_id"))
+        val ids = readAt(root, v).select(col("row_id"))
           .collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
         assert(ids.forall(_.isDefined), s"$name: NULL identity at v$v")
         assert(ids.flatten.sorted.toSeq === (1L to sizes.take(v.toInt + 1).sum).toSeq,
           s"$name: v$v ids must be exactly 1..${sizes.take(v.toInt + 1).sum}")
       }
       // generated column computed on every write path
-      assert(CommitLog.read(spark, root, 1L)
+      assert(readAt(root, 1L)
         .filter(not(col("day") <=> col("event_id") % 7)).count() === 0L, name)
       // stats for the new files: the declared typed stats, except the
-      // legacy single-column entry point, which records its own column
-      val newFiles = CommitLog.snapshotFiles(root, 1L).toSet --
-        CommitLog.snapshotFiles(root, 0L)
-      val rel = newFiles.map(f => "data/" + new java.io.File(f).getName)
+      // legacy single-column entry point and the segment writers, which
+      // record their own column
+      val rel = filesAt(root, 1L) -- filesAt(root, 0L)
       assert(rel.nonEmpty, name)
+      val newSeg = Option.when(segmented(root, 1L))(CommitLog.segmentsOf(root, 1L).last)
       val withStats =
         if (name == "appendWithStats") CommitLog.snapshotStatsOf(root, 1L)._2.keySet
-        else CommitLog.auxOf(root, 1L).stats2.collect {
-          case (f, cs) if cs.contains("event_id") => f }.toSet
+        else newSeg.map(sr => CommitLog.segmentEntries(root, sr.path)._2.keySet)
+          .getOrElse(CommitLog.auxOf(root, 1L).stats2.collect {
+            case (f, cs) if cs.contains("event_id") => f }.toSet)
       assert(rel.subsetOf(withStats), s"$name: new files without event_id stats")
+      // row counts and byte sizes: per file in the manifest, or per file
+      // and per segment for a segment append
+      newSeg match {
+        case Some(sr) =>
+          val rows = CommitLog.segmentEntryRows(root, sr.path)
+          assert(rel.subsetOf(rows.keySet), s"$name: new files without rows entries")
+          assert(sr.nRows === Some(rel.toSeq.map(rows).sum) && sr.nBytes ===
+            Some(rel.toSeq.map(f => new java.io.File(root, f).length()).sum), s"$name: $sr")
+        case None =>
+          val aux = CommitLog.auxOf(root, 1L)
+          assert(rel.subsetOf(aux.rows.keySet) && rel.subsetOf(aux.sizes.keySet),
+            s"$name: new files without rows or sizes entries")
+      }
       // refusals leave the head unchanged and stage nothing
       def refused(df: DataFrame, why: String): Unit = {
         val ex = intercept[IllegalArgumentException](write(root, df, 2L))
@@ -3645,11 +3675,20 @@ class StreamingSpec extends SparkSpec {
         assert(CommitLog.latestVersion(root) === head, s"$name: refused write moved the head")
         val onDisk = new java.io.File(root, "data").listFiles()
           .count(_.getName.endsWith(".parquet"))
-        assert(onDisk === CommitLog.snapshotFiles(root, 1L).size,
+        assert(onDisk === filesAt(root, 1L).size,
           s"$name: refused write left staged files behind")
+        val segFiles = new java.io.File(root, "_graft_log").list().filter(_.startsWith("seg-")).toSet
+        assert(segFiles === (if (segmented(root, 1L))
+          CommitLog.segmentsOf(root, 1L).map(_.path).toSet else Set.empty[String]),
+          s"$name: refused write left segment files behind")
       }
       refused(batches(0).withColumn("event_id", -col("event_id") - 1), "CHECK constraint 'pos'")
       refused(batches(0).withColumn("day", col("event_id") % 7 + 1), "generated column 'day'")
+      // a partition value the layout cannot record refuses after its
+      // files staged
+      if (name.contains("Partitioned"))
+        refused(batches(0).withColumn("event_type", lit("__GRAFT_BAD_PARTITION__")),
+          "reserved layout token")
     }
   }
 
@@ -3734,6 +3773,9 @@ class StreamingSpec extends SparkSpec {
     val badKeys = ev.select(when(col("event_id") >= 0,
       raise_error(lit("injected in the dirty-file collect"))).otherwise(col("event_id")).as("event_id"))
     val none: String => Unit = _ => ()
+    // competing appends published by a case's beforeCommit: each moves
+    // the head, and the case ends giving up instead of by injection
+    val raced = new java.util.concurrent.atomic.AtomicLong()
     val cases: Seq[(String, String => Unit, String => Any)] = Seq(
       ("delete", none, r => CommitLog.delete(spark, r, hit, beforeCommit = boom)),
       ("update", none, r => CommitLog.update(spark, r, hit, asg, beforeCommit = boom)),
@@ -3758,7 +3800,14 @@ class StreamingSpec extends SparkSpec {
       // the head's four plain files carry no layout under the spec the
       // partitioned append sets, so the migration restages them
       ("migrateLayout", r => { CommitLog.appendPartitioned(spark, r, ev, "user_id", 1); () },
-        r => CommitLog.migrateLayout(spark, r, beforeCommit = boom)))
+        r => CommitLog.migrateLayout(spark, r, beforeCommit = boom)),
+      ("appendWithRetry", none,
+        r => CommitLog.appendWithRetry(spark, r, ev, 2, beforeCommit = boom)),
+      ("appendWithRetry, loses every race", none,
+        r => CommitLog.appendWithRetry(spark, r, ev, 2, maxAttempts = 3, beforeCommit = () => {
+          raced.incrementAndGet()
+          CommitLog.append(spark, r, ev.limit(3), 1); ()
+        })))
     cases.foreach { case (name, prepare, fail) =>
       val r = java.nio.file.Files.createTempDirectory("graft_cl_scrub").toString
       CommitLog.setTableProperty(r, "enableChangeDataFeed", "true")
@@ -3766,9 +3815,12 @@ class StreamingSpec extends SparkSpec {
       prepare(r)
       val head = CommitLog.latestVersion(r).get
       val before = CommitLog.read(spark, r, head).collect().map(_.toString).sorted.toSeq
+      raced.set(0L)
       val ex = intercept[Exception](fail(r))
-      assert(ex.getMessage.contains("injected"), s"$name: ${ex.getMessage}")
-      assert(CommitLog.latestVersion(r).contains(head), s"$name: published past the failure")
+      assert(ex.getMessage.contains(if (raced.get > 0) "gave up" else "injected"),
+        s"$name: ${ex.getMessage}")
+      assert(CommitLog.latestVersion(r).contains(head + raced.get),
+        s"$name: published past the failure")
       assert(CommitLog.read(spark, r, head).collect().map(_.toString).sorted.toSeq === before, name)
       val manifests = new java.io.File(r, "_graft_log").listFiles()
         .filter(_.getName.endsWith(".json"))
@@ -3795,6 +3847,111 @@ class StreamingSpec extends SparkSpec {
       Seq(CommitLog.RangeProbe("event_id", Some(m / 2 + 1), Some(m)))))
     assert(CommitLog.manifestParses.get - parses0 === 1L)
     assert(kept.size === 1, s"the range probe must keep one of two segments: $kept")
+  }
+
+  test("commit log: legacy stats, segment bounds and NULL counts equal a direct aggregate") {
+    import graft.sources.CommitLog
+    // negatives, NULLs, an all-NULL file and, under a small row-group
+    // size, files of several row groups
+    val df = spark.range(-3000, 3000, 1, 4).select(col("id"),
+      when(col("id") % 5 === 0 || col("id") >= 2999 - 60, lit(null))
+        .otherwise(col("id") * 3).as("k"))
+    val allNull = spark.range(0, 10, 1, 1).select(col("id"), lit(null).cast("long").as("k"))
+    val flat = java.nio.file.Files.createTempDirectory("graft_legacy_flat").toString
+    val seg = java.nio.file.Files.createTempDirectory("graft_legacy_seg").toString
+    spark.conf.set("parquet.block.size", "4096")
+    try {
+      // the first write has no log schema yet, the second reads footers
+      Seq(df, allNull, df).foreach { d =>
+        CommitLog.appendWithStats(spark, flat, d, 2, "k")
+        CommitLog.appendSegment(spark, seg, d, 2, "k")
+      }
+    } finally spark.conf.unset("parquet.block.size")
+    // per file: (min, max) unless all NULL, and the NULL count
+    def direct(root: String, f: String): (Option[(Long, Long)], Long) = {
+      val r = spark.read.parquet(new java.io.File(root, f).toString)
+        .agg(min(col("k")), max(col("k")), sum(when(col("k").isNull, 1L).otherwise(0L)))
+        .head()
+      (Option.when(!r.isNullAt(0))((r.getLong(0), r.getLong(1))), r.getLong(2))
+    }
+    def rowGroups(root: String, f: String): Int = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(new java.io.File(root, f).getAbsolutePath),
+          CommitLog.hadoopConf))
+      try r.getRowGroups.size finally r.close()
+    }
+    val v = CommitLog.latestVersion(flat).get
+    val flatFiles = CommitLog.snapshotFiles(flat, v).map(f => "data/" + new java.io.File(f).getName)
+    assert(flatFiles.exists(rowGroups(flat, _) > 1), "the fixture must span several row groups")
+    val (statsCol, stats) = CommitLog.snapshotStatsOf(flat, v)
+    assert(statsCol === Some("k"))
+    assert(stats === flatFiles.flatMap(f => direct(flat, f)._1.map(f -> _)).toMap)
+    assert(stats.size < flatFiles.size, "the all-NULL file records no bounds")
+    val segs = CommitLog.segmentsOf(seg, CommitLog.latestVersion(seg).get)
+    assert(segs.size === 3)
+    segs.foreach { sr =>
+      val (files, segStats) = CommitLog.segmentEntries(seg, sr.path)
+      val want = files.map(f => f -> direct(seg, f)).toMap
+      assert(segStats === want.collect { case (f, (Some(b), _)) => f -> b })
+      val bounds = want.values.flatMap(_._1)
+      assert(sr.bounds === Option.when(bounds.nonEmpty)((bounds.map(_._1).min, bounds.map(_._2).max)))
+      assert(sr.nNulls === Some(want.values.map(_._2).sum))
+    }
+  }
+
+  test("commit log: a non-integral legacy or segment stats column refuses by name before staging") {
+    import graft.sources.CommitLog
+    val ev = Tables(spark, sf, "events").select(col("event_id"), col("value")).limit(50)
+    val writes: Seq[(String, String => Any)] = Seq(
+      "appendWithStats" -> (r => CommitLog.appendWithStats(spark, r, ev, 1, "value")),
+      "appendSegment" -> (r => CommitLog.appendSegment(spark, r, ev, 1, "value")),
+      "appendSegmentPartitioned" -> (r =>
+        CommitLog.appendSegmentPartitioned(spark, r, ev, Seq("event_id"), 1, "value")),
+      "appendWithStats, no such column" ->
+        (r => CommitLog.appendWithStats(spark, r, ev, 1, "nope")))
+    writes.foreach { case (name, write) =>
+      val r = java.nio.file.Files.createTempDirectory("graft_legacy_refuse").toString
+      val ex = intercept[IllegalArgumentException](write(r))
+      assert(ex.getMessage.contains("stats column") &&
+        ex.getMessage.contains(if (name.endsWith("column")) "'nope'" else "'value'"),
+        s"$name: ${ex.getMessage}")
+      assert(CommitLog.latestVersion(r).isEmpty, name)
+      assert(Option(new java.io.File(r, "data").list()).forall(_.isEmpty),
+        s"$name staged before refusing")
+    }
+  }
+
+  test("staging writes plan under the session's current conf, without AQE") {
+    import graft.sources.CommitLog
+    val root = java.nio.file.Files.createTempDirectory("graft_stage_conf").toString
+    // a first staged write, so any per-session planning state exists
+    CommitLog.append(spark, root, spark.range(0, 100).toDF("id"), 2)
+    val nodes = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    def names(p: org.apache.spark.sql.execution.SparkPlanInfo): Seq[String] =
+      p.nodeName +: p.children.flatMap(names)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          nodes.add(names(x.sparkPlanInfo))
+        case _ => ()
+      }
+    }
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.sparkContext.addSparkListener(listener)
+    val jobs =
+      try jobsOf { CommitLog.append(spark, root, spark.range(100, 200).toDF("id"), 2); () }
+      finally {
+        spark.sparkContext.removeSparkListener(listener)
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    import scala.jdk.CollectionConverters._
+    val staged = nodes.asScala.toSeq.filter(_.exists(_.contains("Exchange")))
+    assert(staged.nonEmpty, s"no staging plan seen: ${nodes.asScala.toSeq}")
+    assert(staged.forall(!_.exists(_.startsWith("WholeStageCodegen"))),
+      s"a conf set after the first staged write must reach the next one's plan: $staged")
+    assert(staged.forall(!_.contains("AdaptiveSparkPlan")), s"AQE planned a staging write: $staged")
+    assert(jobs === 1, s"a join-free staging write is one job, got $jobs")
   }
 
   /** Rows, Parquet schema and key-value metadata of one Parquet file. */

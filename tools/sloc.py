@@ -1,15 +1,20 @@
 #!/usr/bin/env python3
 """Count non-blank, non-comment Scala source lines per file.
 
-    python3 tools/sloc.py [DIR ...]     # default: src/main
+    python3 tools/sloc.py [DIR ...]                 # default: src/main
+    python3 tools/sloc.py --against REV [DIR ...]   # deltas against a git revision
 
 Prints one `<lines>  <path>` row per .scala file under each DIR (sorted by
-path), then the total. A line counts when any character on it lies outside
-a comment: `//` line comments and `/* ... */` block comments (scaladoc
-included, nesting as in Scala) are skipped, string and character literals
-are not mistaken for comment openers. Run from the repository root.
+path), then the total. With `--against REV`, compares the working tree with
+git revision REV instead: one `<delta>  <before> -> <after>  <path>` row per
+file whose count differs (a file missing on one side counts 0 there), then
+the total in the same form. A line counts when any character on it lies
+outside a comment: `//` line comments and `/* ... */` block comments
+(scaladoc included, nesting as in Scala) are skipped, string and character
+literals are not mistaken for comment openers. Run from the repository root.
 """
 import os
+import subprocess
 import sys
 
 
@@ -60,18 +65,48 @@ def code_lines(text):
     return n
 
 
-def main(argv):
-    dirs = argv or ["src/main"]
-    total = 0
+def tree_counts(dirs):
+    """{path: lines} for the .scala files under `dirs` in the working tree."""
+    out = {}
     for d in dirs:
-        paths = sorted(os.path.join(r, f) for r, _, fs in os.walk(d)
-                       for f in fs if f.endswith(".scala"))
-        for p in paths:
-            with open(p, encoding="utf-8") as fh:
-                k = code_lines(fh.read())
-            total += k
-            print(f"{k:7d}  {p}")
-    print(f"{total:7d}  total")
+        for r, _, fs in os.walk(d):
+            for f in fs:
+                if f.endswith(".scala"):
+                    p = os.path.join(r, f)
+                    with open(p, encoding="utf-8") as fh:
+                        out[os.path.normpath(p)] = code_lines(fh.read())
+    return out
+
+
+def rev_counts(rev, dirs):
+    """{path: lines} for the .scala files under `dirs` at git revision `rev`."""
+    def git(*args):
+        return subprocess.run(["git", *args], check=True, capture_output=True).stdout
+    names = git("ls-tree", "-r", "--name-only", rev, "--", *dirs).decode().splitlines()
+    return {os.path.normpath(p): code_lines(git("show", f"{rev}:{p}").decode("utf-8"))
+            for p in names if p.endswith(".scala")}
+
+
+def main(argv):
+    against = None
+    if argv[:1] == ["--against"]:
+        if len(argv) < 2:
+            sys.exit("usage: sloc.py --against REV [DIR ...]")
+        against, argv = argv[1], argv[2:]
+    dirs = argv or ["src/main"]
+    now = tree_counts(dirs)
+    if against is None:
+        for p in sorted(now):
+            print(f"{now[p]:7d}  {p}")
+        print(f"{sum(now.values()):7d}  total")
+        return
+    then = rev_counts(against, dirs)
+    for p in sorted(set(now) | set(then)):
+        a, b = then.get(p, 0), now.get(p, 0)
+        if a != b:
+            print(f"{b - a:+7d}  {a:6d} -> {b:6d}  {p}")
+    a, b = sum(then.values()), sum(now.values())
+    print(f"{b - a:+7d}  {a:6d} -> {b:6d}  total")
 
 
 if __name__ == "__main__":
