@@ -192,8 +192,8 @@ object TableFormat {
         ev.filter(col("event_id") > q2 && col("event_id") <= q3), 2, "event_id")
       val head = CommitLog.appendWithStats(s, root.toString,
         ev.filter(col("event_id") > q3), 2, "event_id")
-      val (df, total, nRead) =
-        CommitLog.prunedRead(s, root.toString, head, q1 + 1, q2)
+      val (df, total, nRead) = CommitLog.prunedReadTyped(s, root.toString, head,
+        Seq(CommitLog.StatProbe("event_id", q1 + 1, q2)))
       ordered(df.filter(col("event_id").between(q1 + 1, q2))
         .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
         .select(lit(total.toLong).as("n_files_total"),
@@ -2232,12 +2232,11 @@ object TableFormat {
         ev.filter(col("user_id") % 2 === 0), nFiles = 4, statsCol = "event_id")
       val v1 = CommitLog.appendWithStats(s, root.toString,
         ev.filter(col("user_id") % 2 === 1), 4, "event_id")
-      val (_, befTotal, befRead) =
-        CommitLog.prunedRead(s, root.toString, v1, q1 + 1, q2)
+      val probe = Seq(CommitLog.StatProbe("event_id", q1 + 1, q2))
+      val (_, befTotal, befRead) = CommitLog.prunedReadTyped(s, root.toString, v1, probe)
       val v2 = CommitLog.optimize(s, root.toString, "event_id",
         cutoffs = Seq(q1, q2, q3), filesPerBucket = 2)
-      val (df, aftTotal, aftRead) =
-        CommitLog.prunedRead(s, root.toString, v2, q1 + 1, q2)
+      val (df, aftTotal, aftRead) = CommitLog.prunedReadTyped(s, root.toString, v2, probe)
       ordered(df.filter(col("event_id").between(q1 + 1, q2))
         .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
         .select(lit(befTotal.toLong).as("files_before"),
@@ -2735,7 +2734,7 @@ object TableFormat {
         head, Seq(CommitLog.StatProbe("ts", micros(wk(0)), micros(wk(1)) - 1L)))
       // null counts come from the LOG, not a scan — summed across files
       val aux = CommitLog.auxOf(root.toString, head)
-      val nNulls = aux.stats2.values.map(_("maybe_type").nulls).sum
+      val nNulls = aux.stats2.values.map(_("maybe_type").nulls.get).sum
       ordered(df.filter(col("ts") >= wk(0) && col("ts") < wk(1))
         .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
         .select(lit(total.toLong).as("n_files_total"),

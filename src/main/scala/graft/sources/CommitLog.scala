@@ -28,10 +28,11 @@ import org.apache.spark.sql.types.StructType
   * metadata read — the object-store list call that dominates wide
   * tables is gone; planning cost scales with the file count in one
   * manifest. Per-file column statistics live IN the manifest too
-  * (appendWithStats/prunedRead — the Delta stats-JSON / Iceberg
-  * manifest-bounds design), so selective scans prune files from the
-  * log alone; the remaining natural step (manifest segments for
-  * million-file tables) is likewise data-independent metadata. This
+  * (typed min/max/null counts: `statsColumns`, appendWithStats,
+  * prunedReadTyped — the Delta stats-JSON / Iceberg manifest-bounds
+  * design), so selective scans prune files from the log alone; the
+  * remaining natural step (manifest segments for million-file
+  * tables) is likewise data-independent metadata. This
   * closes the reader-vs-compaction race SCALING.md flags for
   * s_compact_files: a reader pinned to version N is unaffected by a
   * concurrent rewrite (asserted in StreamingSpec).
@@ -83,7 +84,7 @@ object CommitLog {
         per.map(_._2).filter(_.hasNonNullValue).map(f(_).asInstanceOf[Number].longValue)
       Option.when(per.forall { case (n, st) => st != null && st.isNumNullsSet &&
           (st.hasNonNullValue || st.getNumNulls == n) })(ColStat(bounds(_.genericGetMin).minOption,
-        bounds(_.genericGetMax).maxOption, per.map(_._2.getNumNulls).sum))
+        bounds(_.genericGetMax).maxOption, Some(per.map(_._2.getNumNulls).sum)))
     }
     val fields = fm.getSchema.getFields.asScala.toSeq
     val integral = if (fm.getKeyValueMetaData.containsKey("org.apache.spark.legacyDateTime")) Nil
@@ -133,22 +134,20 @@ object CommitLog {
     }
   }
   private[graft] def footerRowCount(p: java.io.File): Long = footerSummary(p).rows
-  /** JSON-quote an arbitrary string (partition values and string
-    * column bounds are DATA, not path-safe identifiers — a quote or
-    * backslash must escape, or the manifest is permanently
-    * unparseable). */
-  private def jstr(v: String): String = mapper.writeValueAsString(v)
 
   /** One column's per-file statistics entry: typed min/max (None =
     * the file is all-NULL for the column — prunable by ANY range
     * probe, since a range predicate never matches NULL) plus the
     * file's null count. `lo`/`hi` are Long (tag "long"/"ts" — ts as
-    * epoch micros), Double (tag "double") or String (tag "str"). */
-  final case class ColStat(lo: Option[Any], hi: Option[Any], nulls: Long)
+    * epoch micros), Double (tag "double") or String (tag "str").
+    * `nulls` is None only on an entry lifted from a pre-typed
+    * manifest's single-column stats, which never recorded it — so
+    * COUNT(col) and TopN never answer from such an entry. */
+  final case class ColStat(lo: Option[Any], hi: Option[Any], nulls: Option[Long])
 
   /** The auxiliary per-file metadata a manifest can carry beyond its
-    * listing (all optional, all carried forward like the legacy
-    * single-column stats): Delta-style partition values
+    * listing (all optional, all carried forward by every commit that
+    * lists the file forward): Delta-style partition values
     * (`partCol`/`parts`) and typed multi-column statistics
     * (`statsTags`/`stats2` — min/max/nullCount per file per column;
     * timestamps as epoch micros, strings lexicographic). Files
@@ -189,9 +188,6 @@ object CommitLog {
       // tables instead of refusing. A file with vectors but no count
       // entry (pre-r16 manifests) still refuses.
       dvRows: Map[String, Long] = Map.empty) {
-    def isEmpty: Boolean =
-      parts.isEmpty && stats2.isEmpty && dvs.isEmpty && layouts.isEmpty &&
-        sizes.isEmpty && rows.isEmpty && dvRows.isEmpty
     /** The ordered layout a file was WRITTEN under: its
       * per-generation entry, falling back to the manifest-level
       * current spec (legacy single-spec manifests record only
@@ -261,100 +257,299 @@ object CommitLog {
       else aux.dvRows.get(f).map(n - _)
     }
 
-  private def renderColStat(tag: String, st: ColStat): String = {
-    def one(v: Option[Any]): String = v match {
-      case None => "null"
-      case Some(x: String) => jstr(x)
-      case Some(x) => x.toString
-    }
-    s"""{"lo":${one(st.lo)},"hi":${one(st.hi)},"nulls":${st.nulls}}"""
+  // ------------------------------------------------------------------
+  // THE manifest codec. Every JSON file under `_graft_log/` is parsed
+  // by [[Codec.parse]] into its model and rendered from it by
+  // [[Codec.render]], and nowhere else. Rendering builds ordered
+  // Jackson trees, so strings escape the one way Jackson escapes them,
+  // and `render(parse(f)) == f` byte for byte for every file a writer
+  // of this engine publishes. Optional fields are omitted when absent
+  // or empty; maps keyed by data file render sorted by file.
+  //
+  // `v%09d.json` — one version manifest ([[Snapshot]]). Flat, in order:
+  //   version, op, ts (commit wall-clock millis), files (data paths
+  //   relative to the root);
+  //   partCol + parts (file → partition value; the current spec,
+  //   comma-joined when composite; only with both);
+  //   statsTags (column → long|ts|double|str) + stats2 (file → column →
+  //   {lo, hi, nulls}; null lo/hi = all-NULL file; no nulls = unknown);
+  //   dv (file → deletion-vector sidecars); layouts (file → the flat
+  //   [c1, v1, c2, v2, ...] pairs of the spec it was written under);
+  //   sizes, rows, dvRows (file → bytes, footer rows, masked rows);
+  //   cdf (change-data files; [] on a CDF-on commit that changed none);
+  //   writer-defined integral fields, then writer-defined objects of
+  //   string → long (e.g. a view's viewSrc, the index's cellCounts),
+  //   each in the order its writer gives ([[WriterMeta]]);
+  //   tombstones (dropped columns' physical names), idHwm (identity
+  //   high-water mark), schema (the StructType JSON, embedded verbatim).
+  //   Parse-only: statsCol + stats (file → [lo, hi]), the single-column
+  //   stats of pre-typed writers, lifted into statsTags/stats2 entries
+  //   on that column without a null count; no writer emits them.
+  // Segmented, in order: version, op, idHwm, schema, segments — each
+  //   {path, nFiles, lo, hi (aggregated bounds of the stats column),
+  //   nRows, nBytes, nNulls, lv (column → sorted layout values)}.
+  // `seg-<uuid>.json` — one immutable segment file ([[SegmentFile]]):
+  //   files, statsCol, stats (file → [lo, hi]), rows (file → footer
+  //   rows), partCols + layouts (as above; partitioned segments only).
+  // `ckpt-v<N>.json` — the history checkpoint at N ([[CheckpointFile]]):
+  //   version, rows: [{v, op, ts (null before timestamps), nf (file
+  //   count), meta (sorted integral fields but version and ts)}].
+  // `_last_checkpoint` — {version} of the newest checkpoint.
+  // `_properties.json` — table properties, string → string, sorted.
+  // ------------------------------------------------------------------
+
+  /** One JSON document under `_graft_log/` ([[Codec]]). */
+  private[graft] sealed trait LogDoc
+
+  /** Writer-defined manifest fields: integral ones (a view's source
+    * watermark) and objects of string → long (the vector index's
+    * per-cell counts), committed atomically with the writer's data.
+    * Each renders in the order its writer gives, the longs first. */
+  final case class WriterMeta(longs: Map[String, Long] = Map.empty,
+      maps: Map[String, Map[String, Long]] = Map.empty) {
+    def ++(o: WriterMeta): WriterMeta = WriterMeta(
+      scala.collection.immutable.VectorMap.from(longs) ++ o.longs,
+      scala.collection.immutable.VectorMap.from(maps) ++ o.maps)
   }
 
-  private def renderAux(aux: Aux): String = {
-    val p = aux.partCol match {
-      case Some(c) if aux.parts.nonEmpty =>
-        s""","partCol":${jstr(c)},"parts":{""" +
-          aux.parts.toSeq.sortBy(_._1).map { case (f, v) =>
-            s"""${jstr(f)}:${jstr(v)}""" }.mkString(",") + "}"
-      case _ => ""
-    }
-    val s2 = if (aux.stats2.isEmpty) "" else {
-      s""","statsTags":{""" +
-        aux.statsTags.toSeq.sorted.map { case (c, t) =>
-          s"""${jstr(c)}:${jstr(t)}""" }.mkString(",") + "}" +
-        s""","stats2":{""" +
-        aux.stats2.toSeq.sortBy(_._1).map { case (f, cols) =>
-          s"""${jstr(f)}:{""" + cols.toSeq.sortBy(_._1).map { case (c, st) =>
-            s"""${jstr(c)}:${renderColStat(aux.statsTags(c), st)}"""
-          }.mkString(",") + "}"
-        }.mkString(",") + "}"
-    }
-    val dv = if (aux.dvs.isEmpty) "" else {
-      s""","dv":{""" +
-        aux.dvs.toSeq.sortBy(_._1).map { case (f, refs) =>
-          s"""${jstr(f)}:[${refs.map(jstr).mkString(",")}]"""
-        }.mkString(",") + "}"
-    }
-    // per-file ordered layout entries, rendered as a FLAT pair array
-    // [c1,v1,c2,v2,...] — a single-column entry is the byte-identical
-    // [c,v] the r13 encoding wrote, so old manifests parse unchanged.
-    // Only rendered once a spec evolution (or composite spec)
-    // happened; single-spec tables keep the legacy partCol/parts
-    // encoding, byte-compatible with old readers.
-    val ly = if (aux.layouts.isEmpty) "" else {
-      s""","layouts":{""" +
-        aux.layouts.toSeq.sortBy(_._1).map { case (f, pairs) =>
-          s"""${jstr(f)}:[""" +
-            pairs.flatMap { case (c, v) => Seq(jstr(c), jstr(v)) }
-              .mkString(",") + "]"
-        }.mkString(",") + "}"
-    }
-    val sz = if (aux.sizes.isEmpty) "" else {
-      s""","sizes":{""" +
-        aux.sizes.toSeq.sortBy(_._1).map { case (f, n) =>
-          s"""${jstr(f)}:$n""" }.mkString(",") + "}"
-    }
-    val rw = if (aux.rows.isEmpty) "" else {
-      s""","rows":{""" +
-        aux.rows.toSeq.sortBy(_._1).map { case (f, n) =>
-          s"""${jstr(f)}:$n""" }.mkString(",") + "}"
-    }
-    val dvr = if (aux.dvRows.isEmpty) "" else {
-      s""","dvRows":{""" +
-        aux.dvRows.toSeq.sortBy(_._1).map { case (f, n) =>
-          s"""${jstr(f)}:$n""" }.mkString(",") + "}"
-    }
-    p + s2 + dv + ly + sz + rw + dvr
-  }
+  /** One immutable segment file: its data files, the per-file
+    * [lo, hi] of its stats column (files with both bounds), footer row
+    * counts and, when partitioned, the spec and each file's layout. */
+  private[sources] final case class SegmentFile(files: Seq[String],
+      statsCol: Option[String], stats: Map[String, (Long, Long)],
+      rows: Map[String, Long], partCols: Option[String],
+      layouts: Map[String, Seq[(String, String)]]) extends LogDoc
 
-  /** Hand-built JSON (strings are path-safe by construction: UUID file
-    * names under data/ — free-form strings like partition values go
-    * through jstr); parsed back with Spark's Jackson. `op` records
-    * the commit KIND — incremental readers need it to distinguish
-    * data-adding commits (append) from data-neutral rewrites (compact),
-    * the public change-data-feed design's commit metadata. `extra`
-    * fields are pre-rendered JSON fragments (aux metadata, CDF file
-    * lists) starting with a comma. */
-  private def renderManifest(version: Long, files: Seq[String], op: String,
-      statsCol: Option[String] = None,
-      stats: Map[String, (Long, Long)] = Map.empty,
-      schemaJson: Option[String] = None,
-      extra: Seq[String] = Nil): String = {
-    // commit wall-clock (millis) — TIMESTAMP AS OF resolves against
-    // it; versions and content stay the ordering/identity authority
-    val base = s"""{"version":$version,"op":"$op",""" +
-      s""""ts":${System.currentTimeMillis()},""" +
-      s""""files":[${files.map(f => "\"" + f + "\"").mkString(",")}]"""
-    val statsJson = statsCol match {
-      case Some(c) if stats.nonEmpty =>
-        s""","statsCol":"$c","stats":{""" +
-          stats.toSeq.sortBy(_._1).map { case (f, (lo, hi)) =>
-            s""""$f":[$lo,$hi]""" }.mkString(",") + "}"
-      case _ => ""
+  /** The history checkpoint at `version`: one summary row per version. */
+  private[sources] final case class CheckpointFile(version: Long,
+      rows: Seq[HistRow]) extends LogDoc
+  /** `_last_checkpoint`: the newest checkpoint's version. */
+  private[sources] final case class CheckpointPointer(version: Long) extends LogDoc
+  /** `_properties.json`. */
+  private[sources] final case class PropertiesFile(props: Map[String, String]) extends LogDoc
+
+  /** The one JSON codec of the commit log (the file formats are listed
+    * above). */
+  private[graft] object Codec {
+    import com.fasterxml.jackson.databind.JsonNode
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    import scala.collection.immutable.VectorMap
+    private val nf = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance
+    private val ManifestName = """v(\d+)\.json""".r
+
+    /** The model of the `_graft_log/` file `name` of table `root`. */
+    def parse(root: String, name: String, text: String): LogDoc = name match {
+      case ManifestName(v) => manifest(root, v.toLong, text)
+      case "_properties.json" => PropertiesFile(fieldsOf(mapper.readTree(text))(_.asText()))
+      case "_last_checkpoint" => CheckpointPointer(mapper.readTree(text).get("version").asLong())
+      case n if n.startsWith("ckpt-v") =>
+        val t = mapper.readTree(text)
+        CheckpointFile(t.get("version").asLong(), elems(t.get("rows")).map { r =>
+          HistRow(r.get("v").asLong(), r.get("op").asText(),
+            Option(r.get("ts")).filterNot(_.isNull).map(_.asLong()), r.get("nf").asLong(),
+            Option(r.get("meta")).map(fieldsOf(_)(_.asLong())).getOrElse(Map.empty))
+        })
+      case n if n.startsWith("seg-") =>
+        val t = mapper.readTree(text)
+        SegmentFile(textsOf(t.get("files")), Option(t.get("statsCol")).map(_.asText()),
+          obj(t, "stats")(a => (a.get(0).asLong(), a.get(1).asLong())),
+          obj(t, "rows")(_.asLong()), Option(t.get("partCols")).map(_.asText()),
+          obj(t, "layouts")(pairsOf))
+      case n => throw new IllegalArgumentException(s"not a commit-log file: $n")
     }
-    // StructType.json is already a JSON object — embedded raw
-    val schemaField = schemaJson.map(j => s""","schema":$j""").getOrElse("")
-    base + statsJson + extra.mkString + schemaField + "}"
+
+    /** The exact text a writer publishes for `doc`. */
+    def render(doc: LogDoc): String = mapper.writeValueAsString(doc match {
+      case sn: Snapshot => manifestNode(sn)
+      case sf: SegmentFile =>
+        val o = node("files" -> texts(sf.files))
+        sf.statsCol.foreach(o.put("statsCol", _))
+        o.set[JsonNode]("stats", sortedNode(sf.stats) { case (lo, hi) => nf.arrayNode().add(lo).add(hi) })
+        o.set[JsonNode]("rows", sortedNode(sf.rows)(nf.numberNode(_)))
+        if (sf.layouts.nonEmpty) {
+          o.put("partCols", sf.partCols.get)
+          o.set[JsonNode]("layouts", sortedNode(sf.layouts)(flatPairs))
+        }
+        o
+      case CheckpointFile(v, rows) => node("version" -> nf.numberNode(v),
+        "rows" -> arr(rows.map { r =>
+          val o = node("v" -> nf.numberNode(r.version), "op" -> nf.textNode(r.op),
+            "ts" -> r.ts.fold[JsonNode](nf.nullNode())(nf.numberNode(_)),
+            "nf" -> nf.numberNode(r.nFiles))
+          if (r.meta.nonEmpty) o.set[JsonNode]("meta", sortedNode(r.meta)(nf.numberNode(_)))
+          o
+        }))
+      case CheckpointPointer(v) => node("version" -> nf.numberNode(v))
+      case PropertiesFile(ps) => node(ps.toSeq.sortBy(_._1).map { case (k, v) => k -> nf.textNode(v) }: _*)
+    })
+
+    private def manifestNode(sn: Snapshot): ObjectNode = {
+      val o = node("version" -> nf.numberNode(sn.version), "op" -> nf.textNode(sn.op))
+      def schema(): Unit = sn.schemaJson.foreach(j =>
+        o.putRawValue("schema", new com.fasterxml.jackson.databind.util.RawValue(j)))
+      sn.segmentRefs match {
+        case Some(refs) =>
+          sn.idHwm.foreach(o.put(IdHwmField, _))
+          schema()
+          o.set[JsonNode]("segments", arr(refs.map { sr =>
+            val r = node("path" -> nf.textNode(sr.path), "nFiles" -> nf.numberNode(sr.nFiles))
+            sr.bounds.foreach { case (lo, hi) => r.put("lo", lo).put("hi", hi) }
+            sr.nRows.foreach(r.put("nRows", _))
+            sr.nBytes.foreach(r.put("nBytes", _))
+            sr.nNulls.foreach(r.put("nNulls", _))
+            if (sr.layoutValues.nonEmpty) r.set[JsonNode]("lv", sortedNode(sr.layoutValues)(vs =>
+              texts(vs.toSeq.sorted)))
+            r
+          }))
+        case None =>
+          val a = sn.aux
+          sn.ts.foreach(o.put("ts", _))
+          o.set[JsonNode]("files", texts(sn.files))
+          if (a.partCol.isDefined && a.parts.nonEmpty) {
+            o.put("partCol", a.partCol.get)
+            o.set[JsonNode]("parts", sortedNode(a.parts)(nf.textNode))
+          }
+          if (a.stats2.nonEmpty) {
+            o.set[JsonNode]("statsTags", sortedNode(a.statsTags)(nf.textNode))
+            o.set[JsonNode]("stats2", sortedNode(a.stats2)(sortedNode(_)(colStat)))
+          }
+          if (a.dvs.nonEmpty) o.set[JsonNode]("dv", sortedNode(a.dvs)(texts))
+          if (a.layouts.nonEmpty) o.set[JsonNode]("layouts", sortedNode(a.layouts)(flatPairs))
+          Seq("sizes" -> a.sizes, "rows" -> a.rows, "dvRows" -> a.dvRows).foreach {
+            case (k, m) => if (m.nonEmpty) o.set[JsonNode](k, sortedNode(m)(nf.numberNode(_)))
+          }
+          sn.cdf.foreach(fs => o.set[JsonNode]("cdf", texts(fs)))
+          sn.meta.longs.foreach { case (k, v) => o.put(k, v) }
+          sn.meta.maps.foreach { case (k, m) =>
+            o.set[JsonNode](k, node(m.toSeq.map { case (c, n) => c -> nf.numberNode(n) }: _*))
+          }
+          if (sn.tombstones.nonEmpty) o.set[JsonNode]("tombstones", texts(sn.tombstones))
+          sn.idHwm.foreach(o.put(IdHwmField, _))
+          schema()
+      }
+      o
+    }
+
+    private def colStat(st: ColStat): JsonNode = {
+      def bound(v: Option[Any]): JsonNode = v match {
+        case None => nf.nullNode()
+        case Some(x: String) => nf.textNode(x)
+        case Some(x: Double) => nf.numberNode(x)
+        case Some(x) => nf.numberNode(x.asInstanceOf[Number].longValue)
+      }
+      val o = node("lo" -> bound(st.lo), "hi" -> bound(st.hi))
+      st.nulls.foreach(o.put("nulls", _))
+      o
+    }
+
+    private def node(kvs: (String, JsonNode)*): ObjectNode = {
+      val o = nf.objectNode()
+      kvs.foreach { case (k, v) => o.set[JsonNode](k, v) }
+      o
+    }
+    private def arr(vs: Iterable[JsonNode]): JsonNode = {
+      val a = nf.arrayNode()
+      vs.foreach(a.add)
+      a
+    }
+    private def texts(vs: Iterable[String]): JsonNode = arr(vs.map(nf.textNode))
+    private def flatPairs(pairs: Seq[(String, String)]): JsonNode =
+      texts(pairs.flatMap { case (c, v) => Seq(c, v) })
+    private def sortedNode[V](m: Map[String, V])(f: V => JsonNode): ObjectNode =
+      node(m.toSeq.sortBy(_._1).map { case (k, v) => k -> f(v) }: _*)
+
+    /** A JSON object's fields in document order, each decoded by `f`. */
+    private def fieldsOf[V](n: JsonNode)(f: JsonNode => V): Map[String, V] = {
+      val it = n.fields(); val b = VectorMap.newBuilder[String, V]
+      while (it.hasNext) { val e = it.next(); b += e.getKey -> f(e.getValue) }
+      b.result()
+    }
+    private def obj[V](n: JsonNode, k: String)(f: JsonNode => V): Map[String, V] =
+      Option(n.get(k)).map(fieldsOf(_)(f)).getOrElse(Map.empty)
+    private def elems(arr: JsonNode): Seq[JsonNode] = (0 until arr.size()).map(arr.get)
+    private def textsOf(arr: JsonNode): Seq[String] = elems(arr).map(_.asText())
+    /** A layout entry: the flat [c1,v1,c2,v2,...] pair array (the r13
+      * single-column [c,v] encoding is its 1-pair case). */
+    private def pairsOf(arr: JsonNode): Seq[(String, String)] =
+      (0 until arr.size() by 2).map(i => (arr.get(i).asText(), arr.get(i + 1).asText()))
+
+    /** A manifest's top-level fields in document order, each parsed to
+      * a tree except `schema`, kept as its verbatim text. */
+    private def topFields(text: String): (Seq[(String, JsonNode)], Option[String]) = {
+      import com.fasterxml.jackson.core.JsonToken
+      val p = mapper.createParser(text)
+      try {
+        require(p.nextToken() == JsonToken.START_OBJECT, "a manifest is one JSON object")
+        val b = Seq.newBuilder[(String, JsonNode)]
+        var schema = Option.empty[String]
+        while (p.nextToken() == JsonToken.FIELD_NAME) {
+          val k = p.currentName()
+          p.nextToken()
+          if (k == "schema") {
+            val from = p.currentTokenLocation().getCharOffset.toInt
+            p.skipChildren()
+            schema = Some(text.substring(from, p.currentLocation().getCharOffset.toInt))
+          } else b += k -> mapper.readTree[JsonNode](p)
+        }
+        (b.result(), schema)
+      } finally p.close()
+    }
+
+    /** Top-level manifest fields the format defines; any other integral
+      * or object field is the writer's ([[WriterMeta]]). */
+    private val Defined = Set("version", "op", "ts", "files", "statsCol", "stats",
+      "partCol", "parts", "statsTags", "stats2", "dv", "layouts", "sizes", "rows",
+      "dvRows", "cdf", "tombstones", IdHwmField, "schema", "segments")
+
+    private def manifest(root: String, version: Long, text: String): Snapshot = {
+      val (fields, schemaJson) = topFields(text)
+      val top = fields.toMap
+      def o[V](k: String)(g: JsonNode => V) =
+        top.get(k).map(fieldsOf(_)(g)).getOrElse(Map.empty[String, V])
+      val typedTags = o("statsTags")(_.asText())
+      val typed = o("stats2")(fieldsOf(_)(identity).map { case (c, cn) =>
+        c -> parseColStat(typedTags.getOrElse(c, "long"), cn) })
+      // a pre-typed writer's single-column stats: lifted onto their
+      // column, where typed entries (which know their nulls) win
+      val lifted = top.get("statsCol").map(_.asText())
+        .filter(c => typedTags.get(c).forall(_ == "long"))
+        .map(c => c -> o("stats")(a => ColStat(Some(a.get(0).asLong()), Some(a.get(1).asLong()), None)))
+        .filter(_._2.nonEmpty)
+      val (tags, stats2) = lifted.fold((typedTags, typed)) { case (c, byF) =>
+        (typedTags + (c -> "long"), typed ++ byF.map { case (f, st) =>
+          f -> (Map(c -> st) ++ typed.getOrElse(f, Map.empty)) })
+      }
+      val aux = Aux(top.get("partCol").map(_.asText()), o("parts")(_.asText()), tags, stats2,
+        o("dv")(textsOf), o("layouts")(pairsOf),
+        o("sizes")(_.asLong()), o("rows")(_.asLong()), o("dvRows")(_.asLong()))
+      val segments = top.get("segments").map(elems(_).map { sn =>
+        def long(k: String) = Option(sn.get(k)).map(_.asLong())
+        SegmentRef(sn.get("path").asText(), sn.get("nFiles").asInt(),
+          for (lo <- long("lo"); hi <- long("hi")) yield (lo, hi),
+          long("nRows"), long("nBytes"),
+          Option(sn.get("lv")).map(fieldsOf(_)(textsOf(_).toSet)).getOrElse(Map.empty),
+          long("nNulls"))
+      })
+      val own = fields.filterNot(f => Defined(f._1))
+      Snapshot(root, version, top.get("op").map(_.asText()).getOrElse("append"),
+        top.get("ts").map(_.asLong()), top.get("files").map(textsOf), segments, aux,
+        top.get("cdf").map(textsOf),
+        WriterMeta(VectorMap.from(own.collect { case (k, v) if v.isIntegralNumber => k -> v.asLong() }),
+          VectorMap.from(own.collect { case (k, v) if v.isObject => k -> fieldsOf(v)(_.asLong()) })),
+        top.get("tombstones").map(textsOf).getOrElse(Nil),
+        top.get(IdHwmField).map(_.asLong()), schemaJson)
+    }
+
+    private def parseColStat(tag: String, cn: JsonNode): ColStat = {
+      def v(field: String): Option[Any] = Option(cn.get(field)).filterNot(_.isNull).map { n =>
+        tag match {
+          case "str" => n.asText()
+          case "double" => n.asDouble()
+          case _ => n.asLong()
+        }
+      }
+      ColStat(v("lo"), v("hi"), Option(cn.get("nulls")).map(_.asLong()))
+    }
   }
 
   def latestVersion(root: String): Option[Long] =
@@ -391,38 +586,21 @@ object CommitLog {
   private[graft] val manifestParses = new java.util.concurrent.atomic.AtomicLong()
   private[graft] val propertyReads = new java.util.concurrent.atomic.AtomicLong()
 
-  /** A JSON object's fields, each value decoded by `f`. */
-  private def fieldsOf[V](n: com.fasterxml.jackson.databind.JsonNode)(
-      f: com.fasterxml.jackson.databind.JsonNode => V): Map[String, V] = {
-    val it = n.fields(); val b = Map.newBuilder[String, V]
-    while (it.hasNext) { val e = it.next(); b += e.getKey -> f(e.getValue) }
-    b.result()
-  }
-  private def textsOf(arr: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
-    (0 until arr.size()).map(i => arr.get(i).asText())
-  /** A layout entry: the flat [c1,v1,c2,v2,...] pair array (the r13
-    * single-column [c,v] encoding is its 1-pair case). */
-  private def pairsOf(arr: com.fasterxml.jackson.databind.JsonNode): Seq[(String, String)] =
-    (0 until arr.size() by 2).map(i => (arr.get(i).asText(), arr.get(i + 1).asText()))
-
   /** One version manifest, read and parsed ONCE by [[snapshot]]: what
-    * every reader and every committing writer takes from a version.
-    * A flat manifest lists `files` (relative paths), a segmented one
-    * `segments` — the two shapes never mix, and the accessor of the
-    * other shape refuses by name. `longs` holds every top-level
-    * integral field (version, ts, the identity mark and writer-defined
-    * fields such as a view's watermark); `maps` every top-level object
-    * of string → long (sizes, rows, writer-defined ones such as the
-    * vector index's cell counts). The schema decodes on first use. */
+    * every reader and every committing writer takes from a version,
+    * and what every commit renders ([[Codec]]). A flat manifest lists
+    * `files` (relative paths), a segmented one `segments` — the two
+    * shapes never mix, and the accessor of the other shape refuses by
+    * name. The schema decodes on first use. */
   private[sources] final case class Snapshot(root: String, version: Long,
-      op: String, flatFiles: Option[Seq[String]],
-      segmentRefs: Option[Seq[SegmentRef]], aux: Aux,
-      schemaJson: Option[String], statsCol: Option[String],
-      stats: Map[String, (Long, Long)], tombstones: Seq[String],
-      cdf: Option[Seq[String]], longs: Map[String, Long],
-      maps: Map[String, Map[String, Long]]) {
-    def ts: Option[Long] = longs.get("ts")
-    def idHwm: Option[Long] = longs.get(IdHwmField)
+      op: String, ts: Option[Long], flatFiles: Option[Seq[String]],
+      segmentRefs: Option[Seq[SegmentRef]], aux: Aux, cdf: Option[Seq[String]],
+      meta: WriterMeta, tombstones: Seq[String], idHwm: Option[Long],
+      schemaJson: Option[String]) extends LogDoc {
+    /** Every top-level integral field: version, ts, the identity mark
+      * and the writer's. */
+    def longs: Map[String, Long] = meta.longs ++ ts.map("ts" -> _) ++
+      idHwm.map(IdHwmField -> _) + ("version" -> version)
     lazy val schema: Option[StructType] = schemaJson.map(j =>
       org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType])
     def files: Seq[String] = {
@@ -438,53 +616,26 @@ object CommitLog {
     }
   }
 
-  /** The manifest's own object fields whose values are not longs. */
-  private val nonLongObjects =
-    Set("schema", "parts", "statsTags", "stats2", "stats", "dv", "layouts")
+  /** Read and parse the `_graft_log/` file `name` of `root`. */
+  private def readLog[D <: LogDoc](root: String, name: String): D =
+    Codec.parse(root, name, java.nio.file.Files.readString(
+      new java.io.File(logDir(root), name).toPath)).asInstanceOf[D]
 
-  /** THE manifest parser: one read, one Jackson parse of `version`. */
+  /** Render `doc` into a fresh temp file under `_graft_log/` (named
+    * `prefix`…), for the caller to move or link into place. */
+  private def stageLog(root: String, prefix: String, doc: LogDoc): java.nio.file.Path = {
+    logDir(root).mkdirs()
+    val tmp = java.nio.file.Files.createTempFile(logDir(root).toPath, prefix, ".tmp")
+    java.nio.file.Files.writeString(tmp, Codec.render(doc))
+  }
+
+  /** THE manifest reader: one read, one parse of `version`. */
   private[sources] def snapshot(root: String, version: Long): Snapshot = {
-    import scala.jdk.CollectionConverters._
     val f = manifest(root, version)
     require(f.exists(), s"commit log has no version $version under $root")
-    val top = fieldsOf(mapper.readTree(java.nio.file.Files.readString(f.toPath)))(identity)
+    val sn = readLog[Snapshot](root, f.getName)
     manifestParses.incrementAndGet()
-    def obj[V](k: String)(g: com.fasterxml.jackson.databind.JsonNode => V) =
-      top.get(k).map(fieldsOf(_)(g)).getOrElse(Map.empty[String, V])
-    val maps = top.collect { case (k, v) if v.isObject && !nonLongObjects(k) =>
-      k -> fieldsOf(v)(_.asLong()) }
-    val tags = obj("statsTags")(_.asText())
-    def colStat(tag: String, cn: com.fasterxml.jackson.databind.JsonNode): ColStat = {
-      def v(field: String): Option[Any] = Option(cn.get(field)).filterNot(_.isNull).map { n =>
-        tag match {
-          case "str" => n.asText()
-          case "double" => n.asDouble()
-          case _ => n.asLong()
-        }
-      }
-      ColStat(v("lo"), v("hi"), cn.get("nulls").asLong())
-    }
-    val aux = Aux(top.get("partCol").map(_.asText()), obj("parts")(_.asText()), tags,
-      obj("stats2")(fieldsOf(_)(identity).map { case (c, cn) =>
-        c -> colStat(tags.getOrElse(c, "long"), cn) }),
-      obj("dv")(textsOf),
-      obj("layouts")(pairsOf),
-      maps.getOrElse("sizes", Map.empty), maps.getOrElse("rows", Map.empty),
-      maps.getOrElse("dvRows", Map.empty))
-    val segments = top.get("segments").map(_.elements().asScala.toSeq.map { sn =>
-      def long(k: String) = Option(sn.get(k)).map(_.asLong())
-      SegmentRef(sn.get("path").asText(), sn.get("nFiles").asInt(),
-        for (lo <- long("lo"); hi <- long("hi")) yield (lo, hi),
-        long("nRows"), long("nBytes"),
-        Option(sn.get("lv")).map(fieldsOf(_)(textsOf(_).toSet)).getOrElse(Map.empty),
-        long("nNulls"))
-    })
-    Snapshot(root, version, top.get("op").map(_.asText()).getOrElse("append"),
-      top.get("files").map(textsOf), segments, aux,
-      top.get("schema").map(_.toString), top.get("statsCol").map(_.asText()),
-      obj("stats")(a => (a.get(0).asLong(), a.get(1).asLong())),
-      top.get("tombstones").map(textsOf).getOrElse(Nil), top.get("cdf").map(textsOf),
-      top.collect { case (k, v) if v.isIntegralNumber => k -> v.asLong() }, maps)
+    sn
   }
 
   /** The head version's snapshot; None for a table with no commit. */
@@ -520,41 +671,35 @@ object CommitLog {
     * public table formats require of their log store). The loser gets a
     * clean conflict to re-read and retry on. */
   def commit(root: String, files: Seq[String], expected: Option[Long],
-      op: String = "append", statsCol: Option[String] = None,
-      stats: Map[String, (Long, Long)] = Map.empty,
-      schemaJson: Option[String] = None,
-      extra: Seq[String] = Nil,
+      op: String = "append", schemaJson: Option[String] = None,
       newTombstones: Seq[String] = Nil,
       newIdHwm: Option[Long] = None): Long =
     commitOn(root, files, expected.map(snapshot(root, _)), tableProperties(root),
-      op, statsCol, stats, schemaJson, extra, newTombstones, newIdHwm)
+      op, schemaJson, newTombstones = newTombstones, newIdHwm = newIdHwm)
 
-  /** [[commit]] on an already-read `head` snapshot and properties. */
+  /** [[commit]] on an already-read `head` snapshot and properties, with
+    * the new version's per-file `aux`, CDF file list and writer fields. */
   private def commitOn(root: String, files: Seq[String], head: Option[Snapshot],
       props: Map[String, String], op: String = "append",
-      statsCol: Option[String] = None,
-      stats: Map[String, (Long, Long)] = Map.empty,
-      schemaJson: Option[String] = None, extra: Seq[String] = Nil,
+      schemaJson: Option[String] = None, aux: Aux = Aux(),
+      cdf: Option[Seq[String]] = None, meta: WriterMeta = WriterMeta(),
       newTombstones: Seq[String] = Nil, newIdHwm: Option[Long] = None): Long = {
     val next = head.map(_.version + 1).getOrElse(0L)
     // dropped-physical-name tombstones ride IN the manifest and carry
     // forward on every commit, like the schema — atomic with the
     // optimistic-concurrency check, where the old properties-file
     // read-modify-write could lose a racing writer's entry and
-    // resurrect a dropped column (r11, ADVICE)
-    val ts = (head.toSeq.flatMap(_.tombstones) ++ newTombstones).distinct
-    val tsJson =
-      if (ts.isEmpty) Nil
-      else Seq(s""","tombstones":[${ts.map(jstr).mkString(",")}]""")
-    // the IDENTITY high-water mark rides the manifest and carries
+    // resurrect a dropped column (r11, ADVICE).
+    // The IDENTITY high-water mark rides the manifest and carries
     // forward like tombstones (r13): a compaction that dropped it
     // would let the next allocation REUSE ids. Allocating writers
     // pass the advanced mark; everyone else carries verbatim.
-    val hwm = newIdHwm.orElse(head.flatMap(_.idHwm))
-    val hwmJson = hwm.map(h => s""","$IdHwmField":$h""").toSeq
-    publish(root, next,
-      renderManifest(next, files, op, statsCol, stats, schemaJson,
-        extra ++ tsJson ++ hwmJson))
+    // The commit wall-clock (millis) is what TIMESTAMP AS OF resolves
+    // against; versions and content stay the ordering authority.
+    publish(root, Snapshot(root, next, op, Some(System.currentTimeMillis()),
+      Some(files), None, aux, cdf, meta,
+      (head.toSeq.flatMap(_.tombstones) ++ newTombstones).distinct,
+      newIdHwm.orElse(head.flatMap(_.idHwm)), schemaJson))
     maybeCheckpoint(root, next, props)
     next
   }
@@ -593,8 +738,8 @@ object CommitLog {
     * writers never recorded any. */
   def auxOf(root: String, version: Long): Aux = snapshot(root, version).aux
 
-  /** A writer-defined integral manifest field (threaded through
-    * commit's `extra` fragments — e.g. the incremental view's
+  /** A writer-defined integral manifest field ([[WriterMeta]] — e.g.
+    * the incremental view's
     * folded-source watermark, which must land ATOMICALLY with the
     * fold's own commit). None when the version's writer never
     * recorded it. */
@@ -607,16 +752,13 @@ object CommitLog {
     * manifest instead of scanning postings). None when the version's
     * writer never recorded it. */
   def mapMetaOf(root: String, version: Long, field: String): Option[Map[String, Long]] =
-    snapshot(root, version).maps.get(field)
+    snapshot(root, version).meta.maps.get(field)
 
   /** The CDF (change-data-feed) file list `version`'s manifest records
     * — relative paths under cdf/, present only on delete/merge
     * commits made by CDF-aware writers. */
   private[sources] def cdfFilesOf(root: String, version: Long): Option[Seq[String]] =
     snapshot(root, version).cdf
-
-  private def renderCdf(files: Seq[String]): String =
-    s""","cdf":[${files.map(jstr).mkString(",")}]"""
 
   /** Table-level properties (r10) — a small key/value store in the log
     * dir, the Delta TBLPROPERTIES surface. The one property the engine
@@ -640,7 +782,7 @@ object CommitLog {
     val f = propsFile(root)
     propertyReads.incrementAndGet()
     if (!f.exists()) Map.empty
-    else fieldsOf(mapper.readTree(java.nio.file.Files.readString(f.toPath)))(_.asText())
+    else readLog[PropertiesFile](root, f.getName).props
   }
 
   def tableProperty(root: String, key: String): Option[String] =
@@ -653,11 +795,7 @@ object CommitLog {
     writeProperties(root, tableProperties(root) - key)
 
   private def writeProperties(root: String, next: Map[String, String]): Unit = {
-    logDir(root).mkdirs()
-    val tmp = java.nio.file.Files.createTempFile(logDir(root).toPath, ".props-", ".tmp")
-    java.nio.file.Files.writeString(tmp, next.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}"))
-    java.nio.file.Files.move(tmp, propsFile(root).toPath,
+    java.nio.file.Files.move(stageLog(root, ".props-", PropertiesFile(next)), propsFile(root).toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
@@ -738,8 +876,8 @@ object CommitLog {
   def lastCheckpointVersion(root: String): Option[Long] = {
     val p = lastCkptPointer(root)
     if (!p.exists()) None
-    else Option(mapper.readTree(java.nio.file.Files.readString(p.toPath))
-      .get("version")).map(_.asLong()).filter(n => ckptFile(root, n).exists())
+    else Some(readLog[CheckpointPointer](root, p.getName).version)
+      .filter(n => ckptFile(root, n).exists())
   }
 
   /** One summary row from one manifest parse. Works on flat AND
@@ -752,20 +890,8 @@ object CommitLog {
         sn.longs - "version" - "ts")
     }
 
-  private def readCheckpointRows(root: String, n: Long): Seq[HistRow] = {
-    val node = mapper.readTree(
-      java.nio.file.Files.readString(ckptFile(root, n).toPath))
-    val rows = node.get("rows")
-    (0 until rows.size()).map { i =>
-      val r = rows.get(i)
-      val meta = Option(r.get("meta")).map(fieldsOf(_)(_.asLong()))
-        .getOrElse(Map.empty[String, Long])
-      HistRow(r.get("v").asLong(),
-        r.get("op").asText(),
-        Option(r.get("ts")).filterNot(_.isNull).map(_.asLong()),
-        r.get("nf").asLong(), meta)
-    }
-  }
+  private def readCheckpointRows(root: String, n: Long): Seq[HistRow] =
+    readLog[CheckpointFile](root, ckptFile(root, n).getName).rows
 
   /** Write (or advance) the history checkpoint to the current head.
     * Incremental: a prior checkpoint's rows carry verbatim, only the
@@ -784,31 +910,14 @@ object CommitLog {
     val base = baseOpt.map(_._2).getOrElse(Nil)
     val fresh = (baseOpt.map(_._1 + 1).getOrElse(0L) to head)
       .flatMap(summarize(root, _))
-    val rows = (base ++ fresh).map { r =>
-      val metaJson =
-        if (r.meta.isEmpty) ""
-        else s""","meta":{${r.meta.toSeq.sortBy(_._1)
-          .map { case (k, x) => s"${jstr(k)}:$x" }.mkString(",")}}"""
-      s"""{"v":${r.version},"op":${jstr(r.op)},""" +
-        s""""ts":${r.ts.map(_.toString).getOrElse("null")},""" +
-        s""""nf":${r.nFiles}$metaJson}"""
-    }
-    val content = s"""{"version":$head,"rows":[${rows.mkString(",")}]}"""
-    val tmp = java.nio.file.Files.createTempFile(
-      logDir(root).toPath, ".ckpt-", ".tmp")
-    java.nio.file.Files.writeString(tmp, content)
-    java.nio.file.Files.move(tmp, ckptFile(root, head).toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    java.nio.file.Files.move(stageLog(root, ".ckpt-", CheckpointFile(head, base ++ fresh)),
+      ckptFile(root, head).toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     // monotone pointer: re-read under the move's atomicity — a racer
     // that already advanced further wins
-    if (!lastCheckpointVersion(root).exists(_ >= head)) {
-      val ptmp = java.nio.file.Files.createTempFile(
-        logDir(root).toPath, ".ckptp-", ".tmp")
-      java.nio.file.Files.writeString(ptmp, s"""{"version":$head}""")
-      java.nio.file.Files.move(ptmp, lastCkptPointer(root).toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+    if (!lastCheckpointVersion(root).exists(_ >= head))
+      java.nio.file.Files.move(stageLog(root, ".ckptp-", CheckpointPointer(head)),
+        lastCkptPointer(root).toPath, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
     // retention: each snapshot holds the FULL row history, so old ones
     // are strictly redundant — without cleanup a 10^5-commit table
     // accumulates O(versions/interval) files of O(versions) rows each
@@ -909,12 +1018,11 @@ object CommitLog {
   def history(root: String): Seq[(Long, String, Long)] =
     historySummaries(root)._1.map(r => (r.version, r.op, r.nFiles))
 
-  /** Atomic create-if-absent publication of version `next`'s manifest
-    * content (the link(2) put-if-absent primitive — see commit()). */
-  private def publish(root: String, next: Long, content: String): Unit = {
-    logDir(root).mkdirs()
-    val tmp = java.nio.file.Files.createTempFile(logDir(root).toPath, s".v$next-", ".tmp")
-    java.nio.file.Files.writeString(tmp, content)
+  /** Atomic create-if-absent publication of manifest `sn` (the
+    * link(2) put-if-absent primitive — see commit()). */
+  private def publish(root: String, sn: Snapshot): Unit = {
+    val next = sn.version
+    val tmp = stageLog(root, s".v$next-", sn)
     try {
       java.nio.file.Files.createLink(manifest(root, next).toPath, tmp)
       java.nio.file.Files.delete(tmp)
@@ -940,8 +1048,6 @@ object CommitLog {
     * values and typed column stats are per-FILE facts, so any commit
     * that lists a file forward lists its entries forward too. */
   private def carriedAux(prev: Option[Snapshot]): Aux = prev.fold(Aux())(_.aux)
-  private def auxExtra(aux: Aux): Seq[String] =
-    if (aux.isEmpty) Nil else Seq(renderAux(aux))
 
   /** Enforce the log schema at WRITE time on every append-like path —
     * the other half of appendEvolved's "type conflicts fail the
@@ -1117,27 +1223,27 @@ object CommitLog {
       beforeCommit: () => Unit) extends HeadMode
 
   /** How an append stages: `nFiles` plain files, or one file group per
-    * partition-value tuple of `cols` plus the manifest fragments
+    * partition-value tuple of `cols` plus the writer fields
     * `extraFromStaged` derives from the staged files + their aux. */
   private sealed trait Layout
   private final case class PlainLayout(nFiles: Int) extends Layout
   private final case class PartitionedLayout(cols: Seq[String],
       filesPerPartition: Int,
-      extraFromStaged: (Seq[String], Aux) => Seq[String] = (_, _) => Nil)
+      extraFromStaged: (Seq[String], Aux) => WriterMeta = (_, _) => WriterMeta())
     extends Layout
   /** `within`'s staging published as one new manifest SEGMENT
-    * ([[commitSegment]]) — the segment writers. The stats are the
-    * legacy column's ([[LegacyStats]]). */
-  private final case class SegmentLayout(within: Layout) extends Layout
+    * ([[commitSegment]]) — the segment writers, whose segment files
+    * record the bounds of the one integral column `statsCol`. */
+  private final case class SegmentLayout(within: Layout, statsCol: String) extends Layout
 
   /** Which stats an append records for its new files: the table's
-    * declared `statsColumns` ([[declaredColStats]]), one legacy integer
-    * `statsCol` ([[legacyStats]]), or explicit typed columns
-    * ([[perFileColStats]]). */
+    * declared `statsColumns` ([[declaredColStats]]) or explicit typed
+    * columns ([[perFileColStats]]) — with `integral`, each must be an
+    * integral column of the write ([[requireIntegralStatsCol]]). */
   private sealed trait StatsMode
   private case object DeclaredStats extends StatsMode
-  private final case class LegacyStats(statsCol: String) extends StatsMode
-  private final case class TypedStats(cols: Seq[String]) extends StatsMode
+  private final case class TypedStats(cols: Seq[String], integral: Boolean = false)
+    extends StatsMode
 
   /** How a row-adding write treats the log schema ([[prepare]]). */
   private sealed trait SchemaMode
@@ -1190,11 +1296,10 @@ object CommitLog {
   }
 
   /** One staging of an append: the prepared frame, its staged files,
-    * their aux (partition values, typed stats, sizes, rows), the legacy
-    * stats column's per-file stats, extra manifest fragments, and the
-    * identity mark the ids were allocated from. */
+    * their aux (partition values, typed stats, sizes, rows), the
+    * writer fields, and the identity mark the ids were allocated from. */
   private final case class Staged(p: Prepared, files: Seq[String],
-      aux: Aux, legacy: Map[String, ColStat], extra: Seq[String], mark: Option[Long])
+      aux: Aux, meta: WriterMeta, mark: Option[Long])
 
   /** THE append transaction every `append*` entry point delegates to,
     * segment writers included. One [[staging]] owner holds what it
@@ -1209,7 +1314,7 @@ object CommitLog {
     *      validates the frame at that head, then one staging call
     *      writes the files and derives their stats;
     *   3. commits — a flat manifest carrying the head's files and
-    *      legacy stats, or a new segment ([[commitSegment]]) — then runs
+    *      their aux, or a new segment ([[commitSegment]]) — then runs
     *      the autoCompact policy on unpinned, plain, declared-stats
     *      appends (never on a pinned head: a policy compaction would
     *      take the next batch's version).
@@ -1230,34 +1335,31 @@ object CommitLog {
       case RetryingHead(n, f) => (n, f)
       case _ => (1, () => ())
     }
-    val legacyCol = stats match { case LegacyStats(c) => Some(c); case _ => None }
-    val (within, segmented) = layout match {
-      case SegmentLayout(w) => (w, true)
-      case l => (l, false)
-    }
-    val noStats = Map.empty[String, (Long, Long)]
-    def stageFiles(l: Layout, p: Prepared, prev: Option[Snapshot]): (Seq[String], Aux, Seq[String]) =
+    val segment = layout match { case l: SegmentLayout => Some(l); case _ => None }
+    val segmented = segment.isDefined
+    def stageFiles(l: Layout, p: Prepared, prev: Option[Snapshot]): (Seq[String], Aux, WriterMeta) =
       l match {
-        case PlainLayout(n) => (stageDataFiles(s, root, p.df, n, p.schema), Aux(), Nil)
+        case PlainLayout(n) => (stageDataFiles(s, root, p.df, n, p.schema), Aux(), WriterMeta())
         case PartitionedLayout(cols, n, fromStaged) =>
           val (fs, a) = stagePartitionedCols(s, root, p.df, cols, n, prev)
           (fs, a, fromStaged(fs, a))
-        case SegmentLayout(w) => stageFiles(w, p, prev)
+        case SegmentLayout(w, _) => stageFiles(w, p, prev)
       }
     def stage(owner: Stagings, prev: Option[Snapshot], props: Map[String, String],
         mark: Option[Long]): Staged = {
       val p = prepare(s, props, df0, op, prev, schemaMode)
-      legacyCol.foreach(requireLegacyStatsCol(p.df.schema, _, op))
-      val (files, partAux, extra) = owner.sync(stageFiles(layout, p, prev))(_._1)
-      val (statsAux, legacy) = stats match {
-        case DeclaredStats =>
-          (declaredColStats(s, root, files, p.df, props, p.schema), Map.empty[String, ColStat])
-        case TypedStats(cols) =>
-          (perFileColStats(s, root, files, cols, p.schema), Map.empty[String, ColStat])
-        case LegacyStats(c) => (Aux(), legacyStats(s, root, files, c, p.schema))
+      stats match {
+        case TypedStats(cols, true) => cols.foreach(requireIntegralStatsCol(p.df.schema, _, op))
+        case _ =>
       }
-      Staged(p, files, partAux.merged(statsAux).merged(stagedSizes(root, files)),
-        legacy, extra, mark)
+      val (files, partAux, meta) = owner.sync(stageFiles(layout, p, prev))(_._1)
+      // the files staged under the log schema, or under the frame's own
+      // on a table without one: either way their footers answer
+      val statsAux = stats match {
+        case DeclaredStats => declaredColStats(s, root, files, p.df, props, Some(p.recorded))
+        case TypedStats(cols, _) => perFileColStats(s, root, files, cols, Some(p.recorded))
+      }
+      Staged(p, files, partAux.merged(statsAux).merged(stagedSizes(root, files)), meta, mark)
     }
     val published = staging(s, root) { owner =>
       @scala.annotation.tailrec
@@ -1269,7 +1371,7 @@ object CommitLog {
         val prev = pin.fold(latestVersion(root))(b => Option.when(b > 0)(b - 1))
           .map(snapshot(root, _))
         val props = tableProperties(root)
-        if (segmented) requireSegmentShape(root, prev, legacyCol.get, specOf(within), op)
+        segment.foreach(l => requireSegmentShape(root, prev, l.statsCol, specOf(l), op))
         // before staging, so a refused partition spec leaves no orphans
         val carried = if (segmented) Aux() else rebaseSpec(props, carriedAux(prev), layout, op)
         val mark =
@@ -1288,24 +1390,15 @@ object CommitLog {
         beforeCommit()
         val committed =
           try Some(owner.published(
-            if (segmented) commitSegment(root, prev, props, owner, st, legacyCol.get,
-              specOf(within))
-            else {
+            segment match {
+              case Some(l) => commitSegment(root, prev, props, owner, st, l.statsCol, specOf(l))
               // stats are per-FILE metadata: a commit that carries a file
-              // forward carries its stats entry too (the new stat-less files
-              // are simply unprunable), so one stats-unaware writer never
-              // strips the whole snapshot's skipping metadata — but carried
-              // legacy stats stay only under the SAME column: another
-              // column's bounds under this one's name would prune files that
-              // DO hold matching rows
-              val prevCol = prev.flatMap(_.statsCol)
-              val statsCol = legacyCol.orElse(prevCol)
-              commitOn(root, prevFiles ++ st.files, prev, props, statsCol = statsCol,
-                stats = (if (statsCol == prevCol) prev.fold(noStats)(_.stats) else noStats) ++
-                  boundsOf(st.legacy),
-                schemaJson = Some(st.p.recorded.json),
-                extra = auxExtra(carried.merged(st.aux)) ++ st.extra,
-                newIdHwm = st.p.idHwm)
+              // forward carries its stats entry too (the new stat-less
+              // files are simply unprunable), so one stats-unaware writer
+              // never strips the whole snapshot's skipping metadata
+              case None => commitOn(root, prevFiles ++ st.files, prev, props,
+                schemaJson = Some(st.p.recorded.json), aux = carried.merged(st.aux),
+                meta = st.meta, newIdHwm = st.p.idHwm)
             }))
           catch {
             case _: java.util.ConcurrentModificationException if head != LatestHead => None
@@ -1326,7 +1419,7 @@ object CommitLog {
   /** The partition spec a layout stages under, comma-joined. */
   private def specOf(layout: Layout): Option[String] = layout match {
     case PartitionedLayout(cols, _, _) => Some(cols.mkString(","))
-    case SegmentLayout(w) => specOf(w)
+    case SegmentLayout(w, _) => specOf(w)
     case PlainLayout(_) => None
   }
 
@@ -1446,7 +1539,7 @@ object CommitLog {
       val staged = st.sync(stageDataFiles(s, root, read(s, root, prev.version),
         nFiles, prev.schema))(identity)
       st.published(commitRewriteRebasing(s, root, prev, "compact",
-        Nil, staged, Aux(), staged, Nil, maxAttempts, beforeCommit))._1
+        Nil, staged, Aux(), staged, maxAttempts, beforeCommit))._1
     }
   }
 
@@ -1753,14 +1846,12 @@ object CommitLog {
   private def schemaOrInfer(s: SparkSession, p: Snapshot): StructType =
     p.schema.getOrElse(s.read.parquet(p.absFiles: _*).schema)
 
-  /** A metadata-only commit on head `p`: its files, tombstones and
-    * legacy stats (recorded under `statsCol`; None drops them) carried
-    * verbatim under a new schema and aux. */
+  /** A metadata-only commit on head `p`: its files and tombstones
+    * carried verbatim under a new schema and aux. */
   private def recommit(root: String, p: Snapshot, op: String, schema: StructType,
-      aux: Aux, statsCol: Option[String], newTombstones: Seq[String] = Nil): Long =
+      aux: Aux, newTombstones: Seq[String] = Nil): Long =
     commitOn(root, p.files, Some(p), tableProperties(root), op = op,
-      statsCol = statsCol, stats = p.stats, schemaJson = Some(schema.json),
-      extra = auxExtra(aux), newTombstones = newTombstones)
+      schemaJson = Some(schema.json), aux = aux, newTombstones = newTombstones)
 
   /** Metadata-only schema evolution — ALTER TABLE ADD COLUMNS: a new
     * version re-listing the head's files verbatim under a WIDENED
@@ -1779,7 +1870,7 @@ object CommitLog {
         "adds columns, it never retypes them"))
     val merged = StructType(prevSchema.fields.toSeq ++ newFields.map(
       avoidPhysicalClash(Some(prev), tableProperties(root), prevSchema, _)))
-    recommit(root, prev, "append", merged, prev.aux, prev.statsCol)
+    recommit(root, prev, "append", merged, prev.aux)
   }
 
   /** Metadata-only TYPE WIDEN (r12) — ALTER TABLE ALTER COLUMN TYPE
@@ -1808,7 +1899,7 @@ object CommitLog {
     // rebaseableWinnerOps (metadata-only: removes nothing, vectors
     // nothing; a rebased rewrite re-records the widened HEAD schema,
     // and its narrow staged files read natively under it)
-    recommit(root, prev, "widen", widened, prev.aux, prev.statsCol)
+    recommit(root, prev, "widen", widened, prev.aux)
   }
 
   /** Dropped columns' PHYSICAL parquet names, comma-joined — their
@@ -1864,11 +1955,11 @@ object CommitLog {
     * every writer stages physical, and files written before and after
     * the rename are byte-compatible. Readers pinned at older versions
     * keep the old name (schema changes are versioned like data
-    * changes). Stats keys, the legacy stats column, and the partition
-    * column follow the rename — data-skipping and partition pruning
-    * survive. changesRows refuses ranges crossing the rename (names
-    * change mid-range); in-flight streams keep working because the
-    * physical layout never changed. */
+    * changes). Stats keys and the partition column follow the
+    * rename — data-skipping and partition pruning survive.
+    * changesRows refuses ranges crossing the rename (names change
+    * mid-range); in-flight streams keep working because the physical
+    * layout never changed. */
   def renameColumn(s: SparkSession, root: String, from: String,
       to: String): Long = {
     val prev = headOf(root, "rename a column of")
@@ -1900,8 +1991,7 @@ object CommitLog {
       // per-generation layouts follow the rename like the active spec
       layouts = aux.layouts.map { case (f2, pairs) =>
         f2 -> pairs.map { case (c, v) => (ren(c), v) } })
-    recommit(root, prev, "rename_column", StructType(fields), newAux,
-      prev.statsCol.map(ren))
+    recommit(root, prev, "rename_column", StructType(fields), newAux)
   }
 
   /** ALTER TABLE ... DROP COLUMN — a METADATA-ONLY commit: the new
@@ -1943,7 +2033,7 @@ object CommitLog {
     // properties-file read-modify-write (r11, ADVICE)
     val dropped = st.fields.find(_.name == name).map(physicalName).get
     recommit(root, prev, "drop_column", StructType(fields), newAux,
-      prev.statsCol.filterNot(_ == name), newTombstones = Seq(dropped))
+      newTombstones = Seq(dropped))
   }
 
   /** Full-snapshot OVERWRITE (INSERT OVERWRITE / Delta replace): the
@@ -1956,10 +2046,14 @@ object CommitLog {
     * replacement snapshot is prunable from the manifest. With CDF
     * enabled the changelog records the full transition (old rows
     * delete-tagged, new rows insert-tagged — cost ∝ table, the
-    * public CDF-on-overwrite trade). */
+    * public CDF-on-overwrite trade). It commits ONCE, on the head it
+    * read, with no rebase loop: the CDF pre-image is read from the
+    * head it replaces, so publishing on a newer head would record the
+    * wrong delete rows — a lost race throws the conflict instead.
+    * `extraMeta` fields commit atomically with the new files. */
   def overwrite(s: SparkSession, root: String, df0: DataFrame,
       nFiles: Int, partCol: Option[String] = None,
-      extraMeta: Seq[String] = Nil): Long = {
+      extraMeta: WriterMeta = WriterMeta()): Long = {
     import org.apache.spark.sql.functions.lit
     // identity allocation CONTINUES across an overwrite (replaced
     // rows' ids are never reused — the public engines' contract),
@@ -1990,31 +2084,17 @@ object CommitLog {
       val fullAux = restageColStats(s, root,
         prev.aux.filterFiles(Set.empty).merged(stagedAux), staged, prev.schema)
       st.published(commitOn(root, staged, Some(prev), props, op = "overwrite",
-        schemaJson = carriedSchemaJson(Some(prev)),
-        extra = auxExtra(fullAux) ++ cdfF.map(f => renderCdf(f())).toSeq ++ extraMeta,
-        newIdHwm = p.idHwm))
+        schemaJson = carriedSchemaJson(Some(prev)), aux = fullAux,
+        cdf = cdfF.map(_()), meta = extraMeta, newIdHwm = p.idHwm))
     }
   }
 
-  /** Per-file column statistics of `version`'s manifest: the stats
-    * column name (if the committing writer recorded one) and
-    * file → (min, max), relative paths. Files without an entry are
-    * UNPRUNABLE — a reader must always scan them (mixed manifests
-    * stay correct across writers that don't compute stats). */
-  def snapshotStatsOf(root: String, version: Long): (Option[String], Map[String, (Long, Long)]) = {
-    val sn = snapshot(root, version)
-    (sn.statsCol, sn.stats)
-  }
-
-  /** A legacy or segment stats column: an integral column of the
-    * frame (its per-file bounds record as a (Long, Long) pair), whose
-    * name is safe in hand-built manifest JSON — a quote or backslash
-    * would commit a permanently unparseable manifest. Refused by name
-    * before anything stages. */
-  private def requireLegacyStatsCol(schema: StructType, c: String, op: String): Unit = {
+  /** A stats column that must be integral — appendWithStats',
+    * optimize's and the segment writers' (segment files record its
+    * per-file bounds as integers). Refused by name before anything
+    * stages. */
+  private def requireIntegralStatsCol(schema: StructType, c: String, op: String): Unit = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    require(!c.exists(ch => ch == '"' || ch == '\\' || ch < ' '),
-      s"statsCol '$c' would corrupt the manifest JSON")
     val dt = schema.find(_.name == c).map(_.dataType).getOrElse(throw
       new IllegalArgumentException(s"$op: stats column '$c' is not a column of the write"))
     require(Seq(LongType, IntegerType, ShortType, ByteType).contains(dt),
@@ -2022,53 +2102,18 @@ object CommitLog {
         "its per-file bounds record as integers")
   }
 
-  /** Per-file min/max and NULL count of integral column `c` over
-    * `staged`: [[perFileColStats]] on that one column, so the bounds
-    * come from the footers the staging already read (the segmented
-    * COUNT(col)/TopN answers need the null counts). A file all-NULL on
-    * the column has no min/max ([[boundsOf]]): stat-less ⇒
-    * unprunable, the safe default. */
-  private def legacyStats(s: SparkSession, root: String, staged: Seq[String],
-      c: String, schema: Option[StructType]): Map[String, ColStat] =
-    perFileColStats(s, root, staged, Seq(c), schema).stats2
-      .flatMap { case (f, cols) => cols.get(c).map(f -> _) }
-
-  /** The (min, max) of each file's stats that has both. */
-  private def boundsOf(stats: Map[String, ColStat]): Map[String, (Long, Long)] =
-    stats.collect { case (f, ColStat(Some(lo: Long), Some(hi: Long), _)) => f -> (lo, hi) }
-
-  /** Append with per-file min/max statistics on integer column
-    * `statsCol` — the manifest-level file-skipping metadata of the
-    * public table formats (Delta's stats JSON / Iceberg's manifest
-    * column bounds): planning consults the LOG, not file footers, so
-    * a selective scan opens only overlapping files. Stats are computed
-    * from the staged files in one small aggregate per file (staging-
-    * time cost, amortized over every future pruned read). Prior
-    * versions' entries carry over when they were recorded on the same
-    * column, so the whole snapshot stays prunable after many appends. */
+  /** Append with per-file min/max/null-count statistics on integral
+    * column `statsCol` — [[appendWithColumnStats]] on that one column,
+    * the manifest-level file-skipping metadata of the public table
+    * formats (Delta's stats JSON / Iceberg's manifest column bounds):
+    * planning consults the LOG, not file footers, so a selective scan
+    * ([[prunedReadTyped]]) opens only overlapping files. Prior
+    * versions' entries carry over, so the whole snapshot stays
+    * prunable after many appends. */
   def appendWithStats(s: SparkSession, root: String, df: DataFrame,
       nFiles: Int, statsCol: String): Long =
     appendCore(s, root, df, "appendWithStats", LatestHead,
-      PlainLayout(nFiles), LegacyStats(statsCol)).get
-
-  /** Stats-pruned scan: the files of `version` whose [min, max] range
-    * on the stats column OVERLAPS [lo, hi], plus every file without
-    * stats (unprunable ⇒ always read). Returns (dataframe over the
-    * surviving files, filesTotal, filesRead). Pruning is a pure
-    * metadata decision — the caller still applies its precise
-    * predicate, so correctness never depends on the stats. */
-  def prunedRead(s: SparkSession, root: String, version: Long,
-      lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val sn = snapshot(root, version)
-    val files = sn.files
-    val keep = files.filter { f =>
-      sn.stats.get(f) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
-    (keptScan(s, sn, keep), files.size, keep.size)
-  }
+      PlainLayout(nFiles), TypedStats(Seq(statsCol), integral = true)).get
 
   /** A pruned scan over the `keep` (relative) files of `sn`; an empty
     * selection reads as the snapshot's empty frame. */
@@ -2318,7 +2363,7 @@ object CommitLog {
     * generation's column. */
   def appendPartitioned(s: SparkSession, root: String, df0: DataFrame,
       partCol: String, filesPerPartition: Int,
-      extraMeta: Seq[String] = Nil): Long =
+      extraMeta: WriterMeta = WriterMeta()): Long =
     appendPartitionedCols(s, root, df0,
       partCol.split(',').map(_.trim).toSeq, filesPerPartition, extraMeta)
 
@@ -2333,13 +2378,13 @@ object CommitLog {
     * exactly the single-column contract. */
   def appendPartitionedCols(s: SparkSession, root: String, df0: DataFrame,
       partCols: Seq[String], filesPerPartition: Int,
-      extraMeta: Seq[String] = Nil,
-      // extra manifest fragments computed FROM the staged files +
-      // their aux (r14 — e.g. the vector index derives per-cell row
-      // counts from the staged footers, zero extra Spark passes) and
-      // committed atomically with them
-      extraFromStaged: (Seq[String], Aux) => Seq[String] =
-        (_, _) => Nil): Long =
+      extraMeta: WriterMeta = WriterMeta(),
+      // writer fields computed FROM the staged files + their aux (r14
+      // — e.g. the vector index derives per-cell row counts from the
+      // staged footers, zero extra Spark passes) and committed
+      // atomically with them
+      extraFromStaged: (Seq[String], Aux) => WriterMeta =
+        (_, _) => WriterMeta()): Long =
     // partitioning by a generated column (the derived-date layout) is
     // the generated-column feature's headline use: the core fills
     // before it routes
@@ -2397,8 +2442,10 @@ object CommitLog {
   // min/max/nullCount per file per column, for integral, double,
   // timestamp (epoch micros) and string columns — "most real
   // predicates are on time", so the skipping metadata must cover more
-  // than one INTEGER column. The legacy statsCol/stats single-column
-  // path is untouched (older tables keep pruning).
+  // than one INTEGER column. They are the engine's one stats model:
+  // appendWithStats and optimize(statsCol) record them on their one
+  // column, and the single-column stats of pre-typed manifests parse
+  // into them ([[Codec]]), so older tables keep pruning.
   // ------------------------------------------------------------------
 
   private def statTagOf(dt: org.apache.spark.sql.types.DataType): String = {
@@ -2487,7 +2534,7 @@ object CommitLog {
             val (mnI, mxI, nuI) = (1 + 3 * i, 2 + 3 * i, 3 + 3 * i)
             def v(ix: Int): Option[Any] =
               if (r.isNullAt(ix)) None else Some(r.get(ix))
-            val st = ColStat(v(mnI), v(mxI), r.getLong(nuI))
+            val st = ColStat(v(mnI), v(mxI), Some(r.getLong(nuI)))
             if (finite(st)) Some(c -> st) else None
           }.toMap
         }
@@ -2546,8 +2593,8 @@ object CommitLog {
   // ------------------------------------------------------------------
   // Combined layout × stats pruning (r15, VERDICT items 2/6): ONE
   // file-level keep decision intersecting EVERY metadata source the
-  // manifest carries — per-file partition layouts, typed column
-  // stats, and the legacy single-column stats — so a probe on
+  // manifest carries — per-file partition layouts and typed column
+  // stats — so a probe on
   // (day = x AND value > y) skips everything either source can skip.
   // This is also the translation target for the DSv2 SQL filter
   // pushdown (GraftCatalog): pushed predicates become these probes,
@@ -2581,8 +2628,8 @@ object CommitLog {
     }
 
   /** The surviving (relative) file paths of `version` under a
-    * combined probe — partition-value sets AND typed range probes AND
-    * the legacy single-column stats, intersected: a file reads only
+    * combined probe — partition-value sets AND typed range probes,
+    * intersected: a file reads only
     * if EVERY source that has an opinion about it passes. Files (or
     * columns) without metadata are unprunable ⇒ always read, and a
     * probed column no generation recorded simply never prunes —
@@ -2626,7 +2673,6 @@ object CommitLog {
 
   private def prunedFilesOf(sn: Snapshot, tree: ProbeTree): Seq[String] = {
     val aux = sn.aux
-    val (legacyCol, legacyStats) = (sn.statsCol, sn.stats)
     // normalize each node ONCE — the per-file loop must not rebuild
     // file-independent maps per file per OR branch (r16 review find).
     // NOTE: the segmented prune (SegNode/admits/admitsFile) mirrors
@@ -2649,23 +2695,11 @@ object CommitLog {
         case None => true // no entry: must read
       }
       val statsOk = t.ranges.forall { p =>
-        val typedOk = aux.stats2.get(f).flatMap(_.get(p.col)) match {
+        aux.stats2.get(f).flatMap(_.get(p.col)) match {
           case None => true // no entry for this column: unprunable
           case Some(st) =>
             rangeOverlaps(aux.statsTags.getOrElse(p.col, "long"), st, p)
         }
-        // the legacy single-column (Long) stats prune too when the
-        // probe is on THAT column with Long bounds
-        val legacyOk =
-          if (!legacyCol.contains(p.col)) true
-          else legacyStats.get(f) match {
-            case Some((mn, mx)) if p.lo.forall(_.isInstanceOf[Long]) &&
-                p.hi.forall(_.isInstanceOf[Long]) =>
-              p.lo.forall(lo => mx >= lo.asInstanceOf[Long]) &&
-                p.hi.forall(hi => mn <= hi.asInstanceOf[Long])
-            case _ => true
-          }
-        typedOk && legacyOk
       }
       layoutOk && statsOk && t.ors.forall(_.exists(admits(f, _)))
     }
@@ -2772,7 +2806,7 @@ object CommitLog {
       val stats = perFileColStats(s, root, staged, dims.map(_._1), prev.schema)
       beforeCommit()
       st.published(commitOn(root, staged, Some(prev), tableProperties(root), op = "optimize",
-        schemaJson = carriedSchemaJson(Some(prev)), extra = auxExtra(stats)))
+        schemaJson = carriedSchemaJson(Some(prev)), aux = stats))
     }
   }
 
@@ -3096,7 +3130,7 @@ object CommitLog {
   private def rowLevel(s: SparkSession, root: String, prev: Snapshot,
       props: Map[String, String], op: String, touch: Touch,
       assignments: Seq[(String, org.apache.spark.sql.Column)],
-      inserts: Option[(DataFrame, Int)], mode: DmlMode, extraMeta: Seq[String],
+      inserts: Option[(DataFrame, Int)], mode: DmlMode, extraMeta: WriterMeta,
       maxAttempts: Int, beforeCommit: () => Unit,
       newIdHwm: Option[Long] = None, idHwmBase: Option[Long] = None): RowLevelResult =
     // a row-less snapshot has nothing to change — and nothing to scan
@@ -3170,8 +3204,8 @@ object CommitLog {
       val noChanges: () => Seq[String] = () => Nil
       def stageChanges(d: => DataFrame): () => Seq[String] =
         if (cdfOn(props)) st.stageCdfAsync(changes(d), prev.schema) else noChanges
-      def cdfMeta(cdfF: () => Seq[String]): Seq[String] =
-        if (cdfOn(props)) Seq(renderCdf(cdfF())) else Nil
+      def cdfOf(cdfF: () => Seq[String]): Option[Seq[String]] =
+        Option.when(cdfOn(props))(cdfF())
       mode match {
         case CopyOnWrite =>
           // canonical paths on both sides: _graft_file yields absolute
@@ -3198,8 +3232,8 @@ object CommitLog {
           val staged = rewritten ++ inserted
           val (v, addedN) = st.published(commitRewriteRebasing(s, root, prev, op,
             clean.map(p => relativize(root, p)), staged,
-            rewriteAux.merged(insertAux), staged, cdfMeta(cdfF) ++ extraMeta,
-            maxAttempts, beforeCommit, newIdHwm = newIdHwm, idHwmBase = idHwmBase,
+            rewriteAux.merged(insertAux), staged, maxAttempts, beforeCommit,
+            cdf = cdfOf(cdfF), meta = extraMeta, newIdHwm = newIdHwm, idHwmBase = idHwmBase,
             // value×value narrow rebase (r14): safe past an update/merge
             // winner iff none of ITS new rows are rows this op touches
             loserTouches = Some((hv, fs) => touch.rows(readSubset(s, hv, fs)).limit(1).count())))
@@ -3238,8 +3272,8 @@ object CommitLog {
                 math.max(1, nFiles)))(_._1))
             }
           val (v, addedN) = st.published(commitRewriteRebasing(s, root, prev, op,
-            prev.files, inserted, newDvs.merged(insertAux), inserted, cdfMeta(cdfF),
-            maxAttempts, beforeCommit, vectors = true))
+            prev.files, inserted, newDvs.merged(insertAux), inserted,
+            maxAttempts, beforeCommit, cdf = cdfOf(cdfF), vectors = true))
           RowLevelResult(v, files.size + addedN, 0L, perFile.size.toLong, nRows)
       }
     }
@@ -3251,7 +3285,7 @@ object CommitLog {
       cond: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)], vectors: Boolean,
       nFiles: Int = 1, maxAttempts: Int = 10, beforeCommit: () => Unit = () => (),
-      extraMeta: Seq[String] = Nil): RowLevelResult = {
+      extraMeta: WriterMeta = WriterMeta()): RowLevelResult = {
     val op = if (assignments.isEmpty) "delete" else "update"
     rowLevel(s, root, headOf(root, if (assignments.isEmpty) "delete from" else op),
       tableProperties(root), op, CondTouch(cond), assignments, None,
@@ -3263,7 +3297,7 @@ object CommitLog {
     * (newVersion, filesCarried, filesRewritten). */
   def delete(s: SparkSession, root: String,
       cond: org.apache.spark.sql.Column,
-      extraMeta: Seq[String] = Nil,
+      extraMeta: WriterMeta = WriterMeta(),
       maxAttempts: Int = 10,
       beforeCommit: () => Unit = () => ()): (Long, Long, Long) = {
     val r = deleteOrUpdate(s, root, cond, Nil, vectors = false,
@@ -3314,15 +3348,9 @@ object CommitLog {
       base: Snapshot, op: String,
       carried: Seq[String], staged: Seq[String],
       newAux: Aux, restageFiles: Seq[String],
-      extraFragments: Seq[String],
       maxAttempts: Int, beforeCommit: () => Unit,
-      // a CLUSTERING rewrite (optimize) replaces the legacy stats
-      // column wholesale: carrying the head's per-file entries keyed
-      // on a DIFFERENT column would misattribute them, so the
-      // override drops them and records only the staged files' stats
-      // under the new column (carried files read as unprunable — the
-      // pre-r12 optimize contract)
-      newStats: Option[(String, Map[String, (Long, Long)])] = None,
+      // the commit's change-data files and writer fields
+      cdf: Option[Seq[String]] = None, meta: WriterMeta = WriterMeta(),
       // identity allocation riding this rewrite (r13 — MERGE inserts):
       // newIdHwm is the advanced mark, idHwmBase the mark it was
       // derived FROM; a winner that moved the mark makes the staged
@@ -3339,7 +3367,7 @@ object CommitLog {
     val baseFiles = base.files.toSet
     val myRemoved = baseFiles -- carried.toSet
     // every rewrite records its staged files' byte sizes and footer
-    // row counts (r15 review find: compact and the legacy stats
+    // row counts (r15 review find: compact and the range-cluster
     // optimize passed a bare Aux(), so a compaction silently demoted
     // COUNT(*) from one manifest parse to a full scan). Idempotent
     // for callers whose aux already carries them — merged() is
@@ -3437,26 +3465,18 @@ object CommitLog {
             "concurrent commit advanced — the staged block may " +
             "overlap; retry against the new head")
       // a vector commit carries the head verbatim, listing order included
-      val (finalCarried, headAux, headStats) =
-        if (vectors) (head.files, head.aux, head.stats)
+      val (finalCarried, headAux) =
+        if (vectors) (head.files, head.aux)
         else {
           val keep = headFiles -- myRemoved
-          (keep.toSeq.sorted, head.aux.filterFiles(keep), head.stats.filter(kv => keep(kv._1)))
+          (keep.toSeq.sorted, head.aux.filterFiles(keep))
         }
-      val (statsCol, stats) = newStats match {
-        case Some((c, m)) => (Some(c), m)
-        case None => (head.statsCol, headStats)
-      }
       beforeCommit()
       try {
         val v = commitOn(root, finalCarried ++ staged, Some(head), props,
-          op = op,
-          statsCol = statsCol,
-          stats = stats,
-          schemaJson = carriedSchemaJson(Some(head)),
-          extra = auxExtra(restageColStats(s, root,
-            headAux.merged(newAuxSized), restageFiles, head.schema)) ++ extraFragments,
-          newIdHwm = newIdHwm)
+          op = op, schemaJson = carriedSchemaJson(Some(head)),
+          aux = restageColStats(s, root, headAux.merged(newAuxSized), restageFiles, head.schema),
+          cdf = cdf, meta = meta, newIdHwm = newIdHwm)
         return (v, (finalCarried.size - carried.size).toLong)
       } catch {
         case _: java.util.ConcurrentModificationException
@@ -3515,8 +3535,7 @@ object CommitLog {
       val (staged, stagedAux) = st.sync(stageRewrite(s, root, prev,
         readSubset(s, prev, vectored), math.max(1, vectored.size)))(_._1)
       val (v, addedN) = st.published(commitRewriteRebasing(s, root, prev, "optimize",
-        carried, staged, stagedAux, staged, Nil,
-        maxAttempts, beforeCommit))
+        carried, staged, stagedAux, staged, maxAttempts, beforeCommit))
       (v, clean.size.toLong + addedN, staged.size.toLong)
     }
   }
@@ -3530,7 +3549,7 @@ object CommitLog {
     * (newVersion, filesCarried, filesRewritten). */
   def merge(s: SparkSession, root: String, updates: DataFrame,
       keyCol: String, nInsertFiles: Int,
-      extraMeta: Seq[String] = Nil,
+      extraMeta: WriterMeta = WriterMeta(),
       deleteKeys: Option[DataFrame] = None): (Long, Long, Long) =
     mergeKeyed(s, root, updates, Seq(keyCol), nInsertFiles, extraMeta,
       deleteKeys)
@@ -3540,7 +3559,7 @@ object CommitLog {
     * single-key merge verbatim. */
   def mergeKeyed(s: SparkSession, root: String, updates0: DataFrame,
       keyCols: Seq[String], nInsertFiles: Int,
-      extraMeta: Seq[String] = Nil,
+      extraMeta: WriterMeta = WriterMeta(),
       deleteKeys: Option[DataFrame] = None,
       maxAttempts: Int = 10,
       beforeCommit: () => Unit = () => ()): (Long, Long, Long) = {
@@ -3629,7 +3648,7 @@ object CommitLog {
     * clash-safe physical names (column-mapping interplay). */
   def mergeEvolved(s: SparkSession, root: String, updates: DataFrame,
       keyCol: String, nInsertFiles: Int,
-      extraMeta: Seq[String] = Nil,
+      extraMeta: WriterMeta = WriterMeta(),
       deleteKeys: Option[DataFrame] = None): (Long, Long, Long) = {
     evolveToInclude(s, root, updates.schema, "mergeEvolved")
     merge(s, root, updates, keyCol, nInsertFiles, extraMeta, deleteKeys)
@@ -3704,7 +3723,11 @@ object CommitLog {
     * I/O: the restore is one manifest read and one commit (the
     * restored files must still exist — a vacuum that dropped
     * pre-retention versions limits how far back restore reaches,
-    * exactly the public trade). Returns the new head version. */
+    * exactly the public trade). Restoring layout text from before the
+    * `layout.valueGuard` stamp removes the stamp BEFORE the commit
+    * publishes: in the other order, a reader planning between the two
+    * would see the pre-stamp text at a stamped version and plan it as
+    * guarded. Returns the new head version. */
   def restore(root: String, toVersion: Long): Long = {
     val prev = headOf(root, "restore")
     require(toVersion <= prev.version, s"restore: version $toVersion > head ${prev.version}")
@@ -3741,9 +3764,7 @@ object CommitLog {
       if (preStamp) removeTableProperty(root, "layout.valueGuard")
     }
     commitOn(root, files, Some(prev), props, op = "restore",
-      statsCol = target.statsCol, stats = target.stats,
-      schemaJson = carriedSchemaJson(Some(target)),
-      extra = auxExtra(restoredAux))
+      schemaJson = carriedSchemaJson(Some(target)), aux = restoredAux)
   }
 
   /** Layout maintenance across CoW rewrites (r10) — the
@@ -3852,8 +3873,7 @@ object CommitLog {
       val (staged, newAux) = st.sync(
         stagePartitioned(s, root, sub, partCol, filesPerPartition, prev))(_._1)
       val (v, _) = st.published(commitRewriteRebasing(s, root, prev,
-        "optimize", carried, staged, newAux, staged, Nil,
-        maxAttempts, beforeCommit))
+        "optimize", carried, staged, newAux, staged, maxAttempts, beforeCommit))
       (v, selected.size.toLong, staged.size.toLong)
     }
   }
@@ -3892,8 +3912,7 @@ object CommitLog {
       val (staged, newAux) = st.sync(stagePartitionedCols(s, root, sub, curCols,
         filesPerPartition = 1, Some(prev)))(_._1)
       val (v, _) = st.published(commitRewriteRebasing(s, root, prev,
-        "optimize", carried, staged, newAux, staged, Nil,
-        maxAttempts, beforeCommit))
+        "optimize", carried, staged, newAux, staged, maxAttempts, beforeCommit))
       (v, pick.size.toLong, (foreign.size - pick.size).toLong)
     }
   }
@@ -3903,7 +3922,7 @@ object CommitLog {
     * lists the SOURCE snapshot's data files by `../`-relative
     * reference — not a byte of data is copied — and carries the
     * snapshot's schema, per-file partition values, typed column
-    * statistics, legacy stats and the source's table properties, so
+    * statistics and the source's table properties, so
     * every reader-side capability (pruning, time-travel pinning, CDF
     * on future writes, CHECK constraints) works on the clone
     * immediately. Writes to the clone are ordinary CoW commits into
@@ -3941,8 +3960,8 @@ object CommitLog {
       s"shallowClone: ${missing.size} of version $v's data file(s) no " +
         s"longer exist under $srcRoot (vacuumed?) — refusing a " +
         s"stranded clone (e.g. ${missing.headOption.getOrElse("")})")
-    // source-relative entry -> dst-relative (../-path) entry; aux and
-    // stats keys are per-file facts and remap with their file
+    // source-relative entry -> dst-relative (../-path) entry; aux
+    // keys are per-file facts and remap with their file
     val relMap = srcRel.zip(abs.map(a => relativize(dstRoot, a))).toMap
     val a0 = src.aux
     val aux = Aux(a0.partCol,
@@ -3957,11 +3976,8 @@ object CommitLog {
       // per-generation layouts remap with their files (r13): a clone
       // of an evolved table keeps every generation's pruning
       a0.layouts.map { case (f, cv) => relMap.getOrElse(f, f) -> cv })
-    val v0 = commit(dstRoot, srcRel.map(relMap), expected = None, op = "clone",
-      statsCol = src.statsCol,
-      stats = src.stats.map { case (f, b) => relMap.getOrElse(f, f) -> b },
-      schemaJson = carriedSchemaJson(Some(src)),
-      extra = auxExtra(aux),
+    val v0 = commitOn(dstRoot, srcRel.map(relMap), None, tableProperties(dstRoot), op = "clone",
+      schemaJson = carriedSchemaJson(Some(src)), aux = aux,
       // the identity mark carries into the clone's v0 (r13): the
       // clone's first allocation must continue PAST the cloned rows'
       // ids, never restart from `start` and collide with them
@@ -4081,8 +4097,8 @@ object CommitLog {
     * the public formats (Delta OPTIMIZE ZORDER BY / Iceberg rewrite
     * with a sort order), single-column form: rewrite the CURRENT
     * snapshot so each file covers one contiguous `statsCol` range
-    * (buckets = the intervals between `cutoffs`), and record per-file
-    * min/max in the manifest. An ingest-ordered table's files each
+    * (buckets = the intervals between `cutoffs`), and record typed
+    * per-file min/max/null counts on it in the manifest. An ingest-ordered table's files each
     * span ~the whole key range (every selective scan reads every
     * file); after clustering, file bounds align with the ranges and
     * manifest-stats pruning starts to bite — layout is what makes the
@@ -4110,7 +4126,7 @@ object CommitLog {
     require(cutoffs == cutoffs.sorted && cutoffs.distinct.size == cutoffs.size,
       s"optimize cutoffs must be strictly increasing, got $cutoffs")
     val cur = read(s, root, prev.version) // pinned: immune to concurrent commits
-    requireLegacyStatsCol(cur.schema, statsCol, "optimize")
+    requireIntegralStatsCol(cur.schema, statsCol, "optimize")
     val bounds = (None +: cutoffs.map(Some(_))).zip(cutoffs.map(Some(_)) :+ None)
     staging(s, root) { st =>
       val staged = bounds.flatMap { case (lo, hi) =>
@@ -4127,14 +4143,12 @@ object CommitLog {
         st.sync(stageDataFiles(s, root, part, filesPerBucket, prev.schema))(identity)
       }
       // r12: the clustering rewrite rebases past blind appends like
-      // compact; the stats override records ONLY the staged buckets'
-      // bounds under the (possibly new) stats column — a winner's
-      // carried files read as unprunable, exactly the pre-r12 contract
-      // for files the optimize did not stage
+      // compact; the staged buckets record typed stats on `statsCol`
+      // (the rebase loop's restage computes every tagged column), and
+      // a winner's carried files keep their own
       st.published(commitRewriteRebasing(s, root, prev,
-        "optimize", Nil, staged, Aux(), staged, Nil,
-        maxAttempts, beforeCommit,
-        newStats = Some((statsCol, boundsOf(legacyStats(s, root, staged, statsCol, prev.schema))))))._1
+        "optimize", Nil, staged, Aux(statsTags = Map(statsCol -> "long")), staged,
+        maxAttempts, beforeCommit))._1
     }
   }
 
@@ -4181,28 +4195,6 @@ object CommitLog {
       layoutValues: Map[String, Set[String]] = Map.empty,
       nNulls: Option[Long] = None)
 
-  private def renderSegmentManifest(version: Long, op: String,
-      segs: Seq[SegmentRef], schemaJson: Option[String],
-      idHwm: Option[Long]): String =
-    s"""{"version":$version,"op":"$op",""" +
-      // the identity mark rides the manifest as on a flat table
-      idHwm.map(h => s""""$IdHwmField":$h,""").getOrElse("") +
-      schemaJson.map(j => s""""schema":$j,""").getOrElse("") +
-      s""""segments":[""" +
-      segs.map { sr =>
-        val b = sr.bounds.map { case (lo, hi) => s""","lo":$lo,"hi":$hi""" }.getOrElse("")
-        val r = sr.nRows.map(n => s""","nRows":$n""").getOrElse("")
-        val by = sr.nBytes.map(n => s""","nBytes":$n""").getOrElse("")
-        val nn = sr.nNulls.map(n => s""","nNulls":$n""").getOrElse("")
-        val lv =
-          if (sr.layoutValues.isEmpty) ""
-          else s""","lv":{""" + sr.layoutValues.toSeq.sortBy(_._1)
-            .map { case (c, vs) =>
-              s"${jstr(c)}:[${vs.toSeq.sorted.map(jstr).mkString(",")}]"
-            }.mkString(",") + "}"
-        s"""{"path":"${sr.path}","nFiles":${sr.nFiles}$b$r$by$nn$lv}"""
-      }.mkString(",") + "]}"
-
   /** The segment references of a segmented version's manifest. */
   def segmentsOf(root: String, version: Long): Seq[SegmentRef] =
     snapshot(root, version).segments
@@ -4218,8 +4210,8 @@ object CommitLog {
     * Bounded like the PruneMeta cache: past 4096 entries roughly half
     * are evicted ([[evictHalf]]) — never a full clear (re-computable,
     * but a wholesale dump would stampede re-parses at segment scale). */
-  private val segNodeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), com.fasterxml.jackson.databind.JsonNode]()
+  private val segFileCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), SegmentFile]()
 
   /** Bounded-cache eviction: drop ~every other entry instead of a full
     * clear (r19, VERDICT r18 "What's wrong #3") — crossing the bound
@@ -4239,45 +4231,37 @@ object CommitLog {
       drop = !drop
     }
   }
-  private def segmentNode(root: String,
-      segPath: String): com.fasterxml.jackson.databind.JsonNode = {
+  private def segmentFile(root: String, segPath: String): SegmentFile = {
     val key = (new java.io.File(root).getCanonicalPath, segPath)
-    if (segNodeCache.size > 4096) evictHalf(segNodeCache)
-    segNodeCache.computeIfAbsent(key, _ => mapper.readTree(
-      java.nio.file.Files.readString(
-        new java.io.File(logDir(root), segPath).toPath)))
+    if (segFileCache.size > 4096) evictHalf(segFileCache)
+    segFileCache.computeIfAbsent(key, _ => readLog[SegmentFile](root, segPath))
   }
 
   /** Read one immutable segment file: (relative data-file paths,
     * per-file stats). */
   def segmentEntries(root: String, segPath: String): (Seq[String], Map[String, (Long, Long)]) = {
-    val node = segmentNode(root, segPath)
-    (textsOf(node.get("files")), Option(node.get("stats"))
-      .map(fieldsOf(_)(a => (a.get(0).asLong(), a.get(1).asLong()))).getOrElse(Map.empty))
+    val sf = segmentFile(root, segPath)
+    (sf.files, sf.stats)
   }
 
   /** Per-file footer row counts of one segment file (r17 — written by
     * appendSegment alongside the stats); empty for pre-r17 segments,
     * and every consumer treats a missing count as a refusal. */
-  def segmentEntryRows(root: String, segPath: String): Map[String, Long] = {
-    Option(segmentNode(root, segPath).get("rows")).map(fieldsOf(_)(_.asLong()))
-      .getOrElse(Map.empty)
-  }
+  def segmentEntryRows(root: String, segPath: String): Map[String, Long] =
+    segmentFile(root, segPath).rows
 
   /** Per-file LAYOUT entries of one segment file (r18 — written by
     * appendSegmentPartitioned: each data file's ordered (column,
     * staged value) pairs, the flat pair-array encoding the flat
     * manifests' `layouts` field uses); empty for pre-r18 or
     * unpartitioned segments — their files are layout-unprunable. */
-  def segmentLayouts(root: String, segPath: String): Map[String, Seq[(String, String)]] = {
-    Option(segmentNode(root, segPath).get("layouts")).map(fieldsOf(_)(pairsOf))
-      .getOrElse(Map.empty)
-  }
+  def segmentLayouts(root: String, segPath: String): Map[String, Seq[(String, String)]] =
+    segmentFile(root, segPath).layouts
 
   /** The partition spec one segment file was staged under (r18);
     * None = plain appendSegment. */
   def segmentPartCols(root: String, segPath: String): Option[String] =
-    Option(segmentNode(root, segPath).get("partCols")).map(_.asText())
+    segmentFile(root, segPath).partCols
 
   /** Segment refs of `version` surviving a BOUNDS-level prune under
     * Long range probes on the segment stats column — the first level
@@ -4513,7 +4497,7 @@ object CommitLog {
   def appendSegment(s: SparkSession, root: String, df: DataFrame,
       nFiles: Int, statsCol: String): Long =
     appendCore(s, root, df, "appendSegment", LatestHead,
-      SegmentLayout(PlainLayout(nFiles)), LegacyStats(statsCol)).get
+      SegmentLayout(PlainLayout(nFiles), statsCol), TypedStats(Seq(statsCol), integral = true)).get
 
   /** A segmented table keeps ONE stats column and ONE layout, checked
     * against the head's first segment before anything stages:
@@ -4564,26 +4548,14 @@ object CommitLog {
       props: Map[String, String], owner: Stagings, st: Staged, statsCol: String,
       spec: Option[String]): Long = {
     val staged = st.files
-    val stats = boundsOf(st.legacy)
+    val colStats = st.aux.stats2.flatMap { case (f, cs) => cs.get(statsCol).map(f -> _) }
+    val stats = colStats.collect { case (f, ColStat(Some(lo: Long), Some(hi: Long), _)) => f -> (lo, hi) }
     val layouts = st.aux.layouts
     val segName = "seg-" + java.util.UUID.randomUUID().toString + ".json"
-    val layoutJson =
-      if (layouts.isEmpty) ""
-      else s""","partCols":${jstr(spec.get)},"layouts":{""" +
-        layouts.toSeq.sortBy(_._1).map { case (f, pairs) =>
-          s"${jstr(f)}:[" + pairs.flatMap { case (c, v) =>
-            Seq(jstr(c), jstr(v)) }.mkString(",") + "]"
-        }.mkString(",") + "}"
-    val segJson = s"""{"files":[${staged.map(f => "\"" + f + "\"").mkString(",")}],""" +
-      s""""statsCol":"$statsCol","stats":{""" +
-      stats.toSeq.sortBy(_._1).map { case (f, (lo, hi)) =>
-        s""""$f":[$lo,$hi]""" }.mkString(",") +
-      s"""},"rows":{""" +
-      staged.sorted.map(f => s""""$f":${st.aux.rows(f)}""").mkString(",") + "}" +
-      layoutJson + "}"
     logDir(root).mkdirs()
-    owner.sync(java.nio.file.Files.writeString(
-      new java.io.File(logDir(root), segName).toPath, segJson))(_ => Seq(s"_graft_log/$segName"))
+    owner.sync(java.nio.file.Files.writeString(new java.io.File(logDir(root), segName).toPath,
+      Codec.render(SegmentFile(staged, Some(statsCol), stats, staged.map(f => f -> st.aux.rows(f)).toMap,
+        spec, layouts))))(_ => Seq(s"_graft_log/$segName"))
     val bounds =
       if (stats.isEmpty) None
       else Some((stats.values.map(_._1).min, stats.values.map(_._2).max))
@@ -4595,7 +4567,8 @@ object CommitLog {
     // an unguarded map lookup here turned that tolerance into a
     // commit-failing NoSuchElementException)
     val nNulls =
-      if (staged.forall(st.legacy.contains)) Some(staged.map(st.legacy(_).nulls).sum)
+      if (staged.forall(colStats.get(_).exists(_.nulls.isDefined)))
+        Some(staged.map(colStats(_).nulls.get).sum)
       else None
     // the segment's layout-value UNIVERSE per column — what the
     // manifest-level (segment-skipping) partition probe consults
@@ -4603,11 +4576,12 @@ object CommitLog {
       layouts.values.flatten.groupBy(_._1)
         .map { case (c, es) => c -> es.map(_._2).toSet }
     val next = prev.map(_.version + 1).getOrElse(0L)
-    publish(root, next, renderSegmentManifest(next, "append",
-      prev.fold(Seq.empty[SegmentRef])(_.segments) :+ SegmentRef(segName, staged.size, bounds,
+    publish(root, Snapshot(root, next, "append", None, None,
+      Some(prev.fold(Seq.empty[SegmentRef])(_.segments) :+ SegmentRef(segName, staged.size, bounds,
         Some(staged.map(st.aux.rows).sum), Some(staged.map(st.aux.sizes).sum),
-        universe, nNulls),
-      Some(st.p.recorded.json), st.p.idHwm.orElse(prev.flatMap(_.idHwm))))
+        universe, nNulls)),
+      Aux(), None, WriterMeta(), Nil, st.p.idHwm.orElse(prev.flatMap(_.idHwm)),
+      Some(st.p.recorded.json)))
     maybeCheckpoint(root, next, props) // summarize() reads segment manifests too
     next
   }
@@ -4628,7 +4602,8 @@ object CommitLog {
   def appendSegmentPartitioned(s: SparkSession, root: String, df: DataFrame,
       partCols: Seq[String], filesPerPartition: Int, statsCol: String): Long =
     appendCore(s, root, df, "appendSegmentPartitioned", LatestHead,
-      SegmentLayout(PartitionedLayout(partCols, filesPerPartition)), LegacyStats(statsCol)).get
+      SegmentLayout(PartitionedLayout(partCols, filesPerPartition), statsCol),
+      TypedStats(Seq(statsCol), integral = true)).get
 
   /** Does `version`'s manifest list SEGMENT references instead of a
     * flat file array? (The two manifest shapes are mutually
@@ -4647,7 +4622,7 @@ object CommitLog {
 
   /** One segment file's own recorded stats column. */
   private def segmentStatsColOf(root: String, segPath: String): Option[String] =
-    Option(segmentNode(root, segPath).get("statsCol")).map(_.asText())
+    segmentFile(root, segPath).statsCol
 
   /** Whether `version`'s per-segment bounds may be treated as ONE
     * column's — [[segmentStatsCol]]'s, read off the FIRST segment

@@ -661,7 +661,7 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
       keep.forall { f =>
         liveRows(aux, f).isDefined &&
           aux.stats2.get(f).flatMap(_.get(c)).exists(st =>
-            st.nulls == 0 && st.lo.isDefined && st.hi.isDefined)
+            st.nulls.contains(0L) && st.lo.isDefined && st.hi.isDefined)
       }
 
   override def readSchema(): StructType = projected
@@ -867,7 +867,7 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
       // a point probe to the hash bucket
       case CommitLog.BucketSpec(_, c) => c
       case c => c
-    } ++ meta.tags.keySet ++ meta.legacyCol)
+    } ++ meta.tags.keySet)
       .filter(projected.fieldNames.contains)
       .toArray.map(Expressions.column)
   override def filter(filters: Array[Filter]): Unit = { runtime = filters }

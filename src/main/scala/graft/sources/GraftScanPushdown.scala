@@ -12,8 +12,7 @@ import org.apache.spark.sql.sources._
   *     `=`, `IN`, `IS NULL` on a layout column);
   *   - typed range probes (per-file min/max column stats: `=`, `<`,
   *     `<=`, `>`, `>=`, `IN` as a [min,max] envelope, `IS NOT NULL`
-  *     against all-NULL files) — including the legacy single-column
-  *     Long stats under the same probe;
+  *     against all-NULL files);
   *
   * which [[CommitLog.prunedFilesCombined]] INTERSECTS, so a
   * `SELECT ... WHERE day = '3' AND event_id <= k` on a catalog table
@@ -54,10 +53,10 @@ object GraftFilterPushdown {
   }
 
   /** Skipping metadata of one pinned snapshot, read once per scan:
-    * every column any generation's layout records, the typed stat
-    * tags, and the legacy single-column stats column. */
+    * every column any generation's layout records and the typed stat
+    * tags. */
   final case class PruneMeta(layoutCols: Set[String],
-      tags: Map[String, String], legacyCol: Option[String],
+      tags: Map[String, String],
       // bucket specs among the layout columns (r15): source column →
       // (bucket count, the recorded layout-column name) — a point
       // probe on the SOURCE column prunes to its hash bucket's files
@@ -150,7 +149,7 @@ object GraftFilterPushdown {
           segs.forall(_.layoutValues.contains(c)))
         PruneMeta(lvCols,
           CommitLog.segmentStatsCol(root, version).map(_ -> "long").toMap,
-          None, layoutTz = CommitLog.tableProperty(root, "layout.timeZone"),
+          layoutTz = CommitLog.tableProperty(root, "layout.timeZone"),
           fullLayoutCols = fullCols, layoutValues = lvUnion,
           guarded = lvCols.nonEmpty)
       } else {
@@ -196,8 +195,7 @@ object GraftFilterPushdown {
           else files.flatMap(f => aux.layoutOf(f).getOrElse(Nil))
             .filter(e => identCols(e._1))
             .groupBy(_._1).map { case (c, es) => c -> es.map(_._2).toSet }
-        PruneMeta(layoutCols, aux.statsTags,
-          CommitLog.snapshotStatsOf(root, version)._1, buckets,
+        PruneMeta(layoutCols, aux.statsTags, buckets,
           CommitLog.tableProperty(root, "layout.timeZone"), fullCols,
           values, guarded)
       })
@@ -410,8 +408,6 @@ object GraftFilterPushdown {
     // exclusions UNION across filters (each vetoes independently)
     def addNotPart(c: String, vs: Set[String]): Unit =
       notParts = notParts.updated(c, notParts.getOrElse(c, Set.empty) ++ vs)
-    def tagOf(c: String): Option[String] =
-      meta.tags.get(c).orElse(if (meta.legacyCol.contains(c)) Some("long") else None)
     // values an EXCLUSION probe may veto on (r17 review find): an LTZ
     // timestamp's rendering is not injective across a DST overlap —
     // two instants share one staged text, so vetoing the text's group
@@ -457,12 +453,12 @@ object GraftFilterPushdown {
       case EqualTo(c, v) =>
         if (meta.layoutCols(c)) partValue(v, meta).foreach(s => addPart(c, Set(s)))
         if (v != null) bucketPart(c, v)
-        tagOf(c).foreach(t => rangeValue(t, v).foreach(rv =>
+        meta.tags.get(c).foreach(t => rangeValue(t, v).foreach(rv =>
           ranges += CommitLog.RangeProbe(c, Some(rv), Some(rv))))
       case EqualNullSafe(c, v) if v != null =>
         if (meta.layoutCols(c)) partValue(v, meta).foreach(s => addPart(c, Set(s)))
         bucketPart(c, v)
-        tagOf(c).foreach(t => rangeValue(t, v).foreach(rv =>
+        meta.tags.get(c).foreach(t => rangeValue(t, v).foreach(rv =>
           ranges += CommitLog.RangeProbe(c, Some(rv), Some(rv))))
       case EqualNullSafe(c, null) =>
         // `c <=> NULL` is exactly IS NULL — the sentinel group's files
@@ -483,7 +479,7 @@ object GraftFilterPushdown {
           if (ids.length == nonNull.length && nonNull.nonEmpty)
             addPart(layoutName, ids.toSet)
         }
-        tagOf(c).foreach { t =>
+        meta.tags.get(c).foreach { t =>
           val rvs = nonNull.flatMap(rangeValue(t, _))
           if (rvs.length == nonNull.length && nonNull.nonEmpty) {
             implicit val ord: Ordering[Any] = ordOf(t)
@@ -499,7 +495,7 @@ object GraftFilterPushdown {
       // sentinel group never matches; one unparseable recorded
       // spelling refuses the whole enumeration (never partial).
       case GreaterThan(c, v) =>
-        tagOf(c).foreach { t =>
+        meta.tags.get(c).foreach { t =>
           rangeValue(t, v).foreach { rv =>
             val lo = if (t == "long" || t == "ts") succ(rv) else rv
             ranges += CommitLog.RangeProbe(c, Some(lo), None)
@@ -507,11 +503,11 @@ object GraftFilterPushdown {
         }
         enumRange(c, v, _ > 0)
       case GreaterThanOrEqual(c, v) =>
-        tagOf(c).foreach(t => rangeValue(t, v).foreach(rv =>
+        meta.tags.get(c).foreach(t => rangeValue(t, v).foreach(rv =>
           ranges += CommitLog.RangeProbe(c, Some(rv), None)))
         enumRange(c, v, _ >= 0)
       case LessThan(c, v) =>
-        tagOf(c).foreach { t =>
+        meta.tags.get(c).foreach { t =>
           rangeValue(t, v).foreach { rv =>
             val hi = if (t == "long" || t == "ts") pred(rv) else rv
             ranges += CommitLog.RangeProbe(c, None, Some(hi))
@@ -519,7 +515,7 @@ object GraftFilterPushdown {
         }
         enumRange(c, v, _ < 0)
       case LessThanOrEqual(c, v) =>
-        tagOf(c).foreach(t => rangeValue(t, v).foreach(rv =>
+        meta.tags.get(c).foreach(t => rangeValue(t, v).foreach(rv =>
           ranges += CommitLog.RangeProbe(c, None, Some(rv))))
         enumRange(c, v, _ <= 0)
       case IsNull(c) =>
@@ -529,7 +525,7 @@ object GraftFilterPushdown {
       case IsNotNull(c) =>
         // both bounds open = "has at least one non-NULL value":
         // prunes exactly the all-NULL files
-        tagOf(c).foreach(_ => ranges += CommitLog.RangeProbe(c, None, None))
+        meta.tags.get(c).foreach(_ => ranges += CommitLog.RangeProbe(c, None, None))
         // on a layout column of a GUARD-STAMPED table: the sentinel
         // group holds exactly the NULL rows — exclude it (r16; r17
         // review find: unstamped tables may have recorded a REAL value
@@ -870,8 +866,8 @@ object GraftAggPushdown {
       case c: Count if !c.isDistinct =>
         val col = colOf(c.column).getOrElse(return None)
         AggSpec(StructField("count", LongType, nullable = false),
-          fs => for { t <- rowsExact(fs); sts <- statsFor(col, fs) }
-            yield t - sts.map(_.nulls).sum)
+          fs => for { t <- rowsExact(fs); sts <- statsFor(col, fs)
+              if sts.forall(_.nulls.isDefined) } yield t - sts.flatMap(_.nulls).sum)
       case m: Min =>
         val col = colOf(m.column).getOrElse(return None)
         val dt = tableSchema(col).dataType

@@ -218,7 +218,7 @@ object IncrementalView {
     // delete (retention purge vanishing EVERY key) is a bigger
     // shuffle, not a driver OOM (r11, VERDICT item 1)
     val vanished = folded.filter(col("n") === 0).select(col(keyCol))
-    val wm = Seq(s""","$VerField":$maxVer""")
+    val wm = CommitLog.WriterMeta(Map(VerField -> maxVer))
     val (v1, _, _) = CommitLog.merge(s, viewRoot, survivors, keyCol,
       nInsertFiles = 1, extraMeta = wm, deleteKeys = Some(vanished))
     // best-effort backstop, NOT the correctness anchor (that's the

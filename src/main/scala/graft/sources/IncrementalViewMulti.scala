@@ -404,7 +404,7 @@ object IncrementalViewMulti {
     // affected keys with no rows under the new mapping (their users
     // left the dim, or re-mapped away) delete distributively
     val gone = affKeys.join(newStates.select(kc: _*), keyCols, "left_anti")
-    val wm = Seq(s""","$DimVerField":$dimHead""")
+    val wm = CommitLog.WriterMeta(Map(DimVerField -> dimHead))
     CommitLog.mergeKeyed(s, viewRoot, newStates, keyCols,
       nInsertFiles = 1, extraMeta = wm, deleteKeys = Some(gone))
     CommitLog.setTableProperty(viewRoot, DimVerProp, dimHead.toString)
@@ -612,7 +612,7 @@ object IncrementalViewMulti {
         sourceAt(maxVer).join(recKeys, keyCols, "left_semi"), avgCols,
         momentCols, sampleCols))
     val vanished = arith.filter(col("n") === 0).select(kc: _*)
-    val wm = Seq(s""","$VerField":$maxVer""")
+    val wm = CommitLog.WriterMeta(Map(VerField -> maxVer))
     val (v1, _, _) = CommitLog.mergeKeyed(s, viewRoot, survivors, keyCols,
       nInsertFiles = 1, extraMeta = wm, deleteKeys = Some(vanished))
     CommitLog.setTableProperty(viewRoot, VerProp, maxVer.toString)

@@ -54,8 +54,8 @@ object VectorIndex {
   private val VerField = "indexSrc"
   private val CellsField = "cellCounts"
 
-  /** Per-cell LIVE posting counts rendered as a manifest fragment
-    * (r14, VERDICT item 7): every index write path records them —
+  /** Per-cell LIVE posting counts as a manifest writer field, cells
+    * in numeric order (r14, VERDICT item 7): every index write path records them —
     * create/rebuild from the frame being staged, refresh by FOLDING
     * the batch's deltas (+1 per inserted vector's cell, −1 per
     * delete pre-image's cell, both from assignFrozen of the batch —
@@ -64,10 +64,9 @@ object VectorIndex {
     * the armed rebuildThreshold check reads the MANIFEST instead of
     * scanning postings (the r13 gate ran a corpus-wide detail() per
     * armed refresh). */
-  private def renderCells(m: Map[Long, Long]): String =
-    s""","$CellsField":{""" +
-      m.toSeq.sortBy(_._1).map { case (c, n) => s""""$c":$n""" }
-        .mkString(",") + "}"
+  private def cellsMeta(m: Map[Long, Long]): CommitLog.WriterMeta =
+    CommitLog.WriterMeta(maps = Map(CellsField -> scala.collection.immutable.VectorMap.from(
+      m.toSeq.sortBy(_._1).map { case (c, n) => c.toString -> n })))
 
   /** The manifest-carried live cell counts at the assigned head —
     * walks past any counts-less commit (every index write path
@@ -158,9 +157,8 @@ object VectorIndex {
     val v = CommitLog.appendPartitionedCols(s, aRoot,
       assigned.withColumn("gen", lit(srcVersion)), Seq("cell"),
       filesPerPartition = 1,
-      extraMeta = Seq(s""","$VerField":$srcVersion"""),
-      extraFromStaged = (staged, aux) =>
-        Seq(renderCells(stagedCellCounts(aRoot, staged, aux))))
+      extraMeta = CommitLog.WriterMeta(Map(VerField -> srcVersion)),
+      extraFromStaged = (staged, aux) => cellsMeta(stagedCellCounts(aRoot, staged, aux)))
     CommitLog.setTableProperty(aRoot, SrcProp, srcRoot)
     CommitLog.setTableProperty(aRoot, VerProp, srcVersion.toString)
     // one commit per refresh — checkpoint the history every 10th so
@@ -270,9 +268,9 @@ object VectorIndex {
     // still publishes, carrying the watermark atomically
     val v = CommitLog.appendPartitionedCols(s, aRoot, fresh, Seq("cell"),
       filesPerPartition = 1,
-      extraMeta = Seq(s""","$VerField":$maxVer"""),
-      extraFromStaged = (staged, aux) => Seq(renderCells(
-        foldCounts(stagedCellCounts(aRoot, staged, aux)))))
+      extraMeta = CommitLog.WriterMeta(Map(VerField -> maxVer)),
+      extraFromStaged = (staged, aux) =>
+        cellsMeta(foldCounts(stagedCellCounts(aRoot, staged, aux))))
     // best-effort backstop for vacuumed fold manifests, like the views
     CommitLog.setTableProperty(aRoot, VerProp, maxVer.toString)
     // AUTO-PURGE policy (r12, VERDICT item 3): without it, standing
@@ -346,7 +344,7 @@ object VectorIndex {
     CommitLog.overwrite(s, centroidsRoot(indexRoot), cents, nFiles = 1)
     val staged = asg.withColumn("gen", lit(wm)).localCheckpoint()
     CommitLog.overwrite(s, aRoot, staged, nFiles = 1, partCol = Some("cell"),
-      extraMeta = Seq(renderCells(countsOf(staged))))
+      extraMeta = cellsMeta(countsOf(staged)))
     val tRoot = tombstonesRoot(indexRoot)
     CommitLog.latestVersion(tRoot)
       .filter(tv => CommitLog.snapshotFiles(tRoot, tv).nonEmpty)
@@ -396,7 +394,7 @@ object VectorIndex {
     // frame in hand (exact even for a pre-r14 index joining mid-life)
     CommitLog.overwrite(s, aRoot, live,
       nFiles = 1, partCol = Some("cell"),
-      extraMeta = Seq(renderCells(countsOf(live))))
+      extraMeta = cellsMeta(countsOf(live)))
     CommitLog.delete(s, tRoot, lit(true))
     (purged, nTomb)
   }

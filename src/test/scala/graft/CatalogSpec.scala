@@ -2021,7 +2021,7 @@ class CatalogSpec extends SparkSpec {
       Seq(org.apache.spark.sql.sources.EqualTo("day_ts",
         java.sql.Timestamp.valueOf("2021-03-01 00:00:00"))),
       graft.sources.GraftFilterPushdown.PruneMeta(
-        layoutCols = Set("day_ts"), tags = Map.empty, legacyCol = None))
+        layoutCols = Set("day_ts"), tags = Map.empty))
     assert(noTz.isEmpty, "no recorded staging zone must contribute no probe")
     // and a timestamp-partitioned APPEND under the drifted zone
     // refuses loudly — mixed-zone layout text cannot prune safely
@@ -2815,7 +2815,7 @@ class CatalogSpec extends SparkSpec {
     val foreign = graft.sources.GraftFilterPushdown.translate(
       Seq(org.apache.spark.sql.sources.LessThanOrEqual("num", 10L)),
       graft.sources.GraftFilterPushdown.PruneMeta(
-        layoutCols = Set("num"), tags = Map.empty, legacyCol = None,
+        layoutCols = Set("num"), tags = Map.empty,
         layoutValues = Map("num" -> Set("1", "03", "5")), guarded = true))
     assert(foreign.isEmpty,
       "a non-canonical recorded spelling must refuse the range enumeration")
@@ -3115,7 +3115,7 @@ class CatalogSpec extends SparkSpec {
     assert(footer === job)
     val d = job.stats2.values.map(_("d")).toSeq
     assert(d.forall(_.lo.exists(_.toString.toLong < 0)), s"dates before 1970: $d")
-    assert(job.stats2.values.forall(m => m("nul").lo.isEmpty && m("nul").nulls > 0))
+    assert(job.stats2.values.forall(m => m("nul").lo.isEmpty && m("nul").nulls.exists(_ > 0)))
     // doubles with NaN and -0.0, strings and timestamps go through the
     // job, alone and mixed with footer columns
     val all = integral ++ Seq("dbl", "s", "ts")

@@ -664,7 +664,7 @@ class StreamingSpec extends SparkSpec {
     assert(t3 === 3 && r3 === 2, s"all-null file not pruned: total=$t3 read=$r3")
     // null counts recorded exactly
     val aux = CommitLog.auxOf(root, v2)
-    val logged = aux.stats2.values.map(_("maybe_type").nulls).sum
+    val logged = aux.stats2.values.map(_("maybe_type").nulls.get).sum
     val actual = CommitLog.read(spark, root, v2)
       .filter(col("maybe_type").isNull).count()
     assert(logged === actual, s"manifest nulls $logged != scan nulls $actual")
@@ -1414,7 +1414,8 @@ class StreamingSpec extends SparkSpec {
     val v1 = CommitLog.appendWithStats(spark, root,
       ev.filter(col("event_id") > m / 2), nFiles = 2, statsCol = "event_id")
     // selective probe: only the low half's files survive pruning...
-    val (df, total, nRead) = CommitLog.prunedRead(spark, root, v1, 0L, m / 4)
+    val lowQuarter = Seq(CommitLog.StatProbe("event_id", 0L, m / 4))
+    val (df, total, nRead) = CommitLog.prunedReadTyped(spark, root, v1, lowQuarter)
     assert(total === 4 && nRead === 2, s"total=$total read=$nRead")
     // ...and the pruned scan + precise predicate equals the full scan
     val pruned = df.filter(col("event_id") <= m / 4)
@@ -1422,9 +1423,9 @@ class StreamingSpec extends SparkSpec {
     val full = CommitLog.read(spark, root, v1).filter(col("event_id") <= m / 4)
       .agg(count(lit(1)), sum(col("event_id"))).collect()(0)
     assert(pruned === full, "stats pruning changed the result")
-    // a legacy (stat-less) append stays unprunable: always read
+    // a stat-less append stays unprunable: always read
     val v2 = CommitLog.append(spark, root, ev.limit(10), nFiles = 1)
-    val (_, total2, read2) = CommitLog.prunedRead(spark, root, v2, 0L, m / 4)
+    val (_, total2, read2) = CommitLog.prunedReadTyped(spark, root, v2, lowQuarter)
     assert(total2 === 5 && read2 === 3,
       s"stat-less file must survive pruning: total=$total2 read=$read2")
   }
@@ -1556,7 +1557,8 @@ class StreamingSpec extends SparkSpec {
     // pinned reader at v1 still sees the pre-optimize file list
     assert(CommitLog.read(spark, root, v1).orderBy(col("event_id")).collect().toSeq === before)
     // layout now aligns with the cutoff: a half-range probe prunes
-    val (_, total, nRead) = CommitLog.prunedRead(spark, root, v2, 0L, m / 2)
+    val (_, total, nRead) = CommitLog.prunedReadTyped(spark, root, v2,
+      Seq(CommitLog.StatProbe("event_id", 0L, m / 2)))
     assert(total === 4 && nRead === 2,
       s"clustered layout should prune to one bucket's files, read $nRead of $total")
     // optimize is a rewrite: file-diff changes() across it must refuse
@@ -1667,9 +1669,10 @@ class StreamingSpec extends SparkSpec {
     val e2 = Tables(spark, sf, "events").select(col("event_id"), col("user_id"))
     CommitLog.appendWithStats(spark, root2, e2.filter(col("event_id") % 2 === 0), 2, "event_id")
     val h2 = CommitLog.appendWithStats(spark, root2, e2.filter(col("event_id") % 2 === 1), 2, "user_id")
-    // the old event_id bounds are dropped: the v0-era files are
-    // stat-less under user_id and therefore ALWAYS read
-    val (_, total, nRead) = CommitLog.prunedRead(spark, root2, h2, Long.MaxValue - 1, Long.MaxValue)
+    // the v0-era files record event_id bounds only: stat-less under
+    // user_id and therefore ALWAYS read
+    val (_, total, nRead) = CommitLog.prunedReadTyped(spark, root2, h2,
+      Seq(CommitLog.StatProbe("user_id", Long.MaxValue - 1, Long.MaxValue)))
     assert(total === 4 && nRead >= 2,
       s"v0 files must stay unprunable after the stats column switched ($nRead of $total read)")
     // unsorted optimize cutoffs would duplicate rows — refused loudly
@@ -2272,8 +2275,9 @@ class StreamingSpec extends SparkSpec {
     val got2 = CommitLog.read(spark, r2, v2)
     assert(got2.exceptAll(ev).count() === 0 && ev.exceptAll(got2).count() === 0,
       "optimize rebase lost rows")
-    val (sc2, st2) = CommitLog.snapshotStatsOf(r2, v2)
-    assert(sc2.contains("event_id") && st2.nonEmpty,
+    val aux2 = CommitLog.auxOf(r2, v2)
+    assert(aux2.statsTags.get("event_id").contains("long") &&
+      aux2.stats2.values.exists(_.contains("event_id")),
       "staged buckets must record stats under the new column")
     // (3) REORG APPLY (PURGE) racing an append: the vectored files
     // rewrite clean, the late rows carry
@@ -3643,15 +3647,13 @@ class StreamingSpec extends SparkSpec {
       // generated column computed on every write path
       assert(readAt(root, 1L)
         .filter(not(col("day") <=> col("event_id") % 7)).count() === 0L, name)
-      // stats for the new files: the declared typed stats, except the
-      // legacy single-column entry point and the segment writers, which
-      // record their own column
+      // stats for the new files: typed stats in the manifest, except
+      // the segment writers, which record their own column
       val rel = filesAt(root, 1L) -- filesAt(root, 0L)
       assert(rel.nonEmpty, name)
       val newSeg = Option.when(segmented(root, 1L))(CommitLog.segmentsOf(root, 1L).last)
       val withStats =
-        if (name == "appendWithStats") CommitLog.snapshotStatsOf(root, 1L)._2.keySet
-        else newSeg.map(sr => CommitLog.segmentEntries(root, sr.path)._2.keySet)
+        newSeg.map(sr => CommitLog.segmentEntries(root, sr.path)._2.keySet)
           .getOrElse(CommitLog.auxOf(root, 1L).stats2.collect {
             case (f, cs) if cs.contains("event_id") => f }.toSet)
       assert(rel.subsetOf(withStats), s"$name: new files without event_id stats")
@@ -3699,7 +3701,7 @@ class StreamingSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft_snapshot").toString
     CommitLog.appendPartitioned(spark, root, ev.filter(col("event_id") % 2 === 0), "event_type", 1)
     CommitLog.appendPartitioned(spark, root, ev.filter(col("event_id") % 2 =!= 0), "event_type", 1,
-      extraMeta = Seq(""","viewSrc":42,"cells":{"a":3,"b":4}"""))
+      extraMeta = CommitLog.WriterMeta(Map("viewSrc" -> 42L), Map("cells" -> Map("a" -> 3L, "b" -> 4L))))
     val vDrop = CommitLog.dropColumn(spark, root, "value")
     // every accessor agrees with a direct Jackson read of the same file
     def node(v: Long) = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -3734,7 +3736,6 @@ class StreamingSpec extends SparkSpec {
       "mapMetaOf" -> (v => CommitLog.mapMetaOf(root, v, "cells")),
       "commitTimestampOf" -> (v => CommitLog.commitTimestampOf(root, v)),
       "snapshotSchemaOf" -> (v => CommitLog.snapshotSchemaOf(root, v)),
-      "snapshotStatsOf" -> (v => CommitLog.snapshotStatsOf(root, v)),
       "segmentsOf" -> (v => CommitLog.segmentsOf(root, v)),
       "isSegmented" -> (v => CommitLog.isSegmented(root, v)))
     for ((name, get) <- accessors; v <- Seq(0L, 99L)) {
@@ -3884,10 +3885,18 @@ class StreamingSpec extends SparkSpec {
     val v = CommitLog.latestVersion(flat).get
     val flatFiles = CommitLog.snapshotFiles(flat, v).map(f => "data/" + new java.io.File(f).getName)
     assert(flatFiles.exists(rowGroups(flat, _) > 1), "the fixture must span several row groups")
-    val (statsCol, stats) = CommitLog.snapshotStatsOf(flat, v)
-    assert(statsCol === Some("k"))
-    assert(stats === flatFiles.flatMap(f => direct(flat, f)._1.map(f -> _)).toMap)
-    assert(stats.size < flatFiles.size, "the all-NULL file records no bounds")
+    val aux = CommitLog.auxOf(flat, v)
+    assert(aux.statsTags === Map("k" -> "long"))
+    val want = flatFiles.map(f => f -> direct(flat, f)).collect { case (f, (b, n)) if b.isDefined || n > 0 =>
+      f -> CommitLog.ColStat(b.map(_._1), b.map(_._2), Some(n)) }.toMap
+    assert(aux.stats2.map { case (f, cs) => f -> cs("k") } === want)
+    // the all-NULL file records its null count and no bounds, so every
+    // range probe prunes it
+    val nAllNull = want.count(_._2.lo.isEmpty)
+    assert(nAllNull > 0, "the fixture must hold an all-NULL file")
+    val (_, total, nRead) = CommitLog.prunedReadTyped(spark, flat, v,
+      Seq(CommitLog.StatProbe("k", Long.MinValue, Long.MaxValue)))
+    assert(total === flatFiles.size && nRead === total - nAllNull, s"read $nRead of $total")
     val segs = CommitLog.segmentsOf(seg, CommitLog.latestVersion(seg).get)
     assert(segs.size === 3)
     segs.foreach { sr =>
