@@ -572,9 +572,8 @@ case class DescribeDetailCommand(parts: Seq[String])
     // (or never-partitioned) table
     val foreign = aux.partCol.map { cur =>
       val curCols = cur.split(',').toSeq
-      CommitLog.snapshotFiles(root, head).count { f =>
-        val jf = new java.io.File(f)
-        aux.layoutOf(jf.getParentFile.getName + "/" + jf.getName) match {
+      CommitLog.snapshotRelFiles(root, head).count { f =>
+        aux.layoutOf(f) match {
           case Some(pairs) => pairs.map(_._1) != curCols
           case None => true
         }
@@ -587,17 +586,11 @@ case class DescribeDetailCommand(parts: Seq[String])
       retained,
       CommitLog.tableProperties(root).size.toLong,
       foreign, {
-        val rel = CommitLog.snapshotFiles(root, head).map { f =>
-          val jf = new java.io.File(f)
-          jf.getParentFile.getName + "/" + jf.getName
-        }
+        val rel = CommitLog.snapshotRelFiles(root, head)
         rel.map(r => aux.sizes.getOrElse(r,
           new java.io.File(root, r).length())).sum
       }, {
-        val rel = CommitLog.snapshotFiles(root, head).map { f =>
-          val jf = new java.io.File(f)
-          jf.getParentFile.getName + "/" + jf.getName
-        }
+        val rel = CommitLog.snapshotRelFiles(root, head)
         // LIVE counts (r16): footer minus manifest-carried masked
         // counts — a merge-on-read table must not present a footer
         // overcount as its row total
@@ -674,10 +667,7 @@ case class ShowGraftPartitionsCommand(parts: Seq[String])
         if (segs.forall(_.nBytes.isDefined)) segs.flatMap(_.nBytes).sum else -1L,
         CommitLog.segmentedCountStar(root, head).getOrElse(-1L)))
     }
-    val rel = CommitLog.snapshotFiles(root, head).map { f =>
-      val jf = new java.io.File(f)
-      jf.getParentFile.getName + "/" + jf.getName
-    }
+    val rel = CommitLog.snapshotRelFiles(root, head)
     rel.groupBy(f => aux.layoutOf(f) match {
       case Some(pairs) => pairs.map { case (c, v) => s"$c=$v" }.mkString("/")
       case None => "<unpartitioned>"

@@ -196,19 +196,25 @@ object CommitLog {
     def layoutOf(f: String): Option[Seq[(String, String)]] =
       layouts.get(f).orElse(
         for { c <- partCol; v <- parts.get(f) } yield Seq((c, v)))
+    /** Every per-file map re-keyed by `to` (a file it maps to None
+      * drops with all its entries), and every deletion-vector sidecar
+      * reference mapped by `dvRef`. THE one place that lists the
+      * per-file maps — a field added to this class must be added here
+      * — so no carry or clone can drop one. */
+    def rekeyed(to: String => Option[String], dvRef: String => String = identity): Aux = {
+      def re[V](m: Map[String, V]): Map[String, V] = m.flatMap { case (f, v) => to(f).map(_ -> v) }
+      Aux(partCol, re(parts), statsTags, re(stats2),
+        re(dvs).map { case (f, refs) => f -> refs.map(dvRef) },
+        re(layouts), re(sizes), re(rows), re(dvRows))
+    }
     /** Keep only entries for `keep` (relative paths) — the CoW carry
       * rule: a commit that carries a file carries its metadata (a
       * REWRITTEN file's deletion vectors die with it — the rewrite
       * read was masked, so the rows are physically gone). */
-    def filterFiles(keep: Set[String]): Aux = Aux(
-      partCol.filter(_ => parts.exists(kv => keep(kv._1))),
-      parts.filter(kv => keep(kv._1)),
-      statsTags, stats2.filter(kv => keep(kv._1)),
-      dvs.filter(kv => keep(kv._1)),
-      layouts.filter(kv => keep(kv._1)),
-      sizes.filter(kv => keep(kv._1)),
-      rows.filter(kv => keep(kv._1)),
-      dvRows.filter(kv => keep(kv._1)))
+    def filterFiles(keep: Set[String]): Aux = {
+      val kept = rekeyed(f => Option.when(keep(f))(f))
+      kept.copy(partCol = partCol.filter(_ => kept.parts.nonEmpty))
+    }
     /** Prior metadata + a newer writer's entries (newer wins on a
       * shared file — except deletion vectors, which ACCUMULATE: each
       * merge-on-read delete adds a sidecar; tag conflicts on a shared
@@ -655,6 +661,12 @@ object CommitLog {
   def snapshotFiles(root: String, version: Long): Seq[String] =
     snapshot(root, version).absFiles
 
+  /** [[snapshotFiles]] as the manifest lists them, relative to `root`:
+    * the keys of every per-file map of [[auxOf]] (a clone's are
+    * `../`-paths into its source). */
+  private[graft] def snapshotRelFiles(root: String, version: Long): Seq[String] =
+    snapshot(root, version).files
+
   /** The commit kind of `version`: "append" (adds data), "compact" /
     * "optimize" (rewrites, data-neutral), "widen" (metadata-only
     * schema change), or a data-changing op (delete/update/merge/
@@ -811,14 +823,16 @@ object CommitLog {
     * stages, failing the WRITE (never a later read) with the
     * constraint's name. SQL-standard three-valued semantics: a NULL
     * check passes, only FALSE violates. Zero cost for tables without
-    * constraints; with them, one short-circuiting limit(1) probe per
-    * constraint over the incoming frame. */
+    * constraints — the frame is not even built; with them, one
+    * short-circuiting limit(1) probe per constraint over the incoming
+    * frame. */
   private[sources] def enforceConstraints(s: SparkSession, props: Map[String, String],
-      df: DataFrame, opName: String): Unit = {
+      df0: => DataFrame, opName: String): Unit = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     val cs = props.collect {
       case (k, v) if k.startsWith("constraint.") => k.stripPrefix("constraint.") -> v
     }
+    lazy val df = df0
     cs.toSeq.sortBy(_._1).foreach { case (name, sql) =>
       val violated = df.filter(not(coalesce(expr(sql), lit(true))))
         .limit(1).count() > 0
@@ -2979,13 +2993,13 @@ object CommitLog {
   private final case class DeletionVectors(nFiles: Int) extends DmlMode
 
   /** The rows a row-level write touches (`rows`) and leaves (`rest`). */
-  private sealed trait Touch {
+  private[graft] sealed trait Touch {
     def rows(df: DataFrame): DataFrame
     def rest(df: DataFrame): DataFrame
   }
   /** Rows matching `cond`, under three-valued logic: a NULL cond is no
     * match, so the row stays in `rest` (NOT(cond) would drop it). */
-  private final case class CondTouch(cond: org.apache.spark.sql.Column) extends Touch {
+  private[graft] final case class CondTouch(cond: org.apache.spark.sql.Column) extends Touch {
     val hit: org.apache.spark.sql.Column =
       org.apache.spark.sql.functions.coalesce(cond, org.apache.spark.sql.functions.lit(false))
     def rows(df: DataFrame): DataFrame = df.filter(cond)
@@ -2994,7 +3008,7 @@ object CommitLog {
   /** MERGE: rows whose `keyCols` tuple is among the update or the
     * delete keys — relations, never collected lists, so a mass delete
     * is a bigger shuffle, not a driver OOM. A NULL key never matches. */
-  private final case class KeyTouch(keyCols: Seq[String], updKeys: DataFrame,
+  private[graft] final case class KeyTouch(keyCols: Seq[String], updKeys: DataFrame,
       delKeys: Option[DataFrame]) extends Touch {
     val keys: DataFrame = delKeys.map(updKeys.unionByName(_).distinct()).getOrElse(updKeys)
     def rows(df: DataFrame): DataFrame = df.join(keys, keyCols, "left_semi")
@@ -3094,9 +3108,11 @@ object CommitLog {
     *     matched keys and inserts alike — staged in the table's layout.
     *
     * COPY-ON-WRITE: one pushdown scan finds the files that hold
-    * touched rows (the collect is file PATHS, metadata-sized); clean
-    * files carry over byte-identical with their metadata, and dirty
-    * files rewrite with fresh typed stats and partition entries. Cost
+    * touched rows ([[filesOf]]: one job with no aggregate and no
+    * shuffle — each scan task folds its rows' file names into a
+    * per-task set, and the driver unions the sets); clean files carry
+    * over byte-identical with their metadata, and dirty files rewrite
+    * with fresh typed stats and partition entries. Cost
     * scales with the DIRTY file set, never the table — a predicate or
     * key aligned with the layout touches few files. Right for rare,
     * large changes: reads stay pristine.
@@ -3212,14 +3228,10 @@ object CommitLog {
           // URIs while the listing reflects the caller's (possibly
           // relative) root — a raw compare would mark nothing dirty
           val dirtyCanon =
-            if (files.isEmpty) Set.empty[String]
-            else touch.rows(full).select(col("_graft_file")).distinct()
-              .collect().map(r =>
-                new java.io.File(new java.net.URI(r.getString(0))).getCanonicalPath)
-              .toSet
+            if (files.isEmpty) Set.empty[String] else filesOf(s, touch.rows(full))
           val (dirty, clean) =
             files.partition(f => dirtyCanon.contains(new java.io.File(f).getCanonicalPath))
-          def dirtyRows = readSubset(s, prev, dirty)
+          lazy val dirtyRows = readSubset(s, prev, dirty)
           if (assignments.nonEmpty && dirty.nonEmpty)
             enforceConstraints(s, props, postImages(dirtyRows), op)
           val cdfF = if (dirty.isEmpty && inserts.isEmpty) noChanges
@@ -3251,12 +3263,14 @@ object CommitLog {
             substring_index(col("_graft_file"), "/", -1).as("f"),
             col("_graft_pos").as("i")).coalesce(1), routed = false).map(_.path))(identity)
           // per-file masked counts off the sidecar just written (one
-          // tiny grouped read, never a second table scan) (r16)
+          // tiny read, never a second table scan) (r16): each task
+          // counts its rows per file, and the driver sums the counts
           val perFile =
             if (dv.isEmpty) Map.empty[String, Long]
-            else s.read.parquet(dv.map(f => new java.io.File(root, f).toString): _*)
-              .groupBy(col("f")).count().collect()
-              .map(r => r.getString(0) -> r.getLong(1)).toMap
+            else runJob(s, s.read.schema("f STRING")
+              .parquet(dv.map(f => new java.io.File(root, f).toString): _*),
+              "vector counts", Tasks.countsOfFirst)
+              .flatten.groupMapReduce(_._1)(_._2)(_ + _)
           val nRows = perFile.values.sum
           val byName = files.map(f =>
             new java.io.File(f).getName -> relativize(root, f)).toMap
@@ -3961,21 +3975,12 @@ object CommitLog {
         s"longer exist under $srcRoot (vacuumed?) — refusing a " +
         s"stranded clone (e.g. ${missing.headOption.getOrElse("")})")
     // source-relative entry -> dst-relative (../-path) entry; aux
-    // keys are per-file facts and remap with their file
+    // keys are per-file facts and remap with their file. Deletion
+    // vectors remap too: the clone masks the SOURCE's sidecars until
+    // its own rewrites retire them
     val relMap = srcRel.zip(abs.map(a => relativize(dstRoot, a))).toMap
-    val a0 = src.aux
-    val aux = Aux(a0.partCol,
-      a0.parts.map { case (f, pv) => relMap.getOrElse(f, f) -> pv },
-      a0.statsTags,
-      a0.stats2.map { case (f, cs) => relMap.getOrElse(f, f) -> cs },
-      // deletion vectors remap with their files: the clone masks the
-      // SOURCE's sidecars until its own rewrites retire them
-      a0.dvs.map { case (f, refs) => relMap.getOrElse(f, f) ->
-        refs.map(r => relativize(dstRoot,
-          new java.io.File(srcRoot, r).toString)) },
-      // per-generation layouts remap with their files (r13): a clone
-      // of an evolved table keeps every generation's pruning
-      a0.layouts.map { case (f, cv) => relMap.getOrElse(f, f) -> cv })
+    val aux = src.aux.rekeyed(f => Some(relMap.getOrElse(f, f)),
+      r => relativize(dstRoot, new java.io.File(srcRoot, r).toString))
     val v0 = commitOn(dstRoot, srcRel.map(relMap), None, tableProperties(dstRoot), op = "clone",
       schemaJson = carriedSchemaJson(Some(src)), aux = aux,
       // the identity mark carries into the clone's v0 (r13): the
@@ -4985,9 +4990,7 @@ object CommitLog {
     * caller's scrub runs after the last write. */
   private[graft] def writeParquet(s: SparkSession, frame: DataFrame,
       dir: String, routed: Boolean): Seq[StagedFile] = {
-    import scala.util.{Failure, Success}
-    val qe = frame.queryExecution
-    val attrs = qe.executedPlan.output
+    val attrs = frame.queryExecution.executedPlan.output
     val (gp, gs) =
       if (routed) (attrs.indexWhere(_.name == "_gp"), attrs.indexWhere(_.name == "_gs"))
       else (-1, -1)
@@ -5000,21 +5003,53 @@ object CommitLog {
       .prepareWrite(s, job, Map.empty, dataSchema)
     val overlay = ConfOverlay.over(job.getConfiguration)
     val maxRecords = s.sessionState.conf.maxRecordsPerFile
-    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("stage")) {
+    runJob(s, frame, "stage",
+      Tasks.write(dir, overlay, factory, dataSchema, data, attrs, gp, gs, maxRecords)).flatten
+  }
+
+  /** The files that hold `rows` (a frame carrying [[readSubsetCore]]'s
+    * `_graft_file`), as canonical paths, from ONE job that adds no
+    * exchange to the frame's plan: each task folds its rows' file names
+    * into a per-task set and the driver unions the sets, so a file that
+    * several tasks read counts once. A `distinct` would add an
+    * aggregate, and under AQE a second job behind a shuffle. */
+  private[graft] def filesOf(s: SparkSession, rows: DataFrame): Set[String] =
+    runJob(s, rows.select(org.apache.spark.sql.functions.col("_graft_file")),
+      "dirty files", Tasks.countsOfFirst)
+      .flatMap(_.keys).toSet
+      .map((f: String) => new java.io.File(new java.net.URI(f)).getCanonicalPath)
+
+  /** The rows of `root`'s head that `touch` picks, tagged with their
+    * `_graft_file`: the frame [[rowLevel]]'s copy-on-write pass hands
+    * [[filesOf]]. */
+  private[graft] def touchedRows(s: SparkSession, root: String, touch: Touch): DataFrame = {
+    val sn = headOf(root, "read")
+    touch.rows(readSubsetCore(s, sn, sn.absFiles, withFile = true))
+  }
+
+  /** Run `task` over every partition of `frame`'s rows as ONE Spark job
+    * under the frame's own SQL execution (labelled `name`), and return
+    * the tasks' results in partition order. A failed or interrupted job
+    * waits for its running tasks to end before it rethrows, so a
+    * caller's scrub runs after the last write. Build `task` in
+    * [[Tasks]]. */
+  private def runJob[A <: AnyRef](s: SparkSession, frame: DataFrame, name: String,
+      task: Iterator[org.apache.spark.sql.catalyst.InternalRow] => A): Seq[A] = {
+    import scala.util.{Failure, Success}
+    val qe = frame.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(name)) {
       val rdd = qe.toRdd
       val sc = s.sparkContext
-      val out = new Array[Seq[StagedFile]](rdd.partitions.length)
-      val action = sc.submitJob(rdd,
-        (rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
-          writeTask(rows, dir, overlay, factory, dataSchema, data, attrs, gp, gs, maxRecords),
-        rdd.partitions.indices, (i: Int, files: Seq[StagedFile]) => out(i) = files, ())
+      val out = new Array[AnyRef](rdd.partitions.length)
+      val action = sc.submitJob(rdd, task, rdd.partitions.indices,
+        (i: Int, a: A) => out(i) = a, ())
       val result =
         try {
           scala.concurrent.Await.ready(action, scala.concurrent.duration.Duration.Inf)
           action.value.get
         } catch { case t: InterruptedException => action.cancel(); Failure(t) }
       result match {
-        case Success(_) => out.toSeq.flatten
+        case Success(_) => out.toSeq.map(_.asInstanceOf[A])
         case Failure(t) => awaitTasksEnded(sc, action.jobIds); throw t
       }
     }
@@ -5032,57 +5067,86 @@ object CommitLog {
     while (busy && System.nanoTime < deadline) Thread.sleep(5)
   }
 
-  /** One [[writeParquet]] task: rebuild the write conf, then write
-    * `rows` file by file. */
-  private def writeTask(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-      dir: String, overlay: ConfOverlay,
-      factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-      dataSchema: StructType,
-      data: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-      attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-      gp: Int, gs: Int, maxRecords: Long): Seq[StagedFile] = {
+  /** The task functions of [[runJob]]'s jobs. They are built in this
+    * small object because on every job Spark's closure cleaner reads
+    * the class that built the task function and scans it for `return`
+    * statements: this class is about 16 KB, `CommitLog$` over 400 KB. */
+  private object Tasks {
     import org.apache.spark.sql.catalyst.InternalRow
-    val ctx = org.apache.spark.TaskContext.get()
-    val conf = overlay.over(hadoopConf)
-    val hctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(conf,
-      new org.apache.hadoop.mapreduce.TaskAttemptID("graft", ctx.stageId(),
-        org.apache.hadoop.mapreduce.TaskType.MAP, ctx.partitionId(), ctx.attemptNumber()))
-    val project: InternalRow => InternalRow =
-      if (gp < 0 && gs < 0) identity
-      else org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(data, attrs)
-    val ext = factory.getFileExtension(hctx)
-    val files = scala.collection.mutable.ArrayBuffer.empty[StagedFile]
-    var w: org.apache.spark.sql.execution.datasources.OutputWriter = null
-    var group: org.apache.spark.unsafe.types.UTF8String = null
-    var salt = 0
-    var n = 0L
-    try {
-      rows.foreach { r =>
-        val g = if (gp < 0) null else r.getUTF8String(gp)
-        val sl = if (gs < 0) 0 else r.getInt(gs)
-        if (w == null || g != group || sl != salt || (maxRecords > 0 && n >= maxRecords)) {
-          if (w != null) w.close()
-          w = null
-          group = if (g == null) null else g.clone()
-          salt = sl
-          n = 0
-          val path = f"$dir/part-${ctx.partitionId()}%05d-${ctx.taskAttemptId()}-${files.size}%03d$ext"
-          files += StagedFile(if (g == null) "" else g.toString, sl, path)
-          w = factory.newInstance(path, dataSchema, hctx)
+
+    /** One [[writeParquet]] task: rebuild the write conf, then write
+      * the rows file by file. */
+    def write(dir: String, overlay: ConfOverlay,
+        factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+        dataSchema: StructType,
+        data: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+        attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+        gp: Int, gs: Int, maxRecords: Long): Iterator[InternalRow] => Seq[StagedFile] = rows => {
+      val ctx = org.apache.spark.TaskContext.get()
+      val conf = overlay.over(hadoopConf)
+      val hctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(conf,
+        new org.apache.hadoop.mapreduce.TaskAttemptID("graft", ctx.stageId(),
+          org.apache.hadoop.mapreduce.TaskType.MAP, ctx.partitionId(), ctx.attemptNumber()))
+      val project: InternalRow => InternalRow =
+        if (gp < 0 && gs < 0) identity
+        else org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(data, attrs)
+      val ext = factory.getFileExtension(hctx)
+      val files = scala.collection.mutable.ArrayBuffer.empty[StagedFile]
+      var w: org.apache.spark.sql.execution.datasources.OutputWriter = null
+      var group: org.apache.spark.unsafe.types.UTF8String = null
+      var salt = 0
+      var n = 0L
+      try {
+        rows.foreach { r =>
+          val g = if (gp < 0) null else r.getUTF8String(gp)
+          val sl = if (gs < 0) 0 else r.getInt(gs)
+          if (w == null || g != group || sl != salt || (maxRecords > 0 && n >= maxRecords)) {
+            if (w != null) w.close()
+            w = null
+            group = if (g == null) null else g.clone()
+            salt = sl
+            n = 0
+            val path = f"$dir/part-${ctx.partitionId()}%05d-${ctx.taskAttemptId()}-${files.size}%03d$ext"
+            files += StagedFile(if (g == null) "" else g.toString, sl, path)
+            w = factory.newInstance(path, dataSchema, hctx)
+          }
+          w.write(project(r))
+          n += 1
         }
-        w.write(project(r))
-        n += 1
+        if (w != null) w.close()
+        files.toSeq
+      } catch {
+        case t: Throwable =>
+          scala.util.Try(if (w != null) w.close())
+          files.foreach { f =>
+            val p = new org.apache.hadoop.fs.Path(f.path)
+            scala.util.Try(p.getFileSystem(conf).delete(p, false))
+          }
+          throw t
       }
-      if (w != null) w.close()
-      files.toSeq
-    } catch {
-      case t: Throwable =>
-        scala.util.Try(if (w != null) w.close())
-        files.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f.path)
-          scala.util.Try(p.getFileSystem(conf).delete(p, false))
+    }
+
+    /** How many of the task's rows hold each non-NULL value of their
+      * first (string) column. A scan reads a file's rows together, so
+      * the rows come in runs of one value and a row only compares with
+      * its run's. */
+    val countsOfFirst: Iterator[InternalRow] => Map[String, Long] = rows => {
+      val counts = scala.collection.mutable.HashMap.empty[String, Long]
+      var run: org.apache.spark.unsafe.types.UTF8String = null
+      var n = 0L
+      def flush(): Unit = if (run != null) {
+        val k = run.toString
+        counts(k) = counts.getOrElse(k, 0L) + n
+      }
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) {
+          val v = r.getUTF8String(0)
+          if (run == null || v != run) { flush(); run = v.clone(); n = 0L }
+          n += 1
         }
-        throw t
+      }
+      flush()
+      counts.toMap
     }
   }
 

@@ -159,10 +159,7 @@ object GraftFilterPushdown {
         val buckets = layoutCols.toSeq.collect {
           case spec @ CommitLog.BucketSpec(n, c) => c -> ((n.toInt, spec))
         }.toMap
-        val files = CommitLog.snapshotFiles(root, version).map { f =>
-          val jf = new java.io.File(f)
-          jf.getParentFile.getName + "/" + jf.getName
-        }
+        val files = CommitLog.snapshotRelFiles(root, version)
         // CONSUMPTION GATE (r17, ADVICE): fullLayoutCols — the columns
         // whose filters may be CONSUMED (no row-level residual) — is
         // non-empty only for tables the guarded staging chokepoint
@@ -778,10 +775,7 @@ object GraftAggPushdown {
     // other column (MIN/MAX elsewhere scans).
     if (CommitLog.isSegmented(root, version))
       return answerSegmented(root, version, tableSchema, agg, consumed)
-    val files0 = CommitLog.snapshotFiles(root, version).map { f =>
-      val jf = new java.io.File(f)
-      jf.getParentFile.getName + "/" + jf.getName
-    }
+    val files0 = CommitLog.snapshotRelFiles(root, version)
     val files =
       if (consumed.isEmpty) files0
       else {

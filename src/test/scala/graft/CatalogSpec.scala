@@ -3200,4 +3200,37 @@ class CatalogSpec extends SparkSpec {
       assert(spark.sql(s"SELECT * FROM $cat.chk_$m WHERE v = 5").count() === 0L, m)
     }
   }
+
+  test("shallowClone carries every per-file map: COUNT(*) answers from metadata, a DV clone's live rows equal the source's") {
+    val (cat, base) = freshCatalog()
+    spark.sql(s"CREATE TABLE $cat.src (id BIGINT, v INT) TBLPROPERTIES ('enableDeletionVectors' = 'true')")
+    spark.sql(s"INSERT INTO $cat.src SELECT id, CAST(id % 10 AS INT) FROM range(1000)")
+    spark.sql(s"INSERT INTO $cat.src SELECT id, CAST(id % 10 AS INT) FROM range(1000, 1500)")
+    spark.sql(s"DELETE FROM $cat.src WHERE v = 3")
+    val src = new java.io.File(base, "src").toString
+    CommitLog.shallowClone(src, new java.io.File(base, "cl").toString)
+    // live rows per file, keyed by canonical path: the clone's keys are
+    // ../-paths into the source's data dir
+    def live(root: String): Map[String, Option[Long]] = {
+      val aux = CommitLog.auxOf(root, CommitLog.latestVersion(root).get)
+      aux.rows.keys.map(f =>
+        new java.io.File(root, f).getCanonicalPath -> CommitLog.liveRowsOf(aux, f)).toMap
+    }
+    val want = live(src)
+    assert(want.keySet === CommitLog.snapshotFiles(src, CommitLog.latestVersion(src).get)
+      .map(new java.io.File(_).getCanonicalPath).toSet)
+    assert(want.values.forall(_.isDefined), want)
+    assert(CommitLog.auxOf(src, CommitLog.latestVersion(src).get).dvs.nonEmpty)
+    assert(live(new java.io.File(base, "cl").toString) === want)
+    // COUNT(*) answers from the clone's manifest like the source's: the
+    // one-partition metadata-aggregate scan, no file scan
+    val counts = Seq("src", "cl").map { t =>
+      val q = spark.sql(s"SELECT COUNT(*) FROM $cat.$t")
+      var n = -1L
+      val jobs = jobsOf { n = q.collect()(0).getLong(0) }
+      assert(q.queryExecution.executedPlan.toString.contains("graft metadata-aggregate"), t)
+      (n, jobs)
+    }
+    assert(counts === Seq((1350L, 1), (1350L, 1)))
+  }
 }

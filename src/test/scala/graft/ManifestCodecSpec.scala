@@ -59,6 +59,9 @@ class ManifestCodecSpec extends SparkSpec {
     }
     table("restore") { r =>
       CommitLog.shallowClone(plain, r, Some(3L))
+      Seq("sizes", "rows").foreach(k => assert(
+        new com.fasterxml.jackson.databind.ObjectMapper().readTree(manifestText(r, 0L)).has(k),
+        s"the clone's v0 lists no $k"))
       CommitLog.append(spark, r, ev.limit(10), 1)
       CommitLog.restore(r, 0L)
     }

@@ -4167,4 +4167,115 @@ class StreamingSpec extends SparkSpec {
       assert(stages.isEmpty, s"$name left staging dirs: ${stages.toSeq}")
     }
   }
+
+  /** Shuffle bytes written and tasks ended while `body` runs. */
+  private def shuffleOf(body: => Unit): (Long, Long) = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    val tasks = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    // jobsOf's fence job flushes the listener bus
+    try jobsOf(body) finally spark.sparkContext.removeSparkListener(listener)
+    (bytes.get, tasks.get)
+  }
+
+  test("copy-on-write DML: DELETE and UPDATE run two jobs, and the dirty-file pass shuffles nothing") {
+    import graft.sources.CommitLog
+    val root = java.nio.file.Files.createTempDirectory("graft_cow_jobs").toString
+    CommitLog.append(spark, root,
+      spark.range(0, 4000).selectExpr("id", "CAST(id % 7 AS DOUBLE) AS v"), 4)
+    // the dirty-file pass and the rewrite: no aggregate job between
+    assert(jobsOf { CommitLog.delete(spark, root, col("id") % 100 === 0); () } === 2)
+    assert(jobsOf { CommitLog.update(spark, root, col("id") % 100 === 1,
+      Seq("v" -> lit(-1.0))); () } === 2)
+    assert(CommitLog.read(spark, root, 2L).filter(col("v") === -1.0).count() === 40L)
+    assert(CommitLog.read(spark, root, 2L).count() === 3960L)
+    val rows = CommitLog.touchedRows(spark, root, CommitLog.CondTouch(col("id") % 3 === 0))
+    val (passBytes, passTasks) = shuffleOf { CommitLog.filesOf(spark, rows); () }
+    assert(passTasks > 0 && passBytes === 0L, s"$passTasks tasks wrote $passBytes shuffle bytes")
+    // the listener sees the shuffle a direct distinct writes
+    val (distinctBytes, _) = shuffleOf {
+      rows.select(col("_graft_file")).distinct().collect(); () }
+    assert(distinctBytes > 0L)
+    // a CHECK constraint still judges a copy-on-write UPDATE's post-images
+    CommitLog.setTableProperty(root, "constraint.v_small", "v < 10")
+    val ex = intercept[IllegalArgumentException](
+      CommitLog.update(spark, root, col("id") === 5L, Seq("v" -> lit(50.0))))
+    assert(ex.getMessage.contains("v_small"), ex.getMessage)
+    assert(CommitLog.latestVersion(root) === Some(2L))
+  }
+
+  test("copy-on-write DML: the dirty-file pass finds exactly the files a direct distinct finds") {
+    import graft.sources.CommitLog
+    def canon(u: String): String = new java.io.File(new java.net.URI(u)).getCanonicalPath
+    def same(root: String, touch: CommitLog.Touch, what: String): Set[String] = {
+      val rows = CommitLog.touchedRows(spark, root, touch)
+      val direct = rows.select(col("_graft_file")).distinct().collect()
+        .map(r => canon(r.getString(0))).toSet
+      val pass = CommitLog.filesOf(spark, rows)
+      assert(pass === direct, what)
+      pass
+    }
+    def table(tag: String): String =
+      java.nio.file.Files.createTempDirectory("graft_dirty_" + tag).toString
+    def ids(lo: Long, hi: Long) = spark.range(lo, hi).selectExpr("id", "CAST(id % 10 AS INT) AS v")
+    // a file whose predicate is NULL on every row is not dirty
+    val nulls = table("nulls")
+    CommitLog.append(spark, nulls, ids(0, 100).withColumn("v", lit(null).cast("int")), 1)
+    CommitLog.append(spark, nulls, ids(100, 200), 1)
+    assert(same(nulls, CommitLog.CondTouch(col("v") < 5), "NULL predicate").size === 1)
+    // rows a deletion vector masks touch nothing
+    val masked = table("masked")
+    CommitLog.append(spark, masked, ids(0, 100), 1)
+    CommitLog.append(spark, masked, ids(100, 200), 1)
+    CommitLog.deleteMergeOnRead(spark, masked, col("id") < 10)
+    assert(same(masked, CommitLog.CondTouch(col("id") < 10), "masked rows").isEmpty)
+    assert(same(masked, CommitLog.CondTouch(col("id") < 20), "partly masked").size === 1)
+    // a column-mapped table, by its new name
+    val mapped = table("mapped")
+    CommitLog.append(spark, mapped, ids(0, 100), 1)
+    CommitLog.append(spark, mapped, ids(100, 200), 1)
+    CommitLog.renameColumn(spark, mapped, "v", "w")
+    assert(same(mapped, CommitLog.CondTouch(col("w") === 3 && col("id") > 150), "renamed").size === 1)
+    // a predicate that matches nothing
+    assert(same(mapped, CommitLog.CondTouch(col("id") < 0), "no match").isEmpty)
+    // MERGE's key touch
+    val keys = spark.range(95, 105).toDF("id")
+    assert(same(mapped, CommitLog.KeyTouch(Seq("id"), keys, None), "merge keys").size === 2)
+    assert(same(mapped, CommitLog.KeyTouch(Seq("id"), spark.range(0, 3).toDF("id"),
+      Some(spark.range(180, 190).toDF("id"))), "merge update and delete keys").size === 2)
+    // one file split across several scan tasks counts once
+    val split = table("split")
+    spark.conf.set("parquet.block.size", "4096")
+    try CommitLog.append(spark, split, ids(0, 20000), 1)
+    finally spark.conf.unset("parquet.block.size")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
+    try {
+      val rows = CommitLog.touchedRows(spark, split, CommitLog.CondTouch(col("v") === 1))
+      val readers = rows.select(col("_graft_file")).rdd
+        .mapPartitions(it => Iterator(it.hasNext)).collect().count(identity)
+      assert(readers > 1, s"the file was read by $readers task(s)")
+      assert(same(split, CommitLog.CondTouch(col("v") === 1), "split file").size === 1)
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+  }
+
+  test("deletion-vector DML: masked-row counts come from one task-side count, equal to a grouped count") {
+    import graft.sources.CommitLog
+    val root = java.nio.file.Files.createTempDirectory("graft_dv_counts").toString
+    CommitLog.append(spark, root, spark.range(0, 3000).selectExpr("id", "id % 10 AS v"), 3)
+    // the vector staging, its count and nothing else
+    assert(jobsOf { CommitLog.deleteMergeOnRead(spark, root, col("v") === 3); () } === 2)
+    val aux = CommitLog.auxOf(root, 1L)
+    val sidecars = aux.dvs.values.flatten.toSeq.distinct.map(r => new java.io.File(root, r).toString)
+    val grouped = spark.read.parquet(sidecars: _*).groupBy(col("f")).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(aux.dvRows.map { case (f, n) => new java.io.File(f).getName -> n } === grouped)
+    assert(aux.dvRows.values.sum === 300L)
+    assert(CommitLog.read(spark, root, 1L).count() === 2700L)
+  }
 }

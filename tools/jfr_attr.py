@@ -1,20 +1,22 @@
 #!/usr/bin/env python3
-"""Attribute main-thread waits and CPU samples of a JFR recording to graft code.
+"""Attribute main-thread waits, samples and sleeps of a JFR recording to graft code.
 
-Main-thread jdk.ThreadPark and jdk.JavaMonitorWait time (ms) and
-jdk.ExecutionSample counts are charged to the innermost graft.* frame of
-each event's stack, and split by the statement the stack belongs to: a
-write statement (DML, INSERT, OPTIMIZE, a commit), a read statement
-(SELECT through the catalog scan) or other.
+Main-thread jdk.ThreadPark and jdk.JavaMonitorWait time (ms), and the
+counts of jdk.ExecutionSample, jdk.NativeMethodSample and jdk.ThreadSleep
+events, are charged to the innermost graft.* frame of each event's stack,
+and split by the statement the stack belongs to: a write statement (DML,
+INSERT, OPTIMIZE, a commit), a read statement (SELECT through the catalog
+scan) or other.
 
     python3 tools/jfr_attr.py --make-jfc attr.jfc
     JAVA_TOOL_OPTIONS="-XX:FlightRecorderOptions=repository=<dir>,maxchunksize=2M,stackdepth=512 \\
       -XX:StartFlightRecording=settings=$PWD/attr.jfc,disk=true" \\
       python3 perfbench/run.py --workload table_mix --seed 1 --seconds 15
     python3 tools/jfr_attr.py <dir or .jfr files> [--top 25] [--thread PREFIX]
+    python3 tools/jfr_attr.py --selftest
 
---make-jfc copies the JDK's profile.jfc with park/monitor thresholds of 1 ms
-and Java method sampling every 5 ms. stackdepth=512 matters: at the default
+--make-jfc copies the JDK's profile.jfc with park/monitor/sleep thresholds of
+1 ms and Java method sampling every 5 ms. stackdepth=512 matters: at the default
 depth of 64 the innermost frames under Spark's SQL stack hide every graft
 frame. A recording repository holds one .jfr file per rotated chunk; pass the
 directory to read them all (a run that ends in Runtime.halt never writes a
@@ -33,7 +35,13 @@ import subprocess
 import sys
 import xml.etree.ElementTree as ET
 
-EVENTS = ("jdk.ThreadPark", "jdk.JavaMonitorWait", "jdk.ExecutionSample")
+WAITS = ("jdk.ThreadPark", "jdk.JavaMonitorWait")
+# counted per stack: event type -> report title
+COUNTS = {"jdk.ExecutionSample": "CPU samples",
+          "jdk.NativeMethodSample": "native-method samples",
+          "jdk.ThreadSleep": "sleeps"}
+EVENTS = WAITS + tuple(COUNTS)
+SAMPLED = ("jdk.ExecutionSample", "jdk.NativeMethodSample")
 # checked in this order against every frame of a stack, outermost first
 WRITE_RE = re.compile(
     r"TableMix\$Mix\.writeStmt$|^graft\.plans\.\w+Command\.run$|"
@@ -56,7 +64,7 @@ def make_jfc(dest):
     for ev in tree.getroot().iter("event"):
         name = ev.get("name")
         for st in ev.iter("setting"):
-            if name in ("jdk.ThreadPark", "jdk.JavaMonitorWait") and st.get("name") == "threshold":
+            if name in WAITS + ("jdk.ThreadSleep",) and st.get("name") == "threshold":
                 st.text = "1 ms"
             if name == "jdk.ExecutionSample" and st.get("name") == "period":
                 st.text = "5 ms"
@@ -98,39 +106,100 @@ def events_of(path):
 
 def thread_of(ev):
     v = ev["values"]
-    t = v.get("sampledThread") if ev["type"] == "jdk.ExecutionSample" else v.get("eventThread")
+    t = v.get("sampledThread") if ev["type"] in SAMPLED else v.get("eventThread")
     return (t or {}).get("javaName")
 
 
-def attribute(paths, thread):
-    waits = collections.Counter()   # (stmt, frame) -> ms
-    samples = collections.Counter()  # (stmt, frame) -> count
+def attribute(events, thread):
+    """(waits, counts, truncated): waits maps (stmt, frame) to ms, counts
+    maps each COUNTS event type to a (stmt, frame) -> n counter."""
+    waits = collections.Counter()
+    counts = {t: collections.Counter() for t in COUNTS}
     truncated = 0
-    for p in paths:
-        for ev in events_of(p):
-            if not (thread_of(ev) or "").startswith(thread):
-                continue
-            st = ev["values"].get("stackTrace") or {}
-            truncated += bool(st.get("truncated"))
-            names = [frame_name(f) for f in st.get("frames") or []]
-            inner = next((n for n in names if n.startswith("graft.")), "(no graft frame)")
-            key = (classify(names), inner)
-            if ev["type"] == "jdk.ExecutionSample":
-                samples[key] += 1
-            else:
-                waits[key] += 1000.0 * seconds(ev["values"].get("duration"))
-    return waits, samples, truncated
+    for ev in events:
+        if not (thread_of(ev) or "").startswith(thread):
+            continue
+        st = ev["values"].get("stackTrace") or {}
+        truncated += bool(st.get("truncated"))
+        names = [frame_name(f) for f in st.get("frames") or []]
+        inner = next((n for n in names if n.startswith("graft.")), "(no graft frame)")
+        key = (classify(names), inner)
+        if ev["type"] in COUNTS:
+            counts[ev["type"]][key] += 1
+        else:
+            waits[key] += 1000.0 * seconds(ev["values"].get("duration"))
+    return waits, counts, truncated
 
 
-def report(title, counter, unit, top):
-    print(f"== {title}")
+def report(title, counter, unit, top, out=sys.stdout):
+    out.write(f"== {title}\n")
     for stmt in ("write", "read", "other"):
         rows = [(k[1], v) for k, v in counter.items() if k[0] == stmt]
         total = sum(v for _, v in rows)
-        print(f"-- {stmt} statements: {total:.1f} {unit}")
+        out.write(f"-- {stmt} statements: {total:.1f} {unit}\n")
         for name, v in sorted(rows, key=lambda kv: -kv[1])[:top]:
             share = 100.0 * v / total if total else 0.0
-            print(f"   {v:10.1f} {unit} {share:5.1f}%  {name}")
+            out.write(f"   {v:10.1f} {unit} {share:5.1f}%  {name}\n")
+
+
+def report_all(thread, waits, counts, top, out=sys.stdout):
+    report(f"'{thread}*' threads park + monitor wait", waits, "ms", top, out)
+    for t, title in COUNTS.items():
+        report(f"'{thread}*' threads {title}", counts[t], "n", top, out)
+
+
+def selftest():
+    import io
+
+    def ev(kind, thread, frames, duration=None):
+        values = {"stackTrace": {"truncated": False, "frames": [
+            {"method": {"type": {"name": c.replace(".", "/")}, "name": m}}
+            for c, m in (f.rsplit(".", 1) for f in frames)]}}
+        values["sampledThread" if kind in SAMPLED else "eventThread"] = {"javaName": thread}
+        if duration:
+            values["duration"] = duration
+        return {"type": kind, "values": values}
+
+    # stacks innermost frame first, as JFR prints them
+    dml = ["jdk.internal.misc.Unsafe.park", "graft.sources.CommitLog$.runJob",
+           "graft.sources.CommitLog$.rowLevel", "graft.sources.CommitLog$.delete",
+           "graft.bench.TableMix$Mix.writeStmt"]
+    read = ["sun.nio.ch.FileDispatcherImpl.read0", "graft.sources.GraftBatchScan.planInputPartitions",
+            "graft.bench.TableMix$Mix.readStmt"]
+    events = [
+        ev("jdk.ThreadPark", "main", dml, "PT0.25S"),
+        ev("jdk.ThreadPark", "main", dml, "PT1M0.5S"),
+        ev("jdk.JavaMonitorWait", "main", ["java.lang.Object.wait"], "PT0.01S"),
+        ev("jdk.ThreadPark", "dag-scheduler-event-loop", dml, "PT9S"),
+        ev("jdk.ExecutionSample", "main", dml),
+        ev("jdk.NativeMethodSample", "main", read),
+        ev("jdk.NativeMethodSample", "main", read),
+        ev("jdk.NativeMethodSample", "other", read),
+        ev("jdk.ThreadSleep", "main", ["java.lang.Thread.sleep"] + dml[1:], "PT0.02S"),
+    ]
+    waits, counts, truncated = attribute(events, "main")
+    w = ("write", "graft.sources.CommitLog$.runJob")
+    r = ("read", "graft.sources.GraftBatchScan.planInputPartitions")
+    buf = io.StringIO()
+    report_all("main", waits, counts, 5, buf)
+    text = buf.getvalue()
+    checks = [
+        ("durations", seconds("PT1H2M3.5S") == 3723.5 and seconds(None) == 0.0),
+        ("waits by innermost graft frame", abs(waits[w] - 60750.0) < 1e-6),
+        ("no graft frame", waits[("other", "(no graft frame)")] == 10.0),
+        ("thread prefix filters", sum(counts["jdk.NativeMethodSample"].values()) == 2),
+        ("native samples", counts["jdk.NativeMethodSample"][r] == 2),
+        ("sleeps", counts["jdk.ThreadSleep"][w] == 1),
+        ("cpu samples", counts["jdk.ExecutionSample"][w] == 1),
+        ("report", "native-method samples" in text and "== 'main*' threads sleeps" in text
+         and "-- read statements: 2.0 n" in text),
+        ("untruncated", truncated == 0),
+    ]
+    for name, ok in checks:
+        print(("ok   " if ok else "FAIL ") + name)
+    if not all(ok for _, ok in checks):
+        raise SystemExit(1)
+    print('{"selftest":"passed"}')
 
 
 def main():
@@ -140,7 +209,10 @@ def main():
     ap.add_argument("--thread", default="main",
                     help="thread-name prefix (default: main)")
     ap.add_argument("--top", type=int, default=20)
+    ap.add_argument("--selftest", action="store_true", help="check the attribution on synthetic events")
     a = ap.parse_args()
+    if a.selftest:
+        return selftest()
     if a.make_jfc:
         make_jfc(a.make_jfc)
         return
@@ -153,9 +225,9 @@ def main():
             paths.append(i)
     if not paths:
         ap.error("no .jfr input")
-    waits, samples, truncated = attribute(paths, a.thread)
-    report(f"'{a.thread}*' threads park + monitor wait", waits, "ms", a.top)
-    report(f"'{a.thread}*' threads CPU samples", samples, "n", a.top)
+    events = (ev for p in paths for ev in events_of(p))
+    waits, counts, truncated = attribute(events, a.thread)
+    report_all(a.thread, waits, counts, a.top)
     if truncated:
         print(f"note: {truncated} stacks truncated; raise stackdepth", file=sys.stderr)
 
