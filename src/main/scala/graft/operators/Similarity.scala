@@ -277,8 +277,8 @@ object Similarity {
       val q = e.filter(col("vec_id") === lit(0L)).select(col("v").as("qv"))
       val probes = probeCellsOf(cents, q, nProbe = 8)
         .collect().map(_.getInt(0)).toIndexedSeq
-      val (cand, _, _) = CommitLog.partitionPrunedRead(s, aRoot, av,
-        "cell", probes.map(_.toString))
+      val (cand, _) = CommitLog.prunedScan(s, aRoot, av,
+        CommitLog.ProbeTree(Seq("cell" -> probes.map(_.toString).toSet), Nil))
       val topRefreshed = scoreProbed(
         VectorIndex.maskTombstones(s, idx.toString, cand), q, k = 20)
       val topRebuilt =

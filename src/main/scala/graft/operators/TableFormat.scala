@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Det._
 import graft.sources.{CommitLog, IncrementalView, Tables}
+import graft.sources.CommitLog.{ProbeTree, RangeProbe}
 
 /** B1 table-format tier (added r9, VERDICT r8 item 2; completed late
   * r9): the snapshot/commit-log layer over parquet dirs, grown into a
@@ -192,12 +193,12 @@ object TableFormat {
         ev.filter(col("event_id") > q2 && col("event_id") <= q3), 2, "event_id")
       val head = CommitLog.appendWithStats(s, root.toString,
         ev.filter(col("event_id") > q3), 2, "event_id")
-      val (df, total, nRead) = CommitLog.prunedReadTyped(s, root.toString, head,
-        Seq(CommitLog.StatProbe("event_id", q1 + 1, q2)))
+      val (df, p) = CommitLog.prunedScan(s, root.toString, head,
+        ProbeTree(Nil, Seq(RangeProbe("event_id", Some(q1 + 1), Some(q2)))))
       ordered(df.filter(col("event_id").between(q1 + 1, q2))
         .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
-        .select(lit(total.toLong).as("n_files_total"),
-          lit(nRead.toLong).as("n_files_read"),
+        .select(lit(p.filesTotal.toLong).as("n_files_total"),
+          lit(p.files.size.toLong).as("n_files_read"),
           col("n_rows"), col("sum_value")))
     },
     "q_table_manifest_segments" -> { (s, dir) =>
@@ -230,14 +231,14 @@ object TableFormat {
         ev.filter(col("event_id") > q2 && col("event_id") <= q3), 2, "event_id")
       val head = CommitLog.appendSegment(s, root.toString,
         ev.filter(col("event_id") > q3), 2, "event_id")
-      val (df, segTotal, segRead, fTotal, fRead) =
-        CommitLog.segmentedPrunedRead(s, root.toString, head, q1 + 1, q2)
+      val (df, p) = CommitLog.prunedScan(s, root.toString, head,
+        ProbeTree(Nil, Seq(RangeProbe("event_id", Some(q1 + 1), Some(q2)))))
       ordered(df.filter(col("event_id").between(q1 + 1, q2))
         .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
-        .select(lit(segTotal.toLong).as("n_segments_total"),
-          lit(segRead.toLong).as("n_segments_read"),
-          lit(fTotal.toLong).as("n_files_total"),
-          lit(fRead.toLong).as("n_files_read"),
+        .select(lit(p.segsTotal.toLong).as("n_segments_total"),
+          lit(p.segsRead.toLong).as("n_segments_read"),
+          lit(p.filesTotal.toLong).as("n_files_total"),
+          lit(p.files.size.toLong).as("n_files_read"),
           col("n_rows"), col("sum_value")))
     },
     "q_sql_table_seg_scan" -> { (s, dir) =>
@@ -277,11 +278,11 @@ object TableFormat {
       val q = s.sql(s"SELECT event_id, value FROM $cat.tbl " +
         s"WHERE event_id > $s1 AND event_id <= $s2")
       val (nTotal, planned) = scanOf(q).plannedFiles
-      val (_, _, segsTotal, segsRead) = CommitLog.segmentedPrunedFiles(root,
-        head, Seq(CommitLog.RangeProbe("event_id", Some(s1 + 1), Some(s2))))
+      val p = CommitLog.prune(root, head,
+        ProbeTree(Nil, Seq(RangeProbe("event_id", Some(s1 + 1), Some(s2)))))
       ordered(q.agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
-        .select(lit(segsTotal.toLong).as("n_segments_total"),
-          lit(segsRead.toLong).as("n_segments_read"),
+        .select(lit(p.segsTotal.toLong).as("n_segments_total"),
+          lit(p.segsRead.toLong).as("n_segments_read"),
           lit(nTotal.toLong).as("n_files_total"),
           lit(planned.size.toLong).as("n_files_planned"),
           col("n_rows"), col("sum_value")))
@@ -405,8 +406,7 @@ object TableFormat {
       // segment-level witness off the SAME decision the scan makes
       val head = CommitLog.latestVersion(root).get
       def segsRead(parts: Seq[(String, Set[String])]): Long =
-        CommitLog.segmentedPrunedFilesTree(root, head,
-          CommitLog.ProbeTree(parts, Nil))._4.toLong
+        CommitLog.prune(root, head, ProbeTree(parts, Nil)).segsRead.toLong
       val segsDay = segsRead(Seq("day" -> Set("3")))
       val qIn = s.sql(s"SELECT event_id FROM $cat.tbl WHERE day IN ('3','5')")
       val (_, plannedIn) = scanOf(qIn).plannedFiles
@@ -532,7 +532,7 @@ object TableFormat {
         col("event_id") <= m / 2).count()
       val cHi = ev.filter(col("event_id") % 7 === 3 &&
         col("event_id") > m / 2).count()
-      val day3Tree = CommitLog.ProbeTree(Seq("day" -> Set("3")), Nil)
+      val day3Tree = ProbeTree(Seq("day" -> Set("3")), Nil)
       val q1 = s.sql(s"SELECT event_id FROM $cat.tbl WHERE day = '3' LIMIT 1")
       val (nTotal, planned1) = scanOf(q1).plannedFiles
       val (_, _, opened1) =
@@ -1825,13 +1825,13 @@ object TableFormat {
           .withColumn("day", expr("event_id % 7")),
         "day", filesPerPartition = 1)
       val head = CommitLog.latestVersion(root.toString).get
-      val (pruned, total, read) = CommitLog.partitionPrunedRead(s,
-        root.toString, head, "day", Seq("3"))
+      val (pruned, p) = CommitLog.prunedScan(s, root.toString, head,
+        ProbeTree(Seq("day" -> Set("3")), Nil))
       val full = CommitLog.read(s, root.toString, head)
       val mism = full.filter(!(col("day") <=> expr("event_id % 7"))).count()
       ordered(pruned.filter(col("day") === 3)
         .agg(count(lit(1)).as("n_rows_day3"), dsum(col("value")).as("sum_value_day3"))
-        .select(lit(total).as("files_total"), lit(read).as("files_read"),
+        .select(lit(p.filesTotal).as("files_total"), lit(p.files.size).as("files_read"),
           lit(mism).as("n_mismatch"),
           col("n_rows_day3"), col("sum_value_day3")))
     },
@@ -2232,17 +2232,17 @@ object TableFormat {
         ev.filter(col("user_id") % 2 === 0), nFiles = 4, statsCol = "event_id")
       val v1 = CommitLog.appendWithStats(s, root.toString,
         ev.filter(col("user_id") % 2 === 1), 4, "event_id")
-      val probe = Seq(CommitLog.StatProbe("event_id", q1 + 1, q2))
-      val (_, befTotal, befRead) = CommitLog.prunedReadTyped(s, root.toString, v1, probe)
+      val probe = ProbeTree(Nil, Seq(RangeProbe("event_id", Some(q1 + 1), Some(q2))))
+      val bef = CommitLog.prune(root.toString, v1, probe)
       val v2 = CommitLog.optimize(s, root.toString, "event_id",
         cutoffs = Seq(q1, q2, q3), filesPerBucket = 2)
-      val (df, aftTotal, aftRead) = CommitLog.prunedReadTyped(s, root.toString, v2, probe)
+      val (df, aft) = CommitLog.prunedScan(s, root.toString, v2, probe)
       ordered(df.filter(col("event_id").between(q1 + 1, q2))
         .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
-        .select(lit(befTotal.toLong).as("files_before"),
-          lit(befRead.toLong).as("files_read_before"),
-          lit(aftTotal.toLong).as("files_after"),
-          lit(aftRead.toLong).as("files_read_after"),
+        .select(lit(bef.filesTotal.toLong).as("files_before"),
+          lit(bef.files.size.toLong).as("files_read_before"),
+          lit(aft.filesTotal.toLong).as("files_after"),
+          lit(aft.files.size.toLong).as("files_read_after"),
           col("n_rows"), col("sum_value")))
     },
     "s_table_commit_retry" -> { (s, dir) =>
@@ -2604,12 +2604,12 @@ object TableFormat {
         ev.filter(col("event_id") % 2 === 0), "event_type", filesPerPartition = 2)
       val head = CommitLog.appendPartitioned(s, root.toString,
         ev.filter(col("event_id") % 2 === 1), "event_type", filesPerPartition = 2)
-      val (df, total, nRead) = CommitLog.partitionPrunedRead(s, root.toString,
-        head, "event_type", Seq("click", "purchase"))
+      val (df, p) = CommitLog.prunedScan(s, root.toString, head,
+        ProbeTree(Seq("event_type" -> Set("click", "purchase")), Nil))
       ordered(df.filter(col("event_type").isin("click", "purchase"))
         .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
-        .select(lit(total.toLong).as("n_files_total"),
-          lit(nRead.toLong).as("n_files_read"),
+        .select(lit(p.filesTotal.toLong).as("n_files_total"),
+          lit(p.files.size.toLong).as("n_files_read"),
           col("n_rows"), col("sum_value")))
     },
     "q_table_partition_evolve" -> { (s, dir) =>
@@ -2637,18 +2637,18 @@ object TableFormat {
       CommitLog.setTableProperty(root.toString, "repartitionLayout", "day")
       val head = CommitLog.appendPartitioned(s, root.toString,
         ev.filter(col("event_id") % 2 === 1), "day", filesPerPartition = 1)
-      val (dfT, total, readT) = CommitLog.partitionPrunedRead(s, root.toString,
-        head, "event_type", Seq("click"))
-      val (dfD, _, readD) = CommitLog.partitionPrunedRead(s, root.toString,
-        head, "day", Seq("3"))
+      val (dfT, pT) = CommitLog.prunedScan(s, root.toString, head,
+        ProbeTree(Seq("event_type" -> Set("click")), Nil))
+      val (dfD, pD) = CommitLog.prunedScan(s, root.toString, head,
+        ProbeTree(Seq("day" -> Set("3")), Nil))
       ordered(dfT.filter(col("event_type") === "click")
         .agg(count(lit(1)).as("n_click"), dsum(col("value")).as("sum_click"))
         // 1-row × 1-row: a broadcast scalar pairing, not a data join
         .crossJoin(dfD.filter(col("day") === "3")
           .agg(count(lit(1)).as("n_day3"), dsum(col("value")).as("sum_day3")))
-        .select(lit(total.toLong).as("n_files_total"),
-          lit(readT.toLong).as("files_read_type"),
-          lit(readD.toLong).as("files_read_day"),
+        .select(lit(pT.filesTotal.toLong).as("n_files_total"),
+          lit(pT.files.size.toLong).as("files_read_type"),
+          lit(pD.files.size.toLong).as("files_read_day"),
           col("n_click"), col("sum_click"), col("n_day3"), col("sum_day3")))
     },
     "q_table_partition_evolve_multi" -> { (s, dir) =>
@@ -2680,12 +2680,12 @@ object TableFormat {
       val head = CommitLog.appendPartitionedCols(s, root.toString,
         ev.filter(col("event_id") % 2 === 1), Seq("day", "bucket"),
         filesPerPartition = 1)
-      val (dfM, total, readM) = CommitLog.partitionPrunedReadMulti(s,
-        root.toString, head, Seq("day" -> Seq("3"), "bucket" -> Seq("0")))
-      val (dfD, _, readD) = CommitLog.partitionPrunedRead(s, root.toString,
-        head, "day", Seq("3"))
-      val (dfT, _, readT) = CommitLog.partitionPrunedRead(s, root.toString,
-        head, "event_type", Seq("click"))
+      val (dfM, pM) = CommitLog.prunedScan(s, root.toString, head,
+        ProbeTree(Seq("day" -> Set("3"), "bucket" -> Set("0")), Nil))
+      val (dfD, pD) = CommitLog.prunedScan(s, root.toString, head,
+        ProbeTree(Seq("day" -> Set("3")), Nil))
+      val (dfT, pT) = CommitLog.prunedScan(s, root.toString, head,
+        ProbeTree(Seq("event_type" -> Set("click")), Nil))
       ordered(dfM.filter(col("day") === "3" && col("bucket") === "0")
         .agg(count(lit(1)).as("n_d3b0"), dsum(col("value")).as("sum_d3b0"))
         // 1-row × 1-row: broadcast scalar pairings, not data joins
@@ -2693,10 +2693,10 @@ object TableFormat {
           .agg(count(lit(1)).as("n_day3")))
         .crossJoin(dfT.filter(col("event_type") === "click")
           .agg(count(lit(1)).as("n_click")))
-        .select(lit(total.toLong).as("n_files_total"),
-          lit(readM.toLong).as("files_read_multi"),
-          lit(readD.toLong).as("files_read_day"),
-          lit(readT.toLong).as("files_read_type"),
+        .select(lit(pM.filesTotal.toLong).as("n_files_total"),
+          lit(pM.files.size.toLong).as("files_read_multi"),
+          lit(pD.files.size.toLong).as("files_read_day"),
+          lit(pT.files.size.toLong).as("files_read_type"),
           col("n_d3b0"), col("sum_d3b0"), col("n_day3"), col("n_click")))
     },
     "q_table_stats_prune_ts" -> { (s, dir) =>
@@ -2730,15 +2730,15 @@ object TableFormat {
         ev.filter(col("ts") >= wk(2)), 2, statCols)
       def micros(t: java.sql.Timestamp): Long =
         t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-      val (df, total, nRead) = CommitLog.prunedReadTyped(s, root.toString,
-        head, Seq(CommitLog.StatProbe("ts", micros(wk(0)), micros(wk(1)) - 1L)))
+      val (df, p) = CommitLog.prunedScan(s, root.toString, head,
+        ProbeTree(Nil, Seq(RangeProbe("ts", Some(micros(wk(0))), Some(micros(wk(1)) - 1L)))))
       // null counts come from the LOG, not a scan — summed across files
       val aux = CommitLog.auxOf(root.toString, head)
       val nNulls = aux.stats2.values.map(_("maybe_type").nulls.get).sum
       ordered(df.filter(col("ts") >= wk(0) && col("ts") < wk(1))
         .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
-        .select(lit(total.toLong).as("n_files_total"),
-          lit(nRead.toLong).as("n_files_read"),
+        .select(lit(p.filesTotal.toLong).as("n_files_total"),
+          lit(p.files.size.toLong).as("n_files_read"),
           lit(nNulls).as("n_nulls_logged"),
           col("n_rows"), col("sum_value")))
     },
@@ -2767,22 +2767,20 @@ object TableFormat {
         ev.filter(col("user_id") % 2 === 0), 4, Seq("event_id", "user_id"))
       val v1 = CommitLog.appendWithColumnStats(s, root.toString,
         ev.filter(col("user_id") % 2 === 1), 4, Seq("event_id", "user_id"))
-      val probes = Seq(CommitLog.StatProbe("event_id", q1 + 1, q2),
-        CommitLog.StatProbe("user_id", uh + 1, u))
-      val (_, befTotal, befRead) =
-        CommitLog.prunedReadTyped(s, root.toString, v1, probes)
+      val probes = ProbeTree(Nil, Seq(RangeProbe("event_id", Some(q1 + 1), Some(q2)),
+        RangeProbe("user_id", Some(uh + 1), Some(u))))
+      val bef = CommitLog.prune(root.toString, v1, probes)
       val v2 = CommitLog.optimizeClustered(s, root.toString,
         dims = Seq("event_id" -> Seq(q1, q2, q3), "user_id" -> Seq(uh)),
         filesPerCell = 1)
-      val (df, aftTotal, aftRead) =
-        CommitLog.prunedReadTyped(s, root.toString, v2, probes)
+      val (df, aft) = CommitLog.prunedScan(s, root.toString, v2, probes)
       ordered(df.filter(col("event_id").between(q1 + 1, q2) &&
           col("user_id").between(uh + 1, u))
         .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
-        .select(lit(befTotal.toLong).as("files_before"),
-          lit(befRead.toLong).as("files_read_before"),
-          lit(aftTotal.toLong).as("files_after"),
-          lit(aftRead.toLong).as("files_read_after"),
+        .select(lit(bef.filesTotal.toLong).as("files_before"),
+          lit(bef.files.size.toLong).as("files_read_before"),
+          lit(aft.filesTotal.toLong).as("files_after"),
+          lit(aft.files.size.toLong).as("files_read_after"),
           col("n_rows"), col("sum_value")))
     },
     "q_table_cdf" -> { (s, dir) =>
@@ -3110,10 +3108,9 @@ object TableFormat {
       val r = s.sql(s"OPTIMIZE $cat.ow WHERE event_type = 'click'").collect()(0)
       val head = r.getLong(0)
       val after = CommitLog.snapshotFiles(root, head).size.toLong
-      val (_, _, readClick) = CommitLog.partitionPrunedRead(
-        s, root, head, "event_type", Seq("click"))
-      val (_, _, readError) = CommitLog.partitionPrunedRead(
-        s, root, head, "event_type", Seq("error"))
+      def filesRead(v: String): Int =
+        CommitLog.prune(root, head, ProbeTree(Seq("event_type" -> Set(v)), Nil)).files.size
+      val (readClick, readError) = (filesRead("click"), filesRead("error"))
       ordered(s.sql(s"SELECT event_type, value FROM $cat.ow")
         .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
         .select(lit(head).as("head_version"),
@@ -3153,8 +3150,8 @@ object TableFormat {
       val nRef = CommitLog.snapshotFiles(cloneRoot, 0L).size.toLong
       val localBefore = localFiles()
       // partition values carried: the 'error' probe prunes 1-of-N
-      val (pdf, total, nRead) = CommitLog.partitionPrunedRead(
-        s, cloneRoot, 0L, "event_type", Seq("error"))
+      val (pdf, p) = CommitLog.prunedScan(s, cloneRoot, 0L,
+        ProbeTree(Seq("event_type" -> Set("error")), Nil))
       val errAgg = pdf.filter(col("event_type") === "error")
         .agg(count(lit(1)).as("n_err_rows"))
       // diverge the CLONE: CoW delete rewrites only the dirty file
@@ -3172,8 +3169,8 @@ object TableFormat {
         .select(lit(del.getLong(0)).as("head_clone"),
           lit(CommitLog.latestVersion(srcRoot).get).as("head_src"),
           lit(nRef).as("n_files_referenced"),
-          lit(total.toLong).as("n_files_total"),
-          lit(nRead.toLong).as("n_files_read"),
+          lit(p.filesTotal.toLong).as("n_files_total"),
+          lit(p.files.size.toLong).as("n_files_read"),
           lit(del.getLong(1)).as("files_carried"),
           lit(del.getLong(2)).as("files_rewritten"),
           lit(localBefore).as("n_local_before"),
@@ -3202,16 +3199,16 @@ object TableFormat {
         |WHERE event_id % 3 = 0""".stripMargin)
       val root = new java.io.File(base.toFile, "ct").toString
       val head = CommitLog.latestVersion(root).get
-      val (pdf, total, nRead) = CommitLog.partitionPrunedRead(
-        s, root, head, "event_type", Seq("click"))
+      val (pdf, p) = CommitLog.prunedScan(s, root, head,
+        ProbeTree(Seq("event_type" -> Set("click")), Nil))
       val full = s.sql(s"SELECT event_type, value FROM $cat.ct")
         .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
       val click = pdf.filter(col("event_type") === "click")
         .agg(count(lit(1)).as("n_click"), dsum(col("value")).as("sum_click"))
       ordered(full.crossJoin(click)
         .select(lit(head).as("head_version"),
-          lit(total.toLong).as("n_files_total"),
-          lit(nRead.toLong).as("n_files_read"),
+          lit(p.filesTotal.toLong).as("n_files_total"),
+          lit(p.files.size.toLong).as("n_files_read"),
           col("n_rows"), col("sum_value"), col("n_click"), col("sum_click")))
     },
     "q_sql_table_constraints" -> { (s, dir) =>
@@ -3442,10 +3439,10 @@ object TableFormat {
         s"WHERE day = '3' AND bucket = '0' AND event_id <= ${m / 2}")
       val readCombined = q.rdd.getNumPartitions.toLong
       // single-source probes for contrast (API-level, same manifest)
-      val (_, _, readLayout) = CommitLog.partitionPrunedReadMulti(s, root, head,
-        Seq("day" -> Seq("3"), "bucket" -> Seq("0")))
-      val (_, _, readStats) = CommitLog.prunedReadCombined(s, root, head, Nil,
-        Seq(CommitLog.RangeProbe("event_id", None, Some(m / 2))))
+      val readLayout = CommitLog.prune(root, head,
+        ProbeTree(Seq("day" -> Set("3"), "bucket" -> Set("0")), Nil)).files.size
+      val readStats = CommitLog.prune(root, head,
+        ProbeTree(Nil, Seq(RangeProbe("event_id", None, Some(m / 2))))).files.size
       ordered(q.agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
         .select(lit(total).as("n_files_total"),
           lit(readCombined).as("files_read_combined"),
@@ -3712,7 +3709,7 @@ object TableFormat {
     "q_table_prune_combined" -> { (s, dir) =>
       // API-LEVEL pruning unification (r15, VERDICT item 6): ONE
       // read whose keep decision intersects the file's own layout
-      // entry AND its typed stats — prunedReadCombined — pinned
+      // entry AND its typed stats — prunedScan — pinned
       // TIGHTER than either source alone (1 file vs 2 layout-only vs
       // 7 stats-only on the 14-file day x half grid). Counters are
       // predicate-derived in the oracle, so they hold at any scale.
@@ -3727,17 +3724,16 @@ object TableFormat {
         ev.filter(col("event_id") <= m / 2), "day", filesPerPartition = 1)
       val head = CommitLog.appendPartitioned(s, root.toString,
         ev.filter(col("event_id") > m / 2), "day", filesPerPartition = 1)
-      val (dfC, total, readC) = CommitLog.prunedReadCombined(s, root.toString,
-        head, Seq("day" -> Set("3")),
-        Seq(CommitLog.RangeProbe("event_id", None, Some(m / 2))))
-      val (_, _, readL) = CommitLog.partitionPrunedReadMulti(s, root.toString,
-        head, Seq("day" -> Seq("3")))
-      val (_, _, readS) = CommitLog.prunedReadCombined(s, root.toString, head,
-        Nil, Seq(CommitLog.RangeProbe("event_id", None, Some(m / 2))))
+      val range = RangeProbe("event_id", None, Some(m / 2))
+      val (dfC, pC) = CommitLog.prunedScan(s, root.toString, head,
+        ProbeTree(Seq("day" -> Set("3")), Seq(range)))
+      val readL = CommitLog.prune(root.toString, head,
+        ProbeTree(Seq("day" -> Set("3")), Nil)).files.size
+      val readS = CommitLog.prune(root.toString, head, ProbeTree(Nil, Seq(range))).files.size
       ordered(dfC.filter(col("day") === "3" && col("event_id") <= m / 2)
         .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("sum_value"))
-        .select(lit(total.toLong).as("n_files_total"),
-          lit(readC.toLong).as("files_read_combined"),
+        .select(lit(pC.filesTotal.toLong).as("n_files_total"),
+          lit(pC.files.size.toLong).as("files_read_combined"),
           lit(readL.toLong).as("files_read_layout"),
           lit(readS.toLong).as("files_read_stats"),
           col("n_rows"), col("sum_value")))

@@ -28,11 +28,12 @@ import org.apache.spark.sql.types.StructType
   * metadata read — the object-store list call that dominates wide
   * tables is gone; planning cost scales with the file count in one
   * manifest. Per-file column statistics live IN the manifest too
-  * (typed min/max/null counts: `statsColumns`, appendWithStats,
-  * prunedReadTyped — the Delta stats-JSON / Iceberg manifest-bounds
-  * design), so selective scans prune files from the log alone; the
-  * remaining natural step (manifest segments for million-file
-  * tables) is likewise data-independent metadata. This
+  * (typed min/max/null counts: `statsColumns`, appendWithStats — the
+  * Delta stats-JSON / Iceberg manifest-bounds design), so selective
+  * scans prune files from the log alone; manifest segments carry the
+  * same metadata for million-file tables, and ONE prune decision
+  * ([[prune]], read through [[prunedScan]]) serves both manifest
+  * shapes. This
   * closes the reader-vs-compaction race SCALING.md flags for
   * s_compact_files: a reader pinned to version N is unaffected by a
   * concurrent rewrite (asserted in StreamingSpec).
@@ -612,7 +613,7 @@ object CommitLog {
     def files: Seq[String] = {
       require(flatFiles.isDefined,
         s"version $version under $root is a SEGMENTED manifest — " +
-          "read it through segmentsOf/segmentedPrunedRead, not the flat-manifest API")
+          "read it through prune/prunedScan, not the flat-manifest API")
       flatFiles.get
     }
     def absFiles: Seq[String] = files.map(f => new java.io.File(root, f).toString)
@@ -1683,7 +1684,7 @@ object CommitLog {
         // dv-side columns pinned by frame reference — a user table
         // with its own 'f' or 'i' column must not make the join
         // condition ambiguous
-        val dv = s.read.parquet(dvPaths: _*)
+        val dv = s.read.schema(DvSidecar.schema).parquet(dvPaths: _*)
         tagged(dvFiles)
           .withColumn("_gi", col("_metadata.row_index"))
           .join(dv, substring_index(col("_graft_file"), "/", -1) === dv("f") &&
@@ -2121,19 +2122,13 @@ object CommitLog {
     * the manifest-level file-skipping metadata of the public table
     * formats (Delta's stats JSON / Iceberg's manifest column bounds):
     * planning consults the LOG, not file footers, so a selective scan
-    * ([[prunedReadTyped]]) opens only overlapping files. Prior
+    * ([[prunedScan]]) opens only overlapping files. Prior
     * versions' entries carry over, so the whole snapshot stays
     * prunable after many appends. */
   def appendWithStats(s: SparkSession, root: String, df: DataFrame,
       nFiles: Int, statsCol: String): Long =
     appendCore(s, root, df, "appendWithStats", LatestHead,
       PlainLayout(nFiles), TypedStats(Seq(statsCol), integral = true)).get
-
-  /** A pruned scan over the `keep` (relative) files of `sn`; an empty
-    * selection reads as the snapshot's empty frame. */
-  private def keptScan(s: SparkSession, sn: Snapshot, keep: Seq[String]): DataFrame =
-    if (keep.isEmpty) read(s, sn.root, sn.version).limit(0)
-    else readSubset(s, sn, keep.map(f => new java.io.File(sn.root, f).toString))
 
   // ------------------------------------------------------------------
   // Partitioned tables through the log (r10, VERDICT r9 item 2):
@@ -2373,8 +2368,8 @@ object CommitLog {
     * every old file keeps (and is pruned under) ITS recorded layout,
     * carried per-file in the manifest's `layouts` entries. Zero data
     * I/O at evolution time — no rewrite, the generations simply
-    * coexist; [[partitionPrunedRead]] prunes each file under its own
-    * generation's column. */
+    * coexist; [[prune]] prunes each file under its own generation's
+    * column. */
   def appendPartitioned(s: SparkSession, root: String, df0: DataFrame,
       partCol: String, filesPerPartition: Int,
       extraMeta: WriterMeta = WriterMeta()): Long =
@@ -2384,9 +2379,8 @@ object CommitLog {
   /** [[appendPartitioned]] under an ORDERED multi-column spec (r14,
     * VERDICT item 2 — Iceberg specs are multi-field): `partCols` =
     * e.g. Seq("day", "region"); one routing group per value tuple,
-    * per-file layouts carry the ordered pairs, and
-    * [[partitionPrunedReadMulti]] prunes each file by intersecting
-    * the probe with the file's OWN columns. Spec evolution (to a
+    * per-file layouts carry the ordered pairs, and [[prune]] prunes
+    * each file by intersecting the probe with the file's OWN columns. Spec evolution (to a
     * different column LIST, wider or narrower) gates on the
     * `repartitionLayout` property naming the comma-joined new spec,
     * exactly the single-column contract. */
@@ -2406,50 +2400,6 @@ object CommitLog {
       PartitionedLayout(partCols, filesPerPartition,
         (fs, a) => extraMeta ++ extraFromStaged(fs, a)),
       DeclaredStats).get
-
-  /** Partition-pruned scan: the files of `version` whose recorded
-    * partition value is in `values`, plus every file WITHOUT a
-    * partition entry (unprunable ⇒ always read — mixed manifests stay
-    * correct). Each file prunes under ITS OWN generation's layout
-    * (r13, spec evolution): a file written under a DIFFERENT
-    * partition column than the queried one is unprunable for this
-    * query and always reads — pruning may only ever widen the result,
-    * never drop a matching row. Pure log metadata: no directory
-    * listing, no footer reads; the caller still applies its precise
-    * predicate. Returns (df, filesTotal, filesRead). */
-  def partitionPrunedRead(s: SparkSession, root: String, version: Long,
-      partCol: String, values: Seq[String]): (DataFrame, Int, Int) =
-    partitionPrunedReadMulti(s, root, version, Seq(partCol -> values))
-
-  /** [[partitionPrunedRead]] with a MULTI-COLUMN probe (r14): one
-    * (column, accepted values) entry per probed column. A file reads
-    * unless its OWN recorded layout excludes it on some probed
-    * column — the probe INTERSECTS the file's columns, so a column a
-    * generation never recorded simply cannot prune that generation
-    * (pruning may only ever widen the result, never drop a matching
-    * row), and a composite-spec file prunes on every probed column
-    * it carries. Pure log metadata, no directory listing, no footer
-    * reads; the caller still applies its precise predicate. */
-  def partitionPrunedReadMulti(s: SparkSession, root: String, version: Long,
-      probes: Seq[(String, Seq[String])]): (DataFrame, Int, Int) = {
-    val sn = snapshot(root, version)
-    val (files, aux) = (sn.files, sn.aux)
-    val specCols = aux.partCol.toSeq.flatMap(_.split(',')).toSet
-    probes.foreach { case (c, _) =>
-      require(specCols.contains(c) ||
-        aux.layouts.values.exists(_.exists(_._1 == c)),
-        s"no generation of this table records partition column " +
-          s"'$c' (current spec: ${aux.partCol.getOrElse("<none>")})")
-    }
-    val want = probes.map { case (c, vs) => c -> vs.toSet }.toMap
-    val keep = files.filter(f => aux.layoutOf(f) match {
-      case Some(pairs) => pairs.forall { case (c, v) =>
-        want.get(c).forall(_.contains(v)) // unprobed columns pass
-      }
-      case None => true // no entry: must read
-    })
-    (keptScan(s, sn, keep), files.size, keep.size)
-  }
 
   // ------------------------------------------------------------------
   // Typed multi-column manifest statistics (r10, VERDICT r9 item 5):
@@ -2565,62 +2515,26 @@ object CommitLog {
     appendCore(s, root, df, "appendWithColumnStats", LatestHead,
       PlainLayout(nFiles), TypedStats(cols)).get
 
-  /** One range probe against the typed stats: column, inclusive lo,
-    * inclusive hi — Long for "long"/"ts" columns (timestamps as epoch
-    * micros), Double for "double", String for "str". */
-  final case class StatProbe(col: String, lo: Any, hi: Any)
-
-  private def overlaps(tag: String, st: ColStat, p: StatProbe): Boolean =
-    (st.lo, st.hi) match {
-      // all-NULL file: a range predicate never matches NULL ⇒ prunable
-      case (None, _) | (_, None) => false
-      case (Some(mn), Some(mx)) =>
-        // Spark's orderings, not the JVM's (r16 review find — same fix
-        // as rangeOverlaps): UTF-8 binary strings, nan-safe doubles
-        val cmp = GraftFilterPushdown.ordOf(tag)
-        cmp.compare(mx, p.lo) >= 0 && cmp.compare(mn, p.hi) <= 0
-    }
-
-  /** Typed stats-pruned scan: keep the files whose recorded bounds
-    * overlap EVERY probe (conjunction); files without an entry for a
-    * probed column are unprunable ⇒ always read. Pure metadata — the
-    * caller still applies its precise predicates. Returns (df,
-    * filesTotal, filesRead). */
-  def prunedReadTyped(s: SparkSession, root: String, version: Long,
-      probes: Seq[StatProbe]): (DataFrame, Int, Int) = {
-    val sn = snapshot(root, version)
-    val (files, aux) = (sn.files, sn.aux)
-    val keep = files.filter { f =>
-      aux.stats2.get(f) match {
-        case None => true
-        case Some(cols) => probes.forall { p =>
-          cols.get(p.col) match {
-            case None => true
-            case Some(st) => overlaps(aux.statsTags.getOrElse(p.col, "long"), st, p)
-          }
-        }
-      }
-    }
-    (keptScan(s, sn, keep), files.size, keep.size)
-  }
-
   // ------------------------------------------------------------------
-  // Combined layout × stats pruning (r15, VERDICT items 2/6): ONE
-  // file-level keep decision intersecting EVERY metadata source the
-  // manifest carries — per-file partition layouts and typed column
-  // stats — so a probe on
-  // (day = x AND value > y) skips everything either source can skip.
-  // This is also the translation target for the DSv2 SQL filter
-  // pushdown (GraftCatalog): pushed predicates become these probes,
-  // and `SELECT ... WHERE` plans only the surviving files.
+  // The scan planner's file-level prune (r15, VERDICT items 2/6; one
+  // decision for flat and segmented manifests since r21): ONE keep
+  // decision intersecting EVERY metadata source the manifest carries
+  // — per-file partition layouts and typed column stats — so a probe
+  // on (day = x AND value > y) skips everything either source can
+  // skip. Every pruned read goes through [[prune]]: the API scans
+  // ([[prunedScan]]), the DSv2 SQL filter pushdown (GraftCatalog:
+  // pushed predicates become these probes, and `SELECT ... WHERE`
+  // plans only the surviving files), the metadata aggregates and the
+  // storage-partitioned join grouping.
   // ------------------------------------------------------------------
 
   /** One OPEN-ENDED range probe: inclusive bounds, either side
     * absent = unbounded. Values must match the column's recorded stat
-    * tag (Long for "long"/"ts", Double, String). Both bounds absent =
-    * an IS NOT NULL probe: it prunes exactly the all-NULL files
-    * (whose min/max are unrecorded) — which every bounded probe also
-    * prunes, range predicates being null-rejecting. */
+    * tag (Long for "long"/"ts", timestamps as epoch micros; Double;
+    * String). Both bounds absent = an IS NOT NULL probe: it prunes
+    * exactly the all-NULL files (whose min/max are unrecorded) — which
+    * every bounded probe also prunes, range predicates being
+    * null-rejecting. */
   final case class RangeProbe(col: String, lo: Option[Any], hi: Option[Any])
 
   private def rangeOverlaps(tag: String, st: ColStat, p: RangeProbe): Boolean =
@@ -2641,22 +2555,6 @@ object CommitLog {
           p.hi.forall(hi => cmp.compare(mn, hi) <= 0)
     }
 
-  /** The surviving (relative) file paths of `version` under a
-    * combined probe — partition-value sets AND typed range probes,
-    * intersected: a file reads only
-    * if EVERY source that has an opinion about it passes. Files (or
-    * columns) without metadata are unprunable ⇒ always read, and a
-    * probed column no generation recorded simply never prunes —
-    * pruning may only ever widen the result, never drop a matching
-    * row (the partitionPrunedReadMulti contract, kept permissive here
-    * because the SQL pushdown probes whatever columns the predicate
-    * mentions). Pure log metadata: no directory listing, no footer
-    * reads. Returns (surviving relative paths, filesTotal). */
-  def prunedFilesCombined(root: String, version: Long,
-      partProbes: Seq[(String, Set[String])],
-      rangeProbes: Seq[RangeProbe]): (Seq[String], Int) =
-    prunedFilesTree(root, version, ProbeTree(partProbes, rangeProbes))
-
   /** A probe CONJUNCTION with nested DISJUNCTIONS (r16, VERDICT item
     * 2): a file admits iff it passes every partition probe, every
     * range probe, AND — for each entry in `ors` — at least ONE branch
@@ -2676,61 +2574,103 @@ object CommitLog {
       // without an entry for the column stay unprunable, as always.
       notParts: Seq[(String, Set[String])] = Nil)
 
-  /** [[prunedFilesCombined]] generalized to a [[ProbeTree]]: ONE
-    * file-level keep decision over every metadata source the manifest
-    * carries, with OR-of-probe-sets support. Pure log metadata. */
-  def prunedFilesTree(root: String, version: Long,
-      tree: ProbeTree): (Seq[String], Int) = {
-    val sn = snapshot(root, version)
-    (prunedFilesOf(sn, tree), sn.files.size)
+  /** A [[ProbeTree]] normalized ONCE — the per-file loop must not
+    * rebuild file-independent maps per file per OR branch (r16 review
+    * find): accepted and vetoed layout values per column (a column
+    * probed twice accepts the INTERSECTION of its sets — a row must
+    * pass both), the range probes and the OR groups. */
+  private final case class Node(want: Map[String, Set[String]],
+      veto: Map[String, Set[String]], ranges: Seq[RangeProbe], ors: Seq[Seq[Node]])
+  private def nodeOf(t: ProbeTree): Node = Node(
+    t.parts.groupMapReduce(_._1)(_._2)(_ intersect _),
+    t.notParts.groupMapReduce(_._1)(_._2)(_ ++ _),
+    t.ranges, t.ors.map(_.map(nodeOf)))
+
+  /** THE file-level keep decision. `layout` is the file's recorded
+    * (column, value) pairs — None = no entry ⇒ unprunable; a probe
+    * INTERSECTS the file's own columns, so a column its generation
+    * never recorded cannot prune it. `stat` gives the (tag, bounds) a
+    * range probe compares against — None = no usable entry ⇒
+    * unprunable for that probe. The two manifest shapes differ only in
+    * where those come from (see [[prune]]). */
+  private def admits(layout: Option[Seq[(String, String)]],
+      stat: RangeProbe => Option[(String, ColStat)], n: Node): Boolean =
+    layout.forall(_.forall { case (c, v) =>
+      n.want.get(c).forall(_.contains(v)) && !n.veto.get(c).exists(_.contains(v))
+    }) && n.ranges.forall(p => stat(p).forall { case (tag, st) => rangeOverlaps(tag, st, p) }) &&
+      n.ors.forall(_.exists(admits(layout, stat, _)))
+
+  /** What one [[prune]] kept: the surviving relative paths, the
+    * version's file count, and — on a segmented manifest — its segment
+    * count and how many segments survived the segment-level pass (both
+    * 0 on a flat manifest). */
+  final case class Pruned(files: Seq[String], filesTotal: Int, segsTotal: Int, segsRead: Int)
+
+  /** The scan planner's ONE file-level prune of `version` under
+    * `tree`: one manifest parse, then
+    *   - a FLAT manifest keeps each file [[admits]] under its own
+    *     layout entry and typed stats;
+    *   - a SEGMENTED manifest first skips whole segments off the
+    *     manifest's aggregated bounds and layout-value universes
+    *     ([[SegPass]]) — metadata I/O ∝ the surviving segments — and
+    *     runs each surviving segment's files through the same
+    *     [[admits]].
+    * Files (or columns) without metadata are unprunable ⇒ always read,
+    * and a probed column no generation recorded simply never prunes —
+    * pruning may only ever widen the result, never drop a matching
+    * row. Pure log metadata: no directory listing, no footer reads;
+    * the caller still applies its precise predicate. */
+  def prune(root: String, version: Long, tree: ProbeTree): Pruned =
+    pruneOf(snapshot(root, version), tree)
+
+  private def pruneOf(sn: Snapshot, tree: ProbeTree): Pruned = sn.segmentRefs match {
+    case None =>
+      val (aux, node) = (sn.aux, nodeOf(tree))
+      val keep = sn.files.filter { f =>
+        val stats = aux.stats2.getOrElse(f, Map.empty[String, ColStat])
+        admits(aux.layoutOf(f),
+          p => stats.get(p.col).map(aux.statsTags.getOrElse(p.col, "long") -> _), node)
+      }
+      Pruned(keep, sn.files.size, 0, 0)
+    case Some(segs) =>
+      val pass = new SegPass(sn.root, segs, tree)
+      Pruned(pass.live.flatMap(pass.survivors(_, needRows = false).map(_.path)),
+        segs.map(_.nFiles).sum, segs.size, pass.live.size)
   }
 
-  private def prunedFilesOf(sn: Snapshot, tree: ProbeTree): Seq[String] = {
-    val aux = sn.aux
-    // normalize each node ONCE — the per-file loop must not rebuild
-    // file-independent maps per file per OR branch (r16 review find).
-    // NOTE: the segmented prune (SegNode/admits/admitsFile) mirrors
-    // this decision over segment-file metadata — a probe-semantics
-    // fix here MUST land there too.
-    final case class Node(want: Map[String, Set[String]],
-        veto: Map[String, Set[String]],
-        ranges: Seq[RangeProbe], ors: Seq[Seq[Node]])
-    def norm(t: ProbeTree): Node = Node(t.parts.toMap,
-      t.notParts.groupMapReduce(_._1)(_._2)(_ ++ _),
-      t.ranges, t.ors.map(_.map(norm)))
-    def admits(f: String, t: Node): Boolean = {
-      val want = t.want
-      val veto = t.veto
-      val layoutOk = aux.layoutOf(f) match {
-        case Some(pairs) => pairs.forall { case (c, v) =>
-          want.get(c).forall(_.contains(v)) && // unprobed columns pass
-            !veto.get(c).exists(_.contains(v))
-        }
-        case None => true // no entry: must read
-      }
-      val statsOk = t.ranges.forall { p =>
-        aux.stats2.get(f).flatMap(_.get(p.col)) match {
-          case None => true // no entry for this column: unprunable
-          case Some(st) =>
-            rangeOverlaps(aux.statsTags.getOrElse(p.col, "long"), st, p)
-        }
-      }
-      layoutOk && statsOk && t.ors.forall(_.exists(admits(f, _)))
+  /** [[prune]] as a scan: (a frame over the survivors, what the prune
+    * kept). Flat and segmented tables alike read through
+    * [[readSubset]] under the manifest's recorded schema (deletion
+    * vectors applied); an empty selection reads as the empty frame. A
+    * partition probe on a column NO generation records refuses — a
+    * typo would otherwise read everything silently (the SQL pushdown
+    * calls [[prune]] directly and stays permissive: it probes whatever
+    * columns a predicate mentions). The caller still applies its
+    * precise predicates — pruning is a pure metadata decision,
+    * correctness never depends on it. */
+  def prunedScan(s: SparkSession, root: String, version: Long,
+      tree: ProbeTree): (DataFrame, Pruned) = {
+    val sn = snapshot(root, version)
+    lazy val recorded = sn.segmentRefs match {
+      case Some(segs) => segs.flatMap(_.layoutValues.keySet).toSet
+      case None => sn.aux.partCol.toSeq.flatMap(_.split(',')).toSet ++
+        sn.aux.layouts.values.flatten.map(_._1)
     }
-    val normed = norm(tree)
-    sn.files.filter(admits(_, normed))
-  }
-
-  /** [[prunedFilesCombined]] as a scan: (df over the survivors,
-    * filesTotal, filesRead). The caller still applies its precise
-    * predicates — pruning is a pure metadata decision, correctness
-    * never depends on it. */
-  def prunedReadCombined(s: SparkSession, root: String, version: Long,
-      partProbes: Seq[(String, Set[String])],
-      rangeProbes: Seq[RangeProbe]): (DataFrame, Int, Int) = {
-    val sn = snapshot(root, version)
-    val keep = prunedFilesOf(sn, ProbeTree(partProbes, rangeProbes))
-    (keptScan(s, sn, keep), sn.files.size, keep.size)
+    tree.parts.foreach { case (c, _) =>
+      require(recorded.contains(c),
+        s"no generation of this table records partition column " +
+          s"'$c' (current spec: ${sn.aux.partCol.getOrElse("<none>")})")
+    }
+    val p = pruneOf(sn, tree)
+    val df = (p.files, sn.segmentRefs) match {
+      case (Nil, None) => read(s, root, version).limit(0)
+      // a pre-r17 segmented manifest records no schema: its empty
+      // frame takes the first data file's footer schema
+      case (Nil, Some(segs)) if sn.schema.isEmpty => s.read.parquet(new java.io.File(root,
+        segmentEntries(root, segs.head.path)._1.head).toString).limit(0)
+      case (keep, _) => readSubset(s, sn, keep.map(f => new java.io.File(root, f).toString))
+    }
+    (df, p)
   }
 
   /** Multi-dimensional cluster OPTIMIZE (r10, VERDICT r9 item 4) —
@@ -3267,8 +3207,8 @@ object CommitLog {
           // counts its rows per file, and the driver sums the counts
           val perFile =
             if (dv.isEmpty) Map.empty[String, Long]
-            else runJob(s, s.read.schema("f STRING")
-              .parquet(dv.map(f => new java.io.File(root, f).toString): _*),
+            else runJob(s, s.read.schema(DvSidecar.schema)
+              .parquet(dv.map(f => new java.io.File(root, f).toString): _*).select("f"),
               "vector counts", Tasks.countsOfFirst)
               .flatten.groupMapReduce(_._1)(_._2)(_ + _)
           val nRows = perFile.values.sum
@@ -3570,7 +3510,16 @@ object CommitLog {
 
   /** [[merge]] on a COMPOSITE key (r11): equality on EVERY column in
     * `keyCols` (`ON t.a = s.a AND t.b = s.b`); otherwise the
-    * single-key merge verbatim. */
+    * single-key merge verbatim.
+    *
+    * Its identity step stays apart from [[prepare]]: prepare allocates
+    * a fresh id for EVERY row and refuses a frame that carries the
+    * identity column, while a merge's MATCHED rows must keep the ids
+    * they recover from the target and only its UNMATCHED rows allocate.
+    * So the merge allocates for the unmatched rows, unions the matched
+    * ones back, and then runs the rest of prepare's checks itself —
+    * generated columns, the schema check and CHECK constraints — on the
+    * whole update frame, before anything stages. */
   def mergeKeyed(s: SparkSession, root: String, updates0: DataFrame,
       keyCols: Seq[String], nInsertFiles: Int,
       extraMeta: WriterMeta = WriterMeta(),
@@ -4268,32 +4217,22 @@ object CommitLog {
   def segmentPartCols(root: String, segPath: String): Option[String] =
     segmentFile(root, segPath).partCols
 
-  /** Segment refs of `version` surviving a BOUNDS-level prune under
-    * Long range probes on the segment stats column — the first level
-    * of the two-level skip, zero segment-file reads. Probes on other
-    * columns (or non-Long bounds) contribute nothing. */
-  def segmentsSurviving(root: String, version: Long,
-      probes: Seq[RangeProbe]): Seq[SegmentRef] =
-    segPrune(root, version, ProbeTree(Nil, probes))._2
-
-  /** [[segmentsSurviving]] under a full [[ProbeTree]] — the statistics
-    * estimate's segment-level decision (r18: layout probes prune
-    * segments there too, so a partition-filtered scan of a segmented
-    * table reports the surviving partitions' bytes and broadcasts when
-    * small). */
+  /** The segment refs of `version` surviving the SEGMENT-LEVEL pass
+    * of [[prune]] — the statistics estimate's decision (r18: layout
+    * probes prune segments there too, so a partition-filtered scan of
+    * a segmented table reports the surviving partitions' bytes and
+    * broadcasts when small). One manifest parse, zero segment-file
+    * reads beyond the first segment's stats column. */
   def segmentsSurvivingTree(root: String, version: Long,
       tree: ProbeTree): Seq[SegmentRef] =
-    segPrune(root, version, tree)._2
+    new SegPass(root, segmentsOf(root, version), tree).live
 
-  /** The shared SEGMENT-LEVEL prune decision (r18 — partition probes
-    * composed with the bounds prune, VERDICT item 1; extended to the
-    * FULL ProbeTree for consumption soundness): a segment survives
+  /** The two levels of a segmented snapshot's [[prune]] (r18 —
+    * partition probes composed with the bounds prune, VERDICT item 1;
+    * the FULL ProbeTree for consumption soundness). A segment survives
     * a node iff
-    *   - its aggregated stats bounds overlap every applicable range
-    *     probe (probes on the stats column with Long bounds; a
-    *     MIXED-stats legacy manifest's bounds belong to different
-    *     columns, so range probes contribute NOTHING there — r18
-    *     ADVICE, [[segmentStatsTrusted]]);
+    *   - its aggregated stats bounds overlap every range probe that can
+    *     use them ([[bound]]);
     *   - for every partition probe (column → accepted value set): its
     *     recorded layout-value universe intersects the set — a
     *     segment that records the column but shares no accepted value
@@ -4304,44 +4243,58 @@ object CommitLog {
     *     vetoed holds no admissible file — the universe covers every
     *     staged file's value by construction);
     *   - every OR group has at least one branch admitting it.
-    * Returns (all refs, surviving refs, the normalized root node) so
-    * the file-level pass ([[admitsFile]]) shares one decision.
-    * NOTE: SegNode/admits/admitsFile mirror the flat
-    * [[prunedFilesTree]]'s Node/admits semantics over different
-    * metadata carriers — a probe-semantics fix in one MUST land in
-    * the other (the flat side additionally handles typed/legacy
-    * stats tags; the segmented side reads layout entries and Long
-    * stats off segment files). */
-  private[sources] final case class SegNode(
-      want: Map[String, Set[String]], veto: Map[String, Set[String]],
-      ranges: Seq[RangeProbe], ors: Seq[Seq[SegNode]])
-  private def segPrune(root: String, version: Long, tree: ProbeTree)
-      : (Seq[SegmentRef], Seq[SegmentRef], SegNode) = {
-    // one manifest parse: the stats column and the trust flag both
-    // derive from these refs
-    val segs = segmentsOf(root, version)
-    val statsCol = statsColOfSegments(root, segs)
-    lazy val trusted = statsTrustedOfSegments(root, segs)
-    def rangesOf(rs: Seq[RangeProbe]): Seq[RangeProbe] = {
-      val ps = rs.filter(p => statsCol.contains(p.col) &&
-        p.lo.forall(_.isInstanceOf[Long]) && p.hi.forall(_.isInstanceOf[Long]))
-      if (ps.nonEmpty && !trusted) Nil else ps
+    * Inside a surviving segment each file goes through the flat path's
+    * [[admits]], with its own layout entry and stats-column bounds. */
+  private final class SegPass(root: String, segs: Seq[SegmentRef], tree: ProbeTree) {
+    private val statsCol = statsColOfSegments(root, segs)
+    private lazy val trusted = statsTrustedOfSegments(root, segs)
+    private val node = nodeOf(tree)
+
+    /** A segment's (or one of its files') stats-column bounds as the
+      * "long" stat a range probe compares against — only for a probe
+      * on THE stats column with Long bounds, and only when the
+      * segments' bounds are one column's (a MIXED-stats legacy
+      * manifest's bounds belong to different columns — r18 ADVICE,
+      * [[segmentStatsTrusted]]). Anything else cannot prune. */
+    private def bound(b: Option[(Long, Long)])(p: RangeProbe): Option[(String, ColStat)] =
+      if (statsCol.contains(p.col) && p.lo.forall(_.isInstanceOf[Long]) &&
+          p.hi.forall(_.isInstanceOf[Long]) && trusted)
+        b.map { case (lo, hi) => "long" -> ColStat(Some(lo), Some(hi), None) }
+      else None
+
+    private def segAdmits(sr: SegmentRef, n: Node): Boolean =
+      n.ranges.forall(p => bound(sr.bounds)(p).forall { case (tag, st) =>
+        rangeOverlaps(tag, st, p) }) &&
+        n.want.forall { case (c, vs) =>
+          sr.layoutValues.get(c).forall(u => (u intersect vs).nonEmpty)
+        } && n.veto.forall { case (c, vs) =>
+          sr.layoutValues.get(c).forall(u => (u -- vs).nonEmpty)
+        } && n.ors.forall(_.exists(segAdmits(sr, _)))
+
+    val live: Seq[SegmentRef] = segs.filter(segAdmits(_, node))
+
+    /** One surviving segment's admitted files. The rows and layout
+      * maps are O(files-per-segment) Scala builds off the cached
+      * JsonNode, so they materialize only when a consumer needs them
+      * (r18 review find: the plain pruned-listing path — run per
+      * planning invocation — needs neither rows nor, absent partition/
+      * exclusion/OR probes, layouts). */
+    def survivors(sr: SegmentRef, needRows: Boolean,
+        needLayouts: Boolean = false): Seq[SegEntry] = {
+      val (fs, st) = segmentEntries(root, sr.path)
+      val rows =
+        if (needRows) segmentEntryRows(root, sr.path)
+        else Map.empty[String, Long]
+      val lay =
+        if (needLayouts || node.want.nonEmpty || node.veto.nonEmpty ||
+            node.ors.nonEmpty)
+          segmentLayouts(root, sr.path)
+        else Map.empty[String, Seq[(String, String)]]
+      fs.flatMap { f =>
+        val e = SegEntry(f, rows.get(f), st.get(f), lay.get(f))
+        if (admits(e.layout, bound(e.stat), node)) Some(e) else None
+      }
     }
-    def norm(t: ProbeTree): SegNode = SegNode(
-      t.parts.groupMapReduce(_._1)(_._2)(_ intersect _),
-      t.notParts.groupMapReduce(_._1)(_._2)(_ ++ _),
-      rangesOf(t.ranges), t.ors.map(_.map(norm)))
-    val node = norm(tree)
-    def admits(sr: SegmentRef, n: SegNode): Boolean =
-      sr.bounds.forall { case (mn, mx) =>
-        n.ranges.forall(p => p.lo.forall(lo => mx >= lo.asInstanceOf[Long]) &&
-          p.hi.forall(hi => mn <= hi.asInstanceOf[Long]))
-      } && n.want.forall { case (c, vs) =>
-        sr.layoutValues.get(c).forall(u => (u intersect vs).nonEmpty)
-      } && n.veto.forall { case (c, vs) =>
-        sr.layoutValues.get(c).forall(u => (u -- vs).nonEmpty)
-      } && n.ors.forall(_.exists(admits(sr, _)))
-    (segs, segs.filter(admits(_, node)), node)
   }
 
   /** `COUNT(*)` of a segmented version from the VERSION MANIFEST alone
@@ -4398,23 +4351,43 @@ object CommitLog {
     Some((keep.result(), segs.map(_.nFiles).sum, opened))
   }
 
+  /** THE TopN bound envelope (r15 flat, r18 segmented — one helper
+    * for the flat scan and both segmented levels): sort `items` by
+    * their relevant bound (the upper bound ascending for ASC, the
+    * lower bound descending for DESC), prefix-cover `n` rows, and keep
+    * every item whose range reaches the prefix's cutoff — an item
+    * strictly past the cutoff cannot hold any of the global top n.
+    * Descending sorts by `ord.reverse`, never by negation:
+    * -Long.MinValue overflows back to MinValue and would sort a
+    * MinValue-bounded file as the LARGEST, planning an envelope that
+    * excludes files holding true top-n rows (r18 review find). Returns
+    * the kept items in sort order; refusal rules are the caller's. */
+  private[sources] def topNEnvelope[A, B](items: Seq[A], n: Long, asc: Boolean,
+      ord: Ordering[B])(lo: A => B, hi: A => B, rows: A => Long): Seq[A] = {
+    val sorted = if (asc) items.sortBy(hi)(ord) else items.sortBy(lo)(ord.reverse)
+    val cum = sorted.scanLeft(0L)((a, x) => a + rows(x)).tail
+    cum.indexWhere(_ >= n) match {
+      case k if k < 0 || k + 1 >= sorted.size => sorted
+      case k =>
+        val cutoff = if (asc) hi(sorted(k)) else lo(sorted(k))
+        sorted.filter(x => if (asc) ord.lteq(lo(x), cutoff) else ord.gteq(hi(x), cutoff))
+    }
+  }
+
   /** The TopN (`ORDER BY statsCol [DESC] LIMIT n`) file plan of a
-    * segmented version as a TWO-LEVEL bound-envelope decision (r18,
-    * VERDICT item 4 — the flat path's r15 TopN, lifted to segments):
-    * LEVEL 1 sorts the SEGMENT refs by their relevant aggregated
-    * bound, prefix-covers n rows off the manifest's per-segment row
-    * totals, and keeps every segment overlapping the boundary
-    * segment's bound — segments strictly past the cutoff cannot hold
-    * any of the global top n, and are never OPENED at all; LEVEL 2
-    * runs the same envelope over the kept segments' per-file stats and
-    * row counts. Exact-or-refuse: every segment must carry the r17/r18
-    * markers (nRows, bounds, nNulls == 0 — a NULL sorts outside the
-    * recorded bounds, so any null refuses like the flat path), `c`
-    * must be THE stats column, and every opened file needs stats +
-    * rows. Returns (planned relative paths, filesTotal, segments
-    * opened); None refuses and the scan plans everything. Callers
-    * guarantee no filters (Spark never pushes TopN past a residual;
-    * guarded anyway). */
+    * segmented version as a TWO-LEVEL [[topNEnvelope]] (r18, VERDICT
+    * item 4 — the flat path's r15 TopN, lifted to segments): LEVEL 1
+    * runs the envelope over the SEGMENT refs' aggregated bounds and
+    * the manifest's per-segment row totals — segments strictly past
+    * the cutoff are never OPENED at all; LEVEL 2 runs it over the kept
+    * segments' per-file stats and row counts. Exact-or-refuse: every
+    * segment must carry the r17/r18 markers (nRows, bounds, nNulls ==
+    * 0 — a NULL sorts outside the recorded bounds, so any null refuses
+    * like the flat path), `c` must be THE stats column, and every
+    * opened file needs stats + rows. Returns (planned relative paths,
+    * filesTotal, segments opened); None refuses and the scan plans
+    * everything. Callers guarantee no filters (Spark never pushes TopN
+    * past a residual; guarded anyway). */
   def segmentedTopNFiles(root: String, version: Long, c: String,
       asc: Boolean, n: Int): Option[(Seq[String], Int, Int)] = {
     val segs = segmentsOf(root, version)
@@ -4422,54 +4395,23 @@ object CommitLog {
     if (!segs.forall(sr => sr.nRows.isDefined && sr.bounds.isDefined &&
         sr.nNulls.contains(0L))) return None
     if (!segmentStatsCol(root, version).contains(c)) return None
-    // level 1: segment envelope off the manifest alone
-    // descending via Ordering.reverse, never negation: -Long.MinValue
-    // overflows back to MinValue and would sort a MinValue-bounded
-    // file as the LARGEST, planning an envelope that excludes files
-    // holding true top-n rows (r18 review find)
-    val sorted =
-      if (asc) segs.sortBy(_.bounds.get._2)
-      else segs.sortBy(_.bounds.get._1)(Ordering.Long.reverse)
-    val cum = sorted.scanLeft(0L)((a, sr) => a + sr.nRows.get).tail
-    val k = cum.indexWhere(_ >= n) match {
-      case -1 => sorted.size
-      case i => i + 1
-    }
-    val keepSegs =
-      if (k >= sorted.size) sorted
-      else {
-        val cutoff =
-          if (asc) sorted(k - 1).bounds.get._2 else sorted(k - 1).bounds.get._1
-        sorted.filter(sr =>
-          if (asc) sr.bounds.get._1 <= cutoff else sr.bounds.get._2 >= cutoff)
-      }
-    // level 2: per-file envelope inside the opened segments
+    val keepSegs = topNEnvelope(segs, n, asc, Ordering.Long)(
+      _.bounds.get._1, _.bounds.get._2, _.nRows.get)
     val files = keepSegs.flatMap { sr =>
       val (fs, st) = segmentEntries(root, sr.path)
       val rows = segmentEntryRows(root, sr.path)
-      fs.map(f => (f, st.get(f), rows.get(f)))
+      fs.map(f => SegEntry(f, rows.get(f), st.get(f), None))
     }
-    if (files.exists(t => t._2.isEmpty || t._3.isEmpty)) return None
-    val fsorted =
-      if (asc) files.sortBy(_._2.get._2)
-      else files.sortBy(_._2.get._1)(Ordering.Long.reverse)
-    val fcum = fsorted.scanLeft(0L)((a, t) => a + t._3.get).tail
-    val fk = fcum.indexWhere(_ >= n) match {
-      case -1 => fsorted.size
-      case i => i + 1
-    }
-    val keep =
-      if (fk >= fsorted.size) fsorted.map(_._1)
-      else {
-        val cutoff =
-          if (asc) fsorted(fk - 1)._2.get._2 else fsorted(fk - 1)._2.get._1
-        fsorted.collect {
-          case (f, Some((lo, hi)), _)
-              if (asc && lo <= cutoff) || (!asc && hi >= cutoff) => f
-        }
-      }
-    Some((keep, segs.map(_.nFiles).sum, keepSegs.size))
+    if (files.exists(e => e.stat.isEmpty || e.rows.isEmpty)) return None
+    Some((fileTopN(files, n, asc), segs.map(_.nFiles).sum, keepSegs.size))
   }
+
+  /** The per-file level of the segmented TopN: the envelope over the
+    * entries' stats-column bounds and row counts (every entry carries
+    * both — the callers refuse otherwise). */
+  private def fileTopN(files: Seq[SegEntry], n: Int, asc: Boolean): Seq[String] =
+    topNEnvelope(files, n, asc, Ordering.Long)(
+      _.stat.get._1, _.stat.get._2, _.rows.get).map(_.path)
 
   /** `COUNT(statsCol)` of a segmented version from the VERSION
     * MANIFEST alone (r18, VERDICT item 4): Σ(nRows − nNulls) over the
@@ -4647,104 +4589,27 @@ object CommitLog {
     segs.forall(_.nRows.isDefined) ||
       segs.map(sr => segmentStatsColOf(root, sr.path)).distinct.size <= 1
 
-  /** Two-level pruned FILE LISTING of a segmented version under
-    * Long range probes on the segment stats column (r16 — the SQL
-    * catalog's planning path over segmented manifests): segments
-    * whose aggregated bounds miss every probe are skipped WITHOUT
-    * reading their per-file entries, surviving segments prune again
-    * per file. Probes on other columns (or non-Long bounds)
-    * contribute nothing — pruning only ever widens. Returns
-    * (surviving relative paths, filesTotal, segsTotal, segsRead);
-    * filesTotal comes from the manifest's per-segment counts, so a
-    * no-probe listing still reads only the surviving segments'
-    * entries. */
-  def segmentedPrunedFiles(root: String, version: Long,
-      probes: Seq[RangeProbe]): (Seq[String], Int, Int, Int) =
-    segmentedPrunedFilesTree(root, version, ProbeTree(Nil, probes))
-
-  /** [[segmentedPrunedFiles]] generalized to a [[ProbeTree]] (r18,
-    * VERDICT item 1): the two-level skip now intersects BOTH metadata
-    * sources at BOTH levels — segment bounds AND layout-value
-    * universes decide which segment files open at all
-    * ([[segPrune]]), then per-file stats AND per-file layout entries
-    * prune inside the survivors. On the 10^6-file partitioned+
-    * segmented table a `WHERE day = '3'` plans metadata ∝ the
-    * surviving segments, never the listing. Files/segments without
-    * the probed metadata stay unprunable (pre-r18 refs keep reading
-    * everything — pruning only ever widens). EXCLUSION probes and OR
-    * groups are ENFORCED at both levels (late r18 — the basis for
-    * segmented consumption): see [[segPrune]] and [[admitsFile]]. */
-  def segmentedPrunedFilesTree(root: String, version: Long,
-      tree: ProbeTree): (Seq[String], Int, Int, Int) = {
-    val (segs, live, node) = segPrune(root, version, tree)
-    val keep = live.flatMap(sr =>
-      segSurvivorsOf(root, sr, node, needRows = false).map(_._1))
-    (keep, segs.map(_.nFiles).sum, segs.size, live.size)
-  }
-
-  /** One entry of a pruned segmented listing: relative path, footer
+  /** One admitted file of a segmented prune: relative path, footer
     * row count, stats-column [lo, hi], layout pairs — whatever the
-    * file's segment recorded (None/Nil where it did not). */
+    * file's segment recorded (None where it did not, or where the
+    * consumer did not ask for it). */
   final case class SegEntry(path: String, rows: Option[Long],
       stat: Option[(Long, Long)], layout: Option[Seq[(String, String)]])
 
-  /** The two-level pruned listing WITH each survivor's per-file
-    * metadata, grouped by surviving segment (r18 — the filtered/
-    * grouped segmented metadata aggregates fold rows/stats/layouts of
-    * exactly the surviving files, so they need the entries the prune
-    * already read; returning them here keeps it ONE segment read).
-    * File-level semantics mirror [[prunedFilesTree]]'s admits: every
-    * partition probe and exclusion evaluates against the file's OWN
-    * layout entry (no entry ⇒ unprunable), ranges against its stats,
-    * OR groups need one admitting branch. */
-  private def admitsFile(e: SegEntry, n: SegNode): Boolean = {
-    val layoutOk = e.layout match {
-      case Some(pairs) => pairs.forall { case (c, v) =>
-        n.want.get(c).forall(_.contains(v)) &&
-          !n.veto.get(c).exists(_.contains(v))
-      }
-      case None => true // no entry: must read
-    }
-    val statsOk = e.stat.forall { case (mn, mx) =>
-      n.ranges.forall(p => p.lo.forall(lo => mx >= lo.asInstanceOf[Long]) &&
-        p.hi.forall(hi => mn <= hi.asInstanceOf[Long]))
-    }
-    layoutOk && statsOk && n.ors.forall(_.exists(admitsFile(e, _)))
-  }
-
-  /** One surviving segment's per-file entries. The rows and layout
-    * maps are O(files-per-segment) Scala builds off the cached
-    * JsonNode, so they materialize only when a consumer needs them
-    * (r18 review find: the plain pruned-listing path — run per
-    * planning invocation — needs neither rows nor, absent partition/
-    * exclusion/OR probes, layouts). */
-  private def segSurvivorsOf(root: String, sr: SegmentRef,
-      node: SegNode, needRows: Boolean,
-      needLayouts: Boolean = false): Seq[(String, SegEntry)] = {
-    val (fs, st) = segmentEntries(root, sr.path)
-    val rows =
-      if (needRows) segmentEntryRows(root, sr.path)
-      else Map.empty[String, Long]
-    val lay =
-      if (needLayouts || node.want.nonEmpty || node.veto.nonEmpty ||
-          node.ors.nonEmpty)
-        segmentLayouts(root, sr.path)
-      else Map.empty[String, Seq[(String, String)]]
-    fs.flatMap { f =>
-      val e = SegEntry(f, rows.get(f), st.get(f), lay.get(f))
-      if (admitsFile(e, node)) Some(f -> e) else None
-    }
-  }
-
+  /** [[prune]]'s segmented survivors WITH each one's per-file metadata
+    * (r18 — the filtered/grouped segmented metadata aggregates and the
+    * filtered TopN fold rows/stats/layouts of exactly the surviving
+    * files, so they need the entries the prune already read; returning
+    * them here keeps it ONE segment read): (all refs, surviving refs,
+    * admitted entries). */
   private[sources] def segmentedSurvivors(root: String, version: Long,
-      tree: ProbeTree): (Seq[SegmentRef], Seq[SegmentRef],
-      Seq[(SegmentRef, Seq[(String, SegEntry)])]) = {
-    val (segs, live, node) = segPrune(root, version, tree)
+      tree: ProbeTree): (Seq[SegmentRef], Seq[SegmentRef], Seq[SegEntry]) = {
+    val segs = segmentsOf(root, version)
+    val pass = new SegPass(root, segs, tree)
     // layouts always materialize here: the aggregate consumer groups
     // survivors by their layout tuples even when no probe is in play
-    (segs, live, live.map(sr =>
-      sr -> segSurvivorsOf(root, sr, node, needRows = true,
-        needLayouts = true)))
+    (segs, pass.live, pass.live.flatMap(pass.survivors(_, needRows = true,
+      needLayouts = true)))
   }
 
   /** The FILTERED segmented LIMIT prefix (r18 — consumed filters
@@ -4760,18 +4625,18 @@ object CommitLog {
     * pre-r17 refs). */
   def segmentedLimitFilesTree(root: String, version: Long, n: Int,
       tree: ProbeTree): Option[(Seq[String], Int, Int)] = {
-    val (segs, live, node) = segPrune(root, version, tree)
+    val segs = segmentsOf(root, version)
+    val pass = new SegPass(root, segs, tree)
     val keep = Seq.newBuilder[String]
     var cum = 0L
     var opened = 0
-    val it = live.iterator
+    val it = pass.live.iterator
     while (cum < n && it.hasNext) {
       val sr = it.next()
       opened += 1
-      for ((f, e) <- segSurvivorsOf(root, sr, node, needRows = true)
-          if cum < n) {
+      for (e <- pass.survivors(sr, needRows = true) if cum < n) {
         e.rows match {
-          case Some(r) => keep += f; cum += r
+          case Some(r) => keep += e.path; cum += r
           case None => return None // pre-r17 entry: unknown rows
         }
       }
@@ -4781,72 +4646,19 @@ object CommitLog {
 
   /** The FILTERED segmented TopN envelope (r18): consumed filters
     * narrow the candidate set to the surviving files, then the same
-    * per-file bound-envelope the unfiltered form runs at level 2
-    * sizes the plan. Exact-or-refuse: `c` must be THE stats column,
-    * every CONTRIBUTING (universe-surviving) segment needs the
-    * r17/r18 markers with ZERO nulls, every survivor needs stats +
-    * rows. Returns (planned relative paths, filesTotal, segments
-    * opened). */
+    * per-file envelope the unfiltered form runs at level 2 sizes the
+    * plan. Exact-or-refuse: `c` must be THE stats column, every
+    * CONTRIBUTING (universe-surviving) segment needs the r17/r18
+    * markers with ZERO nulls, every survivor needs stats + rows.
+    * Returns (planned relative paths, filesTotal, segments opened). */
   def segmentedTopNFilesTree(root: String, version: Long, c: String,
       asc: Boolean, n: Int, tree: ProbeTree): Option[(Seq[String], Int, Int)] = {
     if (!segmentStatsCol(root, version).contains(c)) return None
-    val (segs, live, keepBySeg) = segmentedSurvivors(root, version, tree)
+    val (segs, live, files) = segmentedSurvivors(root, version, tree)
     if (!live.forall(sr => sr.nRows.isDefined && sr.nNulls.contains(0L)))
       return None
-    val files = keepBySeg.flatMap(_._2.map(_._2))
     if (files.exists(e => e.stat.isEmpty || e.rows.isEmpty)) return None
-    val fsorted =
-      if (asc) files.sortBy(_.stat.get._2)
-      else files.sortBy(_.stat.get._1)(Ordering.Long.reverse)
-    val fcum = fsorted.scanLeft(0L)((a, e) => a + e.rows.get).tail
-    val fk = fcum.indexWhere(_ >= n) match {
-      case -1 => fsorted.size
-      case i => i + 1
-    }
-    val keep =
-      if (fk >= fsorted.size) fsorted.map(_.path)
-      else {
-        val cutoff =
-          if (asc) fsorted(fk - 1).stat.get._2 else fsorted(fk - 1).stat.get._1
-        fsorted.collect {
-          case e if (asc && e.stat.get._1 <= cutoff) ||
-            (!asc && e.stat.get._2 >= cutoff) => e.path
-        }
-      }
-    Some((keep, segs.map(_.nFiles).sum, live.size))
-  }
-
-  /** Two-level pruned scan of a segmented version: segments whose
-    * aggregated bounds miss [lo, hi] are skipped WITHOUT reading their
-    * per-file entries (plan-time metadata I/O ∝ surviving segments);
-    * within a surviving segment the per-file stats prune again.
-    * Stat-less segments/files are unprunable ⇒ always read. Returns
-    * (df, segsTotal, segsRead, filesTotal, filesRead) — filesTotal
-    * comes from the manifest's per-segment counts, so reporting it
-    * costs no segment reads. Pruning is pure metadata: the caller
-    * still applies its precise predicate. */
-  def segmentedPrunedRead(s: SparkSession, root: String, version: Long,
-      lo: Long, hi: Long): (DataFrame, Int, Int, Int, Int) = {
-    val segs = segmentsOf(root, version)
-    // mixed-stats legacy manifest (r18, ADVICE): the per-segment
-    // bounds are not one column's — nothing may prune
-    val trusted = segmentStatsTrusted(root, version)
-    val live =
-      if (!trusted) segs
-      else segs.filter(_.bounds.forall { case (mn, mx) => mx >= lo && mn <= hi })
-    val keep = live.flatMap { sr =>
-      val (fs, stats) = segmentEntries(root, sr.path)
-      if (!trusted) fs
-      else fs.filter(f =>
-        stats.get(f).forall { case (mn, mx) => mx >= lo && mn <= hi })
-    }
-    val df =
-      if (keep.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          s.read.parquet(new java.io.File(root,
-            segmentEntries(root, segs.head.path)._1.head).toString).schema)
-      else s.read.parquet(keep.map(f => new java.io.File(root, f).toString): _*)
-    (df, segs.size, live.size, segs.map(_.nFiles).sum, keep.size)
+    Some((fileTopN(files, n, asc), segs.map(_.nFiles).sum, live.size))
   }
 
   private[sources] def relativize(root: String, abs: String): String =

@@ -527,7 +527,7 @@ class GraftCatalogTable(root: String, version: Long, tblName: String,
 }
 
 /** One pinned catalog scan (r15, VERDICT item 2): plans the manifest
-  * file list THROUGH [[CommitLog.prunedFilesCombined]] — the pushed
+  * file list THROUGH [[CommitLog.prune]] — the pushed
   * filters (translated to layout-value and typed-range probes) and
   * any RUNTIME filters Spark injects (dynamic partition pruning: the
   * join's build side arrives as an `IN` on a filterable column)
@@ -572,20 +572,13 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
   private lazy val segmented = CommitLog.isSegmented(root, version)
   @volatile private var runtime: Array[Filter] = Array.empty
 
-  /** The probe-pruned survivor listing for `filters` — flat manifests
-    * evaluate the full ProbeTree per file; segmented manifests run the
-    * TWO-LEVEL prune on both metadata sources (r18: segment bounds AND
-    * layout-value universes skip whole segments, per-file stats AND
-    * layout entries prune inside the survivors; exclusions/ORs
-    * contribute nothing there). Every caller (planning, statistics,
-    * accounting, EXPLAIN) shares this one decision. */
+  /** The probe-pruned survivor listing for `filters` — the ONE
+    * [[CommitLog.prune]] decision (segmented manifests skip whole
+    * segments first, r18). Every caller (planning, statistics,
+    * accounting, EXPLAIN) shares it. */
   private def prunedKeep(filters: Seq[Filter]): (Seq[String], Int) = {
-    val probes = GraftFilterPushdown.translate(filters, meta)
-    if (segmented) {
-      val (keep, total, _, _) =
-        CommitLog.segmentedPrunedFilesTree(root, version, probes.tree)
-      (keep, total)
-    } else CommitLog.prunedFilesTree(root, version, probes.tree)
+    val p = CommitLog.prune(root, version, GraftFilterPushdown.translate(filters, meta).tree)
+    (p.files, p.filesTotal)
   }
 
   /** A file's LIVE row count (r16, VERDICT item 7): the footer count
@@ -804,8 +797,7 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
     }
     if (convs.exists(_.isEmpty)) return None
     val keyConvs = convs.flatten
-    val probes = GraftFilterPushdown.translate(filters, meta)
-    val (keep, _) = CommitLog.prunedFilesTree(root, version, probes.tree)
+    val keep = prunedKeep(filters)._1
     val aux = auxCached
     val entries = keep.map { f =>
       aux.layoutOf(f) match {
@@ -916,35 +908,18 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
         keep0.zip(cumBefore).takeWhile(_._2 < n).map(_._1)
       case _ => keep0
     }
-    // pushed TopN (r15; r16 DV-aware): sort survivors by the order
-    // column's relevant bound, prefix-cover n LIVE rows, keep every
-    // file whose range overlaps the prefix's cutoff — a file strictly
-    // past the cutoff cannot contain any of the global top n. Exact
-    // only under zero recorded nulls (live nulls can only be fewer)
-    // and known live counts; recorded bounds stay valid under masking
-    // (possibly loose — a wider envelope only widens the read).
+    // pushed TopN (r15; r16 DV-aware): the bound envelope over the
+    // survivors' order-column stats and LIVE row counts, in listing
+    // order. Exact only under zero recorded nulls (live nulls can only
+    // be fewer) and known live counts; recorded bounds stay valid under
+    // masking (possibly loose — a wider envelope only widens the read).
     val keep = pushedTopN match {
       case Some((c, asc, n)) if topnEligible(c, keep1, aux) =>
-        val ord = GraftFilterPushdown.ordOf(aux.statsTags(c))
-        val st = keep1.map(f => f -> aux.stats2(f)(c))
-        val sorted =
-          if (asc) st.sortBy(_._2.hi.get)(ord)
-          else st.sortBy(_._2.lo.get)(ord.reverse)
-        val cum = sorted.scanLeft(0L)((a, p) => a + liveRows(aux, p._1).get).tail
-        val k = cum.indexWhere(_ >= n) match {
-          case -1 => sorted.size
-          case i => i + 1
-        }
-        if (k >= sorted.size) keep1
-        else {
-          val cutoff =
-            if (asc) sorted(k - 1)._2.hi.get else sorted(k - 1)._2.lo.get
-          val keepSet = st.collect {
-            case (f, s) if (asc && ord.lteq(s.lo.get, cutoff)) ||
-              (!asc && ord.gteq(s.hi.get, cutoff)) => f
-          }.toSet
-          keep1.filter(keepSet)
-        }
+        val st = (f: String) => aux.stats2(f)(c)
+        val kept = CommitLog.topNEnvelope(keep1, n, asc,
+          GraftFilterPushdown.ordOf(aux.statsTags(c)))(
+          st(_).lo.get, st(_).hi.get, liveRows(aux, _).get).toSet
+        keep1.filter(kept)
       case _ => keep1
     }
     (total, keep)

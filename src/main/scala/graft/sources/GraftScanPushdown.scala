@@ -14,7 +14,7 @@ import org.apache.spark.sql.sources._
   *     `<=`, `>`, `>=`, `IN` as a [min,max] envelope, `IS NOT NULL`
   *     against all-NULL files);
   *
-  * which [[CommitLog.prunedFilesCombined]] INTERSECTS, so a
+  * which [[CommitLog.prune]] INTERSECTS, so a
   * `SELECT ... WHERE day = '3' AND event_id <= k` on a catalog table
   * plans only the files both sources admit. Pruning here is always
   * file-level and advisory: `pushFilters` returns EVERY filter as a
@@ -780,8 +780,7 @@ object GraftAggPushdown {
       if (consumed.isEmpty) files0
       else {
         val meta = GraftFilterPushdown.pruneMetaOf(root, version)
-        val probes = GraftFilterPushdown.translate(consumed, meta)
-        CommitLog.prunedFilesTree(root, version, probes.tree)._1
+        CommitLog.prune(root, version, GraftFilterPushdown.translate(consumed, meta).tree).files
       }
     val aux = CommitLog.auxOf(root, version)
     // deletion-vector posture (r16, VERDICT item 7): COUNT(*) stays
@@ -1000,8 +999,7 @@ object GraftAggPushdown {
         case _ => None
       }
     val probes = GraftFilterPushdown.translate(consumed, meta)
-    val entries = CommitLog.segmentedSurvivors(root, version, probes.tree)
-      ._3.flatMap(_._2.map(_._2))
+    val entries = CommitLog.segmentedSurvivors(root, version, probes.tree)._3
     // groups over the survivors (Nil key = the global filtered form)
     val groups: Seq[(Seq[Any], Seq[CommitLog.SegEntry])] =
       if (gcols.isEmpty) Seq((Nil, entries))

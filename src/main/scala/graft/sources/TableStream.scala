@@ -552,16 +552,20 @@ class TableFileReaderFactory(schema: StructType) extends PartitionReaderFactory 
     }
 }
 
-/** Loads a file's deletion-vector entries from dv/ sidecars (columns
-  * f: data file name, i: physical row index) into a skip set — DV
-  * volume ∝ deleted rows, executor-local and per-file. */
+/** The deletion-vector sidecar layout and its task-side reader. */
 object DvSidecar {
+  /** THE layout of a dv/ sidecar — f: data file name, i: physical row
+    * index. Every reader passes it, so no read of a sidecar infers a
+    * schema from a footer (a Spark job at plan time). */
+  val schema: StructType = StructType(Seq(
+    StructField("f", StringType), StructField("i", LongType)))
+
+  /** A file's deletion-vector entries as a skip set — DV volume ∝
+    * deleted rows, executor-local and per-file. */
   def skipSet(dvPaths: Seq[String], fileName: String): java.util.HashSet[java.lang.Long] = {
     val out = new java.util.HashSet[java.lang.Long]()
-    val dvSchema = StructType(Seq(
-      StructField("f", StringType), StructField("i", LongType)))
     dvPaths.foreach { dv =>
-      val r = new GroupParquetReader(dv, dvSchema)
+      val r = new GroupParquetReader(dv, schema)
       try {
         while (r.next()) {
           val row = r.get()

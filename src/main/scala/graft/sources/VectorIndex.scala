@@ -170,7 +170,8 @@ object VectorIndex {
   /** The LIVE postings at the index head: the assigned table with
     * tombstoned generations masked out (one anti join against the
     * tombstone set — ∝ deleted rows until [[purge]] retires them).
-    * Callers prune cells FIRST (partitionPrunedRead on `assigned`)
+    * Callers prune cells FIRST (a `cell` probe through
+    * [[CommitLog.prunedScan]] on `assigned`)
     * and mask the survivors via [[maskTombstones]] — this full-table
     * form exists for rebuild-equality checks and purge. */
   def postings(s: SparkSession, indexRoot: String): DataFrame =

@@ -173,8 +173,9 @@ class CatalogSpec extends SparkSpec {
     val head = CommitLog.latestVersion(root).get
     // manifests carry per-file partition values: pruning to 'a' reads
     // exactly the 'a' files, from log metadata alone
-    val (pruned, total, read) =
-      CommitLog.partitionPrunedRead(spark, root, head, "cat_col", Seq("a"))
+    val (pruned, p) =
+      CommitLog.prunedScan(spark, root, head, CommitLog.ProbeTree(Seq("cat_col" -> Set("a")), Nil))
+    val (total, read) = (p.filesTotal, p.files.size)
     assert(total === 4 && read === 2,
       s"expected 4 files (a,b from v1; c,a from v2) with 2 'a' files, got $total/$read")
     assert(pruned.count() === 3)
@@ -193,14 +194,15 @@ class CatalogSpec extends SparkSpec {
     val root2 = new java.io.File(base, "pt2").toString
     assert(CommitLog.tableProperty(root2, "partitionColumn") === Some("a,b"))
     val head2 = CommitLog.latestVersion(root2).get
-    val (dfM, total2, read2) = CommitLog.partitionPrunedReadMulti(spark, root2,
-      head2, Seq("a" -> Seq("x"), "b" -> Seq("p")))
+    val (dfM, p2) = CommitLog.prunedScan(spark, root2, head2,
+      CommitLog.ProbeTree(Seq("a" -> Set("x"), "b" -> Set("p")), Nil))
+    val (total2, read2) = (p2.filesTotal, p2.files.size)
     assert(total2 === 4 && read2 === 1,
       s"composite catalog table must prune to the tuple file ($read2 of $total2)")
     assert(dfM.filter(col("a") === "x" && col("b") === "p").count() === 2)
     // a single-column probe intersects: both b-values of a='x' read
-    val (_, _, readA) = CommitLog.partitionPrunedRead(spark, root2,
-      head2, "a", Seq("x"))
+    val readA = CommitLog.prune(root2, head2,
+      CommitLog.ProbeTree(Seq("a" -> Set("x")), Nil)).files.size
     assert(readA === 2, s"a-only probe read $readA (want x's two tuple files)")
   }
 
@@ -305,8 +307,9 @@ class CatalogSpec extends SparkSpec {
       "SELECT * FROM ctas_spec_src WHERE event_id % 3 = 0")
     val proot = new java.io.File(base, "cp").toString
     val types = expect.select("event_type").distinct().count()
-    val (pdf, total, nRead) = CommitLog.partitionPrunedRead(spark, proot,
-      CommitLog.latestVersion(proot).get, "event_type", Seq("click"))
+    val (pdf, p) = CommitLog.prunedScan(spark, proot, CommitLog.latestVersion(proot).get,
+      CommitLog.ProbeTree(Seq("event_type" -> Set("click")), Nil))
+    val (total, nRead) = (p.filesTotal, p.files.size)
     assert(total === types && nRead === 1,
       s"partitioned CTAS must stage one file per partition value ($total/$nRead)")
     assert(pdf.filter(col("event_type") === "click").count() ===
@@ -1359,10 +1362,9 @@ class CatalogSpec extends SparkSpec {
       ev.filter(col("day") === "3" && col("event_id") <= m / 2).count())
     // the API-level unification sees the same intersection
     val head = CommitLog.latestVersion(root).get
-    val (dfC, total, readC) = CommitLog.prunedReadCombined(spark, root, head,
-      Seq("day" -> Set("3")),
-      Seq(CommitLog.RangeProbe("event_id", None, Some(m / 2))))
-    assert(total === 14 && readC === 1)
+    val (dfC, pC) = CommitLog.prunedScan(spark, root, head, CommitLog.ProbeTree(
+      Seq("day" -> Set("3")), Seq(CommitLog.RangeProbe("event_id", None, Some(m / 2)))))
+    assert(pC.filesTotal === 14 && pC.files.size === 1)
     assert(dfC.filter(col("day") === "3" && col("event_id") <= m / 2).count() === q.count())
   }
 
@@ -2500,8 +2502,8 @@ class CatalogSpec extends SparkSpec {
     assert(gen2 >= 2, s"want several bucket files, got $gen2")
     // a day probe prunes gen-1 to day=3; gen-2 files never recorded
     // day — unprunable, all kept
-    val (_, t1, read1) = CommitLog.partitionPrunedReadMulti(spark, root, head,
-      Seq("day" -> Seq("3")))
+    val p1 = CommitLog.prune(root, head, CommitLog.ProbeTree(Seq("day" -> Set("3")), Nil))
+    val (t1, read1) = (p1.filesTotal, p1.files.size)
     assert(t1 === total && read1 === 1 + gen2,
       s"day probe: want ${1 + gen2} of $total, got $read1")
     // a user point probe through SQL prunes gen-2 to ONE bucket;
@@ -2980,9 +2982,8 @@ class CatalogSpec extends SparkSpec {
     val (total, keep) = scanOf(q).plannedFiles
     assert(total === 7 && keep.size === 1, s"($total, ${keep.size})")
     assert(q.count() === ev.filter(col("day") === "5").count())
-    val (_, _, segsTotal, segsRead) = CommitLog.segmentedPrunedFilesTree(root,
-      head, CommitLog.ProbeTree(Seq("day" -> Set("5")), Nil))
-    assert(segsTotal === 2 && segsRead === 1)
+    val p5 = CommitLog.prune(root, head, CommitLog.ProbeTree(Seq("day" -> Set("5")), Nil))
+    assert(p5.segsTotal === 2 && p5.segsRead === 1)
     // layout probes intersect the bounds prune: day='5' AND an id
     // range covering only seg2's ids still plans 1 file, 1 segment
     // (both decide at segment level)
@@ -3232,5 +3233,36 @@ class CatalogSpec extends SparkSpec {
       (n, jobs)
     }
     assert(counts === Seq((1350L, 1), (1350L, 1)))
+  }
+
+  test("one prune parses the manifest once; a catalog SELECT ... WHERE parses no more manifests than before") {
+    val (cat, base) = freshCatalog()
+    def frame(lo: Long, hi: Long) = spark.range(lo, hi).selectExpr("id", "id % 10 AS v")
+    val flat = new java.io.File(base, "flat").toString
+    CommitLog.appendWithStats(spark, flat, frame(0, 1000), 2, "id")
+    val vf = CommitLog.appendWithStats(spark, flat, frame(1000, 2000), 2, "id")
+    val seg = new java.io.File(base, "seg").toString
+    CommitLog.appendSegment(spark, seg, frame(0, 1000), 2, "id")
+    val vs = CommitLog.appendSegment(spark, seg, frame(1000, 2000), 2, "id")
+    val probe = CommitLog.ProbeTree(Nil, Seq(CommitLog.RangeProbe("id", Some(1501L), None)))
+    // the second append's two files survive; on the segmented table
+    // they are its second segment's
+    Seq((flat, vf, 0), (seg, vs, 1)).foreach { case (root, v, segsRead) =>
+      val parses0 = CommitLog.manifestParses.get
+      val p = CommitLog.prune(root, v, probe)
+      assert(CommitLog.manifestParses.get - parses0 === 1L, root)
+      assert(p.files.size === 2 && p.filesTotal === 4 && p.segsRead === segsRead, s"$root: $p")
+    }
+    // the catalog read plans through the same prune; the bounds are
+    // the parses one such query took before the planner was unified:
+    // 9 on a fresh table, 6 on a repeat
+    Seq("flat", "seg").foreach { t =>
+      Seq(9L, 6L).foreach { bound =>
+        val parses0 = CommitLog.manifestParses.get
+        assert(spark.sql(s"SELECT id FROM $cat.$t WHERE id > 1500").collect().length === 499)
+        val parses = CommitLog.manifestParses.get - parses0
+        assert(parses <= bound, s"$t: $parses manifest parses")
+      }
+    }
   }
 }

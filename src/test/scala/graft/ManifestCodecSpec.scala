@@ -165,15 +165,14 @@ class ManifestCodecSpec extends SparkSpec {
     val (lo, hi) = (m / 4 + 1, m / 2)
     val before = files.filter(f => bounds(f)._2 >= lo && bounds(f)._1 <= hi)
     assert(before.size === 1)
+    val probe = CommitLog.ProbeTree(Nil, Seq(CommitLog.RangeProbe("event_id", Some(lo), Some(hi))))
     def kept(v: Long): (Seq[String], Int) = {
-      val (fs, total) = CommitLog.prunedFilesCombined(root, v, Nil,
-        Seq(CommitLog.RangeProbe("event_id", Some(lo), Some(hi))))
-      (fs, total)
+      val p = CommitLog.prune(root, v, probe)
+      (p.files, p.filesTotal)
     }
     assert(kept(4L) === ((before, 4)))
-    val (df, total, nRead) = CommitLog.prunedReadTyped(spark, root, 4L,
-      Seq(CommitLog.StatProbe("event_id", lo, hi)))
-    assert((total, nRead) === ((4, 1)))
+    val (df, p) = CommitLog.prunedScan(spark, root, 4L, probe)
+    assert((p.filesTotal, p.files.size) === ((4, 1)))
     assert(df.filter(col("event_id").between(lo, hi)).count() ===
       ev.filter(col("event_id").between(lo, hi)).count())
     // lifted entries carry no null count: COUNT(col) and TopN never use them
@@ -204,15 +203,17 @@ class ManifestCodecSpec extends SparkSpec {
     assert(CommitLog.longMetaOf(flat, v1, weird) === Some(7L))
     assert(CommitLog.mapMetaOf(flat, v1, weird + "m") === Some(Map(weird -> 3L)))
     assert(CommitLog.auxOf(flat, v1).statsTags.get(weird).contains("long"))
-    val (_, total, nRead) = CommitLog.prunedReadTyped(spark, flat, v1,
-      Seq(CommitLog.StatProbe(weird, 60L, 70L)))
-    assert((total, nRead) === ((2, 1)), "the stat-less partitioned file reads, the other prunes")
+    val p = CommitLog.prune(flat, v1,
+      CommitLog.ProbeTree(Nil, Seq(CommitLog.RangeProbe(weird, Some(60L), Some(70L)))))
+    assert((p.filesTotal, p.files.size) === ((2, 1)),
+      "the stat-less partitioned file reads, the other prunes")
     val seg = tmp("esc_seg")
     CommitLog.appendSegment(spark, seg, df.filter(col(s"`$weird`") < 50), 1, weird)
     val vs = CommitLog.appendSegment(spark, seg, df.filter(col(s"`$weird`") >= 50), 1, weird)
     assert(CommitLog.segmentStatsCol(seg, vs) === Some(weird))
-    val (_, segTotal, segRead, _, _) = CommitLog.segmentedPrunedRead(spark, seg, vs, 0L, 10L)
-    assert((segTotal, segRead) === ((2, 1)))
+    val ps = CommitLog.prune(seg, vs,
+      CommitLog.ProbeTree(Nil, Seq(CommitLog.RangeProbe(weird, Some(0L), Some(10L)))))
+    assert((ps.segsTotal, ps.segsRead) === ((2, 1)))
     Seq(flat, seg).foreach(roundTrips(_))
   }
 

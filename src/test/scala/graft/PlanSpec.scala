@@ -838,9 +838,9 @@ class PlanSpec extends SparkSpec {
     val aRoot = VectorIndex.assignedRoot(idx)
     // candidate selection stays manifest partition pruning: 8 of 16
     // cell partitions listed, REGARDLESS of outstanding tombstones
-    val (cand, total, read) = CommitLog.partitionPrunedRead(spark, aRoot,
-      CommitLog.latestVersion(aRoot).get, "cell",
-      (0 until 8).map(_.toString))
+    val cells = CommitLog.ProbeTree(Seq("cell" -> (0 until 8).map(_.toString).toSet), Nil)
+    val (cand, pc) = CommitLog.prunedScan(spark, aRoot, CommitLog.latestVersion(aRoot).get, cells)
+    val (total, read) = (pc.filesTotal, pc.files.size)
     assert(total === 16 && read === 8, s"pruning: $read of $total")
     // the mask is exactly ONE anti join on the pruned candidates —
     // never a product, never a per-row filter
@@ -852,9 +852,7 @@ class PlanSpec extends SparkSpec {
     // after purge the mask disappears — the unmasked fast path returns
     VectorIndex.purge(spark, idx)
     val p2 = VectorIndex.maskTombstones(spark, idx,
-      CommitLog.partitionPrunedRead(spark, aRoot,
-        CommitLog.latestVersion(aRoot).get, "cell",
-        (0 until 8).map(_.toString))._1)
+      CommitLog.prunedScan(spark, aRoot, CommitLog.latestVersion(aRoot).get, cells)._1)
       .queryExecution.executedPlan.toString
     assert(!p2.contains("LeftAnti"), s"purged index still masks:\n$p2")
   }
@@ -1011,8 +1009,8 @@ class PlanSpec extends SparkSpec {
     // queried generation's matching files + every other-generation
     // file (unprunable for this query) — no directory listing, no
     // footer reads, and never a dropped matching file
-    val (df, _, _) = CommitLog.partitionPrunedRead(spark, root, head,
-      "event_type", Seq("click"))
+    val (df, _) = CommitLog.prunedScan(spark, root, head,
+      CommitLog.ProbeTree(Seq("event_type" -> Set("click")), Nil))
     val wantFiles = CommitLog.snapshotFiles(root, head).filter { f =>
       // manifest-relative form: data/<uuid>.parquet
       val jf = new java.io.File(f)

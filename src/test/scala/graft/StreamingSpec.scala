@@ -3,12 +3,20 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.sources.{EventSource, Tables}
+import graft.sources.CommitLog.{ProbeTree, RangeProbe}
 
 /** Stream-vs-batch equivalence + ingestion lifecycle (SURVEY.md
   * §5.2.4/5.2.5): the Structured Streaming prefix-consistency contract
   * is the A1–A5 semantics test — a finite stream must agree with its
   * batch twin on every result the watermark allowed it to emit. */
 class StreamingSpec extends SparkSpec {
+
+  /** A probe tree accepting `vs` on partition column `c`. */
+  private def partTree(c: String, vs: String*): ProbeTree = ProbeTree(Seq(c -> vs.toSet), Nil)
+
+  /** A probe tree with one closed range on stats column `c`. */
+  private def rangeTree(c: String, lo: Any, hi: Any): ProbeTree =
+    ProbeTree(Nil, Seq(RangeProbe(c, Some(lo), Some(hi))))
 
   test("s_stream_tumbling emits exactly the batch q_time_tumbling buckets the watermark closed") {
     val streamRows = SparkEntry.queries("s_stream_tumbling")(spark, sf)
@@ -494,8 +502,8 @@ class StreamingSpec extends SparkSpec {
     // 5 event types × 1 file × 2 appends; the one-partition probe
     // reads exactly its 2 files — and the PLAN holds only the manifest
     // survivors (inputFiles is the no-directory-listing pin)
-    val (df, total, nRead) =
-      CommitLog.partitionPrunedRead(spark, root, v1, "event_type", Seq("click"))
+    val (df, p) = CommitLog.prunedScan(spark, root, v1, partTree("event_type", "click"))
+    val (total, nRead) = (p.filesTotal, p.files.size)
     assert(total === 10 && nRead === 2, s"total=$total read=$nRead")
     assert(df.inputFiles.length === 2,
       "pruned plan reads more files than the manifest survivors")
@@ -510,14 +518,14 @@ class StreamingSpec extends SparkSpec {
       CommitLog.delete(spark, root, col("event_type") === "click")
     assert(carried === 8L && rewritten === 0L,
       s"delete should dirty exactly click's 2 files: carried=$carried rewritten=$rewritten")
-    val (df2, total2, nRead2) =
-      CommitLog.partitionPrunedRead(spark, root, v2, "event_type", Seq("error"))
+    val (df2, p2) = CommitLog.prunedScan(spark, root, v2, partTree("event_type", "error"))
+    val (total2, nRead2) = (p2.filesTotal, p2.files.size)
     assert(total2 === 8 && nRead2 === 2, s"post-delete total=$total2 read=$nRead2")
     assert(df2.filter(col("event_type") === "error").count() ===
       ev.filter(col("event_type") === "error").count())
     // probing a column the table is not partitioned by refuses
     val ex = intercept[IllegalArgumentException] {
-      CommitLog.partitionPrunedRead(spark, root, v2, "user_id", Seq("1"))
+      CommitLog.prunedScan(spark, root, v2, partTree("user_id", "1"))
     }
     assert(ex.getMessage.contains("partition column"), ex.getMessage)
     // a PARTIAL-partition delete rewrites files — since late r10 the
@@ -526,15 +534,15 @@ class StreamingSpec extends SparkSpec {
     val (v3, _, rew3) = CommitLog.delete(spark, root,
       col("event_type") === "view" && col("user_id") % 4 === 0)
     assert(rew3 > 0, "fixture must dirty view's files")
-    val (df3, total3, nRead3) =
-      CommitLog.partitionPrunedRead(spark, root, v3, "event_type", Seq("error"))
+    val (df3, p3) = CommitLog.prunedScan(spark, root, v3, partTree("event_type", "error"))
+    val (total3, nRead3) = (p3.filesTotal, p3.files.size)
     assert(nRead3 === 2,
       s"rewritten files lost their partition entries: read $nRead3 of $total3")
     assert(df3.filter(col("event_type") === "error").count() ===
       ev.filter(col("event_type") === "error").count())
     // ... and the rewritten partition itself still prunes AND is whole
-    val (df3v, _, nRead3v) =
-      CommitLog.partitionPrunedRead(spark, root, v3, "event_type", Seq("view"))
+    val (df3v, p3v) = CommitLog.prunedScan(spark, root, v3, partTree("event_type", "view"))
+    val nRead3v = p3v.files.size
     assert(nRead3v.toInt === df3v.inputFiles.length && nRead3v <= 2,
       s"view probe read $nRead3v files")
     assert(df3v.filter(col("event_type") === "view").count() ===
@@ -547,8 +555,8 @@ class StreamingSpec extends SparkSpec {
     assert(!CommitLog.appendBatchPartitioned(spark, root2,
       ev.filter(col("event_id") % 2 === 0), "event_type", 1, batchId = 0L),
       "re-delivered batch must skip, not double-append")
-    val (_, t2, r2) =
-      CommitLog.partitionPrunedRead(spark, root2, 0L, "event_type", Seq("view"))
+    val pStream = CommitLog.prune(root2, 0L, partTree("event_type", "view"))
+    val (t2, r2) = (pStream.filesTotal, pStream.files.size)
     assert(t2 === 5 && r2 === 1, s"streamed table total=$t2 read=$r2")
   }
 
@@ -622,8 +630,8 @@ class StreamingSpec extends SparkSpec {
       filesPerPartition = 1)
     // every recorded partition value decodes back to the EXACT input
     nasty.foreach { value =>
-      val (pruned, total, nRead) =
-        CommitLog.partitionPrunedRead(spark, root, v, "part_val", Seq(value))
+      val (pruned, p) = CommitLog.prunedScan(spark, root, v, partTree("part_val", value))
+      val (total, nRead) = (p.filesTotal, p.files.size)
       assert(total === 6 && nRead === 1, s"'$value': total=$total read=$nRead")
       assert(pruned.count() === 1 &&
         pruned.collect()(0).getString(1) === value,
@@ -649,8 +657,8 @@ class StreamingSpec extends SparkSpec {
       ev.filter(col("event_type").isin("click", "error")), 1, statCols)
     val v1 = CommitLog.appendWithColumnStats(spark, root,
       ev.filter(col("event_type").isin("purchase", "signup", "view")), 1, statCols)
-    val (df, total, nRead) = CommitLog.prunedReadTyped(spark, root, v1,
-      Seq(CommitLog.StatProbe("event_type", "a", "f")))
+    val (df, p) = CommitLog.prunedScan(spark, root, v1, rangeTree("event_type", "a", "f"))
+    val (total, nRead) = (p.filesTotal, p.files.size)
     assert(total === 2 && nRead === 1, s"string prune total=$total read=$nRead")
     assert(df.filter(col("event_type") <= "f").count() ===
       ev.filter(col("event_type").isin("click", "error")).count())
@@ -659,8 +667,8 @@ class StreamingSpec extends SparkSpec {
     val v2 = CommitLog.appendWithColumnStats(spark, root,
       ev.filter(col("value") < 50.0)
         .withColumn("maybe_type", lit(null).cast("string")), 1, statCols)
-    val (_, t3, r3) = CommitLog.prunedReadTyped(spark, root, v2,
-      Seq(CommitLog.StatProbe("maybe_type", "a", "zzzz")))
+    val p3 = CommitLog.prune(root, v2, rangeTree("maybe_type", "a", "zzzz"))
+    val (t3, r3) = (p3.filesTotal, p3.files.size)
     assert(t3 === 3 && r3 === 2, s"all-null file not pruned: total=$t3 read=$r3")
     // null counts recorded exactly
     val aux = CommitLog.auxOf(root, v2)
@@ -775,9 +783,10 @@ class StreamingSpec extends SparkSpec {
     assert(pre.exceptAll(post).count() === 0 && post.exceptAll(pre).count() === 0,
       "clustered optimize changed the data")
     // dual-dim pruning bites, and pruned ≡ full-scan filter
-    val probes = Seq(CommitLog.StatProbe("event_id", m / 4 + 1, m / 2),
-      CommitLog.StatProbe("user_id", u / 2 + 1, u))
-    val (df, total, nRead) = CommitLog.prunedReadTyped(spark, root, v2, probes)
+    val probes = ProbeTree(Nil, Seq(RangeProbe("event_id", Some(m / 4 + 1), Some(m / 2)),
+      RangeProbe("user_id", Some(u / 2 + 1), Some(u))))
+    val (df, p) = CommitLog.prunedScan(spark, root, v2, probes)
+    val (total, nRead) = (p.filesTotal, p.files.size)
     assert(total === 8 && nRead === 1, s"total=$total read=$nRead")
     val precise = df.filter(col("event_id").between(m / 4 + 1, m / 2) &&
       col("user_id").between(u / 2 + 1, u))
@@ -807,8 +816,8 @@ class StreamingSpec extends SparkSpec {
     val (v2, _, rew) = CommitLog.delete(spark, root,
       col("event_id") % 5 === 0 && col("event_id") <= m / 2)
     assert(rew === 2L, s"expected both low files dirty, got $rew")
-    val (_, total2, read2) = CommitLog.prunedReadTyped(spark, root, v2,
-      Seq(CommitLog.StatProbe("event_id", m / 2 + 1, m)))
+    val p2 = CommitLog.prune(root, v2, rangeTree("event_id", m / 2 + 1, m))
+    val (total2, read2) = (p2.filesTotal, p2.files.size)
     assert(total2 === 4 && read2 === 2,
       s"rewritten files lost their stats: read $read2 of $total2")
     // plain compaction hash-mixes ranges (bounds go wide) but every
@@ -821,8 +830,8 @@ class StreamingSpec extends SparkSpec {
     // incoming files — a high-half probe prunes EVERYTHING
     val v4 = CommitLog.overwrite(spark, root,
       ev.filter(col("event_id") <= m / 2), 2)
-    val (_, total4, read4) = CommitLog.prunedReadTyped(spark, root, v4,
-      Seq(CommitLog.StatProbe("event_id", m / 2 + 1, m)))
+    val p4 = CommitLog.prune(root, v4, rangeTree("event_id", m / 2 + 1, m))
+    val (total4, read4) = (p4.filesTotal, p4.files.size)
     assert(total4 === 2 && read4 === 0,
       s"overwrite stripped data-skipping: read $read4 of $total4")
     // and the semantics never changed along the way
@@ -1260,8 +1269,8 @@ class StreamingSpec extends SparkSpec {
     assert(CommitLog.read(spark, root, v1).columns.contains("value"))
     // (2) stats keys follow a rename of the STATS column: pruning works
     val v3 = CommitLog.renameColumn(spark, root, "event_id", "eid")
-    val (_, total3, read3) = CommitLog.prunedReadTyped(spark, root, v3,
-      Seq(CommitLog.StatProbe("eid", m / 2 + 1, m)))
+    val p3 = CommitLog.prune(root, v3, rangeTree("eid", m / 2 + 1, m))
+    val (total3, read3) = (p3.filesTotal, p3.files.size)
     assert(total3 === 4 && read3 === 2,
       s"stats did not follow the rename: read $read3 of $total3")
     // (3) CoW delete on the MAPPED table: rewrite stages physical
@@ -1272,8 +1281,8 @@ class StreamingSpec extends SparkSpec {
     val after4 = CommitLog.read(spark, root, v4)
     assert(after4.columns.sorted === Array("amount", "eid", "event_type", "user_id"))
     assert(after4.filter(col("eid") % 5 === 0 && col("eid") <= m / 2).count() === 0)
-    val (_, total4, read4) = CommitLog.prunedReadTyped(spark, root, v4,
-      Seq(CommitLog.StatProbe("eid", m / 2 + 1, m)))
+    val p4 = CommitLog.prune(root, v4, rangeTree("eid", m / 2 + 1, m))
+    val (total4, read4) = (p4.filesTotal, p4.files.size)
     assert(read4 === 2, s"mapped rewrite lost pruning: read $read4 of $total4")
     // (4) adding a column under a FREED logical name must not collide
     // with the old physical name: new 'value' is independent of 'amount'
@@ -1414,8 +1423,9 @@ class StreamingSpec extends SparkSpec {
     val v1 = CommitLog.appendWithStats(spark, root,
       ev.filter(col("event_id") > m / 2), nFiles = 2, statsCol = "event_id")
     // selective probe: only the low half's files survive pruning...
-    val lowQuarter = Seq(CommitLog.StatProbe("event_id", 0L, m / 4))
-    val (df, total, nRead) = CommitLog.prunedReadTyped(spark, root, v1, lowQuarter)
+    val lowQuarter = rangeTree("event_id", 0L, m / 4)
+    val (df, p) = CommitLog.prunedScan(spark, root, v1, lowQuarter)
+    val (total, nRead) = (p.filesTotal, p.files.size)
     assert(total === 4 && nRead === 2, s"total=$total read=$nRead")
     // ...and the pruned scan + precise predicate equals the full scan
     val pruned = df.filter(col("event_id") <= m / 4)
@@ -1425,7 +1435,8 @@ class StreamingSpec extends SparkSpec {
     assert(pruned === full, "stats pruning changed the result")
     // a stat-less append stays unprunable: always read
     val v2 = CommitLog.append(spark, root, ev.limit(10), nFiles = 1)
-    val (_, total2, read2) = CommitLog.prunedReadTyped(spark, root, v2, lowQuarter)
+    val p2 = CommitLog.prune(root, v2, lowQuarter)
+    val (total2, read2) = (p2.filesTotal, p2.files.size)
     assert(total2 === 5 && read2 === 3,
       s"stat-less file must survive pruning: total=$total2 read=$read2")
   }
@@ -1460,8 +1471,8 @@ class StreamingSpec extends SparkSpec {
     }
     // two-level prune: the high-half probe skips segment 0 entirely
     // (its per-file entries are never read) and reads only segment 1
-    val (df, segT, segR, fT, fR) =
-      CommitLog.segmentedPrunedRead(spark, root, v1, m / 2 + 1, m)
+    val (df, p) = CommitLog.prunedScan(spark, root, v1, rangeTree("event_id", m / 2 + 1, m))
+    val (segT, segR, fT, fR) = (p.segsTotal, p.segsRead, p.filesTotal, p.files.size)
     assert(segT === 2 && segR === 1 && fT === 4 && fR === 2,
       s"segT=$segT segR=$segR fT=$fT fR=$fR")
     // ...and pruned scan + precise predicate equals the full snapshot scan
@@ -1471,9 +1482,9 @@ class StreamingSpec extends SparkSpec {
       .agg(count(lit(1)), sum(col("event_id"))).collect()(0)
     assert(pruned === full, "segment pruning changed the result")
     // a disjoint probe reads zero segments and zero files, empty result
-    val (dfNone, _, segR0, _, fR0) =
-      CommitLog.segmentedPrunedRead(spark, root, v1, m + 1000, m + 2000)
-    assert(segR0 === 0 && fR0 === 0 && dfNone.count() === 0)
+    val (dfNone, pNone) =
+      CommitLog.prunedScan(spark, root, v1, rangeTree("event_id", m + 1000, m + 2000))
+    assert(pNone.segsRead === 0 && pNone.files.isEmpty && dfNone.count() === 0)
   }
 
   test("commit log: appendWithRetry rebases past a mid-commit competitor, stages data once (r9)") {
@@ -1557,8 +1568,8 @@ class StreamingSpec extends SparkSpec {
     // pinned reader at v1 still sees the pre-optimize file list
     assert(CommitLog.read(spark, root, v1).orderBy(col("event_id")).collect().toSeq === before)
     // layout now aligns with the cutoff: a half-range probe prunes
-    val (_, total, nRead) = CommitLog.prunedReadTyped(spark, root, v2,
-      Seq(CommitLog.StatProbe("event_id", 0L, m / 2)))
+    val p = CommitLog.prune(root, v2, rangeTree("event_id", 0L, m / 2))
+    val (total, nRead) = (p.filesTotal, p.files.size)
     assert(total === 4 && nRead === 2,
       s"clustered layout should prune to one bucket's files, read $nRead of $total")
     // optimize is a rewrite: file-diff changes() across it must refuse
@@ -1671,8 +1682,8 @@ class StreamingSpec extends SparkSpec {
     val h2 = CommitLog.appendWithStats(spark, root2, e2.filter(col("event_id") % 2 === 1), 2, "user_id")
     // the v0-era files record event_id bounds only: stat-less under
     // user_id and therefore ALWAYS read
-    val (_, total, nRead) = CommitLog.prunedReadTyped(spark, root2, h2,
-      Seq(CommitLog.StatProbe("user_id", Long.MaxValue - 1, Long.MaxValue)))
+    val p = CommitLog.prune(root2, h2, rangeTree("user_id", Long.MaxValue - 1, Long.MaxValue))
+    val (total, nRead) = (p.filesTotal, p.files.size)
     assert(total === 4 && nRead >= 2,
       s"v0 files must stay unprunable after the stats column switched ($nRead of $total read)")
     // unsorted optimize cutoffs would duplicate rows — refused loudly
@@ -2713,23 +2724,23 @@ class StreamingSpec extends SparkSpec {
     assert(CommitLog.read(spark, root, v1).count() === ev.count() - ev.filter(col("event_id") % 3 === 2).count())
     // double probe: the finite file prunes normally, the poisoned file
     // always reads (no entry = unprunable, correct just not skippable)
-    val (_, totalD, readD) = CommitLog.prunedReadTyped(spark, root, v1,
-      Seq(CommitLog.StatProbe("value", 1.0e17, 1.1e17)))
+    val pD = CommitLog.prune(root, v1, rangeTree("value", 1.0e17, 1.1e17))
+    val (totalD, readD) = (pD.filesTotal, pD.files.size)
     assert(totalD === 2 && readD === 1,
       s"double probe after poison: total=$totalD read=$readD (want the poisoned file only)")
     // date probe prunes on epoch days: a range far in the past keeps
     // nothing
-    val (_, totalP, readP) = CommitLog.prunedReadTyped(spark, root, v1,
-      Seq(CommitLog.StatProbe("day", -20000L, -19990L)))
+    val pP = CommitLog.prune(root, v1, rangeTree("day", -20000L, -19990L))
+    val (totalP, readP) = (pP.filesTotal, pP.files.size)
     assert(totalP === 2 && readP === 0,
       s"date probe: total=$totalP read=$readP (want all pruned)")
     // and a live date range reads the right files: recorded bounds are
     // true epoch days
     val lohi = ev.agg(min(datediff(col("day"), lit("1970-01-01").cast("date"))),
       max(datediff(col("day"), lit("1970-01-01").cast("date")))).collect()(0)
-    val (dfAll, _, readAll) = CommitLog.prunedReadTyped(spark, root, v1,
-      Seq(CommitLog.StatProbe("day", lohi.getInt(0).toLong, lohi.getInt(1).toLong)))
-    assert(readAll === 2 && dfAll.count() > 0)
+    val (dfAll, pAll) = CommitLog.prunedScan(spark, root, v1,
+      rangeTree("day", lohi.getInt(0).toLong, lohi.getInt(1).toLong))
+    assert(pAll.files.size === 2 && dfAll.count() > 0)
     assert(v0 === 0L)
   }
 
@@ -2986,19 +2997,19 @@ class StreamingSpec extends SparkSpec {
     assert(got.count() === ev.count())
     // old generation prunes under ITS column; the new generation is
     // unprunable for that query (read in full) — and vice versa
-    val (dfT, total, readT) = CommitLog.partitionPrunedRead(spark, root,
-      head, "event_type", Seq("click"))
+    val (dfT, pT) = CommitLog.prunedScan(spark, root, head, partTree("event_type", "click"))
+    val (total, readT) = (pT.filesTotal, pT.files.size)
     assert(total === 12 && readT === 8, s"type probe read $readT of $total")
     assert(dfT.filter(col("event_type") === "click").count() ===
       ev.filter(col("event_type") === "click").count())
-    val (dfD, _, readD) = CommitLog.partitionPrunedRead(spark, root,
-      head, "day", Seq("3"))
+    val (dfD, pD) = CommitLog.prunedScan(spark, root, head, partTree("day", "3"))
+    val readD = pD.files.size
     assert(readD === 6, s"day probe read $readD files")
     assert(dfD.filter(col("day") === "3").count() ===
       ev.filter(col("day") === "3").count())
     // a column NO generation partitions by still refuses (typo guard)
     val ex2 = intercept[IllegalArgumentException] {
-      CommitLog.partitionPrunedRead(spark, root, head, "value", Seq("1"))
+      CommitLog.prunedScan(spark, root, head, partTree("value", "1"))
     }
     assert(ex2.getMessage.contains("no generation"), ex2.getMessage)
     // dropping a column that partitions an OLD generation refuses
@@ -3019,8 +3030,8 @@ class StreamingSpec extends SparkSpec {
     // converged: every file now carries a day layout — the probe
     // reads ONLY day=3 files (one per generation of migration runs,
     // ≤3 here) instead of dragging the whole old generation
-    val (dfD2, totalM, readD2) = CommitLog.partitionPrunedRead(spark, root,
-      headM, "day", Seq("3"))
+    val (dfD2, pD2) = CommitLog.prunedScan(spark, root, headM, partTree("day", "3"))
+    val (totalM, readD2) = (pD2.filesTotal, pD2.files.size)
     assert(readD2 <= 3 && totalM >= 14,
       s"converged table must prune the day probe fully ($readD2 of $totalM)")
     assert(dfD2.filter(col("day") === "3").count() ===
@@ -3057,16 +3068,17 @@ class StreamingSpec extends SparkSpec {
       filesPerPartition = 1)
     assert(CommitLog.read(spark, root, head).count() === ev.count())
     // 5 gen-1 files + 7×2 gen-2 tuple files
-    val (dfM, total, readM) = CommitLog.partitionPrunedReadMulti(spark, root,
-      head, Seq("day" -> Seq("3"), "bucket" -> Seq("0")))
+    val d3b0 = ProbeTree(Seq("day" -> Set("3"), "bucket" -> Set("0")), Nil)
+    val (dfM, pM) = CommitLog.prunedScan(spark, root, head, d3b0)
+    val (total, readM) = (pM.filesTotal, pM.files.size)
     assert(total === 19 && readM === 6,
       s"composite probe read $readM of $total (want 1 tuple file + 5 unprunable)")
     assert(dfM.filter(col("day") === "3" && col("bucket") === "0").count() ===
       ev.filter(col("day") === "3" && col("bucket") === "0").count())
     // the probe INTERSECTS a file's own columns: a day-only probe
     // keeps BOTH buckets of day 3 (bucket unprobed ≠ bucket pruned)
-    val (dfD, _, readD) = CommitLog.partitionPrunedRead(spark, root,
-      head, "day", Seq("3"))
+    val (dfD, pD) = CommitLog.prunedScan(spark, root, head, partTree("day", "3"))
+    val readD = pD.files.size
     assert(readD === 7, s"day-only probe read $readD (want 2 tuple files + 5)")
     assert(dfD.filter(col("day") === "3").count() ===
       ev.filter(col("day") === "3").count())
@@ -3086,8 +3098,8 @@ class StreamingSpec extends SparkSpec {
       auxM.layoutOf(jf.getParentFile.getName + "/" + jf.getName)
         .exists(_.map(_._1) == Seq("day", "bucket"))
     }, "a migrated file must carry the ordered composite layout")
-    val (dfM2, totalM, readM2) = CommitLog.partitionPrunedReadMulti(spark,
-      root, headM, Seq("day" -> Seq("3"), "bucket" -> Seq("0")))
+    val (dfM2, pM2) = CommitLog.prunedScan(spark, root, headM, d3b0)
+    val (totalM, readM2) = (pM2.filesTotal, pM2.files.size)
     assert(readM2 <= 3 && totalM >= 14,
       s"converged composite probe must prune fully ($readM2 of $totalM)")
     assert(dfM2.filter(col("day") === "3" && col("bucket") === "0").count() ===
@@ -3607,7 +3619,7 @@ class StreamingSpec extends SparkSpec {
       else CommitLog.snapshotFiles(root, v).map(f => "data/" + new java.io.File(f).getName).toSet
     def readAt(root: String, v: Long): DataFrame =
       if (segmented(root, v))
-        CommitLog.segmentedPrunedRead(spark, root, v, Long.MinValue, Long.MaxValue)._1
+        CommitLog.prunedScan(spark, root, v, ProbeTree(Nil, Nil))._1
       else CommitLog.read(spark, root, v)
     val ev = Tables(spark, sf, "events")
       .select(col("event_id"), col("event_type"), col("value")).limit(120)
@@ -3844,8 +3856,7 @@ class StreamingSpec extends SparkSpec {
     CommitLog.appendSegment(spark, seg, ev.filter(col("event_id") <= m / 2), 1, "event_id")
     val v = CommitLog.appendSegment(spark, seg, ev.filter(col("event_id") > m / 2), 1, "event_id")
     val parses0 = CommitLog.manifestParses.get
-    val kept = CommitLog.segmentsSurvivingTree(seg, v, CommitLog.ProbeTree(Nil,
-      Seq(CommitLog.RangeProbe("event_id", Some(m / 2 + 1), Some(m)))))
+    val kept = CommitLog.segmentsSurvivingTree(seg, v, rangeTree("event_id", m / 2 + 1, m))
     assert(CommitLog.manifestParses.get - parses0 === 1L)
     assert(kept.size === 1, s"the range probe must keep one of two segments: $kept")
   }
@@ -3894,8 +3905,8 @@ class StreamingSpec extends SparkSpec {
     // range probe prunes it
     val nAllNull = want.count(_._2.lo.isEmpty)
     assert(nAllNull > 0, "the fixture must hold an all-NULL file")
-    val (_, total, nRead) = CommitLog.prunedReadTyped(spark, flat, v,
-      Seq(CommitLog.StatProbe("k", Long.MinValue, Long.MaxValue)))
+    val p = CommitLog.prune(flat, v, rangeTree("k", Long.MinValue, Long.MaxValue))
+    val (total, nRead) = (p.filesTotal, p.files.size)
     assert(total === flatFiles.size && nRead === total - nAllNull, s"read $nRead of $total")
     val segs = CommitLog.segmentsOf(seg, CommitLog.latestVersion(seg).get)
     assert(segs.size === 3)
@@ -4277,5 +4288,17 @@ class StreamingSpec extends SparkSpec {
     assert(aux.dvRows.map { case (f, n) => new java.io.File(f).getName -> n } === grouped)
     assert(aux.dvRows.values.sum === 300L)
     assert(CommitLog.read(spark, root, 1L).count() === 2700L)
+  }
+
+  test("deletion-vector tables plan reads without a Spark job") {
+    import graft.sources.CommitLog
+    val root = java.nio.file.Files.createTempDirectory("graft_dv_plan").toString
+    CommitLog.append(spark, root, spark.range(0, 3000).selectExpr("id", "id % 10 AS v"), 3)
+    CommitLog.deleteMergeOnRead(spark, root, col("v") === 3)
+    val v = CommitLog.deleteMergeOnRead(spark, root, col("v") === 4)._1
+    // the sidecars read under their fixed layout: no schema inference
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { df = CommitLog.read(spark, root, v); () } === 0)
+    assert(df.count() === 2400L)
   }
 }
