@@ -56,12 +56,24 @@ object CommitLog {
     * `HadoopParquetConfiguration` per footer, re-parsing
     * `core-default.xml` from the jar. [[footerReadOptions]] carries
     * this conf into the reader too. It is also the base a staging task
-    * rebuilds its write conf on ([[writeParquet]]). */
+    * rebuilds its write conf on ([[writeParquet]]), and the table
+    * reader's conf: every data, CDF and deletion-vector file a scan
+    * task opens reads over it ([[GroupParquetReader]]). It is the one
+    * place `src/main` calls the no-argument `Configuration`
+    * constructor. */
   private[graft] val hadoopConf = new org.apache.hadoop.conf.Configuration()
 
   /** Read options over [[hadoopConf]], immutable and shared by every
     * footer open. */
   private[sources] val footerReadOptions =
+    org.apache.parquet.HadoopReadOptions.builder(hadoopConf).build()
+
+  /** Read options over [[hadoopConf]] for ONE file whose row groups
+    * are read. Not [[footerReadOptions]]: options carry one codec
+    * factory, whose decompressors are stateful and which every
+    * reader's `close` releases, so concurrent row-group reads must not
+    * share it. Building them only reads a few keys of the parsed conf. */
+  private[sources] def readOptions(): org.apache.parquet.ParquetReadOptions =
     org.apache.parquet.HadoopReadOptions.builder(hadoopConf).build()
 
   /** One parquet footer: row count, top-level (physical) column
@@ -588,10 +600,12 @@ object CommitLog {
     manifest(root, version).exists()
 
   /** Test-only instruments: how many version manifests [[snapshot]]
-    * parsed and how many times [[tableProperties]] read
-    * `_properties.json`, process-wide. */
+    * parsed, how many times [[tableProperties]] read
+    * `_properties.json`, and how many file footers
+    * [[GroupParquetReader]] opened, process-wide. */
   private[graft] val manifestParses = new java.util.concurrent.atomic.AtomicLong()
   private[graft] val propertyReads = new java.util.concurrent.atomic.AtomicLong()
+  private[graft] val tableFileOpens = new java.util.concurrent.atomic.AtomicLong()
 
   /** One version manifest, read and parsed ONCE by [[snapshot]]: what
     * every reader and every committing writer takes from a version,
@@ -2621,9 +2635,11 @@ object CommitLog {
     * row. Pure log metadata: no directory listing, no footer reads;
     * the caller still applies its precise predicate. */
   def prune(root: String, version: Long, tree: ProbeTree): Pruned =
-    pruneOf(snapshot(root, version), tree)
+    prune(snapshot(root, version), tree)
 
-  private def pruneOf(sn: Snapshot, tree: ProbeTree): Pruned = sn.segmentRefs match {
+  /** [[prune]] of an already parsed snapshot: a planner that holds
+    * one (a catalog scan) prunes any number of times on one parse. */
+  private[sources] def prune(sn: Snapshot, tree: ProbeTree): Pruned = sn.segmentRefs match {
     case None =>
       val (aux, node) = (sn.aux, nodeOf(tree))
       val keep = sn.files.filter { f =>
@@ -2661,7 +2677,7 @@ object CommitLog {
         s"no generation of this table records partition column " +
           s"'$c' (current spec: ${sn.aux.partCol.getOrElse("<none>")})")
     }
-    val p = pruneOf(sn, tree)
+    val p = prune(sn, tree)
     val df = (p.files, sn.segmentRefs) match {
       case (Nil, None) => read(s, root, version).limit(0)
       // a pre-r17 segmented manifest records no schema: its empty
@@ -4225,7 +4241,9 @@ object CommitLog {
     * reads beyond the first segment's stats column. */
   def segmentsSurvivingTree(root: String, version: Long,
       tree: ProbeTree): Seq[SegmentRef] =
-    new SegPass(root, segmentsOf(root, version), tree).live
+    segmentsSurvivingTree(snapshot(root, version), tree)
+  private[sources] def segmentsSurvivingTree(sn: Snapshot, tree: ProbeTree): Seq[SegmentRef] =
+    new SegPass(sn.root, sn.segments, tree).live
 
   /** The two levels of a segmented snapshot's [[prune]] (r18 —
     * partition probes composed with the bounds prune, VERDICT item 1;
@@ -4324,8 +4342,10 @@ object CommitLog {
     * pushes a limit with no residual, and every segmented filter is
     * residual). */
   def segmentedLimitFiles(root: String, version: Long,
-      n: Int): Option[(Seq[String], Int, Int)] = {
-    val segs = segmentsOf(root, version)
+      n: Int): Option[(Seq[String], Int, Int)] =
+    segmentedLimitFiles(snapshot(root, version), n)
+  private[sources] def segmentedLimitFiles(sn: Snapshot, n: Int): Option[(Seq[String], Int, Int)] = {
+    val (root, segs) = (sn.root, sn.segments)
     if (!segs.forall(_.nRows.isDefined)) return None
     val keep = Seq.newBuilder[String]
     var cum = 0L
@@ -4389,12 +4409,15 @@ object CommitLog {
     * everything. Callers guarantee no filters (Spark never pushes TopN
     * past a residual; guarded anyway). */
   def segmentedTopNFiles(root: String, version: Long, c: String,
-      asc: Boolean, n: Int): Option[(Seq[String], Int, Int)] = {
-    val segs = segmentsOf(root, version)
+      asc: Boolean, n: Int): Option[(Seq[String], Int, Int)] =
+    segmentedTopNFiles(snapshot(root, version), c, asc, n)
+  private[sources] def segmentedTopNFiles(sn: Snapshot, c: String, asc: Boolean,
+      n: Int): Option[(Seq[String], Int, Int)] = {
+    val (root, segs) = (sn.root, sn.segments)
     if (segs.isEmpty) return None
     if (!segs.forall(sr => sr.nRows.isDefined && sr.bounds.isDefined &&
         sr.nNulls.contains(0L))) return None
-    if (!segmentStatsCol(root, version).contains(c)) return None
+    if (!statsColOfSegments(root, segs).contains(c)) return None
     val keepSegs = topNEnvelope(segs, n, asc, Ordering.Long)(
       _.bounds.get._1, _.bounds.get._2, _.nRows.get)
     val files = keepSegs.flatMap { sr =>
@@ -4564,7 +4587,7 @@ object CommitLog {
     * with its statsCol; one table uses one column). */
   def segmentStatsCol(root: String, version: Long): Option[String] =
     statsColOfSegments(root, segmentsOf(root, version))
-  private def statsColOfSegments(root: String, segs: Seq[SegmentRef]): Option[String] =
+  private[sources] def statsColOfSegments(root: String, segs: Seq[SegmentRef]): Option[String] =
     segs.headOption.flatMap(sr => segmentStatsColOf(root, sr.path))
 
   /** One segment file's own recorded stats column. */
@@ -4603,9 +4626,12 @@ object CommitLog {
     * them here keeps it ONE segment read): (all refs, surviving refs,
     * admitted entries). */
   private[sources] def segmentedSurvivors(root: String, version: Long,
+      tree: ProbeTree): (Seq[SegmentRef], Seq[SegmentRef], Seq[SegEntry]) =
+    segmentedSurvivors(snapshot(root, version), tree)
+  private def segmentedSurvivors(sn: Snapshot,
       tree: ProbeTree): (Seq[SegmentRef], Seq[SegmentRef], Seq[SegEntry]) = {
-    val segs = segmentsOf(root, version)
-    val pass = new SegPass(root, segs, tree)
+    val segs = sn.segments
+    val pass = new SegPass(sn.root, segs, tree)
     // layouts always materialize here: the aggregate consumer groups
     // survivors by their layout tuples even when no probe is in play
     (segs, pass.live, pass.live.flatMap(pass.survivors(_, needRows = true,
@@ -4624,9 +4650,12 @@ object CommitLog {
     * opened); None refuses (a survivor without a footer count —
     * pre-r17 refs). */
   def segmentedLimitFilesTree(root: String, version: Long, n: Int,
+      tree: ProbeTree): Option[(Seq[String], Int, Int)] =
+    segmentedLimitFilesTree(snapshot(root, version), n, tree)
+  private[sources] def segmentedLimitFilesTree(sn: Snapshot, n: Int,
       tree: ProbeTree): Option[(Seq[String], Int, Int)] = {
-    val segs = segmentsOf(root, version)
-    val pass = new SegPass(root, segs, tree)
+    val segs = sn.segments
+    val pass = new SegPass(sn.root, segs, tree)
     val keep = Seq.newBuilder[String]
     var cum = 0L
     var opened = 0
@@ -4652,9 +4681,12 @@ object CommitLog {
     * markers with ZERO nulls, every survivor needs stats + rows.
     * Returns (planned relative paths, filesTotal, segments opened). */
   def segmentedTopNFilesTree(root: String, version: Long, c: String,
-      asc: Boolean, n: Int, tree: ProbeTree): Option[(Seq[String], Int, Int)] = {
-    if (!segmentStatsCol(root, version).contains(c)) return None
-    val (segs, live, files) = segmentedSurvivors(root, version, tree)
+      asc: Boolean, n: Int, tree: ProbeTree): Option[(Seq[String], Int, Int)] =
+    segmentedTopNFilesTree(snapshot(root, version), c, asc, n, tree)
+  private[sources] def segmentedTopNFilesTree(sn: Snapshot, c: String, asc: Boolean,
+      n: Int, tree: ProbeTree): Option[(Seq[String], Int, Int)] = {
+    if (!statsColOfSegments(sn.root, sn.segments).contains(c)) return None
+    val (segs, live, files) = segmentedSurvivors(sn, tree)
     if (!live.forall(sr => sr.nRows.isDefined && sr.nNulls.contains(0L)))
       return None
     if (files.exists(e => e.stat.isEmpty || e.rows.isEmpty)) return None

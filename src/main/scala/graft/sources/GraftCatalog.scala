@@ -303,6 +303,11 @@ class GraftCatalogTable(root: String, version: Long, tblName: String,
 
   override def name(): String = s"graft.$tblName@v$version"
 
+  // the pinned version's manifest, parsed ONCE for the schema, every
+  // scan builder's pushdown and every scan built on it: a pinned
+  // version's manifest is immutable
+  private lazy val sn = CommitLog.snapshot(root, version)
+
   override def partitioning(): Array[Transform] =
     CommitLog.tableProperty(root, "partitionColumn")
       .toSeq.flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
@@ -324,7 +329,7 @@ class GraftCatalogTable(root: String, version: Long, tblName: String,
   }
 
   override def schema(): StructType =
-    CommitLog.snapshotSchemaOf(root, version).getOrElse {
+    sn.schema.getOrElse {
       // No recorded schema (pre-r17 segmented writer, or a legacy
       // flat table) — footer-infer. Segmented tables infer from ONE
       // file PER SEGMENT, union-merged (r18, ADVICE): the only tables
@@ -337,11 +342,11 @@ class GraftCatalogTable(root: String, version: Long, tblName: String,
       // all-files infer: their schema may be a widened union across
       // generations.
       val files =
-        if (CommitLog.isSegmented(root, version))
-          CommitLog.segmentsOf(root, version)
+        if (sn.segmentRefs.isDefined)
+          sn.segments
             .flatMap(sr => CommitLog.segmentEntries(root, sr.path)._1.headOption)
             .map(f => new java.io.File(root, f).toString)
-        else CommitLog.snapshotFiles(root, version)
+        else sn.absFiles
       require(files.nonEmpty,
         s"$name: empty snapshot with no recorded schema — nothing to infer from")
       // mergeSchema: the fallback's whole point is the UNION schema —
@@ -437,7 +442,7 @@ class GraftCatalogTable(root: String, version: Long, tblName: String,
         * lets Spark push a FILTERED aggregate down to the manifest.
         * Everything else stays residual and re-evaluates row-level. */
       override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        val meta = GraftFilterPushdown.pruneMetaOf(root, version)
+        val meta = GraftFilterPushdown.pruneMetaOf(sn)
         accepted = filters.filter(f => GraftFilterPushdown.accepts(f, meta))
         consumed = filters.filter(f =>
           GraftFilterPushdown.exactlyAnswered(f, meta))
@@ -476,7 +481,7 @@ class GraftCatalogTable(root: String, version: Long, tblName: String,
         supportCompletePushDown(agg)
       override def build(): Scan = aggAnswer match {
         case Some((schema, row)) => new GraftAggResultScan(schema, row)
-        case None => new GraftBatchScan(root, version,
+        case None => new GraftBatchScan(sn,
           projected, accepted, ignoreChanges, startingVersion, pushedLimit,
           GraftStreamPrune.parse(options), pushedTopN, consumed.length)
       }
@@ -545,7 +550,7 @@ class GraftCatalogTable(root: String, version: Long, tblName: String,
   * MicroBatchStream the standalone `graft-table` format runs
   * ([[TableMicroBatchStream]]), so batch SQL, streaming and
   * maintenance all address one table name. */
-class GraftBatchScan(root: String, version: Long, projected: StructType,
+class GraftBatchScan private[sources] (sn: CommitLog.Snapshot, projected: StructType,
     pushed: Array[Filter], ignoreChanges: Boolean, startingVersion: Long,
     pushedLimit: Option[Int] = None,
     partFilters: Map[String, Set[String]] = Map.empty,
@@ -560,16 +565,16 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
 
-  private lazy val meta = GraftFilterPushdown.pruneMetaOf(root, version)
-  // the snapshot's aux metadata, parsed ONCE per scan: statistics,
-  // SPJ grouping and partition planning all read it, and a pinned
-  // version's manifest is immutable
-  private lazy val auxCached = CommitLog.auxOf(root, version)
+  // ONE parsed manifest per scan: the prune meta, the aux metadata
+  // (statistics, SPJ grouping, partition planning) and every prune
+  // below read it — a pinned version's manifest is immutable
+  private val (root, version) = (sn.root, sn.version)
+  private lazy val meta = GraftFilterPushdown.pruneMetaOf(sn)
   // SEGMENTED manifest (r16): batch SQL reads plan through the
   // TWO-LEVEL metadata prune — segment bounds first, per-file stats
   // inside the survivors — so a 10^6-file table's catalog SELECT
   // reads metadata ∝ surviving segments, never the full listing
-  private lazy val segmented = CommitLog.isSegmented(root, version)
+  private def segmented = sn.segmentRefs.isDefined
   @volatile private var runtime: Array[Filter] = Array.empty
 
   /** The probe-pruned survivor listing for `filters` — the ONE
@@ -577,7 +582,7 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
     * segments first, r18). Every caller (planning, statistics,
     * accounting, EXPLAIN) shares it. */
   private def prunedKeep(filters: Seq[Filter]): (Seq[String], Int) = {
-    val p = CommitLog.prune(root, version, GraftFilterPushdown.translate(filters, meta).tree)
+    val p = CommitLog.prune(sn, GraftFilterPushdown.translate(filters, meta).tree)
     (p.files, p.filesTotal)
   }
 
@@ -615,12 +620,12 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
   private def segLimitPlan: Option[(Seq[String], Int, Int)] =
     pushedLimit.flatMap { n =>
       if (!segmented || runtime.nonEmpty) None
-      else if (pushed.isEmpty) CommitLog.segmentedLimitFiles(root, version, n)
+      else if (pushed.isEmpty) CommitLog.segmentedLimitFiles(sn, n)
       // FILTERED form (r18): `WHERE day='3' LIMIT 20` — the canonical
       // peek on the partitioned+segmented table — prefixes the
       // surviving files, metadata ∝ the filter's prefix segments
       else if (allConsumed)
-        CommitLog.segmentedLimitFilesTree(root, version, n,
+        CommitLog.segmentedLimitFilesTree(sn, n,
           GraftFilterPushdown.translate(pushed.toSeq, meta).tree)
       else None
     }
@@ -638,11 +643,11 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
     pushedTopN.flatMap { case (c, asc, n) =>
       if (!segmented || runtime.nonEmpty) None
       else if (pushed.isEmpty)
-        CommitLog.segmentedTopNFiles(root, version, c, asc, n)
+        CommitLog.segmentedTopNFiles(sn, c, asc, n)
       // FILTERED form (r18): consumed filters narrow the candidates
       // to the surviving files, the per-file envelope sizes the plan
       else if (allConsumed)
-        CommitLog.segmentedTopNFilesTree(root, version, c, asc, n,
+        CommitLog.segmentedTopNFilesTree(sn, c, asc, n,
           GraftFilterPushdown.translate(pushed.toSeq, meta).tree)
       else None
     }
@@ -671,13 +676,13 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
       pushedLimit.map(n =>
         s" PushedLimit: $n${refusedSuffix(
           if (segmented) segLimitPlan.isDefined
-          else limitEligible(keep0, auxCached))}")
+          else limitEligible(keep0, sn.aux))}")
         .getOrElse("") +
       pushedTopN.map { case (c, asc, n) =>
         s" PushedTopN: $c ${if (asc) "ASC" else "DESC"} LIMIT $n" +
           refusedSuffix(
             if (segmented) segTopnPlan.isDefined
-            else topnEligible(c, keep0, auxCached)) }.getOrElse("")
+            else topnEligible(c, keep0, sn.aux)) }.getOrElse("")
   }
 
   /** PRUNED size statistics (r15): Spark asks the scan for its size
@@ -707,7 +712,7 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
     if (segmented) {
       val probes = GraftFilterPushdown
         .translate((pushed ++ runtime).toSeq, meta)
-      val live = CommitLog.segmentsSurvivingTree(root, version, probes.tree)
+      val live = CommitLog.segmentsSurvivingTree(sn, probes.tree)
       if (live.forall(_.nBytes.isDefined)) {
         val bytes = live.flatMap(_.nBytes).sum
         val rows =
@@ -722,7 +727,7 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
       }
     }
     val (keep, _) = prunedKeep((pushed ++ runtime).toSeq)
-    val aux = auxCached
+    val aux = sn.aux
     val bytes = keep.map(rel =>
       aux.sizes.getOrElse(rel, new java.io.File(root, rel).length())).sum
     val rows =
@@ -743,7 +748,7 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
     * and API tables both report, and a pinned VERSION AS OF reports
     * the spec as of ITS snapshot. */
   private def specCols: Seq[String] =
-    auxCached.partCol
+    sn.aux.partCol
       .toSeq.flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
 
   /** STORAGE-PARTITIONED JOIN grouping (r15): when the session opts
@@ -798,7 +803,7 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
     if (convs.exists(_.isEmpty)) return None
     val keyConvs = convs.flatten
     val keep = prunedKeep(filters)._1
-    val aux = auxCached
+    val aux = sn.aux
     val entries = keep.map { f =>
       aux.layoutOf(f) match {
         case Some(pairs) if pairs.map(_._1) == cols => Some(f -> pairs.map(_._2))
@@ -892,7 +897,7 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
     segLimitPlan.foreach { case (keep, total, _) => return (total, keep) }
     segTopnPlan.foreach { case (keep, total, _) => return (total, keep) }
     val (keep0, total) = prunedKeep((pushed ++ runtime).toSeq)
-    val aux = auxCached
+    val aux = sn.aux
     // pushed LIMIT (r15; r16 DV-aware): plan only a file-list PREFIX
     // covering n LIVE rows — exact when every survivor's live count
     // is known (footer count, minus manifest-carried masked counts
@@ -928,7 +933,7 @@ class GraftBatchScan(root: String, version: Long, projected: StructType,
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] = {
       val (total, keep) = plannedFiles
-      val aux = auxCached
+      val aux = sn.aux
       GraftScanStats.record(root,
         GraftScanStats.Prune(version, total, keep.size))
       // deletion vectors: each partition carries its file's sidecar

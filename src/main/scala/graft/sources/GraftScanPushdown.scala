@@ -111,11 +111,20 @@ object GraftFilterPushdown {
   private val metaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, String), PruneMeta]()
 
-  def pruneMetaOf(root: String, version: Long): PruneMeta = {
+  def pruneMetaOf(root: String, version: Long): PruneMeta =
+    metaOf(root, version, CommitLog.snapshot(root, version))
+
+  /** [[pruneMetaOf]] of an already parsed snapshot: a miss derives the
+    * meta from it instead of parsing the manifest again. */
+  private[sources] def pruneMetaOf(sn: CommitLog.Snapshot): PruneMeta =
+    metaOf(sn.root, sn.version, sn)
+
+  private def metaOf(root: String, version: Long, snap: => CommitLog.Snapshot): PruneMeta = {
     val key = (new java.io.File(root).getCanonicalPath, version,
       CommitLog.manifestIdentity(root, version))
     if (metaCache.size > 4096) CommitLog.evictHalf(metaCache)
-    metaCache.computeIfAbsent(key, _ =>
+    metaCache.computeIfAbsent(key, _ => {
+      val sn = snap
       // SEGMENTED manifests: per-segment/per-file Long bounds on ONE
       // stats column (a "long" range-probe target, r16) — and, r18
       // (VERDICT item 1), the PARTITION LAYOUT the segments record:
@@ -128,8 +137,8 @@ object GraftFilterPushdown {
       // late r18, CONSUMPTION and EXCLUSIONS are ON where sound (see
       // the fullCols/guarded derivation below; the segmented prune
       // enforces vetoes and OR groups at both levels).
-      if (CommitLog.isSegmented(root, version)) {
-        val segs = CommitLog.segmentsOf(root, version)
+      if (sn.segmentRefs.isDefined) {
+        val segs = sn.segments
         val lvCols = segs.flatMap(_.layoutValues.keys).toSet
         val lvUnion = lvCols.map(c => c ->
           segs.flatMap(_.layoutValues.getOrElse(c, Set.empty)).toSet).toMap
@@ -148,18 +157,18 @@ object GraftFilterPushdown {
         val fullCols = lvCols.filter(c =>
           segs.forall(_.layoutValues.contains(c)))
         PruneMeta(lvCols,
-          CommitLog.segmentStatsCol(root, version).map(_ -> "long").toMap,
+          CommitLog.statsColOfSegments(root, segs).map(_ -> "long").toMap,
           layoutTz = CommitLog.tableProperty(root, "layout.timeZone"),
           fullLayoutCols = fullCols, layoutValues = lvUnion,
           guarded = lvCols.nonEmpty)
       } else {
-        val aux = CommitLog.auxOf(root, version)
+        val aux = sn.aux
         val layoutCols = aux.partCol.toSeq.flatMap(_.split(',')).toSet ++
           aux.layouts.values.flatMap(_.map(_._1))
         val buckets = layoutCols.toSeq.collect {
           case spec @ CommitLog.BucketSpec(n, c) => c -> ((n.toInt, spec))
         }.toMap
-        val files = CommitLog.snapshotRelFiles(root, version)
+        val files = sn.files
         // CONSUMPTION GATE (r17, ADVICE): fullLayoutCols — the columns
         // whose filters may be CONSUMED (no row-level residual) — is
         // non-empty only for tables the guarded staging chokepoint
@@ -195,7 +204,8 @@ object GraftFilterPushdown {
         PruneMeta(layoutCols, aux.statsTags, buckets,
           CommitLog.tableProperty(root, "layout.timeZone"), fullCols,
           values, guarded)
-      })
+      }
+    })
   }
 
   /** Catalyst's OWN string rendering of a timestamp, with an exact

@@ -580,59 +580,118 @@ object DvSidecar {
 
 /** Row-by-row parquet decode via the parquet-hadoop Group API — flat
   * primitive schemas only (nested types fail fast). The requested
-  * columns project BY NAME against each file's own schema, pushed into
-  * the parquet read schema so unselected columns are never decoded;
-  * pre-evolution files (missing an added column) project nulls exactly
-  * like the batch reader under the log schema. Timestamps decode from
-  * both INT64-µs (spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS)
-  * and the INT96 legacy default (Julian day + nano-of-day). */
+  * columns project BY NAME against each file's own schema, so
+  * unselected columns are never decoded; pre-evolution files (missing
+  * an added column) project nulls exactly like the batch reader under
+  * the log schema. Timestamps decode from both INT64-µs
+  * (spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS) and the
+  * INT96 legacy default (Julian day + nano-of-day).
+  *
+  * ONE open per file: the footer read here gives the file schema, the
+  * requested schema goes straight to the same handle
+  * (`setRequestedSchema`), and the row groups stream from it through a
+  * `ColumnIOFactory` record reader — no second open at the first row,
+  * and no per-file Hadoop `Configuration`: the handle reads over the
+  * shared [[CommitLog.hadoopConf]]. `ParquetReader.builder(ReadSupport,
+  * Path)` is banned for that reason — it builds a fresh
+  * `Configuration` per file, which re-parses `core-default.xml` and
+  * `core-site.xml` on its first lookup (milliseconds per file, the
+  * largest fixed cost of a catalog read task). Each requested column's
+  * file index and decoder resolve once per file ([[GroupParquetReader.decoder]]),
+  * not per row. */
 class GroupParquetReader(path: String, schema: StructType)
     extends PartitionReader[InternalRow] {
-  import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-  import org.apache.parquet.hadoop.example.GroupReadSupport
-  import org.apache.parquet.hadoop.util.HadoopInputFile
+  import org.apache.parquet.column.page.PageReadStore
   import org.apache.parquet.example.data.Group
-  import org.apache.parquet.schema.{MessageType, PrimitiveType}
+  import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+  import org.apache.parquet.filter2.compat.FilterCompat
+  import org.apache.parquet.hadoop.ParquetFileReader
+  import org.apache.parquet.hadoop.util.HadoopInputFile
+  import org.apache.parquet.io.{ColumnIOFactory, RecordReader}
+  import org.apache.parquet.schema.MessageType
 
   schema.fields.foreach { f =>
     require(f.dataType match {
       case LongType | IntegerType | DoubleType | FloatType | StringType |
            BooleanType | TimestampType | TimestampNTZType => true
       // wide decimals (precision > 18, e.g. the IVM sum-of-squares at
-      // DECIMAL(38,8)) decode through the byte-array branch below —
-      // big-endian two's-complement, the parquet spec's encoding
-      case d: org.apache.spark.sql.types.DecimalType => d.precision <= 38
+      // DECIMAL(38,8)) decode through the byte-array branch of the
+      // decoder — big-endian two's-complement, the parquet spec's encoding
+      case d: DecimalType => d.precision <= 38
       case _ => false
     }, s"graft-table reader supports flat primitive columns; '${f.name}' is ${f.dataType}")
   }
 
-  // a COPY of the shared conf: its resources are already parsed, and
-  // the read schema set below must not leak into other readers
-  private val conf = new org.apache.hadoop.conf.Configuration(CommitLog.hadoopConf)
-  private val hPath = new org.apache.hadoop.fs.Path(path)
+  private val file = ParquetFileReader.open(
+    HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), CommitLog.hadoopConf),
+    CommitLog.readOptions())
+  CommitLog.tableFileOpens.incrementAndGet()
 
-  // column pruning: request only the selected fields, typed exactly as
-  // THIS file stores them (a requested schema with foreign physical
-  // types would fail; by-name subset of the file's own always matches)
-  private val fileSchema: MessageType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf),
-      CommitLog.footerReadOptions)
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
-  private val wanted = schema.fields.map(_.name).toSet
-  private val requested: MessageType = {
-    import scala.jdk.CollectionConverters._
-    new MessageType(fileSchema.getName,
-      fileSchema.getFields.asScala.filter(f => wanted(f.getName)).asJava)
-  }
-  conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-    requested.toString)
+  // the record assembly of the requested schema, and per output
+  // column its index in it (-1 = not in this file ⇒ NULL) and its
+  // decoder — all fixed for the file
+  private val (converter, columnIO, idx, decode) = try {
+    val meta = file.getFooter.getFileMetaData
+    val fileSchema: MessageType = meta.getSchema
+    // column pruning: request only the selected fields, typed exactly
+    // as THIS file stores them (a requested schema with foreign
+    // physical types would fail; by-name subset of the file's own
+    // always matches)
+    val wanted = schema.fields.map(_.name).toSet
+    val req = {
+      import scala.jdk.CollectionConverters._
+      new MessageType(fileSchema.getName,
+        fileSchema.getFields.asScala.filter(f => wanted(f.getName)).asJava)
+    }
+    file.setRequestedSchema(req)
+    val ix = schema.fields.map(f =>
+      if (req.containsField(f.name)) req.getFieldIndex(f.name) else -1)
+    val dec = schema.fields.zip(ix).map { case (f, i) =>
+      if (i < 0) null
+      else GroupParquetReader.decoder(f.dataType, req.getType(i).asPrimitiveType())
+    }
+    (new GroupRecordConverter(req),
+      new ColumnIOFactory(meta.getCreatedBy).getColumnIO(req, fileSchema, true), ix, dec)
+  } catch { case e: Throwable => file.close(); throw e }
 
-  private val reader: ParquetReader[Group] = ParquetReader
-    .builder(new GroupReadSupport(), hPath).withConf(conf).build()
+  private var pages: PageReadStore = _
+  private var records: RecordReader[Group] = _
+  private var left = 0L // rows of the current row group not yet read
   private var current: Group = _
 
-  override def next(): Boolean = { current = reader.read(); current != null }
+  override def next(): Boolean = {
+    while (left == 0) {
+      if (pages != null) pages.close()
+      pages = file.readNextRowGroup()
+      if (pages == null) return false
+      left = pages.getRowCount
+      records = columnIO.getRecordReader(pages, converter, FilterCompat.NOOP)
+    }
+    current = records.read()
+    left -= 1
+    true
+  }
+
+  override def get(): InternalRow = {
+    val g = current
+    val out = new Array[Any](idx.length)
+    var i = 0
+    while (i < idx.length) {
+      val ix = idx(i)
+      if (ix >= 0 && g.getFieldRepetitionCount(ix) > 0) out(i) = decode(i)(g, ix)
+      i += 1
+    }
+    new GenericInternalRow(out)
+  }
+
+  override def close(): Unit =
+    try { if (pages != null) pages.close() } finally file.close()
+}
+
+object GroupParquetReader {
+  import org.apache.parquet.example.data.Group
+  import org.apache.parquet.schema.PrimitiveType
+  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 
   /** INT96 → micros-since-epoch: 12 bytes little-endian = nano-of-day
     * (8) + Julian day (4); 2440588 = the Unix epoch's Julian day. */
@@ -644,72 +703,52 @@ class GroupParquetReader(path: String, schema: StructType)
     (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
   }
 
-  override def get(): InternalRow = {
-    val g = current
-    val gType = g.getType
-    new GenericInternalRow(schema.fields.map { f =>
-      val idx = if (gType.containsField(f.name)) gType.getFieldIndex(f.name) else -1
-      if (idx < 0 || g.getFieldRepetitionCount(idx) == 0) null
-      else f.dataType match {
-        // TYPE WIDENING (r12): a file may store a NARROWER physical
-        // type than the log schema requests (int32 under a widened
-        // bigint, float under double) — decode by the file's physical
-        // type and upcast, the same contract Spark's native parquet
-        // readers honor for the batch path
-        case LongType =>
-          gType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-            case PrimitiveType.PrimitiveTypeName.INT32 =>
-              g.getInteger(idx, 0).toLong
-            case _ => g.getLong(idx, 0)
-          }
-        case IntegerType => g.getInteger(idx, 0)
-        case DoubleType =>
-          gType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-            case PrimitiveType.PrimitiveTypeName.FLOAT =>
-              g.getFloat(idx, 0).toDouble
-            case _ => g.getDouble(idx, 0)
-          }
-        case FloatType => g.getFloat(idx, 0)
-        case BooleanType => g.getBoolean(idx, 0)
-        case StringType => UTF8String.fromString(g.getString(idx, 0))
-        case TimestampType | TimestampNTZType =>
-          gType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-            case PrimitiveType.PrimitiveTypeName.INT96 =>
-              int96Micros(g.getInt96(idx, 0).getBytes)
-            case _ => g.getLong(idx, 0) // INT64 micros
-          }
-        case d: org.apache.spark.sql.types.DecimalType =>
-          // precision ≤ 18 stores the unscaled value: INT64 (Spark's
-          // default) or INT32 for tiny precisions; byte-array-backed
-          // decimals decode from big-endian two's-complement. The
-          // unscaled value is at the FILE's recorded scale — under a
-          // widened log schema (r12) that may be smaller than the
-          // requested scale, so rescale exactly (scale growth only,
-          // never lossy by the widening lattice).
-          val pt = gType.getType(idx).asPrimitiveType()
-          val fileScale = pt.getLogicalTypeAnnotation match {
-            case dec: org.apache.parquet.schema.LogicalTypeAnnotation
-              .DecimalLogicalTypeAnnotation => dec.getScale
-            case _ => d.scale
-          }
-          val unscaled = pt.getPrimitiveTypeName match {
-            case PrimitiveType.PrimitiveTypeName.INT64 =>
-              java.math.BigDecimal.valueOf(g.getLong(idx, 0), fileScale)
-            case PrimitiveType.PrimitiveTypeName.INT32 =>
-              java.math.BigDecimal.valueOf(g.getInteger(idx, 0).toLong, fileScale)
-            case _ =>
-              new java.math.BigDecimal(
-                new java.math.BigInteger(g.getBinary(idx, 0).getBytes),
-                fileScale)
-          }
-          org.apache.spark.sql.types.Decimal(
-            unscaled.setScale(d.scale), d.precision, d.scale)
-        case other => throw new IllegalStateException(s"unreachable: $other")
-      }
-    }.toArray[Any])
+  /** The decoder of a requested column of Spark type `t` that a file
+    * stores as `pt`: (row group record, field index) → Catalyst value.
+    * TYPE WIDENING (r12): a file may store a NARROWER physical type
+    * than the log schema requests (int32 under a widened bigint, float
+    * under double) — decode by the file's physical type and upcast,
+    * the same contract Spark's native parquet readers honor for the
+    * batch path. */
+  private[sources] def decoder(t: DataType, pt: PrimitiveType): (Group, Int) => Any = {
+    val phys = pt.getPrimitiveTypeName
+    t match {
+      case LongType =>
+        if (phys == INT32) (g, i) => g.getInteger(i, 0).toLong
+        else (g, i) => g.getLong(i, 0)
+      case IntegerType => (g, i) => g.getInteger(i, 0)
+      case DoubleType =>
+        if (phys == FLOAT) (g, i) => g.getFloat(i, 0).toDouble
+        else (g, i) => g.getDouble(i, 0)
+      case FloatType => (g, i) => g.getFloat(i, 0)
+      case BooleanType => (g, i) => g.getBoolean(i, 0)
+      case StringType => (g, i) => UTF8String.fromString(g.getString(i, 0))
+      case TimestampType | TimestampNTZType =>
+        if (phys == INT96) (g, i) => int96Micros(g.getInt96(i, 0).getBytes)
+        else (g, i) => g.getLong(i, 0) // INT64 micros
+      case d: DecimalType =>
+        // precision ≤ 18 stores the unscaled value: INT64 (Spark's
+        // default) or INT32 for tiny precisions; byte-array-backed
+        // decimals decode from big-endian two's-complement. The
+        // unscaled value is at the FILE's recorded scale — under a
+        // widened log schema (r12) that may be smaller than the
+        // requested scale, so rescale exactly (scale growth only,
+        // never lossy by the widening lattice).
+        val fileScale = pt.getLogicalTypeAnnotation match {
+          case dec: org.apache.parquet.schema.LogicalTypeAnnotation
+            .DecimalLogicalTypeAnnotation => dec.getScale
+          case _ => d.scale
+        }
+        val unscaled: (Group, Int) => java.math.BigDecimal = phys match {
+          case INT64 => (g, i) => java.math.BigDecimal.valueOf(g.getLong(i, 0), fileScale)
+          case INT32 => (g, i) => java.math.BigDecimal.valueOf(g.getInteger(i, 0).toLong, fileScale)
+          case _ => (g, i) => new java.math.BigDecimal(
+            new java.math.BigInteger(g.getBinary(i, 0).getBytes), fileScale)
+        }
+        (g, i) => Decimal(unscaled(g, i).setScale(d.scale), d.precision, d.scale)
+      case other => throw new IllegalStateException(s"unreachable: $other")
+    }
   }
-
-  override def close(): Unit = reader.close()
 }
 
 /** Streaming CHANGE-DATA-FEED (r10) — `readStream.format("graft.sources

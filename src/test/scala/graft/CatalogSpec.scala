@@ -3253,16 +3253,143 @@ class CatalogSpec extends SparkSpec {
       assert(CommitLog.manifestParses.get - parses0 === 1L, root)
       assert(p.files.size === 2 && p.filesTotal === 4 && p.segsRead === segsRead, s"$root: $p")
     }
-    // the catalog read plans through the same prune; the bounds are
-    // the parses one such query took before the planner was unified:
-    // 9 on a fresh table, 6 on a repeat
+    // the catalog read plans through the same prune, and its table,
+    // scan builder and scan share one parsed snapshot: one parse on a
+    // fresh table and on a repeat alike, and for the LIMIT and TopN
+    // plans
     Seq("flat", "seg").foreach { t =>
-      Seq(9L, 6L).foreach { bound =>
+      Seq("WHERE id > 1500" -> 499, "WHERE id > 1500" -> 499, "LIMIT 20" -> 20,
+          "ORDER BY id DESC LIMIT 5" -> 5).foreach { case (rest, n) =>
         val parses0 = CommitLog.manifestParses.get
-        assert(spark.sql(s"SELECT id FROM $cat.$t WHERE id > 1500").collect().length === 499)
+        assert(spark.sql(s"SELECT id FROM $cat.$t $rest").collect().length === n)
         val parses = CommitLog.manifestParses.get - parses0
-        assert(parses <= bound, s"$t: $parses manifest parses")
+        assert(parses === 1L, s"$t ($rest): $parses manifest parses")
       }
     }
+  }
+
+  test("a catalog read opens each surviving file's footer once, and each vector sidecar once per data file carrying it") {
+    val (cat, base) = freshCatalog()
+    val root = new java.io.File(base, "t").toString
+    def frame(lo: Long, hi: Long) = spark.range(lo, hi).selectExpr("id", "id % 10 AS v")
+    CommitLog.appendWithStats(spark, root, frame(0, 1000), 2, "id")
+    CommitLog.appendWithStats(spark, root, frame(1000, 2000), 2, "id")
+    // (rows returned, footers opened)
+    def opens(q: String): (Int, Long) = {
+      val o0 = CommitLog.tableFileOpens.get
+      val n = spark.sql(q).collect().length
+      (n, CommitLog.tableFileOpens.get - o0)
+    }
+    // the prune keeps the second append's two files
+    assert(opens(s"SELECT id FROM $cat.t WHERE id > 1500") === ((499, 2L)))
+    assert(opens(s"SELECT id, v FROM $cat.t") === ((2000, 4L)))
+    spark.sql(s"ALTER TABLE $cat.t SET TBLPROPERTIES ('enableDeletionVectors' = 'true')")
+    spark.sql(s"DELETE FROM $cat.t WHERE v = 3")
+    spark.sql(s"DELETE FROM $cat.t WHERE v = 4 AND id < 1000")
+    val aux = CommitLog.auxOf(root, CommitLog.latestVersion(root).get)
+    val files = CommitLog.snapshotRelFiles(root, CommitLog.latestVersion(root).get)
+    assert(files.size === 4 && aux.dvs.keySet === files.toSet, aux.dvs)
+    val sidecars = files.map(aux.dvs(_).size).sum
+    assert(sidecars === 6, aux.dvs)
+    assert(opens(s"SELECT id FROM $cat.t") === ((1700, 4L + sidecars)))
+    assert(opens(s"SELECT id FROM $cat.t WHERE id > 1500") === ((449, 2L + 2)))
+  }
+
+  test("the table reader returns the written values: widened, decimal, INT96 and INT64 timestamps, NULLs, an added column, row groups, vectors") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val (cat, base) = freshCatalog()
+    val root = new java.io.File(base, "vals").toString
+    def withConf[A](kv: (String, String)*)(body: => A): A = {
+      val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    def footer(rel: String) = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(new java.io.File(root, rel).getAbsolutePath),
+          CommitLog.hadoopConf))
+      try (r.getFooter.getFileMetaData.getSchema, r.getRowGroups.size) finally r.close()
+    }
+    def added(v: Long): String = {
+      val prev = CommitLog.snapshotRelFiles(root, v - 1).toSet
+      val fs = CommitLog.snapshotRelFiles(root, v).filterNot(prev)
+      assert(fs.size === 1, fs)
+      fs.head
+    }
+    def physical(rel: String, c: String): String =
+      { val m = footer(rel)._1; m.getType(m.getFieldIndex(c)) }.asPrimitiveType.getPrimitiveTypeName.name
+    val cols = "id, i, f, d, sd, w, ts, s, b"
+    // v0: narrow types, INT96 timestamps
+    val v0 = withConf("spark.sql.parquet.outputTimestampType" -> "INT96") {
+      CommitLog.appendEvolved(spark, root, spark.sql(
+        """SELECT id, CAST(i AS INT) i, CAST(f AS FLOAT) f, CAST(d AS DECIMAL(10,2)) d,
+          |  CAST(sd AS DECIMAL(5,2)) sd, CAST(w AS DECIMAL(38,8)) w,
+          |  CAST(ts AS TIMESTAMP) ts, s, b FROM VALUES
+          |  (1L, 1, 1.5, 12345678.91, 123.45, -1234567890.12345678,
+          |    '1969-12-31 23:59:59.123456', 'Zürich ☃ 東京', true),
+          |  (2L, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
+          |  (3L, -2147483648, -0.25, -0.01, -999.99,
+          |    99999999999999999999999999999.99999999, '2024-02-29 12:34:56.789012', '', false)
+          |  AS t(id, i, f, d, sd, w, ts, s, b)""".stripMargin).coalesce(1), nFiles = 1)
+    }
+    val f0 = CommitLog.snapshotRelFiles(root, v0).head
+    assert(Seq("i", "f", "d", "sd", "w", "ts").map(physical(f0, _)) ===
+      Seq("INT32", "FLOAT", "INT64", "INT32", "FIXED_LEN_BYTE_ARRAY", "INT96"))
+    spark.sql(s"ALTER TABLE $cat.vals ALTER COLUMN i TYPE BIGINT")
+    spark.sql(s"ALTER TABLE $cat.vals ALTER COLUMN f TYPE DOUBLE")
+    spark.sql(s"ALTER TABLE $cat.vals ALTER COLUMN d TYPE DECIMAL(12,4)")
+    // wide types, INT64-µs timestamps
+    val v1 = withConf("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+        "spark.graft.insert.files" -> "1") {
+      spark.sql(s"""INSERT INTO $cat.vals VALUES
+        |  (4, 9000000000, 2.5, 12345678.1234, 0.5, 0.00000001, TIMESTAMP'1970-01-01 00:00:00', 'ascii', true),
+        |  (5, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)""".stripMargin)
+      CommitLog.latestVersion(root).get
+    }
+    val f1 = added(v1)
+    assert(Seq("i", "f", "d", "ts").map(physical(f1, _)) === Seq("INT64", "DOUBLE", "INT64", "INT64"))
+    // an added column, then a file of many small row groups that has it
+    spark.sql(s"ALTER TABLE $cat.vals ADD COLUMNS (extra STRING)")
+    val v2 = withConf("parquet.block.size" -> "1024", "spark.graft.insert.files" -> "1") {
+      spark.sql(s"""INSERT INTO $cat.vals SELECT id, id, id / 4.0D, id + 0.0001BD, NULL,
+        |  CAST(id AS DECIMAL(38,8)) / 8, TIMESTAMP_MICROS(id * 1000001), CONCAT('r', id),
+        |  id % 2 = 0, IF(id % 3 = 0, NULL, CONCAT('x', id)) FROM range(100, 2100)""".stripMargin)
+      CommitLog.latestVersion(root).get
+    }
+    val f2 = added(v2)
+    assert(footer(f2)._2 > 1, "the wide file must hold several row groups")
+    // vectors mask rows inside the row-group file by position
+    spark.sql(s"ALTER TABLE $cat.vals SET TBLPROPERTIES ('enableDeletionVectors' = 'true')")
+    spark.sql(s"DELETE FROM $cat.vals WHERE id % 7 = 0 AND id >= 100")
+    assert(CommitLog.auxOf(root, CommitLog.latestVersion(root).get).dvs.keySet === Set(f2))
+
+    val q = spark.sql(s"SELECT $cols, extra FROM $cat.vals")
+    assert(q.schema.map(_.dataType).take(6) === Seq(LongType, LongType, DoubleType,
+      DecimalType(12, 4), DecimalType(5, 2), DecimalType(38, 8)))
+    val got = spark.sql(s"SELECT id, i, f, CAST(d AS STRING), CAST(sd AS STRING), " +
+      s"CAST(w AS STRING), unix_micros(ts), s, b, extra FROM $cat.vals").collect()
+    val want = Seq(
+      Row(1L, 1L, 1.5, "12345678.9100", "123.45", "-1234567890.12345678", -876544L,
+        "Zürich ☃ 東京", true, null),
+      Row(2L, null, null, null, null, null, null, null, null, null),
+      Row(3L, -2147483648L, -0.25, "-0.0100", "-999.99",
+        "99999999999999999999999999999.99999999", 1709210096789012L, "", false, null),
+      Row(4L, 9000000000L, 2.5, "12345678.1234", "0.50", "0.00000001", 0L, "ascii", true, null),
+      Row(5L, null, null, null, null, null, null, null, null, null)) ++
+      (100L until 2100L).filter(_ % 7 != 0).map(id => Row(id, id, id / 4.0,
+        f"$id.0001", null, new java.math.BigDecimal(id).divide(new java.math.BigDecimal(8))
+          .setScale(8).toPlainString, id * 1000001L, s"r$id", id % 2 == 0,
+        if (id % 3 == 0) null else s"x$id"))
+    // the vectors recorded row positions, so a reader that changed
+    // the row order inside a file would mask other rows than these
+    assert(got.toSeq.sortBy(_.getLong(0)) === want)
+    // a column missing from the older files reads as NULL alone too
+    assert(spark.sql(s"SELECT extra FROM $cat.vals WHERE id < 100").collect().toSeq ===
+      Seq.fill(5)(Row(null)))
   }
 }

@@ -127,4 +127,76 @@ class LocalFsSpec extends SparkSpec {
     val got = try new String(in.readAllBytes()) finally in.close()
     assert(got === "new body")
   }
+
+  /** `src` with comments and the contents of string and character
+    * literals blanked (newlines kept), so a pattern only matches code. */
+  private def codeOnly(src: String): String = {
+    val out = new StringBuilder(src.length)
+    def blank(c: Char): Char = if (c == '\n') c else ' '
+    var i = 0
+    var depth = 0 // block-comment nesting
+    while (i < src.length) {
+      val c = src(i)
+      def at(s: String) = src.startsWith(s, i)
+      if (depth > 0) {
+        if (at("/*")) { depth += 1; out ++= "  "; i += 2 }
+        else if (at("*/")) { depth -= 1; out ++= "  "; i += 2 }
+        else { out += blank(c); i += 1 }
+      } else if (at("/*")) { depth = 1; out ++= "  "; i += 2 }
+      else if (at("//")) {
+        while (i < src.length && src(i) != '\n') { out += ' '; i += 1 }
+      } else if (at("\"\"\"")) {
+        out ++= "\"\"\""; i += 3
+        while (i < src.length && !at("\"\"\"")) { out += blank(src(i)); i += 1 }
+        out ++= "\"\"\""; i += 3
+      } else if (c == '"') {
+        out += c; i += 1
+        while (i < src.length && src(i) != '"') {
+          if (src(i) == '\\') { out += ' '; i += 1 }
+          out += blank(src(i)); i += 1
+        }
+        out += '"'; i += 1
+      } else if (c == '\'' && (at("'\\") || (i + 2 < src.length && src(i + 2) == '\''))) {
+        val end = if (at("'\\")) src.indexOf('\'', i + 3) else i + 2
+        out ++= " " * (end + 1 - i); i = end + 1
+      } else { out += c; i += 1 }
+    }
+    out.toString
+  }
+
+  test("src/main builds no XML-default Hadoop conf outside CommitLog.hadoopConf, and no ParquetReader.builder") {
+    // every no-argument Configuration parses core-default.xml and
+    // core-site.xml on its first lookup: a per-file or per-commit one
+    // cost milliseconds each on the footer, staging and table-read
+    // paths. CommitLog.hadoopConf is the one shared instance; copies
+    // of it (`new Configuration(base)`) stay allowed.
+    val fresh = ("""new\s+(?:org\.apache\.hadoop\.(?:conf|mapred)\.)?""" +
+      """(?:Configuration|JobConf|HadoopParquetConfiguration)\b(?!\s*\((?!\s*\)))""" +
+      """|Job\s*\.\s*getInstance\s*\(\s*\)""").r
+    // ParquetReader.builder(ReadSupport, Path) builds its own fresh conf
+    val builder = """ParquetReader\s*\.\s*builder\s*\(""".r
+    val files = {
+      val all = Seq.newBuilder[java.io.File]
+      def walk(d: java.io.File): Unit = Option(d.listFiles()).getOrElse(Array.empty).foreach { f =>
+        if (f.isDirectory) walk(f) else if (f.getName.endsWith(".scala")) all += f
+      }
+      walk(new java.io.File("src/main"))
+      all.result()
+    }
+    assert(files.exists(_.getName == "CommitLog.scala"), files.map(_.getPath))
+    val hits = files.flatMap { f =>
+      val lines = java.nio.file.Files.readString(f.toPath).split("\n", -1)
+      codeOnly(lines.mkString("\n")).split("\n", -1).zipWithIndex.collect {
+        case (l, n) if fresh.findFirstIn(l).isDefined || builder.findFirstIn(l).isDefined =>
+          (f.getName, lines(n).trim)
+      }
+    }
+    assert(hits === Seq(("CommitLog.scala",
+      "private[graft] val hadoopConf = new org.apache.hadoop.conf.Configuration()")))
+    // the scanner sees through comments and strings, not past code
+    assert(fresh.findFirstIn(codeOnly("val c = new Configuration // no")).isDefined)
+    assert(fresh.findFirstIn(codeOnly("val c = new Configuration(base)")).isEmpty)
+    assert(fresh.findFirstIn(codeOnly("/* new Configuration() */ \"new Configuration()\"")).isEmpty)
+    assert(builder.findFirstIn(codeOnly("ParquetReader.builder(rs, p) // x")).isDefined)
+  }
 }

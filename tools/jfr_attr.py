@@ -12,7 +12,7 @@ scan) or other.
     JAVA_TOOL_OPTIONS="-XX:FlightRecorderOptions=repository=<dir>,maxchunksize=2M,stackdepth=512 \\
       -XX:StartFlightRecording=settings=$PWD/attr.jfc,disk=true" \\
       python3 perfbench/run.py --workload table_mix --seed 1 --seconds 15
-    python3 tools/jfr_attr.py <dir or .jfr files> [--top 25] [--thread PREFIX]
+    python3 tools/jfr_attr.py <dir or .jfr files> [--top 25] [--thread PREFIX] [--leaf [K]]
     python3 tools/jfr_attr.py --selftest
 
 --make-jfc copies the JDK's profile.jfc with park/monitor/sleep thresholds of
@@ -25,6 +25,13 @@ dump on exit, but the chunks stay).
 --thread (default "main") is a thread-name PREFIX: every thread whose name
 starts with it counts, so "stream execution thread for" attributes a streaming
 query's micro-batch thread and "Executor task launch worker" every task thread.
+
+--leaf [K] (default K=5) looks the other way, below the graft code: per
+innermost graft frame it prints the K library frames under it that the most
+events pass through (each frame counted once per stack, weighted like the
+frame's total: ms for waits, 1 per counted event), with their share of the
+graft frame's total. A hotspot such as Configuration.loadResources under
+GroupParquetReader.<init> then shows up by name.
 """
 import argparse
 import collections
@@ -131,6 +138,41 @@ def attribute(events, thread):
     return waits, counts, truncated
 
 
+def attribute_leaf(events, thread):
+    """Per category (WAITS together, then each COUNTS type): the total per
+    innermost graft frame, and per such frame a Counter of every frame
+    under it (leaf side), each counted once per stack."""
+    cats = ("waits",) + tuple(COUNTS)
+    totals = {c: collections.Counter() for c in cats}
+    under = {c: collections.defaultdict(collections.Counter) for c in cats}
+    for ev in events:
+        if not (thread_of(ev) or "").startswith(thread):
+            continue
+        names = [frame_name(f) for f in (ev["values"].get("stackTrace") or {}).get("frames") or []]
+        gi = next((i for i, n in enumerate(names) if n.startswith("graft.")), len(names))
+        inner = names[gi] if gi < len(names) else "(no graft frame)"
+        if ev["type"] in COUNTS:
+            cat, w = ev["type"], 1.0
+        else:
+            cat, w = "waits", 1000.0 * seconds(ev["values"].get("duration"))
+        totals[cat][inner] += w
+        for n in dict.fromkeys(names[:gi]):
+            under[cat][inner][n] += w
+    return totals, under
+
+
+def report_leaf(thread, totals, under, top, k, out=sys.stdout):
+    titles = {"waits": ("park + monitor wait", "ms")}
+    titles.update((t, (title, "n")) for t, title in COUNTS.items())
+    for cat, (title, unit) in titles.items():
+        out.write(f"== '{thread}*' threads {title}: library frames under each innermost graft frame\n")
+        for inner, total in totals[cat].most_common(top):
+            out.write(f"   {total:10.1f} {unit}  {inner}\n")
+            for name, v in under[cat][inner].most_common(k):
+                share = 100.0 * v / total if total else 0.0
+                out.write(f"       {v:10.1f} {unit} {share:5.1f}%  {name}\n")
+
+
 def report(title, counter, unit, top, out=sys.stdout):
     out.write(f"== {title}\n")
     for stmt in ("write", "read", "other"):
@@ -195,6 +237,38 @@ def selftest():
          and "-- read statements: 2.0 n" in text),
         ("untruncated", truncated == 0),
     ]
+    # --leaf: library frames under the innermost graft frame, once per stack
+    conf = ["org.apache.hadoop.conf.Configuration.loadResource",
+            "org.apache.hadoop.conf.Configuration.loadResources",
+            "org.apache.hadoop.conf.Configuration.getProps"]
+    init = ["org.apache.parquet.hadoop.ParquetReader$Builder.<init>",
+            "graft.sources.GroupParquetReader.<init>",
+            "graft.sources.TableFileReaderFactory.createReader",
+            "org.apache.spark.executor.Executor$TaskRunner.run"]
+    task = "Executor task launch worker for task 1.0"
+    leaf_events = [
+        ev("jdk.ExecutionSample", task, ["com.ctc.wstx.sr.BasicStreamReader.next"] + conf + init),
+        # a recursive frame counts once per stack
+        ev("jdk.ExecutionSample", task, conf[:2] + conf + init),
+        ev("jdk.ExecutionSample", task, ["org.apache.parquet.io.RecordReaderImplementation.read"]
+           + init[1:]),
+        ev("jdk.ThreadPark", task, ["jdk.internal.misc.Unsafe.park"] + conf + init, "PT0.004S"),
+        ev("jdk.ExecutionSample", "main", conf + init),
+    ]
+    totals, under = attribute_leaf(leaf_events, "Executor task launch worker")
+    g = "graft.sources.GroupParquetReader.<init>"
+    cpu = under["jdk.ExecutionSample"][g]
+    buf = io.StringIO()
+    report_leaf("Executor task launch worker", totals, under, 5, 2, buf)
+    leaf_text = buf.getvalue()
+    checks += [
+        ("leaf totals", totals["jdk.ExecutionSample"][g] == 3.0 and abs(totals["waits"][g] - 4.0) < 1e-6),
+        ("leaf frames once per stack", cpu[conf[1]] == 2.0 and cpu[conf[2]] == 2.0),
+        ("leaf side only", "org.apache.spark.executor.Executor$TaskRunner.run" not in cpu),
+        ("leaf waits", abs(under["waits"][g]["jdk.internal.misc.Unsafe.park"] - 4.0) < 1e-6),
+        ("leaf report", "    2.0 n  66.7%  org.apache.hadoop.conf.Configuration.loadResources"
+         in leaf_text and "RecordReaderImplementation" not in leaf_text),
+    ]
     for name, ok in checks:
         print(("ok   " if ok else "FAIL ") + name)
     if not all(ok for _, ok in checks):
@@ -209,6 +283,8 @@ def main():
     ap.add_argument("--thread", default="main",
                     help="thread-name prefix (default: main)")
     ap.add_argument("--top", type=int, default=20)
+    ap.add_argument("--leaf", type=int, nargs="?", const=5, metavar="K",
+                    help="per innermost graft frame, the K library frames under it (default 5)")
     ap.add_argument("--selftest", action="store_true", help="check the attribution on synthetic events")
     a = ap.parse_args()
     if a.selftest:
@@ -226,6 +302,10 @@ def main():
     if not paths:
         ap.error("no .jfr input")
     events = (ev for p in paths for ev in events_of(p))
+    if a.leaf is not None:
+        totals, under = attribute_leaf(events, a.thread)
+        report_leaf(a.thread, totals, under, a.top, a.leaf)
+        return
     waits, counts, truncated = attribute(events, a.thread)
     report_all(a.thread, waits, counts, a.top)
     if truncated:
